@@ -125,7 +125,7 @@ class EngineConfig:
 
 def _yaml_scalar(tok: str):
     """Scalar per the subset the reference schema needs: quoted strings,
-    booleans in Go-yaml's accepted spellings, ints, floats, bare strings."""
+    booleans in PyYAML's YAML 1.1 spellings, ints, floats, bare strings."""
     if len(tok) >= 2 and tok[0] == tok[-1] and tok[0] in "'\"":
         return tok[1:-1]
     # exact YAML-1.1 bool spellings (PyYAML's resolver set): a blanket

@@ -170,15 +170,18 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
     # parallelism, not a constant tuned to this host.
     nparts = 8 * int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if packable:
+        # packed in 64 bits whatever the id type: an int or smallint id
+        # shifted left by 32 in its own type is left unshifted
         lo = int(lo_hi[0])
-        p = (F.shiftleft(F.col("a") - F.lit(lo), 32)
-             + (F.col("b") - F.lit(lo)))
+        id_type = docs.schema[id_col].dataType
+        p = (F.shiftleft(F.col("a").cast("long") - F.lit(lo), 32)
+             + (F.col("b").cast("long") - F.lit(lo)))
         inter = (joined.select(p.alias("_p"))
                  .repartition(nparts, F.col("_p"))
                  .groupBy("_p").agg(F.count("*").alias("inter"))
-                 .select((F.shiftright(F.col("_p"), 32) + F.lit(lo)).alias("a"),
+                 .select((F.shiftright(F.col("_p"), 32) + F.lit(lo)).cast(id_type).alias("a"),
                          (F.col("_p").bitwiseAND(F.lit((1 << 32) - 1))
-                          + F.lit(lo)).alias("b"),
+                          + F.lit(lo)).cast(id_type).alias("b"),
                          "inter"))
     else:
         inter = (joined.select("a", "b")

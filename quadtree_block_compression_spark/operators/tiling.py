@@ -61,9 +61,12 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
 
         # one output DataFrame per input Arrow batch (not per image):
         # per-image yields would emit thousands of ~100-row record batches,
-        # and Arrow framing overhead dominates at high core counts
+        # and Arrow framing overhead dominates at high core counts. The
+        # images' column lists are extended into ONE pandas frame: a frame
+        # per image plus concat added half the decode+kernel time (256
+        # 64-px images on one core: 0.26 s over 0.50 s; now 0.03 s).
         for pdf in batches:
-            parts = []
+            out: dict[str, list] = {"image_id": []}
             for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
                 try:
                     img = decode_image(bytes(data))
@@ -72,11 +75,11 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                         continue
                     raise
                 cols = assign_tiles_image(img, cfg)
-                part = pd.DataFrame(cols)
-                part.insert(0, "image_id", image_id)
-                parts.append(part)
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+                out["image_id"].extend([image_id] * len(cols["tile_id"]))
+                for k, v in cols.items():
+                    out.setdefault(k, []).extend(v)
+            if out["image_id"]:
+                yield pd.DataFrame(out)
 
     blocks = src.mapInPandas(tile_batches, BLOCKS_SCHEMA)
     return (blocks

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(app: str = "quadtree-engine", cores: int | None = None,
                   shuffle_partitions: int | None = None, extra: dict | None = None) -> SparkSession:
@@ -63,7 +65,14 @@ def build_session(app: str = "quadtree-engine", cores: int | None = None,
          .config("spark.sql.join.preferSortMergeJoin", "false")
          .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                  str(64 * 1024 * 1024))
-         .config("spark.ui.enabled", "false"))
+         .config("spark.ui.enabled", "false")
+         # Python workers import pyspark from its installed directory, not
+         # Spark's zip and jar archives: each task's invalidate_caches()
+         # re-reads every cached zip importer (~215 ms CPU per task; see
+         # _pydaemon). The package root on the workers' path lets the daemon
+         # module import from any working directory.
+         .config("spark.python.daemon.module", "quadtree_block_compression_spark._pydaemon")
+         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

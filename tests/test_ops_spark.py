@@ -60,6 +60,24 @@ def test_ngram_jaccard_wide_id_span_fallback(docs, spark):
     assert base == spread_out and base
 
 
+@pytest.mark.parametrize("id_type", ["int", "smallint"])
+def test_ngram_jaccard_narrow_int_ids(docs, id_type):
+    """The packed pair key is built in 64 bits whatever the id type: shifted
+    by 32 in an int or smallint column, the first id was left unshifted and
+    the key corrupted. Narrow ids give the bigint pairs, in their own type."""
+    from quadtree_block_compression_spark.operators.dedup_text import ngram_jaccard_pairs
+
+    def pairs(d):
+        out = ngram_jaccard_pairs(d, n=3, threshold=0.3)
+        return out.schema["doc_a"].dataType.simpleString(), \
+            {(r.doc_a, r.doc_b): r.jaccard for r in out.collect()}
+
+    _, base = pairs(docs)
+    narrow_type, narrow = pairs(docs.withColumn("doc_id", F.col("doc_id").cast(id_type)))
+    assert narrow == base and base
+    assert narrow_type == id_type
+
+
 def test_ngram_jaccard_max_df_cap(docs):
     from quadtree_block_compression_spark.operators.dedup_text import ngram_jaccard_pairs
     # cap at df<=1 drops every shared shingle → no pairs at all

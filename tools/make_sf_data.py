@@ -37,9 +37,11 @@ US = 1_000_000
 
 
 def _day_us(s):
+    """Microseconds since the epoch at midnight UTC of ISO date ``s``, on
+    any host time zone."""
     import datetime
 
-    d = datetime.datetime.fromisoformat(s)
+    d = datetime.datetime.fromisoformat(s).replace(tzinfo=datetime.timezone.utc)
     return int(d.timestamp()) * US
 
 
