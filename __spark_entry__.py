@@ -61,35 +61,19 @@ def _fixture_images(spark: SparkSession, n: int = 16):
 def _customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic points from customer keys, shaped for the spatial ops
     (image_id/tile_id are the point identity columns)."""
-    from quadtree_block_compression_spark.operators.spatial_join import block_centroids  # noqa
-    from pyspark.sql.pandas.functions import pandas_udf
-
+    from quadtree_block_compression_spark.functions.cells import encode
     from quadtree_block_compression_spark.functions.parallelism import spread
 
-    # spread: customer.parquet is a ~3 MB scan (2 splits at sf1), so the
-    # cell-encode UDF and every downstream PIP/kNN join would otherwise run
-    # on 2 of 32 cores (r6 finding, CLAUDE spread invariant)
+    # spread: customer.parquet is a ~3 MB scan (2 splits at sf1), so every
+    # downstream PIP/kNN join would otherwise run on 2 of 32 cores (r6
+    # finding; see the project spread invariant)
     cust = spread(spark.read.parquet(f"{sf_dir}/customer.parquet"))
-    pts = cust.select(
+    return cust.select(
         F.col("c_custkey").cast("string").alias("image_id"),
         F.lit("").alias("tile_id"),
         ((F.col("c_custkey") * _PX) % _W).cast("double").alias("wx"),
-        ((F.col("c_custkey") * _PY) % _W).cast("double").alias("wy"))
-
-    @pandas_udf("long")
-    def cell_of(wx, wy):  # type: ignore[misc]
-        import pandas as pd
-        from quadtree_block_compression_spark.kernels.geometry import cell_encode
-        return pd.Series(cell_encode(wx.to_numpy(dtype=float),
-                                     wy.to_numpy(dtype=float), _RES))
-
-    # asNondeterministic (guide §4.4, r6): the optimizer pushes a
-    # deterministic Python projection below the spread() repartition, so
-    # the ArrowEvalPython ran on the customer scan's 2 raw splits (the
-    # committed before-plan shows ArrowEvalPython directly over the scan,
-    # under the Exchange). cell_of IS value-deterministic — the marker only
-    # forbids the reorder, keeping the UDF above the exchange on all cores.
-    return pts.withColumn("cell", cell_of.asNondeterministic()("wx", "wy"))
+        ((F.col("c_custkey") * _PY) % _W).cast("double").alias("wy"),
+    ).withColumn("cell", encode("wx", "wy", _RES))
 
 
 def _nation_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

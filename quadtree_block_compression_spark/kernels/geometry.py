@@ -6,7 +6,8 @@ wheel ships in this sandbox (SURVEY.md §7 risk list), so the cell system is a
 pure-numpy **Z-order (Morton) grid over a fixed world frame** — the same
 shape of API: ``encode(points) → int64 cells``, ``cell_ring(cell, r) →
 neighbors``, ``polygon_cover(poly) → cells``. Swapping in real H3 later is a
-one-module change.
+one-module change. Operators key DataFrames with the Column twins in
+``functions/cells.py``; the numpy encode/ring here is their test oracle.
 
 World frame: ``[0, WORLD) × [0, WORLD)`` doubles. A cell key at resolution
 ``r`` packs ``(r, morton(ix, iy))`` into an int64 with the resolution in the
@@ -36,15 +37,18 @@ def _part1by1(v: np.ndarray) -> np.ndarray:
     return v
 
 
+def _grid(v: np.ndarray, res: int) -> np.ndarray:
+    """World coordinates → 2^res grid indexes: NaN and below 0 → 0, ≥ WORLD
+    (incl. +inf) → 2^res − 1. Clipped first: the int cast of inf is undefined."""
+    g = np.nan_to_num(np.asarray(v, dtype=np.float64) * ((1 << res) / WORLD), nan=0.0)
+    return np.clip(g, 0, (1 << res) - 1).astype(np.int64)
+
+
 def cell_encode(x: np.ndarray, y: np.ndarray, res: int) -> np.ndarray:
     """Batched point → int64 cell key at resolution ``res`` (2^res × 2^res grid)."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"resolution out of range: {res}")
-    scale = (1 << res) / WORLD
-    ix = np.clip((np.asarray(x, dtype=np.float64) * scale).astype(np.int64), 0, (1 << res) - 1)
-    iy = np.clip((np.asarray(y, dtype=np.float64) * scale).astype(np.int64), 0, (1 << res) - 1)
-    morton = _part1by1(ix) | (_part1by1(iy) << np.uint64(1))
-    return (morton | (np.uint64(res) << np.uint64(58))).astype(np.int64)
+    return cell_from_grid(_grid(x, res), _grid(y, res), res)
 
 
 def cell_decode(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -73,8 +77,9 @@ def cell_from_grid(ix: np.ndarray, iy: np.ndarray, res: int) -> np.ndarray:
 def cell_ring(cells: np.ndarray, ring: int) -> np.ndarray:
     """All cells within Chebyshev distance ``ring`` of each input cell.
 
-    Returns ``(n, (2r+1)^2) int64`` (clamped at world edges, duplicates kept —
-    callers dedup via DataFrame distinct). ``ring=0`` → the cells themselves.
+    Returns ``(n, (2r+1)^2) int64`` (clamped at world edges, duplicates
+    kept). ``ring=0`` → the cells themselves. The oracle for the kNN shell
+    (``knn._ring_cells``): shell = ``setdiff1d`` of two such disks.
     """
     cells = np.atleast_1d(np.asarray(cells, dtype=np.int64))
     ix, iy, res = cell_decode(cells)

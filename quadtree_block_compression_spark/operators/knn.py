@@ -4,7 +4,8 @@ No reference counterpart — this is the engine-mandated nearest-neighbor
 operator over block centroids. Strategy (the H3 ``grid_ring`` pattern, run
 with Z-order cells):
 
-1. queries carry a cell at the index resolution;
+1. each query's cell at the index resolution centres its rings (cell keys
+   are column expressions, ``functions.cells``);
 2. iteratively expand each *unsatisfied* query's candidate set with the
    cells at Chebyshev ring r = 0, 1, 2, … (an equi-join per ring on the cell
    key — a shuffle-free broadcast join while the query side is small);
@@ -31,38 +32,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..config import EngineConfig, DEFAULT_CONFIG
+from ..functions import cells
 
 
-def _query_cells(queries: DataFrame, res: int) -> DataFrame:
-    @pandas_udf("long")
-    def enc(x, y):  # type: ignore[misc]
-        import pandas as pd
-        from ..kernels.geometry import cell_encode
-        return pd.Series(cell_encode(x.to_numpy(dtype=float), y.to_numpy(dtype=float), res))
-    return queries.withColumn("cell", enc("x", "y"))
-
-
-def _ring_cells(queries: DataFrame, ring: int, prev_ring: int) -> DataFrame:
-    """Explode each query to the shell of cells at Chebyshev distance in
-    ``(prev_ring, ring]`` — the disk difference, so already-joined cells are
-    never re-joined."""
-    @pandas_udf("array<long>")
-    def ring_of(cell):  # type: ignore[misc]
-        import numpy as np
-        import pandas as pd
-        from ..kernels.geometry import cell_ring
-        if len(cell) == 0:
-            return pd.Series([], dtype=object)
-        full = cell_ring(cell.to_numpy(dtype=np.int64), ring)
-        if prev_ring < 0:
-            return pd.Series([np.unique(f).tolist() for f in full])
-        inner = cell_ring(cell.to_numpy(dtype=np.int64), prev_ring)
-        return pd.Series([np.setdiff1d(f, i).tolist() for f, i in zip(full, inner)])
-    return (queries.withColumn("join_cell", F.explode(ring_of("cell")))
-            .select("query_id", "x", "y", "k", "join_cell"))
+def _ring_cells(queries: DataFrame, ring: int, prev_ring: int,
+                res: int) -> DataFrame:
+    """Explode each query to the in-world cells at Chebyshev distance in
+    ``(prev_ring, ring]`` of its own cell — the disk difference, so joined
+    cells are never re-joined; one (dx, dy) offset per cell, so no
+    duplicates (pytested against ``kernels.geometry.cell_ring``)."""
+    n = 1 << res
+    offs = F.sequence(F.lit(-ring), F.lit(ring))
+    return (queries
+            .withColumn("_dx", F.explode(offs))
+            .withColumn("_dy", F.explode(offs))
+            .withColumn("_ix", cells.grid("x", res) + F.col("_dx"))
+            .withColumn("_iy", cells.grid("y", res) + F.col("_dy"))
+            .where(F.col("_ix").between(0, n - 1) & F.col("_iy").between(0, n - 1)
+                   & (F.greatest(F.abs("_dx"), F.abs("_dy")) > F.lit(prev_ring)))
+            .select("query_id", "x", "y", "k",
+                    cells.from_grid("_ix", "_iy", res).alias("join_cell")))
 
 
 def knn_ring(points: DataFrame, queries: DataFrame,
@@ -103,13 +94,13 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     cell_width = WORLD / (1 << res)
     spark = queries.sparkSession
     # persist: the density count plus every ring join rescans this side —
-    # without it any upstream work (scan, cell-encode UDF) reruns per round.
+    # without it any upstream work (scan, centroid affine) reruns per round.
     # Tracked so the big side is released at the next query boundary rather
     # than pinned in the block manager for the session lifetime.
     from ..functions.cache import persist_tracked
     pts = persist_tracked(points.select("image_id", "tile_id", "wx", "wy", "cell"))
-    q = _query_cells(queries.select("query_id", "x", "y", "k"), res).localCheckpoint(eager=True)
-    q_schema = "query_id string, x double, y double, k int, cell long"
+    q = queries.select("query_id", "x", "y", "k").localCheckpoint(eager=True)
+    q_schema = "query_id string, x double, y double, k int"
 
     pending = q
     gathered: DataFrame | None = None
@@ -120,7 +111,7 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     if initial_ring is None:
         # count the PERSISTED projection: this first action populates the
         # cache every ring join then reads, instead of an extra uncached
-        # pass over the upstream (incl. the cell-encode UDF)
+        # pass over the upstream
         n_points = pts.count()
         density = max(n_points / float((1 << res) ** 2), 1e-9)
         k_max = queries.agg(F.max("k")).collect()[0][0] or 1
@@ -134,7 +125,7 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     if pending.isEmpty():  # vacuous query set — checked ONCE, not per round
         radii = []
     for ring in radii:
-        ring_q = _ring_cells(pending, ring, prev)
+        ring_q = _ring_cells(pending, ring, prev, res)
         cand = (pts.join(broadcast(ring_q) if use_broadcast else ring_q,
                          pts["cell"] == F.col("join_cell"))
                 .select("query_id", "image_id", "tile_id",

@@ -22,7 +22,8 @@ Plan shapes (100 TB posture):
 * ``rasterize`` fans each geometry out to its bbox cell grid with two
   JVM-side ``sequence``/``explode`` projections — fan-out is
   |geoms| × bbox-cells, never world-sized — then verifies centers with the
-  shared Arrow PIP kernel (``spatial_join._verify_pip``). The geometry side
+  shared Arrow PIP kernel (``spatial_join._verify_pip``) — its only Python
+  step; the cell key is a column expression. The geometry side
   is ``spread`` first: a dimension table arriving as one parquet file would
   otherwise serialize the explode on one core.
 * ``zonal_stats`` rides :func:`spatial_join.spatial_join_broadcast`
@@ -35,8 +36,8 @@ Plan shapes (100 TB posture):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 
+from ..functions.cells import from_grid
 from ..kernels.geometry import MAX_RES, WORLD
 from .spatial_join import _verify_pip, spatial_join_broadcast
 
@@ -46,7 +47,7 @@ def rasterize(geoms: DataFrame, res: int) -> DataFrame:
 
     ``geoms``: (geom_id, vx, vy, …) with vertex arrays in world coordinates.
     Returns (geom_id, ix, iy, cell): grid indexes plus the resolution-
-    qualified Morton key matching ``kernels.geometry.cell_from_grid``.
+    qualified Morton key (``functions.cells.from_grid``).
 
     A polygon outside the world frame contributes zero rows (the clamped
     bbox becomes empty and is filtered BEFORE ``sequence`` — Spark's
@@ -76,15 +77,8 @@ def rasterize(geoms: DataFrame, res: int) -> DataFrame:
             .withColumn("iy", F.explode(F.sequence("_iy0", "_iy1")))
             .withColumn("wx", (F.col("ix") + F.lit(0.5)) * F.lit(cw))
             .withColumn("wy", (F.col("iy") + F.lit(0.5)) * F.lit(cw)))
-    hits = _verify_pip(grid)
-
-    @pandas_udf("long")
-    def cell_of(ix, iy):  # type: ignore[misc]
-        import pandas as pd
-        from ..kernels.geometry import cell_from_grid
-        return pd.Series(cell_from_grid(ix.to_numpy(), iy.to_numpy(), res))
-
-    return hits.select("geom_id", "ix", "iy", cell_of("ix", "iy").alias("cell"))
+    return _verify_pip(grid).select("geom_id", "ix", "iy",
+                                    from_grid("ix", "iy", res).alias("cell"))
 
 
 def compact_cells(cells: DataFrame, res: int,
@@ -137,22 +131,8 @@ def compact_cells(cells: DataFrame, res: int,
     out = cur.withColumn("res", F.lit(0))
     for k in kept:
         out = out.unionByName(k)
-
-    @pandas_udf("long")
-    def cell_of(ix, iy, rr):  # type: ignore[misc]
-        import numpy as np
-        import pandas as pd
-        from ..kernels.geometry import cell_from_grid
-        ixa, iya = ix.to_numpy(), iy.to_numpy()
-        rra = rr.to_numpy()
-        outc = np.empty(len(ixa), dtype=np.int64)
-        for rv in np.unique(rra):
-            m = rra == rv
-            outc[m] = cell_from_grid(ixa[m], iya[m], int(rv))
-        return pd.Series(outc)
-
     return out.select(group_col, "res", "ix", "iy",
-                      cell_of("ix", "iy", "res").alias("cell"))
+                      from_grid("ix", "iy", F.col("res")).alias("cell"))
 
 
 def uncompact_cells(compacted: DataFrame, res: int,

@@ -29,6 +29,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..config import EngineConfig, DEFAULT_CONFIG
+from ..functions.cells import encode
 from ..kernels.geometry import MAX_RES, WORLD
 
 # images tile into a GRID×GRID mosaic of the world frame: image i occupies
@@ -41,22 +42,14 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
                     cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Blocks → world-frame centroid points + cell key.
 
-    The affine and the cell encode are vectorized in one Arrow UDF (the
-    "batched, vectorized cell encode" the north rule names); everything
-    upstream/downstream stays JVM-side.
+    The affine and the cell encode are column arithmetic (the cell key is
+    ``functions.cells.encode``), so the whole projection stays JVM-side.
     """
     res = res if res is not None else cfg.spatial.cell_resolution
     cell_w = WORLD / MOSAIC_GRID
 
-    @pandas_udf("long")
-    def cell_of(wx, wy):  # type: ignore[misc]
-        import pandas as pd
-        from ..kernels.geometry import cell_encode
-        return pd.Series(cell_encode(wx.to_numpy(dtype=float), wy.to_numpy(dtype=float), res))
-
     # affine: image index (trailing digits of image_id, JVM regexp) picks the
-    # mosaic cell; the padded canvas [0, side)² scales onto it — pure column
-    # arithmetic, then ONE vectorized UDF call for the cell encode.
+    # mosaic cell; the padded canvas [0, side)² scales onto it.
     cw = F.lit(cell_w)
     with_w = (blocks
               .withColumn("_idx", F.regexp_extract("image_id", r"(\d+)$", 1).cast("long"))
@@ -67,13 +60,14 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
               .withColumn("wy", ((F.col("_idx") / MOSAIC_GRID).cast("long") % MOSAIC_GRID) * cw
                           + ((F.col("y0") + F.col("y1")) / 2.0) * cw / F.col("_side"))
               .drop("_idx", "_side"))
-    return with_w.withColumn("cell", cell_of("wx", "wy"))
+    return with_w.withColumn("cell", encode("wx", "wy", res))
 
 
 def polygons_by_cell(geoms: DataFrame) -> DataFrame:
-    """Explode polygons to their covering cells (precomputed or via kernel)."""
+    """Explode polygons to their DISTINCT covering cells: with one cell per
+    point, each (point, polygon) pair meets at most once — no dedup needed."""
     return geoms.select("geom_id", "vx", "vy", "is_hot",
-                        F.explode("cell_keys").alias("cell"))
+                        F.explode(F.array_distinct("cell_keys")).alias("cell"))
 
 
 def _verify_pip(cand: DataFrame) -> DataFrame:
@@ -117,13 +111,8 @@ def spatial_join_broadcast(points: DataFrame, geoms: DataFrame) -> DataFrame:
     ``geoms``: geometries table (geom_id, vx, vy, cell_keys).
     Returns matched ``(image_id, tile_id, geom_id, wx, wy)`` rows.
     """
-    polys = broadcast(polygons_by_cell(geoms))
-    cand = points.join(polys, "cell")
-    hits = _verify_pip(cand)
-    # a polygon covering k cells can candidate the same (point, polygon) once
-    # per cell only if the point sat on a cell border — dedup for safety
-    return (hits.select("image_id", "tile_id", "geom_id", "wx", "wy")
-            .dropDuplicates(["image_id", "tile_id", "geom_id"]))
+    cand = points.join(broadcast(polygons_by_cell(geoms)), "cell")
+    return _verify_pip(cand).select("image_id", "tile_id", "geom_id", "wx", "wy")
 
 
 def detect_hot_cells(points: DataFrame, threshold: int) -> DataFrame:
@@ -161,9 +150,9 @@ def spatial_join_salted(points: DataFrame, geoms: DataFrame,
     cold_hits = _verify_pip(cold_pts.join(broadcast(polys), "cell"))
     hot_hits = _verify_pip(hot_pts.join(hot_polys, ["cell", "_salt"]).drop("_salt"))
 
+    # hot/cold is a disjoint split and a hot point has one salt: no dedup
     out_cols = ["image_id", "tile_id", "geom_id", "wx", "wy"]
-    return (cold_hits.select(out_cols).unionByName(hot_hits.select(out_cols))
-            .dropDuplicates(["image_id", "tile_id", "geom_id"]))
+    return cold_hits.select(out_cols).unionByName(hot_hits.select(out_cols))
 
 
 def overlap_join(rects_a: DataFrame, rects_b: DataFrame, res: int,

@@ -101,16 +101,8 @@ def test_zonal_stats_matches_join(spark, geoms):
         "wx": rng.integers(0, WORLD, n).astype(float),
         "wy": rng.integers(0, WORLD, n).astype(float),
     }))
-    from quadtree_block_compression_spark.operators.spatial_join import (
-        block_centroids)  # noqa: F401  (shape doc only)
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("long")
-    def cell_of(wx, wy):  # type: ignore[misc]
-        from quadtree_block_compression_spark.kernels.geometry import cell_encode
-        return pd.Series(cell_encode(wx.to_numpy(float), wy.to_numpy(float), RES))
-
-    pts = pts.withColumn("cell", cell_of("wx", "wy")).cache()
+    from quadtree_block_compression_spark.functions.cells import encode
+    pts = pts.withColumn("cell", encode("wx", "wy", RES)).cache()
 
     got = {r.geom_id: r.asDict() for r in zonal_stats(pts, geoms).collect()}
     assert set(got) == {r.geom_id for r in geoms.select("geom_id").collect()}

@@ -119,11 +119,55 @@ def test_hot_cell_detection(points):
     assert hot.count() > 0  # tiny res=6 grid + many blocks → hot cells exist
 
 
-def test_salted_plan_has_no_python_in_join_keys(points, geoms):
-    plan = spatial_join_salted(points, geoms, hot_threshold=50, salt=4) \
+def test_salted_plan_has_no_python_in_join_keys(blocks, geoms):
+    """Cell keys and salts are JVM expressions: over an UNCACHED
+    block_centroids output the salted plan's only Python evals are the two
+    PIP verifies (cold and hot leg)."""
+    pts = block_centroids(blocks, res=6)
+    plan = spatial_join_salted(pts, geoms, hot_threshold=50, salt=4) \
         ._jdf.queryExecution().executedPlan().toString()
-    # the salt derivation must be xxhash64/pmod (JVM), not Python
-    assert "pythonUDF" not in plan.split("ArrowEvalPython")[0] or True
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(evals) == 2, evals
+    assert all("pip(" in ln for ln in evals), evals
+
+
+def test_joins_emit_each_pair_once_without_dedup(spark):
+    """No dedup after either join: a point has one cell, polygon cells are
+    made distinct, the hot/cold split is disjoint. Pinned with every
+    polygon's cell_keys listed twice and points exactly on cell borders."""
+    import pandas as pd
+    from quadtree_block_compression_spark.functions.cells import encode
+    from quadtree_block_compression_spark.kernels.geometry import (
+        WORLD, points_in_polygon, polygon_cover)
+    res, cw = 6, WORLD / 64
+    rng = np.random.default_rng(5)
+    k = rng.integers(1, 63, (300, 2)).astype(float)
+    xy = np.concatenate([k * cw,                                # corners
+                         np.c_[k[:, 0] * cw, k[:, 1] * cw + 100.0],  # x border
+                         rng.uniform(0, WORLD, (300, 2))])
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"p{i}" for i in range(len(xy))], "tile_id": "",
+        "wx": xy[:, 0], "wy": xy[:, 1]})).withColumn("cell", encode("wx", "wy", res))
+    rows = []
+    for i in range(12):
+        x0, y0 = rng.uniform(0, 0.7 * WORLD, 2) + 0.5
+        w, h = rng.uniform(cw, 0.3 * WORLD, 2)
+        vx = np.array([x0, x0 + w, x0 + w, x0])
+        vy = np.array([y0, y0, y0 + h, y0 + h])
+        cover = polygon_cover(vx, vy, res).tolist()
+        rows.append({"geom_id": f"g{i}", "vx": vx.tolist(), "vy": vy.tolist(),
+                     "cell_keys": cover + cover[::-1], "is_hot": False})
+    geoms = spark.createDataFrame(pd.DataFrame(rows))
+    expect = set()
+    for g in rows:
+        m = points_in_polygon(xy[:, 0], xy[:, 1], np.array(g["vx"]), np.array(g["vy"]))
+        expect |= {(f"p{i}", g["geom_id"]) for i in np.nonzero(m)[0]}
+    assert expect
+    for out in (spatial_join_broadcast(pts, geoms),
+                spatial_join_salted(pts, geoms, hot_threshold=2, salt=4)):
+        got = [(r.image_id, r.geom_id) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == expect
 
 
 # --------------------------------------------------------------------- knn -

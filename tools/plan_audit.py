@@ -13,6 +13,7 @@ and whole-stage-codegen coverage. Run it after plan-level changes:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,6 +31,12 @@ def fmt_plan(df) -> str:
 
 def scan_lines(plan: str, *keys: str) -> list[str]:
     return [ln.strip() for ln in plan.splitlines() if any(k in ln for k in keys)]
+
+
+def arrow_evals(plan: str) -> int:
+    """ArrowEvalPython nodes in a formatted plan: it prints every node
+    twice (tree + details), so count the numbered detail headers."""
+    return len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
 
 
 def partitionless_windows(plan: str) -> list[str]:
@@ -134,6 +141,16 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "BroadcastHashJoin present": "BroadcastHashJoin" in p,
               "no CartesianProduct": "CartesianProduct" not in p,
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
+          })
+
+    # 2b. Cell keys are column arithmetic: the whole plan stays in the JVM
+    p = qplan("cell_assign")
+    check("cell_assign (Z-order cell keys)",
+          "Point → cell key is clamp/floor/bit-interleave column arithmetic "
+          "(`functions/cells.py`), so the plan has no Python runner at all.",
+          p, {
+              "no Python eval anywhere": "EvalPython" not in p
+                                         and "MapInPandas" not in p,
           })
 
     # 3. LSH near-dup: banded equi-joins, no cartesian
@@ -260,7 +277,6 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           })
 
     # 10. corpus_stats: quantile window sorts the value histogram, not rows
-    import re as _re
     p = qplan("corpus_stats")
     check("corpus_stats (exact quantiles under stratum skew)",
           "The per-stratum rank window must consume the (stratum, value) "
@@ -270,7 +286,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           p, {
               "window present (per-stratum cum-count)": "Window" in p,
               "histogram aggregate (keys = stratum, value) present":
-                  _re.search(r"Keys \[2\]: \[source#\d+, n_chars#\d+",
+                  re.search(r"Keys \[2\]: \[source#\d+, n_chars#\d+",
                              p) is not None,
           })
 
@@ -297,7 +313,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           p, {
               "no join operator at all": "Join" not in p,
               "single exchange":
-                  len(_re.findall(r"\(\d+\) Exchange", p)) == 1,
+                  len(re.findall(r"\(\d+\) Exchange", p)) == 1,
               "window on the key": "Window" in p,
           })
 
@@ -328,9 +344,9 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "no join": "Join" not in p,
               "no Window": "Window" not in p,
               "two-phase (partial) aggregation":
-                  len(_re.findall(r"\(\d+\) HashAggregate", p)) >= 2,
+                  len(re.findall(r"\(\d+\) HashAggregate", p)) >= 2,
               "single exchange":
-                  len(_re.findall(r"\(\d+\) Exchange", p)) == 1,
+                  len(re.findall(r"\(\d+\) Exchange", p)) == 1,
           })
 
     # 15. near_dedup: capped band-signature table persisted ONCE (r5 —
@@ -349,7 +365,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "cached signature table on both join sides":
                   p.count("InMemoryTableScan") >= 2,
               "exactly two Arrow evals total (cached band_keys + verify)":
-                  len(_re.findall(r"\(\d+\) ArrowEvalPython", p)) == 2,
+                  arrow_evals(p) == 2,
               "no CartesianProduct": "CartesianProduct" not in p,
           })
 
@@ -367,7 +383,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           p, {
               "sided branches present (_new / NOT _new filters)":
                   "NOT _new" in p.replace("#", " ").replace("(", " ")
-                  or _re.search(r"NOT _new#\d+", p) is not None,
+                  or re.search(r"NOT _new#\d+", p) is not None,
               "shared bucket+shingle caches reused (>=4 cached scans)":
                   p.count("InMemoryTableScan") >= 4,
               "no CartesianProduct": "CartesianProduct" not in p,
@@ -386,7 +402,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     knn_q = spark.createDataFrame(
         [("q0", 100.0, 100.0, 3), ("q1", 900.0, 300.0, 2)],
         "query_id string, x double, y double, k int")
-    ring_q = knn_mod._ring_cells(knn_mod._query_cells(knn_q, 6), 2, -1)
+    ring_q = knn_mod._ring_cells(knn_q, 2, -1, 6)
     p = fmt_plan(knn_pts.join(_bcast(ring_q),
                               knn_pts["cell"] == F.col("join_cell")))
     check("knn_ring round — broadcast tier",
@@ -424,7 +440,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           "composes into any ingest plan as an ordinary projection.",
           p, {
               "only the spread round-robin exchange":
-                  len(_re.findall(r"\(\d+\) Exchange", p)) <= 1
+                  len(re.findall(r"\(\d+\) Exchange", p)) <= 1
                   and "hashpartitioning" not in p,
               "no join": "Join" not in p,
               "no Python/Arrow eval": "MapInPandas" not in p
@@ -463,8 +479,8 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     check("rasterize_rects (vector→raster burn-in)",
           "Polygon → covering-cell burn-in is a projection pipeline: two "
           "JVM sequence/explode steps over the (dimension-sized) geometry "
-          "side, one Arrow PIP eval, one Arrow cell-key eval — no join of "
-          "any kind, so nothing can shuffle the fan-out.",
+          "side, one Arrow PIP eval, the cell key a column expression — no "
+          "join of any kind, so nothing can shuffle the fan-out.",
           p, {
               "no join operator": all(k not in p for k in
                                       ("SortMergeJoin", "ShuffledHashJoin",
@@ -473,9 +489,8 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "JVM explode (Generate) present": "Generate" in p,
               # formatted explain prints every node twice (tree + details):
               # count the numbered detail headers, one per physical node
-              "Arrow evals only (verify + cell key)": len(
-                  [ln for ln in p.splitlines()
-                   if ln.startswith("(") and "ArrowEvalPython" in ln]) == 2,
+              "exactly one Arrow eval (the PIP verify)":
+                  arrow_evals(p) == 1,
               "no row-at-a-time Python": "BatchEvalPython" not in p,
           })
 
@@ -496,15 +511,17 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           })
 
     # 23b. blocks→polygon join on the LIVE kernel output: the end-to-end
-    # raster→vector plan (mapInPandas tiling → Arrow affine+cell encode →
+    # raster→vector plan (mapInPandas tiling → column affine+cell encode →
     # broadcast PIP join) — no shuffle of the block side anywhere
     p = qplan("blocks_pip_join")
     check("blocks_pip_join (live blocks → polygon PIP join)",
           "Tile assignment is one Python-runner pass; the centroid affine "
-          "+ cell encode is Arrow-batched; candidates meet through the "
-          "broadcast cell equi-join — the block side reaches the verify "
-          "with NO exchange between the kernel and the join.",
+          "+ cell encode are column expressions; candidates meet through "
+          "the broadcast cell equi-join — the block side reaches the "
+          "verify with NO exchange between the kernel and the join, and "
+          "the verify is the plan's only Arrow eval.",
           p, {
+              "exactly one Arrow eval (the PIP verify)": arrow_evals(p) == 1,
               "geometry side broadcast": "BroadcastHashJoin" in p,
               "no CartesianProduct": "CartesianProduct" not in p,
               "no row-at-a-time Python": "BatchEvalPython" not in p,
