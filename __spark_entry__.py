@@ -1281,19 +1281,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                   "k": 5} for r in nat]
         queries_df = spark.createDataFrame(pd.DataFrame(qrows))
         pts = _customer_points(spark, sf)
-        # the query set is the 25 nations by construction — pin the
-        # broadcast tier rather than paying auto's query-side count action
-        out = knn.knn_ring(pts, queries_df, res=_RES, max_ring=8,
-                           strategy="broadcast")
+        out = knn.knn_ring(pts, queries_df, res=_RES, max_ring=8)
         return out.select("query_id", F.col("image_id").alias("point_id"),
                           F.round("distance", 6).alias("distance"), "rank")
 
     def knn_corpus(spark, sf):
-        """kNN for EVERY corpus point — the training-pipeline shape that
-        motivated the r5 shuffle tier (VERDICT r4 #1): the query side is
-        the whole point set, kept distributed end to end (cell equi-joins,
-        anti-join-maintained pending set, nothing query-sized on the
-        driver). Oracle: brute-force |P|² SQL with the same
+        """kNN for EVERY corpus point — the training-pipeline shape: the
+        query side is the whole point set, kept distributed end to end
+        (cell equi-joins, anti-join-maintained pending set, nothing
+        query-sized on the driver) by the same ``knn_ring`` path that
+        serves ``knn_points``. Oracle: brute-force |P|² SQL with the same
         (distance, id) tie-break — the strict ring-termination bound makes
         the ring result exactly the brute-force result, ties included."""
         pts = _customer_points(spark, sf)
@@ -1301,8 +1298,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.lit("c_"), F.col("image_id")).alias("query_id"),
             F.col("wx").alias("x"), F.col("wy").alias("y"),
             F.lit(3).alias("k"))
-        out = knn.knn_ring(pts, queries_df, res=_RES, max_ring=8,
-                           strategy="shuffle")
+        out = knn.knn_ring(pts, queries_df, res=_RES, max_ring=8)
         return out.select("query_id", F.col("image_id").alias("point_id"),
                           F.round("distance", 6).alias("distance"), "rank")
 
@@ -3033,7 +3029,7 @@ def oracle_sql() -> dict[str, str]:
             FROM cand QUALIFY rank <= 5
         """,
         "knn_corpus": f"""
-            -- brute-force reference for the shuffle-tier ring expansion
+            -- brute-force reference for the ring expansion
             -- with the corpus itself as the query set (self-match at
             -- distance 0 included, exactly like the engine)
             WITH p AS ({_POINT_SQL}),

@@ -203,19 +203,13 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
 
 def minhash_signatures(docs: DataFrame, n: int = 3, num_perm: int = 8,
                        text_col: str = "text", id_col: str = "doc_id",
-                       shingles: DataFrame | None = None,
                        shingle_hashes: DataFrame | None = None) -> DataFrame:
     """Per-doc MinHash signature: min over shingle hashes under ``num_perm``
     portable permutations. Entirely JVM-side (md5 + integer mod).
-    ``shingles`` / ``shingle_hashes`` let a caller that already materialized
-    the (string / hashed) shingle table share it instead of recomputing.
-    The signature mins over the portable 60-bit hashes either way, so the
-    string and hashed paths are value-identical by construction."""
+    ``shingle_hashes`` lets a caller that already materialized the hashed
+    shingle table share it instead of recomputing."""
     if shingle_hashes is not None:
         hashed = shingle_hashes.select(id_col, "h")
-    elif shingles is not None:
-        hashed = shingles.select(id_col,
-                                 portable_hash64(F.col("shingle")).alias("h"))
     else:
         hashed = word_shingle_hashes(docs, n, text_col, id_col)
     aggs = [F.min(minhash_perm(F.col("h"), i)).alias(f"mh{i}") for i in range(num_perm)]

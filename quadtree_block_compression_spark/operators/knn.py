@@ -8,7 +8,7 @@ with Z-order cells):
    are column expressions, ``functions.cells``);
 2. iteratively expand each *unsatisfied* query's candidate set with the
    cells at Chebyshev ring r = 0, 1, 2, … (an equi-join per ring on the cell
-   key — a shuffle-free broadcast join while the query side is small);
+   key);
 3. a query terminates when its kth-best distance so far is STRICTLY below
    ``ring · c`` (cell width c): any point in shell ``ring+1`` or beyond lies
    ≥ ``ring · c`` away (Chebyshev shell R is ≥ (R−1)·c in Euclidean distance
@@ -17,21 +17,20 @@ with Z-order cells):
 4. exact Euclidean distance + ``row_number() ≤ k`` window top-k, ties broken
    deterministically by (distance, image_id, tile_id).
 
-The ring loop is driver-side control flow only; what each round touches
-depends on the tier (``knn_ring(strategy=)``): the ``broadcast`` tier
-broadcasts the unsatisfied-query set into every ring join and severs its
-lineage through the driver (right when queries are interactively small);
-the ``shuffle`` tier keeps the query side distributed end to end — cell
-equi-joins and an anti-join-maintained pending set with per-round local
-checkpoints — so "kNN for every corpus item" works without ever
-materializing the query set on the driver. In both tiers the big blocks
-side is scanned from one persisted projection and never re-shuffled.
+The ring loop is driver-side control flow only, and there is one code path
+for every query-set size: the pending set is an anti-joined DataFrame whose
+lineage a local checkpoint severs each round, so nothing query-sized ever
+visits the driver. No join carries a hint — the planner picks it from size
+(a checkpoint keeps its origin's statistics): a small query side broadcasts
+into the ring join, a corpus-sized one shuffles. The big blocks side is
+scanned from one persisted projection.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.functions import broadcast
 
 from ..config import EngineConfig, DEFAULT_CONFIG
 from ..functions import cells
@@ -56,11 +55,11 @@ def _ring_cells(queries: DataFrame, ring: int, prev_ring: int,
                     cells.from_grid("_ix", "_iy", res).alias("join_cell")))
 
 
+
+
 def knn_ring(points: DataFrame, queries: DataFrame,
              cfg: EngineConfig = DEFAULT_CONFIG, res: int | None = None,
-             max_ring: int = 8, initial_ring: int | None = None,
-             strategy: str = "auto",
-             broadcast_query_limit: int = 50_000) -> DataFrame:
+             max_ring: int = 8, initial_ring: int | None = None) -> DataFrame:
     """kNN of each query point over block centroids.
 
     ``points``: cell-keyed centroids (image_id, tile_id, wx, wy, cell) —
@@ -68,31 +67,16 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     y, k). Returns ``(query_id, image_id, tile_id, distance, rank)`` with
     rank ≤ k.
 
-    Two tiers share the ring schedule and the final election (VERDICT r4
-    #1 — "kNN for every corpus item" breaks a broadcast-only design):
-
-    * ``broadcast`` — the query side is broadcast into every ring join and
-      the pending set round-trips through the driver (lineage severed by
-      ``createDataFrame``). Right when queries are interactively small.
-    * ``shuffle`` — the query side stays distributed: cell-keyed and
-      equi-joined (plain shuffle join, AQE free to pick sides), the
-      pending set maintained as an anti-joined DataFrame whose lineage is
-      severed by a local checkpoint per round. Nothing query-sized ever
-      visits the driver, so |queries| ~ |points| works.
-    * ``auto`` (default) — one count of the query side picks the tier
-      (≤ ``broadcast_query_limit`` → broadcast).
+    One distributed path serves 25 interactive queries and "kNN for every
+    corpus item" alike: the query side is cell-keyed and equi-joined, the
+    pending set is maintained by anti-join and severed by a local
+    checkpoint per round, and the join strategy is the planner's choice
+    from size (broadcast below ``autoBroadcastJoinThreshold``, shuffled
+    above). Nothing query-sized is collected to the driver.
     """
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = ("broadcast"
-                    if queries.count() <= broadcast_query_limit else "shuffle")
-    use_broadcast = strategy == "broadcast"
-
     from ..kernels.geometry import WORLD
     res = res if res is not None else cfg.spatial.cell_resolution
     cell_width = WORLD / (1 << res)
-    spark = queries.sparkSession
     # persist: the density count plus every ring join rescans this side —
     # without it any upstream work (scan, centroid affine) reruns per round.
     # Tracked so the big side is released at the next query boundary rather
@@ -100,7 +84,6 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     from ..functions.cache import persist_tracked
     pts = persist_tracked(points.select("image_id", "tile_id", "wx", "wy", "cell"))
     q = queries.select("query_id", "x", "y", "k").localCheckpoint(eager=True)
-    q_schema = "query_id string, x double, y double, k int"
 
     pending = q
     gathered: DataFrame | None = None
@@ -114,21 +97,20 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # pass over the upstream
         n_points = pts.count()
         density = max(n_points / float((1 << res) ** 2), 1e-9)
-        k_max = queries.agg(F.max("k")).collect()[0][0] or 1
+        k_max = q.agg(F.max("k")).collect()[0][0] or 1
         initial_ring = int(min(max((k_max / (3.14159 * density)) ** 0.5 + 1, 1),
                                max(max_ring, 1)))
     # then 4× radius per round: log-many iterations instead of one per shell
     radii = [initial_ring]
     while radii[-1] < max_ring:
-        radii.append(min(radii[-1] * 4, max_ring))
+        radii.append(min(max(radii[-1] * 4, 1), max_ring))
     prev = -1
-    if pending.isEmpty():  # vacuous query set — checked ONCE, not per round
-        radii = []
+    # an empty query set drains in the first round, so no up-front check
+    drained = False
     for ring in radii:
-        ring_q = _ring_cells(pending, ring, prev, res)
-        cand = (pts.join(broadcast(ring_q) if use_broadcast else ring_q,
+        cand = (pts.join(_ring_cells(pending, ring, prev, res),
                          pts["cell"] == F.col("join_cell"))
-                .select("query_id", "image_id", "tile_id",
+                .select("query_id", "image_id", "tile_id", "k",
                         F.sqrt(F.pow(F.col("wx") - F.col("x"), 2)
                                + F.pow(F.col("wy") - F.col("y"), 2)).alias("distance"))
                 # checkpoint the DELTA only: checkpointing the growing union
@@ -153,9 +135,7 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # unsatisfied tail instead of every query's candidates (r6).
         wq = Window.partitionBy("query_id").orderBy("distance", "image_id", "tile_id")
         wp = Window.partitionBy("query_id")
-        g_pend = gathered.join(
-            (broadcast(pending) if use_broadcast else pending).select("query_id"),
-            "query_id", "left_semi")
+        g_pend = gathered.join(pending.select("query_id"), "query_id", "left_semi")
         # ONE ranking serves done-detection AND the finished queries' final
         # answer (r6): a finished query's candidate set can never grow
         # (later rings explode only still-pending queries), so its rn ≤ k
@@ -167,7 +147,6 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # disk differences; a point lives in one cell), so no dedup —
         # pytest-pinned via many-rounds equality with brute force.
         flagged = (g_pend.withColumn("_rn", F.row_number().over(wq))
-                   .join(q.select("query_id", "k"), "query_id")
                    .withColumn("_done", F.max(
                        F.when((F.col("_rn") == F.col("k"))
                               & (F.col("distance")
@@ -180,57 +159,33 @@ def knn_ring(points: DataFrame, queries: DataFrame,
                  .localCheckpoint(eager=True))
         results.append(res_r)
         done = res_r.select("query_id").distinct()
-        if use_broadcast:
-            # sever pending's lineage: the query set is tiny by contract, so
-            # a driver round-trip is cheaper than a growing anti-join chain
-            still = pending.join(done, "query_id", "left_anti").toPandas()
-            if len(still) == 0:
-                pending = spark.createDataFrame([], q_schema)
-                break
-            pending = spark.createDataFrame(still)
-        else:
-            # shuffle tier: the pending set never visits the driver — the
-            # anti-join result is checkpointed so its lineage (and hence
-            # every later ring's plan) stays one node deep
-            pending = (pending.join(done, "query_id", "left_anti")
-                       .localCheckpoint(eager=True))
-            if pending.isEmpty():
-                break
+        # checkpointed so the pending set's lineage (and hence every later
+        # ring's plan) stays one node deep
+        pending = (pending.join(done, "query_id", "left_anti")
+                   .localCheckpoint(eager=True))
+        drained = pending.isEmpty()
+        if drained:
+            break
         prev = ring
 
-    # queries still pending after max_ring (deep in empty regions) fall back
-    # to brute force — the tail is tiny by construction (in EITHER tier:
-    # max_ring covers a (2·max_ring+1)²-cell disk, so only queries in
-    # near-empty regions remain), so the cross join touches
-    # |pending| × |points|, not |queries| × |points|.
-    if results:
-        ringed = results[0]
-        for r in results[1:]:
-            ringed = ringed.unionByName(r)
-    else:
-        ringed = spark.createDataFrame(
-            [], "query_id string, image_id string, tile_id string, "
-                "distance double, rank int")
-    if pending.isEmpty():
+    ringed = reduce(DataFrame.unionByName, results)
+    if drained:
         return ringed
-    # broadcast of the tail is a broadcast-tier privilege: in the shuffle
-    # tier the caller chose "queries may be corpus-sized", and a pathological
-    # input (max_ring too small for the density) could leave a large pending
-    # set — never materialize it driver-side there
-    fallback = knn_bruteforce(points, pending.select("query_id", "x", "y", "k"),
-                              broadcast_queries=use_broadcast)
-    return ringed.unionByName(fallback)
+    # queries still pending after max_ring (deep in empty regions) fall back
+    # to brute force — the tail is tiny by construction (max_ring covers a
+    # (2·max_ring+1)²-cell disk, so only queries in near-empty regions
+    # remain), so the cross join touches |pending| × |points|, not
+    # |queries| × |points|.
+    return ringed.unionByName(knn_bruteforce(points, pending))
 
 
-def knn_bruteforce(points: DataFrame, queries: DataFrame,
-                   broadcast_queries: bool = True) -> DataFrame:
+def knn_bruteforce(points: DataFrame, queries: DataFrame) -> DataFrame:
     """Oracle-shaped baseline: cross join + window top-k. Correct at any
-    scale but O(|P|·|Q|) — used to verify ``knn_ring`` and for tiny inputs.
-    ``broadcast_queries=False`` drops the broadcast hint (AQE picks the
-    strategy) for callers whose query side may not fit an executor."""
-    q = queries.select("query_id", "x", "y", "k")
+    scale but O(|P|·|Q|) — used to verify ``knn_ring`` and for its
+    brute-force tail. The cross join carries no hint: the planner
+    broadcasts the query side only when it is small."""
     cand = (points.select("image_id", "tile_id", "wx", "wy")
-            .crossJoin(broadcast(q) if broadcast_queries else q)
+            .crossJoin(queries.select("query_id", "x", "y", "k"))
             .withColumn("distance",
                         F.sqrt(F.pow(F.col("wx") - F.col("x"), 2)
                                + F.pow(F.col("wy") - F.col("y"), 2))))

@@ -202,20 +202,18 @@ def test_knn_ring_many_rounds_no_duplicate_candidates(points, spark):
         assert len(pts) == len(set(pts)), f"duplicate point for {qid}"
 
 
-def test_knn_shuffle_tier_matches_bruteforce_on_corpus_queries(points, spark):
-    """VERDICT r4 #1: the shuffle tier supports |queries| ~ |points| ("kNN
-    for every corpus item") with the query side kept distributed — pending
-    set maintained by anti-join + checkpoint, never toPandas. Property: the
-    full corpus-as-queries result is exactly the brute-force result, with
-    per-query k varying."""
-    queries = points.select(
+def _corpus_queries(points):
+    """Every centroid as a query ("kNN for every corpus item"), per-query
+    k varying in 1..4."""
+    return points.select(
         F.concat_ws("/", "image_id", "tile_id").alias("query_id"),
         F.col("wx").alias("x"), F.col("wy").alias("y"),
         (F.pmod(F.xxhash64("image_id", "tile_id"), F.lit(4)) + 1)
         .cast("int").alias("k"))
-    # broadcast_query_limit=1 forces auto → shuffle for this corpus-sized set
-    got = knn_ring(points, queries, res=6, max_ring=40,
-                   strategy="auto", broadcast_query_limit=1)
+
+
+def _assert_knn_equals_bruteforce(points, queries, **kw):
+    got = knn_ring(points, queries, res=6, **kw)
     expect = knn_bruteforce(points, queries)
     g = {(r.query_id, r.rank): (r.image_id, r.tile_id) for r in got.collect()}
     e = {(r.query_id, r.rank): (r.image_id, r.tile_id) for r in expect.collect()}
@@ -224,19 +222,48 @@ def test_knn_shuffle_tier_matches_bruteforce_on_corpus_queries(points, spark):
     assert g == e
 
 
-def test_knn_shuffle_tier_fallback_no_broadcast(points, spark):
-    """max_ring too small for the density forces the brute-force fallback;
-    in the shuffle tier the pending tail must go through the NON-broadcast
-    cross join (a corpus-sized query set may not fit an executor) and the
-    result must still equal brute force exactly."""
+def test_knn_matches_bruteforce_on_corpus_queries(points, spark):
+    """|queries| ~ |points| with the query side kept distributed — pending
+    set maintained by anti-join + checkpoint, never collected. Property:
+    the full corpus-as-queries result is exactly the brute-force result,
+    with per-query k varying."""
+    _assert_knn_equals_bruteforce(points, _corpus_queries(points), max_ring=40)
+
+
+def test_knn_corpus_queries_shuffled_joins(points, spark):
+    """The same corpus-as-queries run with broadcasting disabled: every
+    round join and the pending semi/anti-joins take the shuffled plan that
+    query sets above ``autoBroadcastJoinThreshold`` get, and the result
+    still equals brute force exactly."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        _assert_knn_equals_bruteforce(points, _corpus_queries(points),
+                                      max_ring=40)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_knn_bruteforce_tail_matches_bruteforce(points, spark):
+    """max_ring too small for the density forces the brute-force tail for
+    the still-pending queries; the result must still equal brute force
+    exactly."""
     queries = spark.createDataFrame(generate_knn_queries(n=10, seed=3))
-    got = knn_ring(points, queries, res=6, max_ring=1, strategy="shuffle")
-    expect = knn_bruteforce(points, queries)
-    g = {(r.query_id, r.rank): (r.image_id, r.tile_id) for r in got.collect()}
-    e = {(r.query_id, r.rank): (r.image_id, r.tile_id) for r in expect.collect()}
-    from quadtree_block_compression_spark.functions.cache import release_caches
-    release_caches()
-    assert g == e
+    _assert_knn_equals_bruteforce(points, queries, max_ring=1)
+
+
+def test_knn_initial_ring_zero_and_empty_queries(points, spark):
+    """initial_ring=0 (the query's own cell only) grows to ring 1, 4, …
+    instead of repeating ring 0; an empty query set drains in one round
+    and returns the empty result schema."""
+    queries = spark.createDataFrame(generate_knn_queries(n=6, seed=5))
+    _assert_knn_equals_bruteforce(points, queries, max_ring=40,
+                                  initial_ring=0)
+    empty = knn_ring(points, queries.limit(0), res=6, max_ring=40)
+    assert empty.columns == ["query_id", "image_id", "tile_id", "distance",
+                             "rank"]
+    assert empty.count() == 0
 
 
 def test_knn_k_respected(points, spark):

@@ -390,10 +390,9 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
           })
 
-    # 17/18. knn_ring per-round joins, both tiers (r5 — VERDICT r4 #1):
-    # the loop is driver-side control flow, so audit the exact join each
-    # round issues rather than the checkpoint-severed final plan
-    from pyspark.sql.functions import broadcast as _bcast
+    # 17/18. knn_ring's per-round join, which carries no hint: the loop is
+    # driver-side control flow, so audit the exact join each round runs
+    # rather than the checkpoint-severed final plan
     from quadtree_block_compression_spark.operators import knn as knn_mod
     from quadtree_block_compression_spark.operators.spatial_join import (
         block_centroids)
@@ -401,31 +400,39 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
         .select("image_id", "tile_id", "wx", "wy", "cell")
     knn_q = spark.createDataFrame(
         [("q0", 100.0, 100.0, 3), ("q1", 900.0, 300.0, 2)],
-        "query_id string, x double, y double, k int")
+        "query_id string, x double, y double, k int").localCheckpoint(eager=True)
     ring_q = knn_mod._ring_cells(knn_q, 2, -1, 6)
-    p = fmt_plan(knn_pts.join(_bcast(ring_q),
-                              knn_pts["cell"] == F.col("join_cell")))
-    check("knn_ring round — broadcast tier",
-          "Each ring round of the small-query tier is a broadcast hash "
-          "join of the exploded shell cells against the cell-keyed points "
-          "side; the big side is never hash-repartitioned and no round "
-          "degenerates to a cartesian.",
+    p = fmt_plan(knn_pts.join(ring_q, knn_pts["cell"] == F.col("join_cell")))
+    check("knn_ring round — small query side",
+          "The pending query set is a local checkpoint, which keeps its "
+          "origin's size statistics, so with a small query side the "
+          "unhinted round join is planned as a broadcast hash join of the "
+          "exploded shell cells against the cell-keyed points side; the "
+          "big side is never hash-repartitioned and no round degenerates "
+          "to a cartesian.",
           p, {
               "BroadcastHashJoin present": "BroadcastHashJoin" in p,
               "big side never shuffle-partitioned":
                   "Exchange hashpartitioning" not in p,
               "no CartesianProduct": "CartesianProduct" not in p,
+              "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
           })
-    p = fmt_plan(knn_pts.join(ring_q, knn_pts["cell"] == F.col("join_cell")))
-    check("knn_ring round — shuffle tier (corpus-sized query sets)",
-          "With a corpus-sized query side the round is a plain cell "
-          "equi-join (AQE free to pick the strategy) — still never a "
-          "cartesian, and the pending set stays distributed (no driver "
-          "materialization exists in this tier by construction).",
+    bhj_key = "spark.sql.autoBroadcastJoinThreshold"
+    prev_bhj = spark.conf.get(bhj_key)
+    spark.conf.set(bhj_key, "-1")
+    try:
+        p = fmt_plan(knn_pts.join(ring_q, knn_pts["cell"] == F.col("join_cell")))
+    finally:
+        spark.conf.set(bhj_key, prev_bhj)
+    check("knn_ring round — query side above the broadcast threshold",
+          "The same unhinted join, planned with broadcasting disabled as a "
+          "stand-in for a corpus-sized query side, is a shuffled cell "
+          "equi-join — still never a cartesian. The pending set stays "
+          "distributed at every size (no driver materialization exists "
+          "in knn_ring).",
           p, {
               "cell equi-join present": ("SortMergeJoin" in p
-                                         or "ShuffledHashJoin" in p
-                                         or "BroadcastHashJoin" in p),
+                                         or "ShuffledHashJoin" in p),
               "no CartesianProduct": "CartesianProduct" not in p,
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
           })
