@@ -33,8 +33,7 @@ def run_corpus_pipeline(spark: SparkSession, docs: DataFrame, root: str,
         # quality and language as column expressions over the same scan)
         return annotate(docs)
 
-    annotated = pipe.run_stage("s1_annotate", s1, fingerprint=fp,
-                               lineage_weigh_col="text")
+    annotated = pipe.run_stage("s1_annotate", s1, fingerprint=fp)
 
     def s2():
         from pyspark.sql import Window
@@ -42,8 +41,7 @@ def run_corpus_pipeline(spark: SparkSession, docs: DataFrame, root: str,
         return (annotated.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn"))
 
-    exact_deduped = pipe.run_stage("s2_exact_dedup", s2, fingerprint=fp,
-                                   lineage_weigh_col="text")
+    exact_deduped = pipe.run_stage("s2_exact_dedup", s2, fingerprint=fp)
 
     def s3():
         pairs = minhash_lsh_pairs(exact_deduped, n=ngram_n,
@@ -51,13 +49,11 @@ def run_corpus_pipeline(spark: SparkSession, docs: DataFrame, root: str,
         drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         return exact_deduped.join(drops, "doc_id", "left_anti")
 
-    near_deduped = pipe.run_stage("s3_near_dedup", s3, fingerprint=fp,
-                                  lineage_weigh_col="text")
+    near_deduped = pipe.run_stage("s3_near_dedup", s3, fingerprint=fp)
 
     def s4():
         return near_deduped.filter(F.col("quality") >= min_quality)
 
-    clean = pipe.run_stage("s4_quality_filter", s4, fingerprint=fp,
-                           lineage_weigh_col="text")
+    clean = pipe.run_stage("s4_quality_filter", s4, fingerprint=fp)
     return {"annotated": annotated, "exact_deduped": exact_deduped,
             "near_deduped": near_deduped, "clean": clean, "pipeline": pipe}

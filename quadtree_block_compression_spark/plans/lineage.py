@@ -2,19 +2,48 @@
 
 Each stage can emit one row per physical partition recording what flowed
 through it — the observability layer a 1000-executor run needs to prove
-identical outputs across cluster sizes and to locate skew. Implemented with
-``mapInPandas`` over the stage's output (Arrow pass-through, counting only)
-plus ``spark_partition_id()`` for cheap JVM-side variants.
+identical outputs across cluster sizes and to locate skew. A stage that was
+written to parquet gets its rows from the written files' footers
+(:func:`written_parts`, read on the driver, no data scan), so they describe
+the write tasks themselves; a frame still in flight gets them from a JVM
+``groupBy(spark_partition_id())`` (:func:`partition_lineage`).
 """
 
 from __future__ import annotations
 
+import os
 import time
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, functions as F
 
 LINEAGE_SCHEMA = ("stage string, partition_id int, rows_out long, bytes_out long, "
                   "t_unix double")
+
+
+def written_parts(path: str) -> list[list[int]]:
+    """``[partition_id, rows, bytes]`` per write task of the parquet files
+    directly under ``path``: rows from each ``part-*`` file's footer, bytes
+    on disk. Spark names a task's files ``part-<task>-…``, so files that
+    share the task number (``maxRecordsPerFile`` splits) are summed."""
+    parts: dict[int, list[int]] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            f = os.path.join(path, name)
+            task = int(name.split("-")[1])
+            p = parts.setdefault(task, [task, 0, 0])
+            p[1] += pq.read_metadata(f).num_rows
+            p[2] += os.path.getsize(f)
+    return [parts[t] for t in sorted(parts)]
+
+
+def lineage_rows(stage: str, parts: list[list[int]],
+                 t_unix: float) -> list[tuple]:
+    """``LINEAGE_SCHEMA`` rows for :func:`written_parts` output: one per write
+    task, plus the stage-total row (``partition_id = -1``)."""
+    total = [-1, sum(p[1] for p in parts), sum(p[2] for p in parts)]
+    return [(stage, pid, n, b, t_unix) for pid, n, b in [*parts, total]]
 
 
 def partition_lineage(df: DataFrame, stage: str,

@@ -5,11 +5,14 @@ preemption. Model (SURVEY.md §2.9): each stage writes its output parquet +
 a manifest entry (stage name, row count, wall time, input fingerprint);
 ``run_stage`` skips any stage whose manifest entry is complete and whose
 fingerprint matches — resume is "read the last complete stage", exactly the
-``_SUCCESS``-style barrier pattern. Lineage rows are appended per stage.
+``_SUCCESS``-style barrier pattern. The entry also records rows and bytes
+per write task, read from the written files' parquet footers, and
+``lineage()`` serves them as lineage rows.
 """
 
 from __future__ import annotations
 
+import calendar
 import json
 import os
 import time
@@ -17,9 +20,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .lineage import partition_lineage
+from .lineage import LINEAGE_SCHEMA, lineage_rows, written_parts
 
 MANIFEST = "manifest.json"
+_TIME_FMT = "%Y-%m-%dT%H:%M:%SZ"
 
 
 class StagedPipeline:
@@ -43,8 +47,7 @@ class StagedPipeline:
         return os.path.join(self.root, name)
 
     def run_stage(self, name: str, build: Callable[[], DataFrame],
-                  fingerprint: str = "", partitions: int | None = None,
-                  lineage_weigh_col: str | None = None) -> DataFrame:
+                  fingerprint: str = "") -> DataFrame:
         """Run (or resume) one stage. ``build`` returns the stage DataFrame;
         its output is persisted to parquet and re-read, so downstream plans
         start from a scan (bounded lineage, stable resume point)."""
@@ -54,28 +57,27 @@ class StagedPipeline:
             return self.spark.read.parquet(path)
 
         t0 = time.time()
-        df = build()
-        if partitions:
-            df = df.repartition(partitions)
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        rows = out.count()
-        lin = partition_lineage(out, name, weigh_col=lineage_weigh_col)
-        lin.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
+        build().write.mode("overwrite").parquet(path)
+        parts = written_parts(path)
         self.manifest[name] = {
             "complete": True,
             "fingerprint": fingerprint,
-            "rows": rows,
+            "rows": sum(p[1] for p in parts),
+            "parts": parts,
             "seconds": round(time.time() - t0, 3),
             "path": path,
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "finished_at": time.strftime(_TIME_FMT, time.gmtime()),
         }
         self._save()
-        return out
+        return self.spark.read.parquet(path)
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
-
-    def invalidate(self, name: str) -> None:
-        self.manifest.pop(name, None)
-        self._save()
+        """One ``LINEAGE_SCHEMA`` row per write task of every completed stage,
+        plus each stage's total row (``partition_id = -1``). An entry written
+        without ``parts`` contributes its total row only."""
+        rows = []
+        for name, e in sorted(self.manifest.items()):
+            t = float(calendar.timegm(time.strptime(e["finished_at"], _TIME_FMT)))
+            rows += (lineage_rows(name, e["parts"], t) if "parts" in e
+                     else [(name, -1, e["rows"], 0, t)])
+        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)

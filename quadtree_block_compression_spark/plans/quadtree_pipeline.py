@@ -3,8 +3,8 @@
 ``images`` scan → **S1** tile-assign → **S2** exact dedup → **S3** cell
 keys/centroids → **S4** spatial join → fidelity/lineage sinks. Every stage
 persists to parquet with a manifest fingerprint (config + input), so a
-preempted run resumes from the last complete stage; per-partition lineage
-rows accumulate under ``_lineage``.
+preempted run resumes from the last complete stage; the manifest records
+rows and bytes per write task, which ``pipeline.lineage()`` serves.
 """
 
 from __future__ import annotations
@@ -30,10 +30,8 @@ def run_quadtree_pipeline(spark: SparkSession, images: DataFrame,
     fp = json.dumps({"cfg": asdict(cfg), "input": input_fingerprint}, sort_keys=True)
     pipe = StagedPipeline(spark, root)
 
-    blocks = pipe.run_stage("s1_blocks", lambda: assign_tiles(images, cfg),
-                            fingerprint=fp, lineage_weigh_col="block_px")
-    deduped = pipe.run_stage("s2_dedup", lambda: dedup_exact(blocks),
-                             fingerprint=fp, lineage_weigh_col="block_px")
+    blocks = pipe.run_stage("s1_blocks", lambda: assign_tiles(images, cfg), fingerprint=fp)
+    deduped = pipe.run_stage("s2_dedup", lambda: dedup_exact(blocks), fingerprint=fp)
     centroids = pipe.run_stage(
         "s3_centroids",
         lambda: block_centroids(deduped.filter("is_leaf"), cfg=cfg),

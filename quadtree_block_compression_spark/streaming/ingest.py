@@ -16,6 +16,9 @@ appending a duplicate — checkpoint + idempotent sink = exactly-once.
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import EngineConfig, DEFAULT_CONFIG
@@ -27,7 +30,7 @@ def make_batch_processor(blocks_path: str, cfg: EngineConfig = DEFAULT_CONFIG,
     assert the sink is idempotent (the exactly-once half the checkpoint
     cannot provide by itself)."""
     from ..operators.tiling import assign_tiles
-    from ..plans.lineage import partition_lineage
+    from ..plans.lineage import LINEAGE_SCHEMA, lineage_rows, written_parts
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..functions.cache import release_caches
@@ -37,8 +40,10 @@ def make_batch_processor(blocks_path: str, cfg: EngineConfig = DEFAULT_CONFIG,
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("_batch_id").parquet(blocks_path))
             if lineage_path:
-                (partition_lineage(blocks, f"ingest_batch_{batch_id}",
-                                   weigh_col="block_px")
+                # rows per write task from the batch partition's footers
+                parts = written_parts(os.path.join(blocks_path, f"_batch_id={batch_id}"))
+                rows = lineage_rows(f"ingest_batch_{batch_id}", parts, time.time())
+                (batch_df.sparkSession.createDataFrame(rows, LINEAGE_SCHEMA)
                  .withColumn("_batch_id", F.lit(batch_id))
                  .write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")

@@ -533,9 +533,37 @@ def test_staged_pipeline_resume(spark, tmp_path):
     # invalidation: new fingerprint → rebuild
     c = p2.run_stage("s1", build, fingerprint="v2")
     assert calls["n"] == 2
-    # lineage rows recorded per partition
-    lin = p2.lineage()
-    assert lin.filter("stage = 's1'").agg(F.sum("rows_out")).collect()[0][0] >= 100
+    # lineage describes the rebuilt stage only: one total row, one pass
+    totals = p2.lineage().filter("stage = 's1' AND partition_id = -1").collect()
+    assert [r.rows_out for r in totals] == [100]
+
+
+def test_staged_pipeline_lineage_is_per_write_task(spark, tmp_path):
+    """Lineage rows are the stage's write tasks, not the splits a re-read
+    packs them into: with ``openCostInBytes=1`` a scan packs the seven small
+    files below together, but the lineage still holds eight rows, each the
+    row count its task wrote."""
+    from quadtree_block_compression_spark.plans.pipeline import StagedPipeline
+
+    def build():  # 8 partitions: 1250 rows, then 7 × 25
+        n = F.when(F.col("id") == 0, 1250).otherwise(25)
+        return spark.range(0, 8, 1, 8).select(
+            F.explode(F.sequence(F.lit(1), n)).alias("x"))
+
+    want = {r.pid: r["count"] for r in build().groupBy(
+        F.spark_partition_id().alias("pid")).count().collect()}
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        p = StagedPipeline(spark, str(tmp_path / "skew"))
+        assert p.run_stage("skewed", build).count() == 1425
+        lin = p.lineage().collect()
+    finally:
+        spark.conf.set(key, before)
+    assert {r.partition_id: r.rows_out for r in lin if r.partition_id >= 0} == want
+    assert [r.rows_out for r in lin if r.partition_id == -1] == [1425]
+    assert all(r.bytes_out > 0 for r in lin)
 
 
 def test_lineage_summary(spark):

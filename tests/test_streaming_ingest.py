@@ -62,6 +62,9 @@ def test_ingest_batch_replay_is_idempotent(spark, tiny_images, tmp_path):
     lin = spark.read.parquet(lineage)
     assert lin.filter(F.col("stage") == "ingest_batch_0") \
               .filter(F.col("partition_id") == -1).count() == 1
+    # and counts the rows the batch's write tasks stored
+    batch0 = lin.filter((F.col("_batch_id") == 0) & (F.col("partition_id") >= 0))
+    assert batch0.agg(F.sum("rows_out")).collect()[0][0] == n_first
 
 
 def test_streaming_near_dedup_ingest_grows_index_and_replays_idempotently(
