@@ -14,12 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``min_parts`` (default: the
-    session's ``defaultParallelism``) iff it currently has fewer partitions.
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to the session's
+    ``defaultParallelism`` iff it currently has fewer partitions.
     Content-deterministic: Spark's round-robin repartition locally sorts for
     retry determinism, and every consumer here is order-insensitive."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _plan_partitions(df) < target:
         return df.repartition(target)
     return df

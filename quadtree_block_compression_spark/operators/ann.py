@@ -100,11 +100,6 @@ def _unit_select(df: DataFrame, vec_expr, dim: int, out: str = "vn",
     return base.select(*keep, _unit(v).alias(out), *extras)
 
 
-def with_unit_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Precompute the L2 norm (reused across queries)."""
-    return emb.withColumn("_norm", _norm(F.col(vec_col).cast("array<double>")))
-
-
 def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
                            vec_col: str = "embedding", id_col: str = "vec_id",
                            q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
@@ -148,18 +143,13 @@ def hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _hyperplane_sign_cols(vec_col: str, dim: int, num_planes: int):
-    """One 0/1 sign column per plane (JVM-only): the ±1 matrices are tiny and
-    embedded as array literals, reproducible from the same constants in the
-    SQL oracle. Kept as zip_with/aggregate folds — the unrolled multiply-add
-    chain measured SLOWER on Spark 4.1 (see :func:`_norm`)."""
-    return _sign_cols_from(F.col(vec_col).cast("array<double>"),
-                           dim, num_planes)
-
-
 def _sign_cols_from(v, dim: int, num_planes: int):
-    """Sign columns over an already-hoisted array<double> column ``v``
-    (call sites that also unit-normalize share the one cast vector)."""
+    """One 0/1 sign column per plane over an already-hoisted array<double>
+    column ``v`` (call sites that also unit-normalize share the one cast
+    vector). JVM-only: the ±1 matrices are tiny and embedded as array
+    literals, reproducible from the same constants in the SQL oracle. Kept
+    as zip_with/aggregate folds — the unrolled multiply-add chain measured
+    SLOWER on Spark 4.1 (see :func:`_norm`)."""
     planes = hyperplane_signs(num_planes, dim)
     cols = []
     for p, signs in enumerate(planes):

@@ -46,10 +46,11 @@ def dedup_exact_docs(docs: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------- shingles --
 
 
-def word_shingles(docs: DataFrame, n: int, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per doc, built with JVM functions only:
-    split → slice windows via transform/sequence → concat — no Python."""
+def _shingle_rows(docs: DataFrame, n: int, text_col: str,
+                  id_col: str) -> DataFrame:
+    """(``id_col``, shingle) rows, one per word n-gram window (duplicates
+    kept), built with JVM functions only: split → slice windows via
+    transform/sequence → concat — no Python."""
     from ..functions.parallelism import spread
     docs = spread(docs)  # a single-file scan must not serialize the explode
     # the token array is a COLUMN before the window transform: the slice
@@ -70,8 +71,13 @@ def word_shingles(docs: DataFrame, n: int, text_col: str = "text",
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
     ).otherwise(F.array().cast("array<string>"))
     return (base.select(F.col(id_col), F.explode(sh).alias("shingle"))
-            .where(F.length("shingle") > 0)
-            .distinct())
+            .where(F.length("shingle") > 0))
+
+
+def word_shingles(docs: DataFrame, n: int, text_col: str = "text",
+                  id_col: str = "doc_id") -> DataFrame:
+    """Distinct word n-gram shingles per doc: (``id_col``, shingle)."""
+    return _shingle_rows(docs, n, text_col, id_col).distinct()
 
 
 def word_shingle_hashes(docs: DataFrame, n: int, text_col: str = "text",
@@ -89,16 +95,6 @@ def word_shingle_hashes(docs: DataFrame, n: int, text_col: str = "text",
     P ≈ k²/2^61 per document at k shingles, immaterial at any corpus size
     and verified hash-identical against the string-based DuckDB oracles at
     every graded SF."""
-    from ..functions.parallelism import spread
-    docs = spread(docs)
-    base = docs.select(F.col(id_col),
-                       F.split(F.col(text_col), r"\s+").alias("_toks"))
-    toks = F.col("_toks")
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    sh = F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
-    ).otherwise(F.array().cast("array<string>"))
     # r6 (guide §2.4 "share one exchange"): hash-partition by the DOC id
     # before the distinct. HashPartitioning(id) satisfies the distinct's
     # ClusteredDistribution(id, h) (subset rule), so no second exchange is
@@ -107,8 +103,7 @@ def word_shingle_hashes(docs: DataFrame, n: int, text_col: str = "text",
     # this one exchange instead of re-shuffling the table: the signature
     # aggregate alone previously exchanged ~86 MB of barely-reduced partial
     # rows at sf1 (partial min per doc per source partition), twice.
-    return (base.select(F.col(id_col), F.explode(sh).alias("shingle"))
-            .where(F.length("shingle") > 0)
+    return (_shingle_rows(docs, n, text_col, id_col)
             .select(F.col(id_col), portable_hash64(F.col("shingle")).alias("h"))
             .repartition(F.col(id_col))
             .distinct())
@@ -316,7 +311,6 @@ def simhash64(docs: DataFrame, text_col: str = "text",
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 12,
                   text_col: str = "text", id_col: str = "doc_id",
-                  prefix_bits: int = 12,
                   max_bucket: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 

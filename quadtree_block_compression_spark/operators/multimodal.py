@@ -7,21 +7,17 @@ All heavy work is ``mapInPandas`` over Arrow batches with small
 ``maxRecordsPerBatch`` (multi-MB payloads): schema, partitioning, UDF
 signature and batch shape are the real, tested plumbing.
 
-Image decode/resize use this repo's own numpy codecs (real). Audio decode is
+Image decode uses this repo's own numpy codecs (real). Audio decode is
 REAL for RIFF/WAVE PCM (stdlib ``wave`` + numpy — 8/16/24/32-bit widths, any
 channel count). Video decode is REAL for Motion-JPEG in RIFF/AVI
-(``kernels/avi.py`` demux + the JFIF decoder). Inter-frame video codecs and
-compressed audio (mp3/flac/ogg) raise ``NotImplementedError`` — the
-container has no soundfile/ffmpeg; the deterministic 'QAUD'/'QVID' fakes
-remain accepted so the plumbing has adversarial coverage.
+(``kernels/avi.py`` demux + the JFIF decoder). Every other container —
+inter-frame video codecs, compressed audio (mp3/flac/ogg) — raises
+``NotImplementedError``: there is no soundfile/ffmpeg to decode them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-AUD_SIG = b"QAUD"  # fake deterministic audio container: header + f32 samples
-VID_SIG = b"QVID"  # fake deterministic video container: header + raw frames
 
 IMAGE_FEATURES_SCHEMA = ("image_id string, w int, h int, mean_r double, "
                          "mean_g double, mean_b double, edge_energy double, "
@@ -54,26 +50,6 @@ def image_features(images: DataFrame) -> DataFrame:
                                              "mean_g", "mean_b", "edge_energy", "phash"])
 
     return src.mapInPandas(feats, IMAGE_FEATURES_SCHEMA)
-
-
-def image_resize(images: DataFrame, dst_w: int, dst_h: int,
-                 method: str = "CatmullRom", out_fmt: str = "png") -> DataFrame:
-    """Decode → resample → re-encode. Returns (image_id, bytes, w, h, fmt)."""
-    src = images.select("image_id", "bytes")
-
-    def rz(batches):
-        import pandas as pd
-        from ..kernels.codecs import decode_image, encode_image
-        from ..kernels.resample import scale
-        for pdf in batches:
-            out = []
-            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
-                img = decode_image(bytes(data))
-                res = scale(img, dst_h, dst_w, method)
-                out.append((image_id, encode_image(res, out_fmt), dst_w, dst_h, out_fmt))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    return src.mapInPandas(rz, "image_id string, bytes binary, w int, h int, fmt string")
 
 
 def decode_wav_pcm(data: bytes):
@@ -117,34 +93,25 @@ def audio_features(audio: DataFrame, id_col: str = "clip_id",
                    bytes_col: str = "bytes") -> DataFrame:
     """Per-clip audio features over a binary column.
 
-    RIFF/WAVE PCM decodes for real (stdlib ``wave``); the QAUD deterministic
-    fake container stays accepted for adversarial plumbing tests; compressed
-    formats raise ``NotImplementedError`` (no codec libs in this container).
+    RIFF/WAVE PCM decodes for real (stdlib ``wave``); compressed formats
+    raise ``NotImplementedError`` (no codec libs in this container).
     One Arrow pass; only (id, bytes) cross the boundary."""
     src = audio.select(id_col, bytes_col)
 
     def dec(batches):
-        import struct
         import numpy as np
         import pandas as pd
         for pdf in batches:
             out = []
             for cid, data in zip(pdf[id_col], pdf[bytes_col]):
                 data = bytes(data)
-                if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-                    x, sr, nch = decode_wav_pcm(data)
-                    codec = "wav_pcm"
-                elif data[:4] == AUD_SIG:
-                    (sr, n) = struct.unpack(">II", data[4:12])
-                    x = np.frombuffer(data[12:12 + 4 * n], dtype=">f4") \
-                        .astype(np.float64)
-                    nch, codec = 1, "qaud"
-                else:
+                if not (data[:4] == b"RIFF" and data[8:12] == b"WAVE"):
                     raise NotImplementedError(
                         "compressed audio codecs unavailable in this "
-                        "environment; payload must be WAV PCM or QAUD")
+                        "environment; payload must be WAV PCM")
+                x, sr, nch = decode_wav_pcm(data)
                 nf = len(x) // max(nch, 1)
-                out.append((cid, codec, sr, nch, nf,
+                out.append((cid, "wav_pcm", sr, nch, nf,
                             nf / sr if sr else 0.0,
                             float(x.mean()) if len(x) else 0.0,
                             float(np.abs(x).max()) if len(x) else 0.0,
@@ -169,15 +136,12 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
 
     REAL decode path: Motion-JPEG in a RIFF/AVI container (``kernels/avi.py``
     demux + this repo's JFIF decoder) — the standard uncompressed-pipeline
-    interchange format, feasible without ffmpeg. The QVID deterministic fake
-    stays accepted for adversarial plumbing tests; other containers raise
-    (no inter-frame codecs in this environment). One Arrow pass; each frame
-    row carries dims, channel means and a PNG re-encode."""
+    interchange format, feasible without ffmpeg. Other containers raise (no
+    inter-frame codecs in this environment). One Arrow pass; each frame row
+    carries dims, channel means and a PNG re-encode."""
     src = video.select(id_col, bytes_col)
 
     def sample(batches):
-        import struct
-        import numpy as np
         import pandas as pd
         from ..kernels.avi import is_avi, mjpeg_frames
         from ..kernels.codecs import encode_png
@@ -186,22 +150,13 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
             out = []
             for vid, data in zip(pdf[id_col], pdf[bytes_col]):
                 data = bytes(data)
-                if is_avi(data):
-                    payloads = mjpeg_frames(data)
-                    frames = ((f, decode_jfif(payloads[f]))
-                              for f in range(0, len(payloads), every_n))
-                elif data[:4] == VID_SIG:
-                    h, w, nf = struct.unpack(">III", data[4:16])
-                    sz = h * w * 3
-                    frames = ((f, np.frombuffer(
-                        data[16 + f * sz:16 + (f + 1) * sz],
-                        dtype=np.uint8).reshape(h, w, 3))
-                        for f in range(0, nf, every_n))
-                else:
+                if not is_avi(data):
                     raise NotImplementedError(
                         "inter-frame video codecs unavailable in this "
-                        "environment; payload must be MJPEG/AVI or QVID")
-                for f, frame in frames:
+                        "environment; payload must be MJPEG/AVI")
+                payloads = mjpeg_frames(data)
+                for f in range(0, len(payloads), every_n):
+                    frame = decode_jfif(payloads[f])
                     out.append((vid, f, frame.shape[1], frame.shape[0],
                                 float(frame[..., 0].mean()),
                                 float(frame[..., 1].mean()),
@@ -212,13 +167,6 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
                                              "frame_png"])
 
     return src.mapInPandas(sample, VIDEO_SAMPLE_SCHEMA.format(id=id_col))
-
-
-def video_frame_sample_stub(video: DataFrame, every_n: int = 10,
-                            id_col: str = "video_id",
-                            bytes_col: str = "bytes") -> DataFrame:
-    """Backwards-compatible alias from when only the QVID fake existed."""
-    return video_frame_sample(video, every_n, id_col, bytes_col)
 
 
 def make_mjpeg_avi_clip(video_id: int, h: int = 32, w: int = 48,
@@ -256,18 +204,3 @@ def make_wav_pcm16(clip_id: int, sr: int = 16000, n_frames: int = 1600,
         wf.writeframes(x.tobytes())
     return buf.getvalue()
 
-
-def make_fake_audio(clip_id: int, sr: int = 16000, n: int = 1600) -> bytes:
-    import struct
-    import numpy as np
-    rng = np.random.default_rng(clip_id)
-    samples = (rng.random(n, dtype=np.float64) - 0.5).astype(">f4")
-    return AUD_SIG + struct.pack(">II", sr, n) + samples.tobytes()
-
-
-def make_fake_video(video_id: int, h: int = 8, w: int = 8, nf: int = 30) -> bytes:
-    import struct
-    import numpy as np
-    rng = np.random.default_rng(video_id)
-    frames = rng.integers(0, 256, (nf, h, w, 3), dtype=np.int64).astype(np.uint8)
-    return VID_SIG + struct.pack(">III", h, w, nf) + frames.tobytes()

@@ -30,6 +30,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..config import EngineConfig, DEFAULT_CONFIG
 from ..functions.cells import encode
+from ..functions.portable_hash import portable_hash64
 from ..kernels.geometry import MAX_RES, WORLD
 
 # images tile into a GRID×GRID mosaic of the world frame: image i occupies
@@ -44,15 +45,24 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
 
     The affine and the cell encode are column arithmetic (the cell key is
     ``functions.cells.encode``), so the whole projection stays JVM-side.
+
+    The image index is the trailing digits of ``image_id`` (``img_0007`` →
+    7). An id without trailing digits (a file name such as ``photo.png``),
+    or whose digits overflow a long, takes ``portable_hash64(image_id) mod
+    MOSAIC_GRID²`` instead: a deterministic mosaic cell, where a plain cast
+    would abort the job under ANSI (FIXTURES.md §2).
     """
     res = res if res is not None else cfg.spatial.cell_resolution
     cell_w = WORLD / MOSAIC_GRID
 
-    # affine: image index (trailing digits of image_id, JVM regexp) picks the
-    # mosaic cell; the padded canvas [0, side)² scales onto it.
+    # affine: image index (see above) picks the mosaic cell; the padded
+    # canvas [0, side)² scales onto it.
     cw = F.lit(cell_w)
+    idx = F.coalesce(
+        F.regexp_extract("image_id", r"(\d+)$", 1).try_cast("long"),
+        portable_hash64("image_id") % (MOSAIC_GRID * MOSAIC_GRID))
     with_w = (blocks
-              .withColumn("_idx", F.regexp_extract("image_id", r"(\d+)$", 1).cast("long"))
+              .withColumn("_idx", idx)
               .withColumn("_side", ((F.col("x1") - F.col("x0"))
                                     * F.pow(F.lit(2.0), F.col("level"))).cast("double"))
               .withColumn("wx", (F.col("_idx") % MOSAIC_GRID) * cw

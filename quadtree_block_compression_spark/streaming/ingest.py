@@ -124,17 +124,6 @@ def make_dedup_batch_processor(index_path: str, out_path: str,
     return process_batch
 
 
-def start_dedup_ingest(stream_docs: DataFrame, index_path: str,
-                       out_path: str, checkpoint_path: str, **kw):
-    """Start the streaming near-dedup ingest query (docs-table schema).
-    Returns the StreamingQuery (caller stops it)."""
-    return (stream_docs.writeStream
-            .foreachBatch(make_dedup_batch_processor(index_path, out_path, **kw))
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())
-
-
 def make_embedding_batch_processor(index_path: str,
                                    vec_col: str = "embedding",
                                    id_col: str = "vec_id"):
@@ -159,14 +148,3 @@ def make_embedding_batch_processor(index_path: str,
             release_caches()
 
     return process_batch
-
-
-def start_embedding_ingest(stream_emb: DataFrame, index_path: str,
-                           checkpoint_path: str, **kw):
-    """Start the streaming IVF-index ingest query (embeddings-table
-    schema). Returns the StreamingQuery (caller stops it)."""
-    return (stream_emb.writeStream
-            .foreachBatch(make_embedding_batch_processor(index_path, **kw))
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start())

@@ -101,6 +101,29 @@ def test_shingles_short_docs_no_crash(spark):
     assert minhash_signatures(docs, n=3, num_perm=8).count() == 2
 
 
+def _hash_exchange_keys(df):
+    """Key names of every ``Exchange hashpartitioning`` in ``df``'s plan."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [[re.sub(r"#\d+L?$", "", k) for k in keys.split(", ")[:-1]]
+            for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)]
+
+
+def test_shingle_tables_shuffle_once_by_doc(spark):
+    """word_shingle_hashes hash-partitions by the doc id before its distinct,
+    and the minhash signature groupBy reuses that exchange: one exchange on
+    (doc_id) each. word_shingles' distinct shuffles once on (doc_id, shingle)."""
+    from quadtree_block_compression_spark.operators.dedup_text import (
+        minhash_signatures, word_shingle_hashes, word_shingles)
+    words = ["w%d" % i for i in range(50)]
+    rows = [(d, " ".join(words[(d * 7 + j * 3) % 50] for j in range(12)))
+            for d in range(200)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    assert _hash_exchange_keys(word_shingle_hashes(docs, 3)) == [["doc_id"]]
+    assert _hash_exchange_keys(minhash_signatures(docs, 3)) == [["doc_id"]]
+    assert _hash_exchange_keys(word_shingles(docs, 3)) == [["doc_id", "shingle"]]
+
+
 def test_minhash_lsh_finds_dups(docs):
     from quadtree_block_compression_spark.operators.dedup_text import minhash_lsh_pairs
     pairs = {(r.doc_a, r.doc_b): r.jaccard
@@ -436,25 +459,15 @@ def test_block_size_extremes(spark, tiny_images):
 # --------------------------------------------------------------- multimodal -
 
 
-def test_audio_video_stubs(spark):
-    from quadtree_block_compression_spark.operators.multimodal import (
-        audio_features, video_frame_sample_stub, make_fake_audio, make_fake_video)
+def test_audio_features_rejects_compressed_audio(spark):
+    """Only RIFF/WAVE PCM decodes; any other container (compressed audio,
+    the retired QAUD fake) raises instead of yielding made-up features."""
+    from quadtree_block_compression_spark.operators.multimodal import audio_features
     import pandas as pd
-    aud = spark.createDataFrame(pd.DataFrame(
-        {"clip_id": [1, 2], "bytes": [make_fake_audio(1), make_fake_audio(2)]}))
-    a = audio_features(aud).collect()
-    assert {r.clip_id for r in a} == {1, 2}
-    assert all(r.sample_rate == 16000 and r.n_frames == 1600
-               and r.codec == "qaud" for r in a)
-
-    vid = spark.createDataFrame(pd.DataFrame(
-        {"video_id": [5], "bytes": [make_fake_video(5, nf=30)]}))
-    frames = video_frame_sample_stub(vid, every_n=10).collect()
-    assert [r.frame_idx for r in frames] == [0, 10, 20]
-
-    bad = spark.createDataFrame(pd.DataFrame({"clip_id": [9], "bytes": [b"OggSxxxx"]}))
-    with pytest.raises(Exception, match="NotImplementedError|compressed audio"):
-        audio_features(bad).collect()
+    for payload in (b"OggSxxxx", b"QAUD" + bytes(16)):
+        bad = spark.createDataFrame(pd.DataFrame({"clip_id": [9], "bytes": [payload]}))
+        with pytest.raises(Exception, match="NotImplementedError|compressed audio"):
+            audio_features(bad).collect()
 
 
 def test_audio_features_real_wav(spark):

@@ -90,6 +90,26 @@ def test_cell_matches_kernel(points):
     assert (expect == got).all()
 
 
+def test_centroids_accept_any_image_id(spark):
+    """A file-name id and a digit run past a long must not abort the job
+    under ANSI; in-range trailing digits keep the index placement."""
+    from quadtree_block_compression_spark.kernels.geometry import WORLD, cell_encode
+    from quadtree_block_compression_spark.operators.spatial_join import MOSAIC_GRID
+    ids = ["img_0007", "cat", "img_" + "9" * 20]
+    # one level-1 leaf of a 64-px canvas: centroid (16, 16)
+    blocks = spark.createDataFrame(
+        [(i, "0", 1, 0, 0, 32, 32) for i in ids],
+        "image_id string, tile_id string, level int, "
+        "x0 int, y0 int, x1 int, y1 int")
+    got = {r.image_id: r for r in block_centroids(blocks, res=6).collect()}
+    assert set(got) == set(ids)
+    assert all(0 <= r.wx < WORLD and 0 <= r.wy < WORLD for r in got.values())
+    cw = WORLD / MOSAIC_GRID
+    r = got["img_0007"]
+    assert (r.wx, r.wy) == (7 * cw + 16 * cw / 64, 16 * cw / 64)
+    assert r.cell == cell_encode(np.array([r.wx]), np.array([r.wy]), 6)[0]
+
+
 def test_broadcast_pip_join_vs_bruteforce(points, geoms, spark):
     got = spatial_join_broadcast(points, geoms)
     # oracle: python brute force over collected smalls

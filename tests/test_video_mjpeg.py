@@ -1,7 +1,7 @@
 """MJPEG-in-AVI: the REAL video decode path (round-2 verdict item #6).
 
 Kernel round-trips (mux → demux → JFIF decode) plus the Spark operator over
-generated AVI bytes; QVID stays accepted, other containers still raise.
+generated AVI bytes; other containers raise.
 """
 
 import numpy as np
@@ -70,14 +70,14 @@ def test_video_frame_sample_real_avi(spark):
     assert m[10] > m[0]
 
 
-def test_video_frame_sample_still_accepts_qvid_and_rejects_others(spark):
-    from quadtree_block_compression_spark.operators.multimodal import (
-        make_fake_video, video_frame_sample)
-    vid = spark.createDataFrame(pd.DataFrame(
-        {"video_id": [5], "bytes": [make_fake_video(5, nf=30)]}))
-    frames = video_frame_sample(vid, every_n=10).collect()
-    assert [r.frame_idx for r in frames] == [0, 10, 20]
-    bad = spark.createDataFrame(pd.DataFrame(
-        {"video_id": [9], "bytes": [b"\x00\x00\x00\x20ftypisom"]}))
-    with pytest.raises(Exception, match="NotImplementedError|inter-frame"):
-        video_frame_sample(bad).collect()
+def test_video_frame_sample_rejects_non_avi(spark):
+    """Only MJPEG/AVI decodes: an MP4 header and a payload in the retired
+    QVID fake container both raise."""
+    import struct
+    from quadtree_block_compression_spark.operators.multimodal import video_frame_sample
+    qvid = b"QVID" + struct.pack(">III", 8, 8, 30) + bytes(8 * 8 * 3 * 30)
+    for payload in (b"\x00\x00\x00\x20ftypisom", qvid):
+        bad = spark.createDataFrame(pd.DataFrame(
+            {"video_id": [9], "bytes": [payload]}))
+        with pytest.raises(Exception, match="NotImplementedError|inter-frame"):
+            video_frame_sample(bad).collect()
