@@ -36,27 +36,30 @@ _TOL8 = (1000.0 * _WEIGHTS / 257.0).astype(np.int16)  # [1, 2, 0]
 
 
 def _relevant_mask(n: int, size: int, x0: np.ndarray, y0: np.ndarray,
-                   width: int, height: int) -> np.ndarray:
+                   width, height) -> np.ndarray:
     """(n, size, size) bool — pixels NOT skipped by ``PointCollides``.
 
     Node ``i`` occupies global ``[x0[i], x0[i]+size) × [y0[i], y0[i]+size)``;
-    a pixel at global (x, y) is relevant iff ``x <= width and y <= height``
-    (the deliberate ``<=`` quirk; origins are never negative here).
+    a pixel at global (x, y) is relevant iff ``x <= width[i] and
+    y <= height[i]`` (the deliberate ``<=`` quirk; origins are never
+    negative here). ``width``/``height`` are per-node arrays or scalars.
     """
     lx = np.arange(size)
     ly = np.arange(size)
-    keep_x = (x0[:, None] + lx[None, :]) <= width    # (n, size)
-    keep_y = (y0[:, None] + ly[None, :]) <= height   # (n, size)
+    keep_x = (x0[:, None] + lx[None, :]) <= np.reshape(width, (-1, 1))    # (n, size)
+    keep_y = (y0[:, None] + ly[None, :]) <= np.reshape(height, (-1, 1))   # (n, size)
     return keep_y[:, :, None] & keep_x[:, None, :]
 
 
 def compare_pixels_weighted(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
-                            y0: np.ndarray, width: int, height: int) -> np.ndarray:
+                            y0: np.ndarray, width, height) -> np.ndarray:
     """Batched ``ComparePixelsWeighted``.
 
     ``a``/``b``: ``(n, s, s, 3) uint8`` equal-bounds image pairs; ``x0, y0``:
     global top-left of each node; ``width, height``: original-image bounds
-    (the ``globalBounds`` rect). Returns ``(n,) float64`` similarities.
+    (the ``globalBounds`` rect) — per-node ``(n,)`` arrays when the nodes
+    come from different images, or scalars shared by all of them. Returns
+    ``(n,) float64`` similarities.
     """
     a = np.asarray(a); b = np.asarray(b)
     n, s = a.shape[0], a.shape[1]

@@ -44,7 +44,11 @@ def pad_image(img: np.ndarray) -> np.ndarray:
     """Pad ``(h, w, c) uint8`` to the square padded side, edge-replicated."""
     h, w = img.shape[:2]
     side = padded_side(w, h)
-    return np.pad(img, ((0, side - h), (0, side - w), (0, 0)), mode="edge")
+    out = np.empty((side, side) + img.shape[2:], dtype=img.dtype)
+    out[:h, :w] = img
+    out[:h, w:] = img[:, w - 1:w]     # right edge
+    out[h:] = out[h - 1:h]            # bottom edge, corner included
+    return out
 
 
 def child_bounds(x0: int, y0: int, x1: int, y1: int, i: int) -> tuple[int, int, int, int]:

@@ -4,14 +4,18 @@ Distributed form of the reference's encode pipeline
 (``cmd/codec/main.go:40-87`` → ``Partition``,
 ``pkg/quadtreeImage/quadtreeImage.go:55-74``). Design (SURVEY.md §2.12):
 
-* **One pass, zero shuffles.** Each image's recursion runs entirely inside a
-  ``mapInPandas`` batch (per-image numpy, level-vectorized —
-  ``kernels.quadtree``). Images are embarrassingly parallel, so tile
-  assignment scales linearly with executors; there is NO driver-side level
-  loop and no per-level shuffle barrier.
-* **Column pruning.** Only ``image_id, bytes, w, h`` enter the UDF; captions
-  and other metadata never cross the Arrow boundary (at 100 TB the caption
-  bytes alone would be terabytes of wasted transfer).
+* **One pass, zero shuffles.** Every image's recursion runs entirely inside
+  one ``mapInArrow`` pass: each input Arrow batch is decoded and tiled by
+  ONE batched kernel call (``kernels.quadtree.assign_tiles_batch`` —
+  level-vectorized across the batch's images) and leaves as ONE Arrow
+  record batch built straight from the kernel's numpy columns. Images are
+  embarrassingly parallel, so tile assignment scales linearly with
+  executors; there is NO driver-side level loop and no per-level shuffle
+  barrier.
+* **Column pruning.** Only ``image_id`` (cast to string) and ``bytes``
+  enter the UDF; captions and other metadata never cross the Arrow
+  boundary (at 100 TB the caption bytes alone would be terabytes of wasted
+  transfer).
 * **JVM-side derived keys.** ``block_hash`` (xxhash64) and the Morton range
   key are computed with built-in functions *after* the UDF, inside
   whole-stage codegen — not in Python.
@@ -29,6 +33,7 @@ from ..config import EngineConfig, DEFAULT_CONFIG
 BLOCKS_SCHEMA = ("image_id string, tile_id string, level int, "
                  "x0 int, y0 int, x1 int, y1 int, "
                  "is_leaf boolean, oob boolean, similarity double, block_px binary")
+_BLOCK_COLUMNS = [f.split()[0] for f in BLOCKS_SCHEMA.split(", ")]
 
 
 def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
@@ -49,39 +54,59 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    src = images.select("image_id", "bytes", "w", "h")
+    src = images.select(F.col("image_id").cast("string"), "bytes")
     if repartition:
         src = src.repartition(repartition)
     skip = on_error == "skip"
 
-    def tile_batches(batches):
-        import pandas as pd
+    def decoded(payloads, kept):
+        """Decode lazily (the kernel consumes one pixel-budget run at a
+        time), recording the batch row of every image that decoded."""
         from ..kernels.codecs import decode_image
-        from ..kernels.quadtree import assign_tiles_image
+        for i, data in enumerate(payloads):
+            try:
+                img = decode_image(data)
+            except Exception:
+                if skip:
+                    continue
+                raise
+            kept.append(i)
+            yield img
 
-        # one output DataFrame per input Arrow batch (not per image):
-        # per-image yields would emit thousands of ~100-row record batches,
-        # and Arrow framing overhead dominates at high core counts. The
-        # images' column lists are extended into ONE pandas frame: a frame
-        # per image plus concat added half the decode+kernel time (256
-        # 64-px images on one core: 0.26 s over 0.50 s; now 0.03 s).
-        for pdf in batches:
-            out: dict[str, list] = {"image_id": []}
-            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
-                try:
-                    img = decode_image(bytes(data))
-                except Exception:
-                    if skip:
-                        continue
-                    raise
-                cols = assign_tiles_image(img, cfg)
-                out["image_id"].extend([image_id] * len(cols["tile_id"]))
-                for k, v in cols.items():
-                    out.setdefault(k, []).extend(v)
-            if out["image_id"]:
-                yield pd.DataFrame(out)
+    def tile_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+        from ..kernels.quadtree import BLOCK_BYTES, assign_tiles_batch
 
-    blocks = src.mapInPandas(tile_batches, BLOCKS_SCHEMA)
+        # one kernel call and one output record batch per input Arrow batch
+        # (never per image): per-image calls pay numpy's per-call overhead
+        # on tiny arrays, and per-image yields would emit thousands of
+        # ~100-row record batches whose framing dominates at high core counts
+        for batch in batches:
+            kept: list[int] = []
+            cols = assign_tiles_batch(
+                decoded(batch.column("bytes").to_pylist(), kept), cfg)
+            n = len(cols["image"])
+            if not n:
+                continue
+            # zero-copy binary column over the contiguous (n, 8, 8, 3)
+            # buffer; built with 64-bit offsets so the cast to the schema's
+            # binary fails loudly rather than wrapping past 2 GiB
+            offsets = np.arange(n + 1, dtype=np.int64) * BLOCK_BYTES
+            block_px = pa.Array.from_buffers(
+                pa.large_binary(), n,
+                [None, pa.py_buffer(offsets), pa.py_buffer(cols["block_px"])]
+            ).cast(pa.binary())
+            yield pa.RecordBatch.from_arrays([
+                batch.column("image_id").take(np.asarray(kept)[cols["image"]]),
+                pa.array(cols["tile_id"], pa.string()),
+                *(pa.array(cols[k]) for k in
+                  ("level", "x0", "y0", "x1", "y1", "is_leaf", "oob")),
+                # NaN (rules 1-2 decided the node) surfaces as NULL
+                pa.array(cols["similarity"], from_pandas=True),
+                block_px], names=_BLOCK_COLUMNS)
+
+    blocks = src.mapInArrow(tile_batches, BLOCKS_SCHEMA)
     return (blocks
             .withColumn("block_hash", F.xxhash64("block_px"))
             .withColumn("morton", F.when(F.col("tile_id") == "", F.lit(0))
@@ -106,7 +131,7 @@ def scan_errors(images: DataFrame) -> DataFrame:
                     out.append((image_id, f"{type(e).__name__}: {e}"[:500]))
             yield pd.DataFrame(out, columns=["image_id", "error"])
 
-    return images.select("image_id", "bytes").mapInPandas(
+    return images.select(F.col("image_id").cast("string"), "bytes").mapInPandas(
         probe, "image_id string, error string")
 
 

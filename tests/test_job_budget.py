@@ -7,7 +7,8 @@ is visible through wall-time noise. Each query runs at sf0.01 under its own
 job group, and its job count must stay within the committed budget below.
 The same holds for a fresh run of each staged pipeline and for one image
 ingest batch that records lineage: a stage's bookkeeping (row counts,
-lineage) must not add passes over its output.
+lineage) must not add passes over its output. The bare tiling pass is pinned
+too: batching the kernel must not add an action (say, a count to size it).
 Lower a budget when a change removes jobs; raising one needs a reason.
 """
 
@@ -22,7 +23,7 @@ from quadtree_block_compression_spark.functions.cache import release_caches
 JOB_BUDGET = {"knn_points": 22, "knn_corpus": 30}
 # jobs per fresh pipeline run / ingest batch at test scale, as measured
 PIPELINE_JOB_BUDGET = {"quadtree_pipeline": 15, "corpus_pipeline": 22,
-                       "ingest_batch": 4}
+                       "ingest_batch": 4, "tiling_pass": 2}
 
 
 @pytest.fixture(scope="module")
@@ -80,9 +81,18 @@ def _ingest_batch(spark, tiny_images, sf_dir, root):
     return os.path.isdir(os.path.join(lineage, "_batch_id=0"))
 
 
+def _tiling_pass(spark, tiny_images, sf_dir, root):
+    from pyspark.sql import functions as F
+    from quadtree_block_compression_spark.operators.tiling import assign_tiles
+    blocks, leaves = assign_tiles(tiny_images).agg(
+        F.count(F.lit(1)), F.sum(F.col("is_leaf").cast("long"))).collect()[0]
+    return blocks > leaves > 0
+
+
 PIPELINE_RUNS = {"quadtree_pipeline": _quadtree_pipeline,
                  "corpus_pipeline": _corpus_pipeline,
-                 "ingest_batch": _ingest_batch}
+                 "ingest_batch": _ingest_batch,
+                 "tiling_pass": _tiling_pass}
 
 
 @pytest.mark.parametrize("name", sorted(PIPELINE_JOB_BUDGET))

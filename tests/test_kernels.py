@@ -17,8 +17,9 @@ from quadtree_block_compression_spark.kernels.geometry import (
     cell_encode, cell_decode, cell_ring, polygon_cover, points_in_polygon,
     rectangles_collide, WORLD)
 from quadtree_block_compression_spark.kernels.phash import phash64, hamming64
+from quadtree_block_compression_spark.kernels import quadtree
 from quadtree_block_compression_spark.kernels.quadtree import (
-    assign_tiles_image, reassemble_image)
+    assign_tiles_batch, assign_tiles_image, reassemble_image)
 from quadtree_block_compression_spark.config import (
     DEFAULT_CONFIG, EngineConfig, QuadtreeConfig)
 
@@ -327,11 +328,8 @@ def test_quadtree_deterministic():
     img = np.random.default_rng(4).integers(0, 256, (100, 64, 3), dtype=np.int64).astype(np.uint8)
     a = assign_tiles_image(img)
     b = assign_tiles_image(img)
-    for k in a:
-        if k == "similarity":  # NaN-aware (rule-3-skipped rows carry NaN)
-            assert np.array_equal(np.asarray(a[k]), np.asarray(b[k]), equal_nan=True)
-        else:
-            assert a[k] == b[k], k
+    for k in a:  # NaN-aware similarity (rule-3-skipped rows carry NaN)
+        assert np.array_equal(a[k], b[k], equal_nan=k == "similarity"), k
 
 
 def test_quadtree_similarity_nan_only_for_rule12_leaves():
@@ -344,6 +342,69 @@ def test_quadtree_similarity_nan_only_for_rule12_leaves():
             assert np.isnan(sim), tid
         else:
             assert not np.isnan(sim), tid
+
+
+def _per_image_concat(imgs):
+    """The per-image calls concatenated, ``image`` renumbered by position."""
+    outs = [assign_tiles_image(im) for im in imgs]
+    cat = {k: np.concatenate([o[k] for o in outs]) for k in outs[0]}
+    cat["image"] = np.concatenate([np.full(len(o["image"]), i)
+                                   for i, o in enumerate(outs)])
+    return cat
+
+
+def _assert_bit_identical(got, want):
+    assert list(got) == list(want)
+    for k in want:
+        assert got[k].dtype == want[k].dtype, k
+        if k == "tile_id":
+            assert got[k].tolist() == want[k].tolist()
+        else:  # raw bytes: NaN similarity payloads and block_px included
+            assert got[k].tobytes() == want[k].tobytes(), k
+    assert got["block_px"].shape[1:] == (8, 8, 3)
+    assert got["block_px"].flags.c_contiguous
+
+
+def _noise(rng, h, w, c=3):
+    return rng.integers(0, 256, (h, w, c), dtype=np.int64).astype(np.uint8)
+
+
+def test_batch_equals_per_image_mixed_sizes():
+    rng = np.random.default_rng(11)
+    imgs = [_noise(rng, 1, 1), _noise(rng, 9, 7), _noise(rng, 8, 8),
+            _noise(rng, 64, 33), np.full((20, 40, 3), 77, dtype=np.uint8),
+            _noise(rng, 33, 64), _noise(rng, 12, 30, c=4), _noise(rng, 16, 16)]
+    got = assign_tiles_batch(iter(imgs))
+    want = _per_image_concat(imgs)
+    _assert_bit_identical(got, want)
+    # rules 1-2 rows carry NaN, and the mix has both kinds
+    assert np.isnan(got["similarity"]).any() and (~np.isnan(got["similarity"])).any()
+
+
+def test_batch_equals_per_image_one_side():
+    rng = np.random.default_rng(12)
+    imgs = [_noise(rng, 33 + i, 64 - i) for i in range(6)]  # all pad to 64
+    _assert_bit_identical(assign_tiles_batch(imgs), _per_image_concat(imgs))
+
+
+def test_batch_pixel_budget_runs_each_image_alone(monkeypatch):
+    rng = np.random.default_rng(13)
+    imgs = [_noise(rng, 9, 7), _noise(rng, 40, 40), _noise(rng, 8, 8),
+            _noise(rng, 64, 33)]
+    want = _per_image_concat(imgs)
+    runs = []
+    tile_run = quadtree._tile_run
+    monkeypatch.setattr(quadtree, "_RUN_BYTES", 1)
+    monkeypatch.setattr(quadtree, "_tile_run",
+                        lambda run, cfg: runs.append(len(run)) or tile_run(run, cfg))
+    _assert_bit_identical(assign_tiles_batch(imgs), want)
+    assert runs == [1, 1, 1, 1]
+
+
+def test_batch_of_no_images():
+    out = assign_tiles_batch([])
+    assert all(len(v) == 0 for v in out.values())
+    assert out["block_px"].shape == (0, 8, 8, 3)
 
 
 def test_roundtrip_reassembly_lossless_blocks():

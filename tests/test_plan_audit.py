@@ -46,3 +46,25 @@ def test_partitionless_window_detector(spark):
     ok2 = df.withColumn(
         "r", F.row_number().over(Window.partitionBy("k").orderBy("v")))
     assert partitionless_windows(plan(ok2)) == []
+
+
+def test_python_node_detector(spark):
+    """The audit's "no Python" checks see every Python runner — Arrow and
+    pandas maps as well as UDF evaluation — and nothing in a JVM plan."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from tools.plan_audit import fmt_plan, python_nodes
+
+    df = spark.createDataFrame(pd.DataFrame({"k": ["a", "b"], "v": [1, 2]}))
+    assert python_nodes(fmt_plan(df.withColumn("w", F.col("v") * 2))) == []
+    def same(batches):
+        yield from batches
+
+    assert "MapInArrow" in python_nodes(fmt_plan(df.mapInArrow(same, df.schema)))
+    assert "MapInPandas" in python_nodes(fmt_plan(df.mapInPandas(same, df.schema)))
+
+    @F.pandas_udf("long")
+    def plus(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    assert "ArrowEvalPython" in python_nodes(fmt_plan(df.select(plus("v"))))

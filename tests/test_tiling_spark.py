@@ -141,6 +141,57 @@ def test_assign_tiles_on_error_policy(spark, tiny_images):
         assign_tiles(mixed, on_error="quarantine")
 
 
+_BLOCK_COLS = ["tile_id", "level", "x0", "y0", "x1", "y1", "is_leaf", "oob",
+               "similarity", "block_hash", "morton"]
+
+
+@pytest.mark.parametrize("id_type", ["int", "smallint", "long"])
+def test_assign_tiles_accepts_integer_image_ids(spark, tiny_images, id_type):
+    """Integer ids are tiled like their string form (BLOCKS_SCHEMA keeps
+    ``image_id string``), and scan_errors reports an integer-id row."""
+    import pandas as pd
+    from quadtree_block_compression_spark.operators.tiling import scan_errors
+    num = F.substring("image_id", 5, 8).cast("int")        # img_00000007 → 7
+    int_ids = tiny_images.withColumn("image_id", num.cast(id_type))
+    want = assign_tiles(tiny_images).withColumn("image_id", num.cast("string"))
+    got = assign_tiles(int_ids)
+    assert dict(got.dtypes)["image_id"] == "string"
+    cols = ["image_id"] + _BLOCK_COLS
+    assert got.select(cols).exceptAll(want.select(cols)).count() == 0
+    assert want.select(cols).exceptAll(got.select(cols)).count() == 0
+    bad = spark.createDataFrame(
+        pd.DataFrame({"image_id": [999], "bytes": [b"\x00garbage"]}),
+        f"image_id {id_type}, bytes binary")
+    errs = scan_errors(int_ids.select("image_id", "bytes").unionByName(bad)).collect()
+    assert [r.image_id for r in errs] == ["999"]
+
+
+def test_on_error_skip_drops_only_the_corrupt_image(spark, tiny_images):
+    """A corrupt payload in the middle of one Arrow batch drops that image
+    alone; every other image's rows come out unchanged."""
+    import pandas as pd
+    good = tiny_images.select("image_id", "bytes", "w", "h").orderBy("image_id").toPandas()
+    bad = good.iloc[:1].assign(image_id="corrupt", bytes=[b"\x89PNG\r\n\x1a\nbroken"])
+    mixed = spark.createDataFrame(
+        pd.concat([good.iloc[:8], bad, good.iloc[8:]], ignore_index=True)).coalesce(1)
+    assert mixed.rdd.getNumPartitions() == 1
+    got = assign_tiles(mixed, on_error="skip")
+    want = assign_tiles(tiny_images)
+    cols = ["image_id"] + _BLOCK_COLS
+    assert got.select(cols).exceptAll(want.select(cols)).count() == 0
+    assert want.select(cols).exceptAll(got.select(cols)).count() == 0
+
+
+def test_rule12_similarity_is_null_not_nan(blocks):
+    """Nodes decided by rules 1-2 carry no similarity: NULL through Arrow,
+    never NaN; every other node has one."""
+    decided = F.col("oob") | ((F.col("x1") - F.col("x0")) <= 8)
+    assert blocks.filter(F.isnan("similarity")).count() == 0
+    assert blocks.filter(decided & F.col("similarity").isNotNull()).count() == 0
+    assert blocks.filter(~decided & F.col("similarity").isNull()).count() == 0
+    assert blocks.filter(decided).count() > 0
+
+
 def test_tile_pyramid_invariants(spark, tiny_images):
     """Pyramid algebra: the root row aggregates the whole image; every
     non-root level's leaf counts sum to the root's; a tile's digest is

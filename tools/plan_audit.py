@@ -39,6 +39,18 @@ def arrow_evals(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
 
 
+PYTHON_NODE = re.compile(r"\w*(?:Python|In(?:Pandas|Arrow))\w*")
+
+
+def python_nodes(plan: str) -> list[str]:
+    """Every Python-runner node name in a plan: UDF evaluation
+    (``BatchEvalPython``, ``ArrowEvalPython``, ``ArrowWindowPython`` …) and
+    every pandas or Arrow map (``MapInPandas``, ``MapInArrow``,
+    ``FlatMapGroupsInPandas`` …), so no Python stage hides behind a new
+    node name."""
+    return PYTHON_NODE.findall(plan)
+
+
 def partitionless_windows(plan: str) -> list[str]:
     """Window operators with NO partition spec in a simple-mode plan string.
 
@@ -149,8 +161,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           "Point → cell key is clamp/floor/bit-interleave column arithmetic "
           "(`functions/cells.py`), so the plan has no Python runner at all.",
           p, {
-              "no Python eval anywhere": "EvalPython" not in p
-                                         and "MapInPandas" not in p,
+              "no Python eval anywhere": not python_nodes(p),
           })
 
     # 3. LSH near-dup: banded equi-joins, no cartesian
@@ -210,11 +221,12 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     # 5. Flagship tile assignment: one Arrow pass, no shuffle
     p = fmt_plan(assign_tiles(images))
     check("assign_tiles (flagship quadtree kernel)",
-          "One mapInPandas pass over the images scan — zero exchanges; "
+          "One mapInArrow pass over the images scan — zero exchanges; "
           "parallelism comes from input partitioning alone.",
           p, {
               "no Exchange in plan": "Exchange" not in p,
-              "single Arrow stage": p.split("\n\n")[0].count("MapInPandas") == 1,
+              "single Arrow stage (one MapInArrow, no other Python node)":
+                  python_nodes(p.split("\n\n")[0]) == ["MapInArrow"],
           })
 
     # 6. Text scalar ops: pure projection, no shuffle, codegen
@@ -224,9 +236,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           "the documents scan.",
           p, {
               "no Exchange": "Exchange" not in p,
-              "no Python/Arrow eval": "MapInPandas" not in p
-                                      and "ArrowEvalPython" not in p
-                                      and "BatchEvalPython" not in p,
+              "no Python/Arrow eval": not python_nodes(p),
               "whole-stage codegen": "[codegen id :" in p,
           })
 
@@ -327,9 +337,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           p, {
               "no Exchange": "Exchange" not in p,
               "no join": "Join" not in p,
-              "no Python/Arrow eval": "MapInPandas" not in p
-                                      and "ArrowEvalPython" not in p
-                                      and "BatchEvalPython" not in p,
+              "no Python/Arrow eval": not python_nodes(p),
           })
 
     # 14. tile pyramid: explode + ONE map-side-combined aggregate (r4)
@@ -450,9 +458,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
                   len(re.findall(r"\(\d+\) Exchange", p)) <= 1
                   and "hashpartitioning" not in p,
               "no join": "Join" not in p,
-              "no Python/Arrow eval": "MapInPandas" not in p
-                                      and "ArrowEvalPython" not in p
-                                      and "BatchEvalPython" not in p,
+              "no Python/Arrow eval": not python_nodes(p),
           })
 
     # 20. decontaminate: benchmark shingles broadcast, corpus not shuffled
@@ -552,7 +558,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
                                          or "BroadcastHashJoin" in p),
               "no CartesianProduct": "CartesianProduct" not in p,
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
-              "no Python eval anywhere": "EvalPython" not in p,
+              "no Python eval anywhere": not python_nodes(p),
               "no dedup aggregate above the join": "HashAggregate" not in post_join,
           })
 
@@ -574,7 +580,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
                                            or "BroadcastHashJoin" in p)
                                           and "Union" not in p,
               "no CartesianProduct": "CartesianProduct" not in p,
-              "no Python eval anywhere": "EvalPython" not in p,
+              "no Python eval anywhere": not python_nodes(p),
               "no dedup aggregate above the join":
                   "HashAggregate" not in post_join,
           })
@@ -600,7 +606,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "no Window": "Window" not in p,
               "kept-lines rebuild is one aggregate pair":
                   "ObjectHashAggregate" in p or "SortAggregate" in p,
-              "no Python eval anywhere": "EvalPython" not in p,
+              "no Python eval anywhere": not python_nodes(p),
           })
 
     # 27. GLOBAL sweep: EVERY graded query plan, not just the curated
