@@ -4,13 +4,17 @@ OPTIMIZATION_r06.md).
 
 Usage:
     python bench_extra.py [--sf DIR] [--queries a,b,c] [--plans OUTDIR]
-                          [--noop] [--reps N]
+                          [--noop] [--reps N] [--profile]
 
 * times each query exactly like bench.py (`.count()`, tracked-cache release
   between queries) unless --noop, which times a full-materialization noop
   sink instead (guide §1.4);
 * --plans writes `.explain("formatted")` for each timed query to
   OUTDIR/<query>_<suffix>.txt (suffix via --suffix, default "before");
+* --profile runs each query's timed reps under a job group named after
+  it, with the Spark event log on, and adds the ``perfbench/eventlog.py``
+  counters per query (jobs, stages, tasks, executor CPU, shuffle, spill,
+  GC, Python worker time) as "profile" to the JSON line;
 * prints one JSON line {"queries": {...}, "sf": ..., "total": ...}.
 """
 
@@ -20,11 +24,14 @@ import argparse
 import io
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 import bench as benchmod  # round-start bench: reuse its session + query list
 
@@ -40,10 +47,24 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true",
                     help="time a noop-sink write instead of count()")
     ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--profile", action="store_true",
+                    help="event-log counters per query, one job group each")
     args = ap.parse_args()
+
+    events = None
+    if args.profile:
+        # the event log rides in as submit args, so bench.py's own session
+        # builder makes the profiled session
+        events = tempfile.mkdtemp(prefix="bench-extra-events-")
+        conf = {"spark.eventLog.enabled": "true", "spark.eventLog.dir": "file://" + events,
+                "spark.eventLog.compress": "false", "spark.eventLog.rolling.enabled": "false"}
+        os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf {k}={v}" for k, v in conf.items()]
+            + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")])
 
     import __spark_entry__ as entrymod
     spark = benchmod._session(benchmod.CPUS)
+    sc = spark.sparkContext
     qs = entrymod.queries()
     names = (args.queries.split(",") if args.queries
              else list(benchmod.BENCH_QUERIES))
@@ -64,8 +85,10 @@ def main() -> None:
             except Exception as e:  # plan capture must never sink the timing
                 print(f"# explain({name}) failed: {e}", file=sys.stderr)
             release_caches()
+        if args.profile:
+            sc.setJobGroup(name, f"bench_extra profile: {name}")
         for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"r06-probe: {name}")
+            sc.setJobDescription(f"r06-probe: {name}")
             t0 = time.time()
             df = qs[name](spark, args.sf)
             if args.noop:
@@ -74,12 +97,35 @@ def main() -> None:
                 df.count()
             timings.setdefault(name, []).append(round(time.time() - t0, 3))
             release_caches()
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobDescription(None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
     best = {k: min(v) for k, v in timings.items()}
-    print(json.dumps({"queries": best, "samples": timings,
-                      "sf": args.sf, "noop": args.noop,
-                      "total": round(sum(best.values()), 3)}))
+    out = {"queries": best, "samples": timings, "sf": args.sf,
+           "noop": args.noop, "total": round(sum(best.values()), 3)}
+    if args.profile:
+        out["profile"] = _profile(spark, events, names)
+    print(json.dumps(out))
+
+
+def _profile(spark, events: str, names) -> dict:
+    """Stops ``spark`` (which flushes its event log) and returns the
+    ``perfbench/eventlog.py`` counters of each query's job group."""
+    sys.path.insert(0, os.path.join(HERE, "perfbench"))
+    import eventlog
+
+    spark.stop()
+    try:
+        (log,) = [os.path.join(events, f) for f in os.listdir(events)]
+        groups = eventlog.parse(log)
+    finally:
+        shutil.rmtree(events, ignore_errors=True)
+    profile = {}
+    for name in names:
+        c = dict(groups.get(name) or {k: 0 for k in eventlog.COUNTERS})
+        c["job_s"] = sum(b - a for a, b in c.pop("job_intervals", []))
+        profile[name] = {k: round(v, 3) for k, v in c.items()}
+    return profile
 
 
 if __name__ == "__main__":

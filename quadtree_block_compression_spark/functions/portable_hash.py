@@ -45,6 +45,11 @@ def portable_hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def portable_hash64_spark_sql(expr: str) -> str:
+    """Same hash as :func:`portable_hash64`, as Spark SQL text."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def portable_hash64_sql(expr: str) -> str:
     """Same hash in DuckDB SQL (for oracle queries)."""
     return f"CAST('0x' || substring(md5({expr}), 1, 15) AS BIGINT)"

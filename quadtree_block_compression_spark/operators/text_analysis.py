@@ -1,16 +1,33 @@
-"""Text analysis operators: language ID, quality scoring, token counting,
+r"""Text analysis operators: language ID, quality scoring, token counting,
 fingerprinting — all pure JVM column expressions (no Python anywhere).
 
 These are the per-document scalar stages a 100 TB training-data pipeline
 runs before dedup/filtering. Everything here whole-stage-codegens: one
 projection over the documents scan, no shuffles, trivially linear scaling.
+
+Each scalar feature is defined exactly once, as Spark SQL expression text
+(:func:`_feature_sql`). A projection hands all of its features to ONE
+``selectExpr`` — one parse on the JVM — and the Column helpers other
+modules import are ``F.expr`` of the same text. Building the same
+projection as per-feature Column trees cost ~1,900 py4j round trips for
+:func:`annotate` (155–235 ms of driver time per call on a 4-core host);
+the SQL text costs ~22, most of them the ``spread`` probe.
+
+Regex character classes that mix ranges with ``\s`` are spelled out as one
+ASCII set (``_FP_STRIP``, ``_BPE_OTHER``): JDK 17's ``Pattern`` compiles
+``[^a-z0-9\s]`` to a chain of predicates (~100 ns/char) but a spelled-out
+set of the same characters to one bit-set test (~20 ns/char). The sets are
+equal over every code point (Java's ``\s`` is ``[\t\n\x0B\f\r ]``, VT
+included); ``tests/test_ops_spark`` pins it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import re
 
-from ..functions.portable_hash import portable_hash64
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..functions.portable_hash import portable_hash64_spark_sql
 
 # tiny stopword inventories for the n-gram/stopword language heuristic
 STOPWORDS = {
@@ -19,146 +36,181 @@ STOPWORDS = {
     "fr": ["le", "la", "les", "et", "est", "un", "une", "pas", "pour", "que"],
 }
 
+# [^a-z0-9\s] and [^A-Za-z0-9\s], spelled out as single ASCII sets
+_FP_STRIP = r"[^\t\n\x0B\f\r 0123456789abcdefghijklmnopqrstuvwxyz]"
+_BPE_OTHER = (r"[^\t\n\x0B\f\r 0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+              r"abcdefghijklmnopqrstuvwxyz]")
+# quote characters as regex hex escapes, so no SQL literal holds a quote
+_PUNCT = r"[.,;:!?\x27\x22]"
+
+_ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
+
+
+def _id(col: str) -> str:
+    """Backtick-quoted SQL identifier for column ``col``."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _escaped_literals(spark: SparkSession | None = None) -> bool:
+    """Whether the SQL parser keeps backslashes in string literals as-is."""
+    spark = spark or SparkSession.active()
+    return spark.conf.get(_ESCAPED_LITERALS, "false").strip().lower() == "true"
+
+
+def _sql_str(s: str, escaped: bool) -> str:
+    r"""SQL string literal that parses back to exactly ``s`` under the given
+    ``spark.sql.parser.escapedStringLiterals`` setting: the default parser
+    unescapes backslashes (so each is doubled), the legacy one keeps them.
+    Neither can portably hold a quote — regexes write ``\x27``/``\x22``."""
+    if "'" in s:
+        raise ValueError(f"quote in SQL literal text: {s!r}")
+    return "'" + (s if escaped else s.replace("\\", "\\\\")) + "'"
+
+
+def _stop_count_sql(t: str, words_list, escaped: bool) -> str:
+    """Occurrences of any ``words_list`` entry as a whole whitespace token
+    in column ``t``, via ONE ``regexp_count`` over the lowercased text (r6).
+    Equivalent to ``size(filter(split(lower(text), '\\s+'), w -> w ∈ set))``:
+    a token is a maximal ``\\S+`` run, and the zero-width guards
+    ``(?<!\\S)…(?!\\S)`` match exactly the whole-token occurrences — but
+    without the interpreted per-element HOF filter + linear
+    ``array_contains`` scan, which paid a large codegen-fallback warmup
+    every first execution of the stage shape (annotate cold 10.5 → 2.3 s
+    at sf1, warm equal, hash-identical; equivalence also pytest-pinned)."""
+    alts = "|".join(re.escape(w) for w in
+                    sorted(words_list, key=len, reverse=True))
+    pattern = _sql_str(f"(?<!\\S)(?:{alts})(?!\\S)", escaped)
+    return f"regexp_count(lower({t}), {pattern})"
+
+
+def _feature_sql(text_col: str = "text", escaped: bool = False) -> dict:
+    """Spark SQL text of every scalar text feature of column ``text_col``,
+    keyed by its output column name — the ONE definition that
+    :func:`quality_features`, :func:`quality_score`, :func:`lang_id`,
+    :func:`fingerprint`, :func:`annotate` and the Column helpers share."""
+    def q(s):
+        return _sql_str(s, escaped)
+
+    t = _id(text_col)
+    ws = q(r"\s+")
+    n_chars = f"length({t})"
+    toks = (f"CASE WHEN length(trim({t})) = 0 THEN 0 "
+            f"ELSE size(split(trim({t}), {ws})) END")
+
+    def per_char(regex):  # share of chars matching a one-char class
+        return f"round(regexp_count({t}, {q(regex)}) / greatest({n_chars}, 1), 6)"
+
+    f = {
+        "n_chars_calc": n_chars,
+        "n_tokens": toks,
+        "n_sub_tokens": (f"size(regexp_extract_all({t}, "
+                         f"{q('[A-Za-z]+|[0-9]+|' + _BPE_OTHER)}, 0))"),
+        # regexp_count of the char class == length of the complement-replace
+        # result (single-char matches), WITHOUT building a replaced copy of
+        # every document — measured 6× on this projection at sf1 (r6);
+        # equivalence pytest-pinned in test_ops_spark
+        "punct_ratio": per_char(_PUNCT),
+        "stopword_ratio": (f"round({_stop_count_sql(t, STOPWORDS['en'], escaped)}"
+                           f" / greatest({toks}, 1), 6)"),
+        "digit_ratio": per_char("[0-9]"),
+        "upper_ratio": per_char("[A-Z]"),
+        "mean_word_len": f"round(({n_chars} - {toks} + 1) / greatest({toks}, 1), 6)",
+    }
+    # composite 0..1 quality score (monotone penalties, documented weights)
+    f["quality"] = (
+        f"round(CASE WHEN {n_chars} >= 50 AND {n_chars} <= 10000 "
+        f"THEN 1.0D ELSE 0.3D END"
+        f" * CASE WHEN {f['punct_ratio']} <= 0.2D THEN 1.0D ELSE 0.5D END"
+        f" * CASE WHEN {f['stopword_ratio']} >= 0.05D THEN 1.0D ELSE 0.6D END, 6)")
+    # stopword-vote language ID: sorting (negated score, lang) ascending puts
+    # the best score first, ties to the smallest language name; 'und' on zero
+    n_words = f"greatest(size(split(lower({t}), {ws})), 1)"
+    votes = []
+    for lang in sorted(STOPWORDS):
+        score = f"round({_stop_count_sql(t, STOPWORDS[lang], escaped)} / {n_words}, 6)"
+        votes.append(f"named_struct({q('neg')}, -{score}, {q('lang')}, {q(lang)}, "
+                     f"{q('score')}, {score})")
+    best = f"sort_array(array({', '.join(votes)}))[0]"
+    f["lang_pred"] = f"CASE WHEN {best}.score > 0 THEN {best}.lang ELSE {q('und')} END"
+    f["lang_score"] = f"{best}.score"
+    # fingerprint: portable 60-bit hash of the normalized text (lowercased,
+    # punct-stripped, whitespace-collapsed)
+    norm = (f"trim(regexp_replace(regexp_replace(lower({t}), {q(_FP_STRIP)}, {q('')}),"
+            f" {ws}, {q(' ')}))")
+    f["fingerprint"] = portable_hash64_spark_sql(norm)
+    f["norm_len"] = f"length({norm})"
+    return f
+
+
+def _feature_expr(name: str, text_col: str = "text"):
+    """One feature of :func:`_feature_sql` as a Column."""
+    return F.expr(_feature_sql(text_col, _escaped_literals())[name])
+
+
+def _project(docs: DataFrame, keep: str, names, text_col: str) -> DataFrame:
+    """``docs`` projected to ``keep`` plus the named features — one
+    ``selectExpr``, so the whole projection is parsed once on the JVM."""
+    f = _feature_sql(text_col, _escaped_literals(docs.sparkSession))
+    return docs.selectExpr(keep, *(f"{f[n]} AS {n}" for n in names))
+
 
 def token_count(text_col: str = "text"):
     """Whitespace token count (column expression)."""
-    t = F.trim(F.col(text_col))
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+    return _feature_expr("n_tokens", text_col)
 
 
 def bpe_ish_token_count(text_col: str = "text"):
     """Sub-word-ish token count: words + digit runs + punctuation marks, via
     one regexp pass (a cheap stand-in for BPE vocab tokenization)."""
-    return F.size(F.regexp_extract_all(F.col(text_col),
-                                       F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
+    return _feature_expr("n_sub_tokens", text_col)
 
 
 def _words_expr(text_col: str = "text"):
-    """Lowercased whitespace token array — hoist this to a column and pass
-    it to the expression factories: the per-language stopword filters are
-    interpreted (CodegenFallback), so a captured split expression would
-    re-evaluate once per filter (r5 HOF-capture invariant, CLAUDE.md)."""
-    return F.split(F.lower(F.col(text_col)), r"\s+")
+    """Lowercased whitespace token array (column expression)."""
+    ws = _sql_str(r"\s+", _escaped_literals())
+    return F.expr(f"split(lower({_id(text_col)}), {ws})")
 
 
 def _stop_count_expr(text_col: str, words_list):
-    """Occurrences of any ``words_list`` entry as a whole whitespace token,
-    via ONE ``regexp_count`` over the lowercased text (r6). Equivalent to
-    ``size(filter(split(lower(text), '\\s+'), w -> w ∈ set))``: a token is
-    a maximal ``\\S+`` run, and the zero-width guards ``(?<!\\S)…(?!\\S)``
-    match exactly the whole-token occurrences — but without the
-    interpreted per-element HOF filter + linear ``array_contains`` scan,
-    which paid a large codegen-fallback warmup every first execution of
-    the stage shape (annotate cold 10.5 → 2.3 s at sf1, warm equal,
-    hash-identical; equivalence also pytest-pinned)."""
-    import re as _re
-    alts = "|".join(_re.escape(w) for w in
-                    sorted(words_list, key=len, reverse=True))
-    return F.regexp_count(F.lower(F.col(text_col)),
-                          F.lit(f"(?<!\\S)(?:{alts})(?!\\S)"))
+    """Column form of :func:`_stop_count_sql`."""
+    return F.expr(_stop_count_sql(_id(text_col), words_list, _escaped_literals()))
 
 
-def _quality_feature_exprs(text_col: str = "text", words=None) -> dict:
-    """Named quality-feature column expressions (shared by
-    :func:`quality_features`, :func:`quality_score`, :func:`annotate`).
-    ``words``: pre-hoisted token column (defaults to the inline split)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    toks = token_count(text_col)
-    n_stop = _stop_count_expr(text_col, STOPWORDS["en"])
-    # regexp_count of the char class == length of the complement-replace
-    # result (single-char matches), WITHOUT building a replaced copy of
-    # every document — measured 6× on this projection at sf1 (r6);
-    # equivalence pytest-pinned in test_ops_spark
-    punct = F.regexp_count(t, F.lit(r"[\.,;:!\?'\"]"))
-    digits = F.regexp_count(t, F.lit(r"[0-9]"))
-    upper = F.regexp_count(t, F.lit(r"[A-Z]"))
-    return {
-        "n_chars_calc": n_chars,
-        "n_tokens": toks,
-        "punct_ratio": F.round(punct / F.greatest(n_chars, F.lit(1)), 6),
-        "stopword_ratio": F.round(n_stop / F.greatest(toks, F.lit(1)), 6),
-        "digit_ratio": F.round(digits / F.greatest(n_chars, F.lit(1)), 6),
-        "upper_ratio": F.round(upper / F.greatest(n_chars, F.lit(1)), 6),
-        "mean_word_len": F.round((n_chars - toks + 1) / F.greatest(toks, F.lit(1)), 6),
-    }
-
-
-def _quality_score_expr(text_col: str = "text", words=None):
-    """Composite 0..1 quality score (monotone penalties, documented weights)."""
-    f = _quality_feature_exprs(text_col, words=words)
-    length_ok = F.when((f["n_chars_calc"] >= 50) & (f["n_chars_calc"] <= 10000),
-                       F.lit(1.0)).otherwise(F.lit(0.3))
-    punct_ok = F.when(f["punct_ratio"] <= 0.2, F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_ok = F.when(f["stopword_ratio"] >= 0.05, F.lit(1.0)).otherwise(F.lit(0.6))
-    return F.round(length_ok * punct_ok * stop_ok, 6)
-
-
-def _lang_exprs(text_col: str = "text", words=None):
-    """(lang_pred, lang_score) expressions: stopword-vote argmax with
-    deterministic tie-break (language name ascending), 'und' on zero.
-    ``words``: pre-hoisted token column (defaults to the inline split)."""
-    if words is None:
-        words = _words_expr(text_col)
-    n = F.greatest(F.size(words), F.lit(1))
-    scores = []
-    for lang in sorted(STOPWORDS):
-        score = _stop_count_expr(text_col, STOPWORDS[lang]) / n
-        scores.append(F.struct(F.round(score, 6).alias("score"), F.lit(lang).alias("lang")))
-    # sort (negated score, lang) ascending → best score, smallest lang first
-    best = F.sort_array(F.array(*[F.struct((-s["score"]).alias("neg"), s["lang"].alias("lang"),
-                                           s["score"].alias("score")) for s in scores]))[0]
-    lang_pred = F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
-    return lang_pred, best["score"]
-
-
-def _fingerprint_exprs(text_col: str = "text"):
-    """(fingerprint, norm_len) expressions: portable 60-bit hash of the
-    normalized text (lowercased, whitespace-collapsed, punct-stripped)."""
-    norm = F.trim(F.regexp_replace(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", ""), r"\s+", " "))
-    return portable_hash64(norm), F.length(norm)
+def _quality_score_expr(text_col: str = "text"):
+    """Composite 0..1 quality score (column expression)."""
+    return _feature_expr("quality", text_col)
 
 
 def quality_features(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """Per-doc quality features: length, token stats, punctuation ratio,
     stopword ratio, uppercase ratio, digit ratio, mean word length."""
-    f = _quality_feature_exprs(text_col)
-    return docs.select(F.col(id_col), *[c.alias(n) for n, c in f.items()])
+    return _project(docs, _id(id_col), ("n_chars_calc", "n_tokens", "punct_ratio",
+                                        "stopword_ratio", "digit_ratio",
+                                        "upper_ratio", "mean_word_len"), text_col)
 
 
 def quality_score(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """Composite 0..1 quality score plus its inputs."""
-    f = _quality_feature_exprs(text_col)
-    return docs.select(
-        F.col(id_col),
-        _quality_score_expr(text_col).alias("quality"),
-        f["n_tokens"].alias("n_tokens"),
-        f["punct_ratio"].alias("punct_ratio"),
-        f["stopword_ratio"].alias("stopword_ratio"))
+    return _project(docs, _id(id_col), ("quality", "n_tokens", "punct_ratio",
+                                        "stopword_ratio"), text_col)
 
 
 def lang_id(docs: DataFrame, text_col: str = "text",
             id_col: str = "doc_id") -> DataFrame:
-    """Stopword-vote language ID (see :func:`_lang_exprs`)."""
-    # keep text in scope: the r6 regexp-count lang votes read the text
-    # column directly (the hoisted _words array only feeds the token count)
-    base = docs.select(F.col(id_col), F.col(text_col),
-                       _words_expr(text_col).alias("_words"))
-    lang_pred, lang_score = _lang_exprs(text_col, words=F.col("_words"))
-    return base.select(F.col(id_col), lang_pred.alias("lang_pred"),
-                       lang_score.alias("lang_score"))
+    """Stopword-vote language ID: ``lang_pred`` is the language whose
+    stopwords make up the largest share of the whitespace tokens (ties to
+    the smallest name, 'und' when none occur), ``lang_score`` that share."""
+    return _project(docs, _id(id_col), ("lang_pred", "lang_score"), text_col)
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """Document fingerprint — the canonicalization used for fuzzy-exact
-    dedup (see :func:`_fingerprint_exprs`)."""
-    fp, norm_len = _fingerprint_exprs(text_col)
-    return docs.select(F.col(id_col), fp.alias("fingerprint"),
-                       norm_len.alias("norm_len"))
+    dedup: a portable 60-bit hash of the lowercased, punctuation-stripped,
+    whitespace-collapsed text, plus that normalized text's length."""
+    return _project(docs, _id(id_col), ("fingerprint", "norm_len"), text_col)
 
 
 # PII detector patterns, ordered (redaction applies them in this order).
@@ -314,20 +366,12 @@ def annotate(docs: DataFrame, text_col: str = "text",
     """Fingerprint + quality + language in ONE whole-stage-codegen
     projection — the corpus-cleaning annotate stage without a single join
     or shuffle (the join-per-annotation form costs three shuffles and three
-    extra scans of the corpus at 100 TB)."""
+    extra scans of the corpus at 100 TB). Keeps every input column and adds
+    ``fingerprint, norm_len, quality, n_tokens, punct_ratio,
+    stopword_ratio, lang_pred, lang_score``, all parsed from one SQL
+    projection (see the module docstring)."""
     from ..functions.parallelism import spread
     docs = spread(docs)  # regex-heavy projection: use every core on tiny scans
-    # ONE token array feeds the stopword ratio + every language vote
-    # (previously ~1 split per language per row on the interpreted path)
-    base = docs.select("*", _words_expr(text_col).alias("_words"))
-    w = F.col("_words")
-    fp, norm_len = _fingerprint_exprs(text_col)
-    lang_pred, lang_score = _lang_exprs(text_col, words=w)
-    f = _quality_feature_exprs(text_col, words=w)
-    return base.select(
-        "*", fp.alias("fingerprint"), norm_len.alias("norm_len"),
-        _quality_score_expr(text_col, words=w).alias("quality"),
-        f["n_tokens"].alias("n_tokens"),
-        f["punct_ratio"].alias("punct_ratio"),
-        f["stopword_ratio"].alias("stopword_ratio"),
-        lang_pred.alias("lang_pred"), lang_score.alias("lang_score")).drop("_words")
+    return _project(docs, "*", ("fingerprint", "norm_len", "quality", "n_tokens",
+                                "punct_ratio", "stopword_ratio", "lang_pred",
+                                "lang_score"), text_col)

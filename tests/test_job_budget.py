@@ -10,11 +10,18 @@ ingest batch that records lineage: a stage's bookkeeping (row counts,
 lineage) must not add passes over its output. The bare tiling pass is pinned
 too: batching the kernel must not add an action (say, a count to size it).
 Lower a budget when a change removes jobs; raising one needs a reason.
+
+The text-analysis projections carry a construction budget instead: the
+py4j round trips the driver makes while *building* each DataFrame, before
+anything runs. Each feature is SQL text parsed once per projection; a
+per-feature Column tree costs one round trip per node (``annotate`` made
+~1,900), which a later edit could re-grow without changing any output.
 """
 
 import os
 
 import pytest
+from py4j import java_gateway, protocol
 
 import __spark_entry__ as entrymod
 from quadtree_block_compression_spark.functions.cache import release_caches
@@ -102,3 +109,73 @@ def test_pipeline_job_count_within_budget(spark, tiny_images, sf_dir, tmp_path, 
     assert done
     assert jobs <= PIPELINE_JOB_BUDGET[name], (
         f"{name} ran {jobs} jobs, budget {PIPELINE_JOB_BUDGET[name]}")
+
+
+# py4j round trips to build each projection, as measured plus headroom
+BUILD_CALL_BUDGET = {"annotate": 30, "quality_features": 20, "quality_score": 16,
+                     "lang_id": 14, "fingerprint": 14}
+
+
+def _text_op(name):
+    from quadtree_block_compression_spark.operators import text_analysis
+    return getattr(text_analysis, name)
+
+
+def _build_calls(monkeypatch, fn):
+    """(fn's result, py4j commands sent while it ran). Memory commands are
+    not counted: they release objects of earlier calls whenever Python's
+    garbage collector gets to them, whatever ``fn`` builds."""
+    sent = []
+    send = java_gateway.GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(java_gateway.GatewayClient, "send_command", counting)
+        out = fn()
+    return out, len(sent)
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_CALL_BUDGET))
+def test_text_projection_build_calls_within_budget(spark, sf_dir, monkeypatch, name):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    op = _text_op(name)
+    df, calls = _build_calls(monkeypatch, lambda: op(docs))
+    assert "doc_id" in df.columns
+    assert calls <= BUILD_CALL_BUDGET[name], (
+        f"building {name} sent {calls} py4j commands, "
+        f"budget {BUILD_CALL_BUDGET[name]}")
+
+
+def test_text_projections_independent_of_escaped_string_literals(spark):
+    """Every regex must reach java.util.regex.Pattern unchanged whether or
+    not the SQL parser unescapes string literals: the outputs built under
+    spark.sql.parser.escapedStringLiterals=true equal the default's."""
+    import pandas as pd
+    cases = ["", "  ", "the cat and the dog", " Der Hund ist nicht da ",
+             "le chat est un chat pour que", "a.b,c;d:e!f?g'h\"i",
+             "tab\there\x0bvt\x0cff\rcr\nnl", "back\\slash \\s \\S x27",
+             "Mixed CASE 0042 ..!?", "ünïcödé ÉÀ 42!"]
+    docs = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": range(len(cases)), "text": cases}))
+    names = ("annotate", "quality_score", "lang_id")
+
+    def outputs():
+        frames = [_text_op(n)(docs) for n in names]
+        return [(df.schema, sorted(df.collect())) for df in frames]
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key, None)
+    expected = outputs()
+    spark.conf.set(key, "true")
+    try:
+        got = outputs()
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert got == expected

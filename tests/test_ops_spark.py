@@ -698,24 +698,61 @@ def test_quality_char_class_counts_equal_replace_form(spark):
     graded quality scores)."""
     import pandas as pd
     from pyspark.sql import functions as F
+    from quadtree_block_compression_spark.operators.text_analysis import (
+        _feature_expr)
     cases = ["", "   ", "a.b,c;d:e!f?g'h\"i", 'ALL CAPS 123', "no specials",
              "ünïcödé ÉÀ 42!", "a" * 500 + "?!?.", "1.2.3.4", "'''\"\"\"",
-             "Mixed CASE with 0042 and ..!?"]
+             "Mixed CASE with 0042 and ..!?", "back\\slash x27 x22"]
     df = spark.createDataFrame(pd.DataFrame({"text": cases}))
     t = F.col("text")
+    n = F.greatest(F.length(t), F.lit(1))
     pairs = [
-        (F.regexp_count(t, F.lit(r"[\.,;:!\?'\"]")),
+        (_feature_expr("punct_ratio"),
          F.length(F.regexp_replace(t, r"[^\.,;:!\?'\"]", ""))),
-        (F.regexp_count(t, F.lit(r"[0-9]")),
+        (_feature_expr("digit_ratio"),
          F.length(F.regexp_replace(t, r"[^0-9]", ""))),
-        (F.regexp_count(t, F.lit(r"[A-Z]")),
+        (_feature_expr("upper_ratio"),
          F.length(F.regexp_replace(t, r"[^A-Z]", ""))),
     ]
     cond = None
     for new, old in pairs:
-        c = new != old
+        c = new != F.round(old / n, 6)
         cond = c if cond is None else cond | c
     assert df.where(cond).count() == 0
+
+
+def test_spelled_out_classes_equal_ws_range_classes(spark):
+    """The fingerprint strip class and the bpe token class are spelled out
+    as single ASCII sets because JDK 17 runs a negated union of ranges and
+    \\s ~3.6x slower per char. Pin equality with the range+\\s forms over
+    EVERY Unicode scalar value, packed 1,024 per string: both
+    regexp_replace(s, cls, '') and regexp_count(s, cls) must agree. Java's
+    \\s includes VT (RE2's does not): a spelled-out class without \\x0B
+    must disagree, which keeps this test able to fail."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from quadtree_block_compression_spark.operators.text_analysis import (
+        _BPE_OTHER, _FP_STRIP)
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    chunks = ["".join(map(chr, cps[i:i + 1024]))
+              for i in range(0, len(cps), 1024)]
+    df = spark.createDataFrame(pd.DataFrame({"s": chunks}))
+    s = F.col("s")
+
+    def differs(old, new):
+        return ((F.regexp_replace(s, old, "") != F.regexp_replace(s, new, ""))
+                | (F.regexp_count(s, F.lit(old)) != F.regexp_count(s, F.lit(new))))
+
+    no_vt = _FP_STRIP.replace(r"\x0B", "")
+    assert no_vt != _FP_STRIP
+    row = df.select(
+        F.count_if(differs(r"[^a-z0-9\s]", _FP_STRIP)).alias("fp"),
+        F.count_if(differs(r"[^A-Za-z0-9\s]", _BPE_OTHER)).alias("bpe"),
+        F.count_if(differs(r"[^a-z0-9\s]", no_vt)).alias("no_vt"),
+        F.count(F.lit(1)).alias("n")).collect()[0]
+    assert row.n == len(chunks) > 1000
+    assert (row.fp, row.bpe) == (0, 0)
+    assert row.no_vt == 1  # VT (U+000B) sits in the first chunk
 
 
 def test_stop_count_regex_equals_hof_filter_form(spark):

@@ -130,23 +130,25 @@ def test_portable_hash_cross_engine_property(texts):
 
 def test_portable_hash_spark_side_adversarial(spark):
     """Spark's conv(substring(md5..)) implementation of the portable hash
-    agrees with the python/DuckDB reference on adversarial strings (unicode,
-    quotes, control chars, empty)."""
+    and its SQL-text form agree with the python/DuckDB reference on
+    adversarial strings (unicode, quotes, control chars, empty)."""
     import hashlib
     import pandas as pd
     from pyspark.sql import functions as F
     from quadtree_block_compression_spark.functions.portable_hash import (
-        PERMS_16, MINHASH_PRIME, minhash_perm, portable_hash64)
+        PERMS_16, MINHASH_PRIME, minhash_perm, portable_hash64,
+        portable_hash64_spark_sql)
     cases = ["", " ", "a", "üß€ 棋盘 \U0001f642",
              'quo"te', "back\\slash", "new\nline", "tab\tsep",
              "ends with space ", "'; DROP TABLE docs; --", "é" * 100]
     df = spark.createDataFrame(pd.DataFrame({"s": cases}))
     rows = df.select("s", portable_hash64(F.col("s")).alias("h"),
-                     minhash_perm(portable_hash64(F.col("s")), 5).alias("m")).collect()
+                     minhash_perm(portable_hash64(F.col("s")), 5).alias("m"),
+                     F.expr(portable_hash64_spark_sql("s")).alias("h_sql")).collect()
     a, b = PERMS_16[5]
     for r in rows:
         ref = int(hashlib.md5(r.s.encode("utf-8")).hexdigest()[:15], 16)
-        assert r.h == ref, repr(r.s)
+        assert r.h == r.h_sql == ref, repr(r.s)
         assert r.m == (ref * a + b) % MINHASH_PRIME, repr(r.s)
 
 
