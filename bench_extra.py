@@ -8,13 +8,18 @@ Usage:
 
 * times each query exactly like bench.py (`.count()`, tracked-cache release
   between queries) unless --noop, which times a full-materialization noop
-  sink instead (guide §1.4);
+  sink instead (guide §1.4). A `.count()` lets Catalyst prune every column
+  a projection-only query computes (the executed plan of
+  `lang_id(docs).groupBy().count()` holds no `regexp` at all), so it times
+  such queries as a bare scan — use --noop for them;
 * --plans writes `.explain("formatted")` for each timed query to
   OUTDIR/<query>_<suffix>.txt (suffix via --suffix, default "before");
-* --profile runs each query's timed reps under a job group named after
-  it, with the Spark event log on, and adds the ``perfbench/eventlog.py``
-  counters per query (jobs, stages, tasks, executor CPU, shuffle, spill,
-  GC, Python worker time) as "profile" to the JSON line;
+* --profile implies --noop, so its counters cover the work a query's
+  output really costs: it runs each query's timed reps under a job group
+  named after it, with the Spark event log on, and adds the
+  ``perfbench/eventlog.py`` counters per query (jobs, stages, tasks,
+  executor CPU, shuffle, spill, GC, Python worker time) as "profile" to
+  the JSON line;
 * prints one JSON line {"queries": {...}, "sf": ..., "total": ...}.
 """
 
@@ -48,8 +53,10 @@ def main() -> None:
                     help="time a noop-sink write instead of count()")
     ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("--profile", action="store_true",
-                    help="event-log counters per query, one job group each")
+                    help="event-log counters per query, one job group each "
+                         "(implies --noop)")
     args = ap.parse_args()
+    args.noop = args.noop or args.profile
 
     events = None
     if args.profile:

@@ -13,7 +13,7 @@ two matmuls and one masked reduction per level instead of per-node (or
 per-image) loops. Each node carries its image index; rule 1 and the
 ``PointCollides`` mask read that image's own width and height. The "most
 expensive code" (the quadrant copy, ``quadtreeElement.go:114-118``) becomes
-one fancy-indexed gather.
+one gather of aligned blocks out of a reshaped view of the canvases.
 
 Images enter in runs bounded by ``_RUN_BYTES`` of padded canvas, so a batch
 of large images never holds every decoded canvas at once; an image larger
@@ -71,10 +71,16 @@ _DIGITS = np.array(["0", "1", "2", "3"], dtype=object)
 
 def _gather_nodes(canvas: np.ndarray, img: np.ndarray, x0: np.ndarray,
                   y0: np.ndarray, s: int) -> np.ndarray:
-    """Stack node sections ``(n, s, s, 3)`` out of the stacked canvases."""
-    rows = y0[:, None] + np.arange(s)[None, :]
-    cols = x0[:, None] + np.arange(s)[None, :]
-    return canvas[img[:, None, None], rows[:, :, None], cols[:, None, :], :]
+    """Stack node sections ``(n, s, s, 3)`` out of the stacked canvases.
+
+    A level's nodes are aligned blocks: the side is ``BLOCK_SIZE·2^k`` split
+    by integer halving, so every origin is a multiple of ``s``. Viewing each
+    canvas as a grid of ``s × s`` blocks turns the gather into one index per
+    node instead of one per pixel.
+    """
+    m, side = canvas.shape[0], canvas.shape[1]
+    blocks = canvas.reshape(m, side // s, s, side // s, s, canvas.shape[3])
+    return blocks[img, y0 // s, :, x0 // s]
 
 
 def _tile_side(canvas: np.ndarray, ws: np.ndarray, hs: np.ndarray,

@@ -29,26 +29,28 @@ _WEIGHTS = np.array([WEIGHT_R, WEIGHT_G, WEIGHT_B])
 # Since both operands are v8 * 0x101, the 16-bit diff is always diff8 * 257,
 # so the float comparison |a16-b16| <= 1000*w is EXACTLY equivalent to the
 # integer comparison diff8 <= floor(1000*w / 257) — i.e. R: ±1, G: ±2, B: 0.
-# The integer path moves 8-bit data instead of three float64 temporaries;
-# the kernel is memory-bandwidth-bound at high core counts, so this is the
-# difference between 2.3× and near-linear 8→32-core scaling.
-_TOL8 = (1000.0 * _WEIGHTS / 257.0).astype(np.int16)  # [1, 2, 0]
+# diff8 is taken in uint8 as max(a, b) - min(a, b), which cannot wrap; a
+# wraparound form such as (a - b + tol) mod 256 would alias 0↔255 to a
+# difference of 1. The comparison moves 8-bit data only, so the kernel stays
+# off the memory-bandwidth ceiling at high core counts.
+_TOL8 = (1000.0 * _WEIGHTS / 257.0).astype(np.uint8)  # [1, 2, 0]
 
 
-def _relevant_mask(n: int, size: int, x0: np.ndarray, y0: np.ndarray,
-                   width, height) -> np.ndarray:
-    """(n, size, size) bool — pixels NOT skipped by ``PointCollides``.
+def _keep_axes(size: int, x0: np.ndarray, y0: np.ndarray,
+               width, height) -> tuple[np.ndarray, np.ndarray]:
+    """``(keep_x, keep_y)``, each ``(n, size)`` bool: the columns and rows
+    of each node NOT skipped by ``PointCollides``.
 
     Node ``i`` occupies global ``[x0[i], x0[i]+size) × [y0[i], y0[i]+size)``;
     a pixel at global (x, y) is relevant iff ``x <= width[i] and
     y <= height[i]`` (the deliberate ``<=`` quirk; origins are never
-    negative here). ``width``/``height`` are per-node arrays or scalars.
+    negative here), so the relevant mask is ``keep_y[:, y] & keep_x[:, x]``.
+    ``width``/``height`` are per-node arrays or scalars.
     """
     lx = np.arange(size)
-    ly = np.arange(size)
-    keep_x = (x0[:, None] + lx[None, :]) <= np.reshape(width, (-1, 1))    # (n, size)
-    keep_y = (y0[:, None] + ly[None, :]) <= np.reshape(height, (-1, 1))   # (n, size)
-    return keep_y[:, :, None] & keep_x[:, None, :]
+    keep_x = (x0[:, None] + lx[None, :]) <= np.reshape(width, (-1, 1))
+    keep_y = (y0[:, None] + lx[None, :]) <= np.reshape(height, (-1, 1))
+    return keep_x, keep_y
 
 
 def compare_pixels_weighted(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
@@ -64,13 +66,19 @@ def compare_pixels_weighted(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
     a = np.asarray(a); b = np.asarray(b)
     n, s = a.shape[0], a.shape[1]
     x0 = np.asarray(x0, dtype=np.int64); y0 = np.asarray(y0, dtype=np.int64)
-    diff8 = np.abs(a.astype(np.int16) - b.astype(np.int16))  # (n, s, s, 3) int16
-    in_range = diff8 <= _TOL8  # bool, exact per the 16-bit-domain identity
-    mask = _relevant_mask(n, s, x0, y0, width, height)
-    # per-channel integer match counts, then one tiny float combination
-    counts = (in_range & mask[..., None]).sum(axis=(1, 2), dtype=np.int64)  # (n, 3)
+    diff8 = np.maximum(a, b)
+    diff8 -= np.minimum(a, b)  # |a - b| in uint8, exact
+    # rows as (x, channel) runs, so the comparison's and the y-sum's inner
+    # loops are 3·s long, not 3 (a length-3 inner axis measured ~6× slower)
+    ok = diff8.reshape(n, s, s * 3) <= np.tile(_TOL8, s)  # (n, y, x·c)
+    keep_x, keep_y = _keep_axes(s, x0, y0, width, height)
+    # the mask factors, so each channel's count is keep_yᵀ · ok · keep_x:
+    # mask rows, sum over y, then mask and sum the (x, c) column counts
+    ok &= keep_y[:, :, None]
+    cols = ok.sum(axis=1, dtype=np.int64).reshape(n, s, 3)
+    counts = (cols * keep_x[:, :, None]).sum(axis=1)  # (n, 3)
     matches = counts @ _WEIGHTS
-    relevant = mask.sum(axis=(1, 2)).astype(np.float64)
+    relevant = (keep_y.sum(axis=1) * keep_x.sum(axis=1)).astype(np.float64)
     return np.where(relevant <= 0, 1.0, matches / np.maximum(relevant, 1.0))
 
 
@@ -81,7 +89,8 @@ def compare_pixels_exact(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
     n, s = a.shape[0], a.shape[1]
     x0 = np.asarray(x0, dtype=np.int64); y0 = np.asarray(y0, dtype=np.int64)
     eq = (a == b).all(axis=3)  # (n, s, s)
-    mask = _relevant_mask(n, s, x0, y0, width, height)
+    keep_x, keep_y = _keep_axes(s, x0, y0, width, height)
+    mask = keep_y[:, :, None] & keep_x[:, None, :]
     matches = (eq & mask).sum(axis=(1, 2)).astype(np.float64)
     relevant = mask.sum(axis=(1, 2)).astype(np.float64)
     return np.where(relevant <= 0, 1.0, matches / np.maximum(relevant, 1.0))

@@ -361,15 +361,15 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
                     F.col("c.chunk_text").alias("chunk_text")))
 
 
-def annotate(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def annotate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Fingerprint + quality + language in ONE whole-stage-codegen
     projection — the corpus-cleaning annotate stage without a single join
     or shuffle (the join-per-annotation form costs three shuffles and three
-    extra scans of the corpus at 100 TB). Keeps every input column and adds
-    ``fingerprint, norm_len, quality, n_tokens, punct_ratio,
-    stopword_ratio, lang_pred, lang_score``, all parsed from one SQL
-    projection (see the module docstring)."""
+    extra scans of the corpus at 100 TB). Keeps every input column (the id
+    among them, so it takes no id column) and adds ``fingerprint, norm_len,
+    quality, n_tokens, punct_ratio, stopword_ratio, lang_pred,
+    lang_score``, all parsed from one SQL projection (see the module
+    docstring)."""
     from ..functions.parallelism import spread
     docs = spread(docs)  # regex-heavy projection: use every core on tiny scans
     return _project(docs, "*", ("fingerprint", "norm_len", "quality", "n_tokens",

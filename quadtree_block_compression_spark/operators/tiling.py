@@ -54,7 +54,9 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     """
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    src = images.select(F.col("image_id").cast("string"), "bytes")
+    # the build is two SQL projections around the UDF: each is parsed once
+    # on the JVM, where a Column tree costs a py4j round trip per node
+    src = images.selectExpr("CAST(image_id AS STRING) AS image_id", "bytes")
     if repartition:
         src = src.repartition(repartition)
     skip = on_error == "skip"
@@ -106,11 +108,10 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                 pa.array(cols["similarity"], from_pandas=True),
                 block_px], names=_BLOCK_COLUMNS)
 
-    blocks = src.mapInArrow(tile_batches, BLOCKS_SCHEMA)
-    return (blocks
-            .withColumn("block_hash", F.xxhash64("block_px"))
-            .withColumn("morton", F.when(F.col("tile_id") == "", F.lit(0))
-                        .otherwise(F.conv("tile_id", 4, 10).cast("long"))))
+    return src.mapInArrow(tile_batches, BLOCKS_SCHEMA).selectExpr(
+        "*", "xxhash64(block_px) AS block_hash",
+        "CASE WHEN tile_id = '' THEN 0 "
+        "ELSE CAST(conv(tile_id, 4, 10) AS BIGINT) END AS morton")
 
 
 def scan_errors(images: DataFrame) -> DataFrame:

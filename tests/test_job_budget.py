@@ -11,11 +11,12 @@ lineage) must not add passes over its output. The bare tiling pass is pinned
 too: batching the kernel must not add an action (say, a count to size it).
 Lower a budget when a change removes jobs; raising one needs a reason.
 
-The text-analysis projections carry a construction budget instead: the
-py4j round trips the driver makes while *building* each DataFrame, before
-anything runs. Each feature is SQL text parsed once per projection; a
-per-feature Column tree costs one round trip per node (``annotate`` made
-~1,900), which a later edit could re-grow without changing any output.
+The text-analysis projections and ``assign_tiles`` carry a construction
+budget instead: the py4j round trips the driver makes while *building* each
+DataFrame, before anything runs. Each feature is SQL text parsed once per
+projection; a per-feature Column tree costs one round trip per node
+(``annotate`` made ~1,900, ``assign_tiles`` ~139), which a later edit could
+re-grow without changing any output.
 """
 
 import os
@@ -113,7 +114,8 @@ def test_pipeline_job_count_within_budget(spark, tiny_images, sf_dir, tmp_path, 
 
 # py4j round trips to build each projection, as measured plus headroom
 BUILD_CALL_BUDGET = {"annotate": 30, "quality_features": 20, "quality_score": 16,
-                     "lang_id": 14, "fingerprint": 14}
+                     "lang_id": 14, "fingerprint": 14, "assign_tiles": 60}
+TEXT_PROJECTIONS = sorted(set(BUILD_CALL_BUDGET) - {"assign_tiles"})
 
 
 def _text_op(name):
@@ -139,7 +141,7 @@ def _build_calls(monkeypatch, fn):
     return out, len(sent)
 
 
-@pytest.mark.parametrize("name", sorted(BUILD_CALL_BUDGET))
+@pytest.mark.parametrize("name", TEXT_PROJECTIONS)
 def test_text_projection_build_calls_within_budget(spark, sf_dir, monkeypatch, name):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     op = _text_op(name)
@@ -148,6 +150,15 @@ def test_text_projection_build_calls_within_budget(spark, sf_dir, monkeypatch, n
     assert calls <= BUILD_CALL_BUDGET[name], (
         f"building {name} sent {calls} py4j commands, "
         f"budget {BUILD_CALL_BUDGET[name]}")
+
+
+def test_assign_tiles_build_calls_within_budget(tiny_images, monkeypatch):
+    from quadtree_block_compression_spark.operators.tiling import assign_tiles
+    df, calls = _build_calls(monkeypatch, lambda: assign_tiles(tiny_images))
+    assert df.columns[-2:] == ["block_hash", "morton"]
+    assert calls <= BUILD_CALL_BUDGET["assign_tiles"], (
+        f"building assign_tiles sent {calls} py4j commands, "
+        f"budget {BUILD_CALL_BUDGET['assign_tiles']}")
 
 
 def test_text_projections_independent_of_escaped_string_literals(spark):

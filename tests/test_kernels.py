@@ -88,6 +88,42 @@ def test_scale_batch_matches_single():
         assert (b[i] == scale(imgs[i], 8, 8, "CatmullRom")).all()
 
 
+def _ftou_reference(imgs, dst_h, dst_w, method):
+    """``scale_batch`` with Go's ftou/>>8 written as a float floor_divide:
+    the same weights and contractions, so only the conversion differs."""
+    from quadtree_block_compression_spark.kernels import resample
+    n, h, w, c = imgs.shape
+    if method == "ApproxBiLinear":
+        wy, wx = resample._abl_distrib(h, dst_h), resample._abl_distrib(w, dst_w)
+    else:
+        wy, wx = resample._distrib(h, dst_h, method), resample._distrib(w, dst_w, method)
+    tmp = np.einsum("nhwc,xw->nhxc", imgs.astype(np.float64), wx * 257.0, optimize=True)
+    out = np.einsum("nhxc,yh->nyxc", tmp, wy, optimize=True)
+    return np.floor_divide(np.clip(out + 0.5, 0.0, 65535.0), 256.0).astype(np.uint8)
+
+
+@pytest.mark.parametrize("method", ["CatmullRom", "BiLinear", "ApproxBiLinear"])
+def test_scale_batch_ftou_equals_floor_divide(method):
+    """The conversion is bit-identical to floor(clamp(sum16 + 0.5) / 256) on
+    0/255 checkerboards (CatmullRom overshoots below 0 and above 65535),
+    flat blocks and noise, up and down."""
+    rng = np.random.default_rng(17)
+    for src in (8, 13, 16):
+        board = (np.indices((src, src)).sum(axis=0) % 2 * 255).astype(np.uint8)
+        imgs = np.stack([board[..., None].repeat(3, 2), 255 - board[..., None].repeat(3, 2),
+                         np.full((src, src, 3), 255, np.uint8),
+                         np.full((src, src, 3), 0, np.uint8),
+                         np.full((src, src, 3), 128, np.uint8),
+                         rng.integers(0, 256, (src, src, 3)).astype(np.uint8)])
+        for dst in (1, 5, 8, 16, 29, 64):
+            got = scale_batch(imgs, dst, dst, method)
+            assert got.dtype == np.uint8
+            assert np.array_equal(got, _ftou_reference(imgs, dst, dst, method)), (src, dst)
+    if method == "CatmullRom":  # the checkerboards did reach both clamps
+        up = _ftou_reference(imgs[:2], 64, 64, method)
+        assert up.min() == 0 and up.max() == 255
+
+
 # -------------------------------------------------------------- similarity -
 
 
@@ -144,6 +180,52 @@ def test_exact_compare():
     b = a.copy(); b[0, 0, 0, 0] = 9
     s = compare_pixels_exact(a, b, np.zeros(1), np.zeros(1), 8, 8)
     assert np.allclose(s, 15 / 16)
+
+
+def _compare_int16_reference(a, b, x0, y0, width, height):
+    """``ComparePixelsWeighted`` over int16 differences and the full
+    ``PointCollides`` mask."""
+    n, s = a.shape[0], a.shape[1]
+    diff8 = np.abs(a.astype(np.int16) - b.astype(np.int16))
+    in_range = diff8 <= np.array([1, 2, 0], dtype=np.int16)
+    lx = np.arange(s)
+    keep_x = (np.asarray(x0)[:, None] + lx) <= np.reshape(width, (-1, 1))
+    keep_y = (np.asarray(y0)[:, None] + lx) <= np.reshape(height, (-1, 1))
+    mask = keep_y[:, :, None] & keep_x[:, None, :]
+    counts = (in_range & mask[..., None]).sum(axis=(1, 2))
+    matches = counts @ np.array([0.2989, 0.5870, 0.1140])
+    relevant = mask.sum(axis=(1, 2)).astype(np.float64)
+    return np.where(relevant <= 0, 1.0, matches / np.maximum(relevant, 1.0))
+
+
+def test_compare_weighted_equals_int16_reference():
+    """Adversarial pairs (0↔255, 1↔255, 0↔254 — a wraparound difference
+    would alias them to small ones), per-channel differences of ±1..±3,
+    nodes straddling the ``<=`` edge, scalar and per-node bounds."""
+    rng = np.random.default_rng(23)
+    s, n = 16, 48
+    a = rng.integers(0, 256, (n, s, s, 3)).astype(np.uint8)
+    b = a.copy()
+    pairs = np.array([[0, 255], [1, 255], [0, 254], [255, 0], [255, 1], [254, 0]])
+    for i in range(n // 2):  # per-pixel adversarial pairs, either order
+        pick = pairs[rng.integers(0, len(pairs), (s, s, 3))]
+        a[i], b[i] = pick[..., 0], pick[..., 1]
+    step = rng.integers(-3, 4, (n - n // 2, s, s, 3))
+    b[n // 2:] = np.clip(a[n // 2:].astype(int) + step, 0, 255)
+    # origins of a 64-px image split into 16-px nodes; bounds land before,
+    # on and past each node's last column/row (the <= quirk's edge)
+    x0 = rng.integers(0, 4, n) * s
+    y0 = rng.integers(0, 4, n) * s
+    w = x0 + rng.integers(-2, s + 2, n)
+    h = y0 + rng.integers(-2, s + 2, n)
+    got = compare_pixels_weighted(a, b, x0, y0, w, h)
+    assert np.array_equal(got, _compare_int16_reference(a, b, x0, y0, w, h))
+    for width, height in ((s - 1, s - 1), (s, s), (s // 2, 3 * s), (200, 200)):
+        got = compare_pixels_weighted(a, b, x0, y0, width, height)
+        assert np.array_equal(got, _compare_int16_reference(a, b, x0, y0, width, height))
+    # the adversarial pairs all differ by ≥ 254: no channel ever matches
+    z = np.zeros(n // 2, dtype=np.int64)
+    assert (compare_pixels_weighted(a[:n // 2], b[:n // 2], z, z, 200, 200) == 0).all()
 
 
 # ------------------------------------------------------------------- tiles -
@@ -273,6 +355,30 @@ def test_phash_deterministic_and_discriminative():
 
 
 # ---------------------------------------------------------------- quadtree -
+
+
+@pytest.mark.parametrize("side", [16, 64, 256])
+def test_gather_nodes_equals_fancy_index(side):
+    """Every level's aligned nodes out of a stacked canvas equal the
+    per-pixel fancy-indexed sections."""
+    rng = np.random.default_rng(side)
+    m = 3
+    canvas = rng.integers(0, 256, (m, side, side, 3)).astype(np.uint8)
+    s = side
+    while s >= 8:
+        k = side // s
+        img = np.repeat(np.arange(m), k * k)
+        y0 = np.tile(np.repeat(np.arange(k), k) * s, m)
+        x0 = np.tile(np.tile(np.arange(k), k) * s, m)
+        order = rng.permutation(len(img))  # any node order, any image mix
+        img, x0, y0 = img[order], x0[order], y0[order]
+        rows = y0[:, None] + np.arange(s)[None, :]
+        cols = x0[:, None] + np.arange(s)[None, :]
+        want = canvas[img[:, None, None], rows[:, :, None], cols[:, None, :], :]
+        got = quadtree._gather_nodes(canvas, img, x0, y0, s)
+        assert got.shape == (len(img), s, s, 3)
+        assert np.array_equal(got, want), s
+        s //= 2
 
 
 def test_quadtree_solid_collapses_at_root():
