@@ -1598,24 +1598,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         images = _fixture_images(spark, 16)
         return extremes(tiling.assign_tiles(images))
 
-    def corpus_clean(spark, sf):
-        """End-to-end corpus cleaning as ONE oracle-verified plan:
-        fingerprint dedup -> minhash-LSH near-dedup drop -> quality filter.
-        Annotation is a single projection (no joins) — see text_analysis.annotate."""
+    def _clean_prefix(spark, sf):
+        """The corpus-cleaning family's shared prefix: annotate → exact
+        dedup (min doc_id per fingerprint) → MinHash-LSH near pairs at
+        Jaccard ≥ 0.5 over the survivors. Returns (exact, pairs); ``exact``
+        is persisted because it feeds BOTH the near-dedup shingle pipeline
+        and the caller's tail — without it the annotate projection and
+        fingerprint-window election compute twice."""
         from pyspark.sql import Window
         from quadtree_block_compression_spark.functions.cache import persist_tracked
         (docs,) = _tables(spark, sf, "documents")
         ann = text_analysis.annotate(docs)
         w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        # persisted: feeds BOTH the near-dedup shingle pipeline and the final
-        # anti-join/quality filter — without it the annotate projection and
-        # fingerprint-window election compute twice
         exact = persist_tracked(
             ann.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
-        pairs = dedup_text.minhash_lsh_pairs(exact, n=_NGRAM_N, num_perm=_NUM_PERM,
-                                             bands=_BANDS, threshold=0.5,
-                                             max_bucket=_MAX_BUCKET)
+        return exact, dedup_text.minhash_lsh_pairs(
+            exact, n=_NGRAM_N, num_perm=_NUM_PERM, bands=_BANDS,
+            threshold=0.5, max_bucket=_MAX_BUCKET)
+
+    def corpus_clean(spark, sf):
+        """End-to-end corpus cleaning as ONE oracle-verified plan:
+        fingerprint dedup -> minhash-LSH near-dedup drop -> quality filter.
+        Annotation is a single projection (no joins) — see text_analysis.annotate."""
+        exact, pairs = _clean_prefix(spark, sf)
         drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         clean = exact.join(drops, "doc_id", "left_anti")
         return (clean.filter(F.col("quality") >= 0.5)
@@ -1631,19 +1637,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         Same exact-dedup prefix and quality filter as corpus_clean, so the
         two graded queries isolate exactly the election semantics
         (VERDICT r4 #5). Oracle: recursive CTE (min reachable id)."""
-        from pyspark.sql import Window
-        from quadtree_block_compression_spark.functions.cache import persist_tracked
         from quadtree_block_compression_spark.operators.components import (
             connected_components)
-        (docs,) = _tables(spark, sf, "documents")
-        ann = text_analysis.annotate(docs)
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        exact = persist_tracked(
-            ann.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-        pairs = dedup_text.minhash_lsh_pairs(exact, n=_NGRAM_N, num_perm=_NUM_PERM,
-                                             bands=_BANDS, threshold=0.5,
-                                             max_bucket=_MAX_BUCKET)
+        exact, pairs = _clean_prefix(spark, sf)
         comp = connected_components(exact, pairs)
         keep = comp.filter("is_canonical").select("doc_id")
         clean = exact.join(keep, "doc_id", "left_semi")
@@ -1660,18 +1656,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         6) on BOTH engines (the 6-dp grid the oracles already hash-agree
         on), never by the raw double."""
         from pyspark.sql import Window
-        from quadtree_block_compression_spark.functions.cache import persist_tracked
         from quadtree_block_compression_spark.operators.components import (
             connected_components)
-        (docs,) = _tables(spark, sf, "documents")
-        ann = text_analysis.annotate(docs)
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        exact = persist_tracked(
-            ann.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-        pairs = dedup_text.minhash_lsh_pairs(exact, n=_NGRAM_N, num_perm=_NUM_PERM,
-                                             bands=_BANDS, threshold=0.5,
-                                             max_bucket=_MAX_BUCKET)
+        exact, pairs = _clean_prefix(spark, sf)
         comp = connected_components(exact, pairs)
         scored = comp.join(
             exact.select("doc_id", F.round("quality", 6).alias("quality")),
@@ -1690,21 +1677,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         of row-wise splitting). Same exact-dedup + LSH + components prefix
         as corpus_clean_components; the tail is one pure hash-bucket
         projection (sampling.leakage_safe_split), zero extra shuffles."""
-        from pyspark.sql import Window
-        from quadtree_block_compression_spark.functions.cache import persist_tracked
         from quadtree_block_compression_spark.operators.components import (
             connected_components)
         from quadtree_block_compression_spark.operators.sampling import (
             leakage_safe_split)
-        (docs,) = _tables(spark, sf, "documents")
-        ann = text_analysis.annotate(docs)
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        exact = persist_tracked(
-            ann.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
-        pairs = dedup_text.minhash_lsh_pairs(exact, n=_NGRAM_N, num_perm=_NUM_PERM,
-                                             bands=_BANDS, threshold=0.5,
-                                             max_bucket=_MAX_BUCKET)
+        exact, pairs = _clean_prefix(spark, sf)
         comp = connected_components(exact, pairs)
         return (leakage_safe_split(comp)
                 .select("doc_id", "component_id", "component_size", "split"))

@@ -15,7 +15,7 @@ Arrow-vectorized UDFs only.
 """
 
 from .resample import scale, scale_batch  # noqa: F401
-from .similarity import compare_pixels_weighted, compare_pixels_exact  # noqa: F401
+from .similarity import compare_pixels_weighted  # noqa: F401
 from .tiles import (  # noqa: F401
     padded_side,
     pad_image,

@@ -1,9 +1,8 @@
-"""Weighted / exact pixel-similarity kernels.
+"""Weighted pixel-similarity kernel.
 
-Reimplements ``ComparePixelsWeighted`` / ``ComparePixelsExact``
-(``pkg/utils/comparisonUtils.go:10-104``) as vectorized numpy reductions over
-batches of equal-sized node images, preserving three deliberate quirks
-(SURVEY.md §7):
+Reimplements ``ComparePixelsWeighted`` (``pkg/utils/comparisonUtils.go:53-104``)
+as a vectorized numpy reduction over batches of equal-sized node images,
+preserving three deliberate quirks (SURVEY.md §7):
 
 * **16-bit color domain**: Go's ``At().RGBA()`` returns ``v8 * 0x101``; the
   per-channel tolerance is ``1000 * weight`` in those units
@@ -79,20 +78,6 @@ def compare_pixels_weighted(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
     counts = (cols * keep_x[:, :, None]).sum(axis=1)  # (n, 3)
     matches = counts @ _WEIGHTS
     relevant = (keep_y.sum(axis=1) * keep_x.sum(axis=1)).astype(np.float64)
-    return np.where(relevant <= 0, 1.0, matches / np.maximum(relevant, 1.0))
-
-
-def compare_pixels_exact(a: np.ndarray, b: np.ndarray, x0: np.ndarray,
-                         y0: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Batched ``ComparePixelsExact`` (``comparisonUtils.go:10-51``)."""
-    a = np.asarray(a); b = np.asarray(b)
-    n, s = a.shape[0], a.shape[1]
-    x0 = np.asarray(x0, dtype=np.int64); y0 = np.asarray(y0, dtype=np.int64)
-    eq = (a == b).all(axis=3)  # (n, s, s)
-    keep_x, keep_y = _keep_axes(s, x0, y0, width, height)
-    mask = keep_y[:, :, None] & keep_x[:, None, :]
-    matches = (eq & mask).sum(axis=(1, 2)).astype(np.float64)
-    relevant = mask.sum(axis=(1, 2)).astype(np.float64)
     return np.where(relevant <= 0, 1.0, matches / np.maximum(relevant, 1.0))
 
 

@@ -20,6 +20,9 @@ DuckDB oracles in ``__spark_entry__``), using the portable md5-based hash
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.portable_hash import portable_hash64, minhash_perm
@@ -211,6 +214,69 @@ def minhash_signatures(docs: DataFrame, n: int = 3, num_perm: int = 8,
     return hashed.groupBy(id_col).agg(*aggs)
 
 
+def _band_buckets(sig: DataFrame, num_perm: int, bands: int,
+                  id_col: str) -> DataFrame:
+    """(``id_col``, band, key) rows: each band's ``num_perm // bands``
+    signature values hashed into one bucket key. No distinct: ``sig`` holds
+    ONE row per doc and the band array one struct per band index, so
+    (doc, band) rows are unique by construction — a distinct here is a
+    whole extra exchange over the bucket table."""
+    rows_per_band = num_perm // bands
+    band_cols = [
+        F.struct(F.lit(bnd).alias("band"),
+                 portable_hash64(F.concat_ws(
+                     "_", *[F.col(f"mh{bnd * rows_per_band + r}")
+                            for r in range(rows_per_band)])).alias("key"))
+        for bnd in range(bands)]
+    return (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
+            .select(id_col, F.col("bk.band").alias("band"),
+                    F.col("bk.key").alias("key")))
+
+
+def _lsh_tables(docs: DataFrame, n: int, num_perm: int, bands: int,
+                text_col: str, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """ONE shingle pass → (persisted distinct (``id_col``, h) shingle
+    hashes, band buckets). The persisted table feeds the signatures and
+    the verify's hash arrays (the unshared plan recomputed
+    split/explode/distinct per consumer — ~20% of the stage wall at
+    sf0.1)."""
+    sh = persist_tracked(word_shingle_hashes(docs, n, text_col, id_col))
+    sig = minhash_signatures(docs, n, num_perm, text_col, id_col,
+                             shingle_hashes=sh)
+    return sh, _band_buckets(sig, num_perm, bands, id_col)
+
+
+def _hash_arrays(sh: DataFrame, id_col: str) -> DataFrame:
+    """(``id_col``, hs): each doc's shingle hashes as one array. Builds
+    WITHOUT an exchange — ``sh`` is id-partitioned (word_shingle_hashes)."""
+    return sh.groupBy(id_col).agg(F.collect_list("h").alias("hs"))
+
+
+def _verify(cand: DataFrame, a_arrays: DataFrame, b_arrays: DataFrame,
+            id_col: str, threshold: float) -> DataFrame:
+    """Candidate pairs (a, b) whose exact shingle Jaccard ≥ ``threshold``,
+    with the ``jaccard`` column and every extra ``a_arrays`` column.
+
+    Per-doc hash ARRAYS (:func:`_hash_arrays`), not an exploded
+    cand ⋈ shingles ⋈ shingles chain: that shape costs a pair groupBy and
+    two size joins, four sequential shuffle boundaries. Since the shingle
+    table is distinct (id, h), ``size(array_intersect(ha, hb))`` IS the
+    exact intersection count and ``size(hs)`` the exact set size.
+    Candidate pairs are LSH-collision-sized (≪ corpus), so carrying two
+    arrays per pair through the two joins ships about the bytes the
+    exploded chain would, across fewer boundaries."""
+    av = (a_arrays.withColumnRenamed(id_col, "a")
+          .withColumnRenamed("hs", "_ha"))
+    bv = b_arrays.select(F.col(id_col).alias("b"), F.col("hs").alias("_hb"))
+    return (cand.join(av, "a").join(bv, "b")
+            # hoisted column: the intersect is multi-referenced (numerator
+            # + denominator) and survives CollapseProject as ONE evaluation
+            .withColumn("_inter", F.size(F.array_intersect("_ha", "_hb")))
+            .withColumn("jaccard", F.col("_inter")
+                        / (F.size("_ha") + F.size("_hb") - F.col("_inter")))
+            .where(F.col("jaccard") >= threshold))
+
+
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_perm: int = 8,
                       bands: int = 4, threshold: float = 0.5,
                       text_col: str = "text", id_col: str = "doc_id",
@@ -227,57 +293,17 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_perm: int = 8,
     Members of a dropped bucket still meet through their other bands — and
     truly identical docs are the *exact* tier's job anyway.
     """
-    rows_per_band = num_perm // bands
-    # ONE shingle pass feeds signatures, sizes, and both verify sides (the
-    # unshared plan recomputed split/explode/distinct six times — measured
-    # ~20% of the stage wall at sf0.1, far worse at corpus scale); same for
-    # the banded bucket table feeding both sides of the candidate self-join.
-    # Hashed shingles (r6): the persisted table, the verify equi-join and
-    # the sizes aggregate all carry 8-byte longs instead of shingle strings.
-    sh = persist_tracked(word_shingle_hashes(docs, n, text_col, id_col))
-    sig = minhash_signatures(docs, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh)
-    band_cols = []
-    for bnd in range(bands):
-        parts = [F.col(f"mh{bnd * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.struct(F.lit(bnd).alias("band"),
-                                  portable_hash64(F.concat_ws("_", *parts)).alias("key")))
-    # no distinct: sig holds ONE row per doc and the band array holds one
-    # struct per band index, so (doc, band) rows are unique by construction
-    # — a distinct here is a whole extra exchange over the bucket table
-    bucketed = (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
-                .select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")))
+    sh, bucketed = _lsh_tables(docs, n, num_perm, bands, text_col, id_col)
     if max_bucket is not None:
         bucketed = _cap_by_key(bucketed, ["band", "key"], max_bucket)
+    # persisted: the bucket table feeds both sides of the self-join
     bucketed = persist_tracked(bucketed)
     a = bucketed.select(F.col(id_col).alias("a"), "band", "key")
     b = bucketed.select(F.col(id_col).alias("b"), "band", "key")
     cand = (a.join(b, ["band", "key"]).where(F.col("a") < F.col("b"))
             .select("a", "b").distinct())
-
-    # exact-Jaccard verification on candidates only — per-doc hash ARRAYS
-    # instead of the exploded equi-join chain (r6): the old shape
-    # (cand ⋈ shingles ⋈ shingles → pair groupBy → two size joins) cost
-    # four sequential shuffle boundaries, each a ~0.5-1.3 s AQE
-    # stage-materialization job at bench scale. The array table builds
-    # WITHOUT an exchange (sh is id-partitioned), and since sh is distinct
-    # (id, h), `size(array_intersect(ha, hb))` IS the exact intersection
-    # count and `size(hs)` the exact set size — bit-identical jaccard.
-    # Candidate pairs are LSH-collision-sized (≪ corpus), so carrying two
-    # ~set-size arrays per pair through the two joins shuffles about the
-    # same bytes the exploded chain did, across fewer boundaries.
-    arrs = sh.groupBy(id_col).agg(F.collect_list("h").alias("_hs"))
-    av = arrs.select(F.col(id_col).alias("a"), F.col("_hs").alias("_ha"),
-                     F.size("_hs").alias("sza"))
-    bv = arrs.select(F.col(id_col).alias("b"), F.col("_hs").alias("_hb"),
-                     F.size("_hs").alias("szb"))
-    return (cand.join(av, "a").join(bv, "b")
-            # hoisted column: the intersect is multi-referenced (numerator
-            # + denominator) and survives CollapseProject as ONE evaluation
-            .withColumn("_inter", F.size(F.array_intersect("_ha", "_hb")))
-            .withColumn("jaccard", F.col("_inter")
-                        / (F.col("sza") + F.col("szb") - F.col("_inter")))
-            .where(F.col("jaccard") >= threshold)
+    arrs = _hash_arrays(sh, id_col)
+    return (_verify(cand, arrs, arrs, id_col, threshold)
             .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
                     F.round("jaccard", 6).alias("jaccard")))
 
@@ -349,6 +375,87 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 12,
             .distinct())
 
 
+# ------------------------------------------------------------ incremental --
+
+# on-disk index layout version, pinned in meta.json: 2 = per-doc shingle
+# hash ARRAYS (buckets, shingles, hashes); layout 1 stored exploded
+# (doc_id, h) shingle rows plus a sizes table
+_INDEX_LAYOUT = 2
+_INDEX_TABLES = ("buckets", "shingles", "hashes")
+
+
+def _index_tables(docs: DataFrame, n: int, num_perm: int, bands: int,
+                  text_col: str, id_col: str) -> dict[str, DataFrame]:
+    """The corpus side of the incremental probe: ``buckets`` (id, band,
+    key — banded MinHash keys), ``shingles`` (id, hs — the verify's
+    per-doc hash arrays) and ``hashes`` (id, h — the exact tier's content
+    hash). In memory for :func:`dedup_incremental`, at rest for the
+    indexed form."""
+    sh, buckets = _lsh_tables(docs, n, num_perm, bands, text_col, id_col)
+    return {"buckets": buckets, "shingles": _hash_arrays(sh, id_col),
+            "hashes": docs.select(id_col,
+                                  portable_hash64(F.col(text_col)).alias("h"))}
+
+
+def _probe(cor: dict[str, DataFrame], new_docs: DataFrame, n: int,
+           num_perm: int, bands: int, threshold: float, text_col: str,
+           id_col: str, max_bucket: int | None) -> DataFrame:
+    """Classify every doc of ``new_docs`` against the corpus tables ``cor``
+    (see :func:`_index_tables`) and the rest of its own batch — the one
+    classifier behind both incremental forms. Candidates are ONLY
+    corpus×new and new×new; the corpus never self-joins."""
+    # exact tier: portable content hash, new vs corpus only
+    h_new = new_docs.select(F.col(id_col).alias("b"),
+                            portable_hash64(F.col(text_col)).alias("h"))
+    exact = (h_new.join(cor["hashes"].select(F.col(id_col).alias("a"), "h"),
+                        "h")
+             .groupBy("b").agg(F.min("a").alias("exact_of")))
+
+    # near tier: the batch's own shingle pass (the ONLY text scanned when
+    # the corpus side is at rest) + the union bucket table, capped over
+    # corpus∪batch occupancy like the self-join tier
+    sh_new, new_buckets = _lsh_tables(new_docs, n, num_perm, bands,
+                                      text_col, id_col)
+    buckets = (cor["buckets"].withColumn("_new", F.lit(False))
+               .unionByName(new_buckets.withColumn("_new", F.lit(True))))
+    if max_bucket is not None:
+        buckets = _cap_by_key(buckets, ["band", "key"], max_bucket)
+    buckets = persist_tracked(buckets)
+    new_b = buckets.where("_new").select(F.col(id_col).alias("b"),
+                                         "band", "key")
+    cor_b = buckets.where("NOT _new").select(F.col(id_col).alias("a"),
+                                             "band", "key")
+    # corpus×new plus within-batch (a < b); NEVER corpus×corpus
+    cand = (cor_b.join(new_b, ["band", "key"]).select("a", "b")
+            .unionByName(
+                new_b.select(F.col("b").alias("a"), "band", "key")
+                .join(new_b, ["band", "key"])
+                .where(F.col("a") < F.col("b")).select("a", "b"))
+            .distinct())
+
+    # verify: b is always a batch doc; the a-side arrays carry their side
+    new_arrays = _hash_arrays(sh_new, id_col)
+    a_arrays = (cor["shingles"].withColumn("_new", F.lit(False))
+                .unionByName(new_arrays.withColumn("_new", F.lit(True))))
+    near = (_verify(cand, a_arrays, new_arrays, id_col, threshold)
+            .groupBy("b")
+            .agg(F.min(F.when(~F.col("_new"), F.col("a"))).alias("near_of"),
+                 F.min(F.when(F.col("_new"), F.col("a"))).alias("nearnew_of")))
+
+    # tier election, in precedence order exact > near > near_new > unique
+    return (new_docs.select(F.col(id_col).alias("b"))
+            .join(exact, "b", "left")
+            .join(near, "b", "left")
+            .select(
+                F.col("b").alias(id_col),
+                F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
+                .when(F.col("near_of").isNotNull(), F.lit("near"))
+                .when(F.col("nearnew_of").isNotNull(), F.lit("near_new"))
+                .otherwise(F.lit("unique")).alias("dup_tier"),
+                F.coalesce("exact_of", "near_of", "nearnew_of", F.lit(-1))
+                .alias("dup_of")))
+
+
 def dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
                       n: int = 3, num_perm: int = 8, bands: int = 4,
                       threshold: float = 0.5,
@@ -370,89 +477,46 @@ def dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
       batch (``dup_of`` = min such id) — the within-batch greedy election;
     - ``unique``  — none of the above (``dup_of`` = -1).
 
-    Caller contract: corpus and batch id spaces are disjoint. One shingle
-    pass over the tagged union feeds signatures, sizes and both verify
-    sides (persisted via the tracked cache); the band-bucket cap applies
-    to the union's buckets, exactly like the self-join tier. Candidates
-    are ONLY corpus×new and new×new — the corpus never self-joins.
-    Returns (``id_col``, dup_tier, dup_of) for every new doc.
+    Caller contract: corpus and batch id spaces are disjoint. The corpus
+    side is the in-memory form of the :func:`dedup_index_write` index, so
+    this IS :func:`dedup_incremental_indexed` without the parquet round
+    trip; the band-bucket cap applies to the union's buckets, exactly like
+    the self-join tier. Returns (``id_col``, dup_tier, dup_of) for every
+    new doc.
     """
-    tagged = (new_docs.select(id_col, text_col).withColumn("_new", F.lit(True))
-              .unionByName(corpus.select(id_col, text_col)
-                           .withColumn("_new", F.lit(False))))
-    sides = tagged.select(id_col, "_new")
+    cor = _index_tables(corpus, n, num_perm, bands, text_col, id_col)
+    return _probe(cor, new_docs, n, num_perm, bands, threshold, text_col,
+                  id_col, max_bucket)
 
-    # exact tier: portable content hash, new vs corpus only
-    h_new = new_docs.select(F.col(id_col).alias("b"),
-                            portable_hash64(F.col(text_col)).alias("h"))
-    h_cor = corpus.select(F.col(id_col).alias("a"),
-                          portable_hash64(F.col(text_col)).alias("h"))
-    exact = (h_new.join(h_cor, "h")
-             .groupBy("b").agg(F.min("a").alias("exact_of")))
 
-    # near tier: shared shingle pass + banded buckets over the union
-    # (hashed shingle keys, r6 — see word_shingle_hashes)
-    rows_per_band = num_perm // bands
-    sh = persist_tracked(word_shingle_hashes(tagged, n, text_col, id_col))
-    sig = minhash_signatures(tagged, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh)
-    band_cols = []
-    for bnd in range(bands):
-        parts = [F.col(f"mh{bnd * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(bnd).alias("band"),
-            portable_hash64(F.concat_ws("_", *parts)).alias("key")))
-    bucketed = (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
-                .select(id_col, F.col("bk.band").alias("band"),
-                        F.col("bk.key").alias("key")))
-    if max_bucket is not None:
-        bucketed = _cap_by_key(bucketed, ["band", "key"], max_bucket)
-    bucketed = persist_tracked(bucketed.join(sides, id_col))
-    new_b = (bucketed.where("_new")
-             .select(F.col(id_col).alias("b"), "band", "key"))
-    cor_b = (bucketed.where("NOT _new")
-             .select(F.col(id_col).alias("a"), "band", "key"))
-    # corpus×new plus within-batch (a < b); NEVER corpus×corpus
-    cand = (cor_b.join(new_b, ["band", "key"]).select("a", "b")
-            .unionByName(
-                new_b.select(F.col("b").alias("a"), "band", "key")
-                .join(new_b, ["band", "key"])
-                .where(F.col("a") < F.col("b")).select("a", "b"))
-            .distinct())
+def _check_meta(path: str, n: int, num_perm: int, bands: int) -> None:
+    """Fail fast when the index at ``path`` was built with other LSH
+    parameters or an older table layout — a mismatched probe would
+    otherwise bucket differently (or not resolve the tables) silently."""
+    with open(os.path.join(path, "meta.json")) as f:
+        meta = json.load(f)
+    want = {"layout": _INDEX_LAYOUT, "n": n, "num_perm": num_perm,
+            "bands": bands}
+    if {k: meta.get(k) for k in want} != want:
+        raise ValueError(f"index at {path} was built with {meta}, used with "
+                         f"{want} — rebuild or match")
 
-    # exact-Jaccard verify on candidates only — per-doc hash arrays +
-    # array_intersect, exactly like the self-join tier (r6): sh is distinct
-    # (id, h) and id-partitioned, so the array table builds exchange-free
-    # and size(array_intersect) is the exact intersection count.
-    arrs = sh.groupBy(id_col).agg(F.collect_list("h").alias("_hs"))
-    av = arrs.select(F.col(id_col).alias("a"), F.col("_hs").alias("_ha"),
-                     F.size("_hs").alias("sza"))
-    bv = arrs.select(F.col(id_col).alias("b"), F.col("_hs").alias("_hb"),
-                     F.size("_hs").alias("szb"))
-    near = (cand.join(av, "a").join(bv, "b")
-            .withColumn("_inter", F.size(F.array_intersect("_ha", "_hb")))
-            .where(F.col("_inter")
-                   / (F.col("sza") + F.col("szb") - F.col("_inter"))
-                   >= threshold))
-    near_sided = near.join(sides.select(F.col(id_col).alias("a"), "_new"), "a")
-    near_cor = (near_sided.where("NOT _new")
-                .groupBy("b").agg(F.min("a").alias("near_of")))
-    near_new = (near_sided.where("_new")
-                .groupBy("b").agg(F.min("a").alias("nearnew_of")))
 
-    return (new_docs.select(F.col(id_col).alias("b"))
-            .join(exact, "b", "left")
-            .join(near_cor, "b", "left")
-            .join(near_new, "b", "left")
-            .select(
-                F.col("b").alias(id_col),
-                F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
-                .when(F.col("near_of").isNotNull(), F.lit("near"))
-                .when(F.col("nearnew_of").isNotNull(), F.lit("near_new"))
-                .otherwise(F.lit("unique")).alias("dup_tier"),
-                F.coalesce("exact_of", "near_of", "nearnew_of", F.lit(-1))
-                .alias("dup_of")))
+def _write_index(docs: DataFrame, path: str, batch_id: int, overwrite: str,
+                 n: int, num_perm: int, bands: int, text_col: str,
+                 id_col: str) -> None:
+    """Write :func:`_index_tables` of ``docs`` under ``path`` as the
+    ``_batch_id`` partition ``batch_id``. Every table is partitioned by
+    _batch_id (base build = -1): streaming ingest appends each micro-batch
+    as its OWN partition with ``"dynamic"`` overwrite, so a replayed batch
+    replaces itself (exactly-once), and the probe can exclude an in-flight
+    batch id; a base build overwrites ``"static"``-ally (whole table)."""
+    tables = _index_tables(docs, n, num_perm, bands, text_col, id_col)
+    for name in _INDEX_TABLES:
+        (tables[name].withColumn("_batch_id", F.lit(int(batch_id)))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", overwrite)
+         .partitionBy("_batch_id").parquet(os.path.join(path, name)))
 
 
 def dedup_index_write(corpus: DataFrame, path: str,
@@ -465,41 +529,15 @@ def dedup_index_write(corpus: DataFrame, path: str,
     (same pattern as ``ann.ivf_write_index``).
 
     Layout under ``path``: ``buckets`` (doc_id, band, key — the banded
-    MinHash keys), ``shingles`` (doc_id, shingle — verify side),
-    ``sizes`` (doc_id, sz), ``hashes`` (doc_id, h — exact tier), and
-    ``meta.json`` pinning (n, num_perm, bands) so a mismatched probe
-    fails fast instead of silently bucketing differently."""
-    import json
-    import os
-
-    rows_per_band = num_perm // bands
-    sh = persist_tracked(word_shingle_hashes(corpus, n, text_col, id_col))
-    sig = minhash_signatures(corpus, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh)
-    band_cols = []
-    for bnd in range(bands):
-        parts = [F.col(f"mh{bnd * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(bnd).alias("band"),
-            portable_hash64(F.concat_ws("_", *parts)).alias("key")))
-    bucketed = (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
-                .select(id_col, F.col("bk.band").alias("band"),
-                        F.col("bk.key").alias("key")))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    hashes = corpus.select(id_col, portable_hash64(F.col(text_col)).alias("h"))
-    # every table is partitioned by _batch_id (base build = -1): streaming
-    # ingest appends each micro-batch as its OWN partition with dynamic
-    # overwrite, so a replayed batch replaces itself (exactly-once), and
-    # the probe can exclude an in-flight batch id (a replay must not see
-    # its failed attempt's rows as "corpus")
-    for name, df in (("buckets", bucketed), ("shingles", sh),
-                     ("sizes", sizes), ("hashes", hashes)):
-        (df.withColumn("_batch_id", F.lit(-1))
-         .write.mode("overwrite").partitionBy("_batch_id")
-         .parquet(os.path.join(path, name)))
+    MinHash keys), ``shingles`` (doc_id, hs — per-doc shingle-hash arrays,
+    the verify side), ``hashes`` (doc_id, h — exact tier), and
+    ``meta.json`` pinning (layout, n, num_perm, bands) so a mismatched
+    probe fails fast instead of silently bucketing differently."""
+    _write_index(corpus, path, -1, "static", n, num_perm, bands, text_col,
+                 id_col)
     with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump({"n": n, "num_perm": num_perm, "bands": bands}, f)
+        json.dump({"layout": _INDEX_LAYOUT, "n": n, "num_perm": num_perm,
+                   "bands": bands}, f)
 
 
 def dedup_index_append(accepted: DataFrame, path: str, batch_id: int,
@@ -510,38 +548,9 @@ def dedup_index_append(accepted: DataFrame, path: str, batch_id: int,
     dynamic overwrite, so a Structured-Streaming replay of the same batch
     id replaces rather than duplicates (the exactly-once half the
     checkpoint cannot provide)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if (meta["n"], meta["num_perm"], meta["bands"]) != (n, num_perm, bands):
-        raise ValueError(
-            f"index at {path} was built with {meta}, appended with "
-            f"n={n}, num_perm={num_perm}, bands={bands} — rebuild or match")
-    rows_per_band = num_perm // bands
-    sh = persist_tracked(word_shingle_hashes(accepted, n, text_col, id_col))
-    sig = minhash_signatures(accepted, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh)
-    band_cols = []
-    for bnd in range(bands):
-        parts = [F.col(f"mh{bnd * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(bnd).alias("band"),
-            portable_hash64(F.concat_ws("_", *parts)).alias("key")))
-    bucketed = (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
-                .select(id_col, F.col("bk.band").alias("band"),
-                        F.col("bk.key").alias("key")))
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    hashes = accepted.select(id_col,
-                             portable_hash64(F.col(text_col)).alias("h"))
-    for name, df in (("buckets", bucketed), ("shingles", sh),
-                     ("sizes", sizes), ("hashes", hashes)):
-        (df.withColumn("_batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch_id").parquet(os.path.join(path, name)))
+    _check_meta(path, n, num_perm, bands)
+    _write_index(accepted, path, batch_id, "dynamic", n, num_perm, bands,
+                 text_col, id_col)
 
 
 def dedup_incremental_indexed(spark, path: str, new_docs: DataFrame,
@@ -554,105 +563,17 @@ def dedup_incremental_indexed(spark, path: str, new_docs: DataFrame,
     instead of re-deriving the corpus side — per-batch cost is the batch's
     own shingle pass plus bucket-pruned joins against the index tables.
 
-    Same output contract and tie rules as the DataFrame form (pytest pins
-    equality). The ``max_bucket`` cap is applied over index∪batch bucket
-    occupancy, matching the union semantics of the direct form."""
-    import json
-    import os
-
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if (meta["n"], meta["num_perm"], meta["bands"]) != (n, num_perm, bands):
-        raise ValueError(
-            f"index at {path} was built with {meta}, probed with "
-            f"n={n}, num_perm={num_perm}, bands={bands} — rebuild or match")
-
-    def _read(name):
+    Same output contract, tie rules and ``max_bucket`` semantics (cap over
+    index∪batch bucket occupancy) as the DataFrame form: both run one
+    probe. ``exclude_batch_id`` hides that ``_batch_id`` partition — a
+    replayed streaming batch must not treat its own failed attempt's rows
+    as corpus (it would classify every doc as an exact dup of itself)."""
+    _check_meta(path, n, num_perm, bands)
+    cor = {}
+    for name in _INDEX_TABLES:
         df = spark.read.parquet(os.path.join(path, name))
         if exclude_batch_id is not None:
-            # a replayed streaming batch must not treat its own failed
-            # attempt's partition as corpus (it would classify every doc
-            # as an exact dup of itself)
             df = df.where(F.col("_batch_id") != int(exclude_batch_id))
-        return df.drop("_batch_id")
-
-    cor_buckets = _read("buckets")
-    cor_shingles = _read("shingles")
-    cor_sizes = _read("sizes")
-    cor_hashes = _read("hashes")
-
-    # exact tier: batch hash vs index hashes
-    h_new = new_docs.select(F.col(id_col).alias("b"),
-                            portable_hash64(F.col(text_col)).alias("h"))
-    exact = (h_new.join(cor_hashes.select(F.col(id_col).alias("a"), "h"), "h")
-             .groupBy("b").agg(F.min("a").alias("exact_of")))
-
-    # batch-side shingles/signature/buckets (the ONLY text scanned)
-    rows_per_band = num_perm // bands
-    sh_new = persist_tracked(word_shingle_hashes(new_docs, n, text_col, id_col))
-    sig = minhash_signatures(new_docs, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh_new)
-    band_cols = []
-    for bnd in range(bands):
-        parts = [F.col(f"mh{bnd * rows_per_band + r}")
-                 for r in range(rows_per_band)]
-        band_cols.append(F.struct(
-            F.lit(bnd).alias("band"),
-            portable_hash64(F.concat_ws("_", *parts)).alias("key")))
-    new_buckets = (sig.select(id_col,
-                              F.explode(F.array(*band_cols)).alias("bk"))
-                   .select(id_col, F.col("bk.band").alias("band"),
-                           F.col("bk.key").alias("key")))
-    union_buckets = (cor_buckets.withColumn("_new", F.lit(False))
-                     .unionByName(new_buckets.withColumn("_new", F.lit(True))))
-    if max_bucket is not None:
-        union_buckets = _cap_by_key(union_buckets, ["band", "key"], max_bucket)
-    union_buckets = persist_tracked(union_buckets)
-    new_b = (union_buckets.where("_new")
-             .select(F.col(id_col).alias("b"), "band", "key"))
-    cor_b = (union_buckets.where("NOT _new")
-             .select(F.col(id_col).alias("a"), "band", "key"))
-    cand = (cor_b.join(new_b, ["band", "key"]).select("a", "b")
-            .unionByName(
-                new_b.select(F.col("b").alias("a"), "band", "key")
-                .join(new_b, ["band", "key"])
-                .where(F.col("a") < F.col("b")).select("a", "b"))
-            .distinct())
-
-    # verify: batch shingles vs (index shingles ∪ batch shingles)
-    all_sh = cor_shingles.unionByName(sh_new)
-    sizes = (cor_sizes.unionByName(
-        sh_new.groupBy(id_col).agg(F.count("*").alias("sz"))))
-    sa = all_sh.select(F.col(id_col).alias("a"), "h")
-    sb = sh_new.select(F.col(id_col).alias("b"), "h")
-    inter = (cand.join(sa, "a").join(sb, ["b", "h"])
-             .groupBy("a", "b").agg(F.count("*").alias("inter")))
-    near = (inter
-            .join(sizes.select(F.col(id_col).alias("a"),
-                               F.col("sz").alias("sza")), "a")
-            .join(sizes.select(F.col(id_col).alias("b"),
-                               F.col("sz").alias("szb")), "b")
-            .where(F.col("inter")
-                   / (F.col("sza") + F.col("szb") - F.col("inter"))
-                   >= threshold))
-    # side of partner a: corpus iff its id is in the index's sizes table
-    near_sided = near.join(
-        cor_sizes.select(F.col(id_col).alias("a"))
-        .withColumn("_cor", F.lit(True)), "a", "left")
-    near_cor = (near_sided.where(F.col("_cor").isNotNull())
-                .groupBy("b").agg(F.min("a").alias("near_of")))
-    near_new = (near_sided.where(F.col("_cor").isNull())
-                .groupBy("b").agg(F.min("a").alias("nearnew_of")))
-
-    return (new_docs.select(F.col(id_col).alias("b"))
-            .join(exact, "b", "left")
-            .join(near_cor, "b", "left")
-            .join(near_new, "b", "left")
-            .select(
-                F.col("b").alias(id_col),
-                F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
-                .when(F.col("near_of").isNotNull(), F.lit("near"))
-                .when(F.col("nearnew_of").isNotNull(), F.lit("near_new"))
-                .otherwise(F.lit("unique")).alias("dup_tier"),
-                F.coalesce("exact_of", "near_of", "nearnew_of", F.lit(-1))
-                .alias("dup_of")))
+        cor[name] = df.drop("_batch_id")
+    return _probe(cor, new_docs, n, num_perm, bands, threshold, text_col,
+                  id_col, max_bucket)

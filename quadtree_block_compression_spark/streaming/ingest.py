@@ -117,8 +117,9 @@ def make_dedup_batch_processor(index_path: str, out_path: str,
         finally:
             # per-batch release: foreachBatch runs every micro-batch on one
             # long-lived stream-execution thread, so this is the only point
-            # the thread's persist_tracked frames (sh_new / union_buckets /
-            # annotated) ever get freed on a continuous stream.
+            # the thread's persist_tracked frames (the probe's batch shingle
+            # hashes and union bucket table, the index append's shingle
+            # hashes, annotated) ever get freed on a continuous stream.
             release_caches()
 
     return process_batch

@@ -6,7 +6,7 @@ import pytest
 
 from quadtree_block_compression_spark.kernels.resample import scale, scale_batch
 from quadtree_block_compression_spark.kernels.similarity import (
-    compare_pixels_weighted, compare_pixels_exact, psnr)
+    compare_pixels_weighted, psnr)
 from quadtree_block_compression_spark.kernels.tiles import (
     padded_side, tree_height, pad_image, child_bounds, tile_children,
     morton_key, tile_path_to_archive_path, archive_path_to_tile_path)
@@ -173,13 +173,6 @@ def test_similarity_zero_relevant_pixels_is_one():
     # node at x0=100 entirely right of a 4x4 image → 0 relevant → 1.0
     s = compare_pixels_weighted(a, b, np.array([100]), np.array([100]), 4, 4)
     assert np.allclose(s, 1.0)
-
-
-def test_exact_compare():
-    a = np.zeros((1, 4, 4, 3), dtype=np.uint8)
-    b = a.copy(); b[0, 0, 0, 0] = 9
-    s = compare_pixels_exact(a, b, np.zeros(1), np.zeros(1), 8, 8)
-    assert np.allclose(s, 15 / 16)
 
 
 def _compare_int16_reference(a, b, x0, y0, width, height):

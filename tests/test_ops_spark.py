@@ -663,12 +663,16 @@ def test_dedup_incremental_tiers(spark):
 
 def test_dedup_incremental_indexed_equals_direct(spark, tmp_path):
     """Index-at-rest probing (corpus scanned ONCE at index build) must
-    produce the IDENTICAL classification as the direct DataFrame form,
-    and a parameter-mismatched probe must fail fast."""
+    produce the IDENTICAL classification as the direct DataFrame form —
+    also when the index was grown by an append instead of one build — and
+    a parameter- or layout-mismatched probe must fail fast."""
+    import json
+
     import pytest
 
     from quadtree_block_compression_spark.operators.dedup_text import (
-        dedup_incremental, dedup_index_write, dedup_incremental_indexed)
+        dedup_incremental, dedup_index_append, dedup_index_write,
+        dedup_incremental_indexed)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     corpus = docs.where("doc_id < 30").select("doc_id", "text")
@@ -689,6 +693,32 @@ def test_dedup_incremental_indexed_equals_direct(spark, tmp_path):
     assert sum(1 for t, _ in indexed.values() if t == "exact") == 3
     with pytest.raises(ValueError, match="rebuild or match"):
         dedup_incremental_indexed(spark, idx, batch, n=4)
+
+    # append must equal rebuild: half the corpus built, half appended
+    grown = str(tmp_path / "grown_index")
+    dedup_index_write(corpus.where("doc_id < 15"), grown,
+                      n=3, num_perm=8, bands=4)
+    dedup_index_append(corpus.where("doc_id >= 15"), grown, batch_id=0,
+                       n=3, num_perm=8, bands=4)
+    assert sorted(os.listdir(grown)) == ["buckets", "hashes", "meta.json",
+                                         "shingles"]
+    appended = {r.doc_id: (r.dup_tier, r.dup_of) for r in
+                dedup_incremental_indexed(spark, grown, batch, n=3,
+                                          num_perm=8, bands=4, threshold=0.5,
+                                          max_bucket=100).collect()}
+    assert appended == direct
+
+    # an index written before the layout was versioned (no "layout" key in
+    # meta.json) must be rebuilt, not probed
+    meta_path = os.path.join(idx, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["layout"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild or match"):
+        dedup_incremental_indexed(spark, idx, batch, n=3, num_perm=8,
+                                  bands=4)
 
 
 def test_quality_char_class_counts_equal_replace_form(spark):

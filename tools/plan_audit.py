@@ -387,13 +387,16 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           "corpus-by-new, never joined to itself. Mechanical pins: the "
           "sided filters exist, the shared bucket/shingle caches are "
           "reused across branches, and no join degenerates to a "
-          "cartesian.",
+          "cartesian. The Jaccard verify is the shared per-doc hash-array "
+          "`array_intersect` (the same verify `minhash_lsh_pairs` runs).",
           p, {
               "sided branches present (_new / NOT _new filters)":
                   "NOT _new" in p.replace("#", " ").replace("(", " ")
                   or re.search(r"NOT _new#\d+", p) is not None,
               "shared bucket+shingle caches reused (>=4 cached scans)":
                   p.count("InMemoryTableScan") >= 4,
+              "verify is the hash-array array_intersect":
+                  "array_intersect" in p,
               "no CartesianProduct": "CartesianProduct" not in p,
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
           })
