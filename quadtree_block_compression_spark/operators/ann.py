@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, as the scale plan demands:
+Four tiers sharing one rank tail, LSH key builder, assign UDF and probe:
 
 * **brute force** — exact cosine top-k via a broadcast cross join; the dot
   product is ``F.aggregate(F.zip_with(...))`` (JVM higher-order functions,
@@ -10,16 +10,27 @@ Two tiers, as the scale plan demands:
   bucket equi-join, exact cosine verify + window top-k on candidates. At
   100 TB the bucket join replaces the quadratic cross join; recall is the
   standard hyperplane-LSH trade, exposed via num_planes.
-
-Also: embedding-cosine near-duplicate pairs (the fifth dedup tier).
+* **IVF** — k-means inverted lists; a query probes its ``nprobe`` nearest.
+  The index is built in memory (:func:`cosine_topk_ivf`) or kept at rest,
+  partitioned by cluster (:func:`ivf_write_index`); both run one probe.
+* **embedding near-dup** — cosine ≥ threshold pairs over the LSH bucket
+  table (the fifth dedup tier).
 """
 
 from __future__ import annotations
 
+import json
+import os
+from functools import reduce
+
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.pandas.functions import pandas_udf
 
+from ..functions.bucketing import cap_by_key as _cap_by_key
 from ..functions.cache import persist_tracked
+from ..functions.parallelism import spread
 
 
 def auto_num_planes(n: int, target_bucket: int = 32, floor: int = 8) -> int:
@@ -48,9 +59,6 @@ def auto_n_clusters(n: int, floor: int = 4) -> int:
     import math
 
     return max(floor, math.isqrt(max(n, 1)))
-
-
-from ..functions.bucketing import cap_by_key as _cap_by_key
 
 
 def _norm(col):
@@ -84,20 +92,21 @@ def _unit(col):
                       lambda x, nv: x / nv)
 
 
-def _unit_select(df: DataFrame, vec_expr, dim: int, out: str = "vn",
-                 keep: list[str] | None = None,
-                 extra_from_v=None) -> DataFrame:
-    """``df`` + a unit-normalized copy of ``vec_expr`` as ``out`` (plus
-    optional extra columns computed from the same hoisted cast vector via
-    ``extra_from_v``: callable(v_col) -> list[Column]). The cast vector is
-    hoisted to a column (multi-referenced and non-cheap → survives
-    CollapseProject) so the sign projections and the unit copy share ONE
-    cast instead of re-casting per consumer."""
-    keep = keep if keep is not None else []
-    v = F.col("__v")
-    base = df.select(*keep, vec_expr.cast("array<double>").alias("__v"))
-    extras = list(extra_from_v(v)) if extra_from_v is not None else []
-    return base.select(*keep, _unit(v).alias(out), *extras)
+def _scored(pairs: DataFrame, id_col: str) -> DataFrame:
+    """(id, q_id, cos) of joined (id, vn, q_id, qn) rows, self-matches
+    dropped, cos rounded to 6 dp for cross-engine float stability."""
+    return (pairs.where(F.col(id_col) != F.col("q_id"))
+            .select(id_col, "q_id",
+                    F.round(_dot(F.col("vn"), F.col("qn")), 6).alias("cos")))
+
+
+def _topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The rank tail every tier shares: per query, candidates ordered by
+    (cos desc, id) and the first ``k`` kept as (q_id, id, cos, rank)."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
+    return (cand.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("q_id", F.col(id_col), "cos", "rank"))
 
 
 def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -112,19 +121,11 @@ def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
     # each pair costs one fold. spread: the embeddings table is a narrow
     # single-digit-MB scan (3 splits at sf1) and the quadratic verify would
     # otherwise run on 3 of 32 cores (r6 finding, CLAUDE spread invariant)
-    from ..functions.parallelism import spread
     e = spread(emb).select(F.col(id_col),
                            _unit(F.col(vec_col).cast("array<double>")).alias("vn"))
     q = queries.select(F.col(q_id_col).alias("q_id"),
                        _unit(F.col(q_vec_col).cast("array<double>")).alias("qn"))
-    cand = (e.crossJoin(broadcast(q))
-            .where(F.col(id_col) != F.col("q_id"))
-            .withColumn("cos", F.round(_dot(F.col("vn"), F.col("qn")), 6)))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
-    return (cand.select("q_id", F.col(id_col), "cos")
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", F.col(id_col), "cos", "rank"))
+    return _topk(_scored(e.crossJoin(broadcast(q)), id_col), k, id_col)
 
 
 def hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
@@ -143,21 +144,51 @@ def hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _sign_cols_from(v, dim: int, num_planes: int):
-    """One 0/1 sign column per plane over an already-hoisted array<double>
-    column ``v`` (call sites that also unit-normalize share the one cast
-    vector). JVM-only: the ±1 matrices are tiny and embedded as array
-    literals, reproducible from the same constants in the SQL oracle. Kept
-    as zip_with/aggregate folds — the unrolled multiply-add chain measured
-    SLOWER on Spark 4.1 (see :func:`_norm`)."""
-    planes = hyperplane_signs(num_planes, dim)
-    cols = []
-    for p, signs in enumerate(planes):
-        arr = F.array(*[F.lit(s) for s in signs])
-        proj = F.aggregate(F.zip_with(v, arr, lambda x, s: x * s),
-                           F.lit(0.0), lambda acc, x: acc + x)
-        cols.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)).alias(f"b{p}"))
-    return cols
+def _lsh_keys(df: DataFrame, vec_expr, dim: int, num_planes: int,
+              keep: list[str], out: str) -> DataFrame:
+    """``df``'s ``keep`` columns + the unit vector of ``vec_expr`` as ``out``
+    + the two half-signature bucket keys ``k1`` (planes ``[0, half)``) and
+    ``k2`` (planes ``[half, num_planes)``), each the plane sign bits folded
+    high bit first.
+
+    Bucket bits come from the RAW vector (sign is scale-invariant, and the
+    SQL oracle replicates the raw-vector projection); the verify side
+    carries the unit vector so each candidate costs one dot. The cast vector
+    is hoisted to a column (multi-referenced and non-cheap → survives
+    CollapseProject) so the sign projections and the unit copy share ONE
+    cast instead of re-casting per consumer. JVM-only: the ±1 matrices are
+    tiny and embedded as array literals, reproducible from the same
+    constants in the SQL oracle. Each plane's projection is the
+    :func:`_dot` fold (an unrolled multiply-add chain measured SLOWER on
+    Spark 4.1)."""
+    v = F.col("__v")
+    bits = [F.when(_dot(v, F.array(*[F.lit(s) for s in signs])) >= 0, F.lit(1))
+            .otherwise(F.lit(0)) for signs in hyperplane_signs(num_planes, dim)]
+
+    def key(lo, hi):
+        return reduce(lambda acc, b: acc * 2 + b, bits[lo:hi], F.lit(0))
+
+    half = num_planes // 2
+    return (df.select(*keep, vec_expr.cast("array<double>").alias("__v"))
+            .select(*keep, _unit(v).alias(out), key(0, half).alias("k1"),
+                    key(half, num_planes).alias("k2")))
+
+
+def _lsh_table(emb: DataFrame, dim: int, num_planes: int | None,
+               target_bucket: int, vec_col: str,
+               id_col: str) -> tuple[DataFrame, int]:
+    """The persisted data-side bucket table (id, vn, k1, k2) and the plane
+    count it was keyed with. ``num_planes=None`` derives the count from the
+    table size (:func:`auto_num_planes`; the count is a parquet footer read
+    — metadata-cheap). Spread first — the narrow embeddings scan arrives as
+    ~3 splits at sf1 and the num_planes·dim per-row sign folds would
+    otherwise run on 3 of 32 cores (r6 finding, CLAUDE spread invariant).
+    Persisted: every tier's join (both sides of a self-join) re-reads it."""
+    if num_planes is None:
+        num_planes = auto_num_planes(emb.count(), target_bucket=target_bucket)
+    keyed = _lsh_keys(spread(emb), F.col(vec_col), dim, num_planes,
+                      keep=[id_col], out="vn")
+    return persist_tracked(keyed), num_planes
 
 
 def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
@@ -169,74 +200,60 @@ def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 6
     """Approximate top-k: hyperplane-LSH bucket join, exact re-rank.
 
     Buckets on two half-signatures; with ``multiprobe`` each query also
-    probes every Hamming-1 neighbor of each half-key (half+1 probes per
-    tier) — the standard cheap recall lift: the probe fan-out multiplies the
-    *query* side (tiny, broadcast) while the data side is scanned once per
-    tier, so verify cost grows ~(half+1)× per tier, not with n.
-    ``max_bucket`` drops degenerate data-side buckets before the join (the
-    scale guard; mirrored in the SQL oracle). ``num_planes=None`` derives
-    the plane count from the table size (:func:`auto_num_planes`) so normal
-    bucket occupancy stays ~``target_bucket`` and the cap only ever bites
-    truly degenerate keys — with a FIXED plane count the cap starts dropping
-    ordinary buckets once n outgrows cap·2^(planes/2), gutting recall.
+    probes every Hamming-1 neighbor of each half-key (one probe per key bit
+    plus the key itself) — the standard cheap recall lift: the probe fan-out
+    multiplies the *query* side (tiny, broadcast) while the data side is
+    scanned once per tier, so verify cost grows ~(bits+1)× per tier, not
+    with n. ``max_bucket`` drops degenerate data-side buckets before the
+    join (the scale guard; mirrored in the SQL oracle). ``num_planes=None``
+    derives the plane count from the table size (:func:`auto_num_planes`)
+    so normal bucket occupancy stays ~``target_bucket`` and the cap only
+    ever bites truly degenerate keys — with a FIXED plane count the cap
+    starts dropping ordinary buckets once n outgrows cap·2^(planes/2),
+    gutting recall.
     """
-    if num_planes is None:
-        num_planes = auto_num_planes(emb.count(), target_bucket=target_bucket)
-    # bucket bits come from the RAW vector (sign is scale-invariant, and the
-    # SQL oracle replicates the raw-vector projection); the verify side
-    # carries the unit vector so each candidate costs one dot. Signs and
-    # unit copy share ONE hoisted cast vector; spread first — the narrow
-    # embeddings scan is a handful of splits and the per-row sign folds
-    # would otherwise serialize on those few cores (r6)
-    from ..functions.parallelism import spread
-    e = _unit_select(spread(emb), F.col(vec_col), dim, out="vn", keep=[id_col],
-                     extra_from_v=lambda v: _sign_cols_from(v, dim, num_planes))
-    q = _unit_select(queries.select(F.col(q_id_col).alias("q_id"),
-                                    F.col(q_vec_col).alias("qv")),
-                     F.col("qv"), dim, out="qn", keep=["q_id"],
-                     extra_from_v=lambda v: _sign_cols_from(v, dim, num_planes))
-
-    half = num_planes // 2
-
-    def bucket_expr(lo, hi):
-        acc = F.lit(0)
-        for i in range(lo, hi):
-            acc = acc * 2 + F.col(f"b{i}")
-        return acc
-
-    eb = persist_tracked(e.select(id_col, "vn",
-                                  bucket_expr(0, half).alias("k1"),
-                                  bucket_expr(half, num_planes).alias("k2")))
-    qb = q.select("q_id", "qn",
-                  bucket_expr(0, half).alias("k1"),
-                  bucket_expr(half, num_planes).alias("k2"))
-
-    def probes(col):
-        if not multiprobe:
-            return F.array(col)
-        return F.array(col, *[col.bitwiseXOR(F.lit(1 << i)) for i in range(half)])
+    eb, num_planes = _lsh_table(emb, dim, num_planes, target_bucket,
+                                vec_col, id_col)
+    qb = _lsh_keys(queries.select(F.col(q_id_col).alias("q_id"),
+                                  F.col(q_vec_col).alias("qv")),
+                   F.col("qv"), dim, num_planes, keep=["q_id"], out="qn")
 
     # cos is computed IN each tier's join projection so the cross-tier
     # dedup exchanges (id, q_id, cos) scalars, never the two dim-wide
     # vectors (r6, guide §2.3 — shuffle keys, not payloads; cos is a
     # deterministic function of the pair, so dedup-then-cos and
-    # cos-then-dedup are identical)
+    # cos-then-dedup are identical). Each key flips over its own width: k2
+    # has one more bit than k1 when num_planes is odd.
+    half = num_planes // 2
     cand = None
-    for key in ("k1", "k2"):
+    for key, bits in (("k1", half), ("k2", num_planes - half)):
         side = eb.select(id_col, "vn", F.col(key).alias("kk"))
         if max_bucket is not None:
             side = _cap_by_key(side, ["kk"], max_bucket)
-        qk = (qb.select("q_id", "qn", F.explode(probes(F.col(key))).alias("kk")))
-        c = (side.join(broadcast(qk), "kk")
-             .where(F.col(id_col) != F.col("q_id"))
-             .select(id_col, "q_id",
-                     F.round(_dot(F.col("vn"), F.col("qn")), 6).alias("cos")))
+        flips = range(bits) if multiprobe else ()
+        probes = F.array(F.col(key), *[F.col(key).bitwiseXOR(F.lit(1 << i))
+                                       for i in flips])
+        qk = qb.select("q_id", "qn", F.explode(probes).alias("kk"))
+        c = _scored(side.join(broadcast(qk), "kk"), id_col)
         cand = c if cand is None else cand.unionByName(c)
-    cand = cand.dropDuplicates([id_col, "q_id"])
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", F.col(id_col), "cos", "rank"))
+    return _topk(cand.dropDuplicates([id_col, "q_id"]), k, id_col)
+
+
+def _unit_rows(M):
+    """Rows of the numpy matrix ``M`` scaled to unit L2 norm."""
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _assign_udf(cen):
+    """Arrow UDF: array<double> vector → index of its nearest centroid (max
+    cosine) among the unit rows of ``cen``."""
+    @pandas_udf("int")
+    def assign(v):  # type: ignore[misc]
+        import pandas as pd
+        M = np.stack(v.to_numpy())
+        return pd.Series(np.argmax(_unit_rows(M) @ cen.T, axis=1).astype("int32"))
+
+    return assign
 
 
 def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
@@ -245,16 +262,15 @@ def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
 
     Centroid math happens driver-side (k×dim is tiny); the expensive
     assignment step is one Arrow UDF pass over the table per iteration.
-    Returns ``(assignments_df(id, cluster), centroids ndarray (k, dim))``.
+    Returns ``(assignments_df(id, v, cluster), centroids ndarray (k, dim))``;
+    an empty table has no centroids (shape ``(0, 0)``).
     """
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
     # deterministic init: the k lowest-id vectors
     seed_rows = (emb.orderBy(id_col).limit(k)
                  .select(vec_col).collect())
-    centroids = np.array([list(r[0]) for r in seed_rows], dtype=np.float64)
-    centroids /= np.maximum(np.linalg.norm(centroids, axis=1, keepdims=True), 1e-12)
+    centroids = (_unit_rows(np.array([list(r[0]) for r in seed_rows],
+                                     dtype=np.float64))
+                 if seed_rows else np.zeros((0, 0)))
 
     # spread: the narrow embeddings scan is a handful of splits; every
     # Lloyd iteration's assign UDF + centroid aggregate would otherwise run
@@ -263,49 +279,53 @@ def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
     # argmax margins dwarf that (oracle-checked at the gate SFs).
     # persist_tracked: every iteration (and the final assign) re-reads this
     # projection — uncached, each pass would repeat the scan + repartition.
-    from ..functions.cache import persist_tracked
-    from ..functions.parallelism import spread
     e = persist_tracked(
         spread(emb).select(F.col(id_col),
                            F.col(vec_col).cast("array<double>").alias("v")))
 
     for _ in range(iters):
-        cen = centroids  # capture by value for the closure
-
-        @pandas_udf("int")
-        def assign(v):  # type: ignore[misc]
-            import pandas as pd
-            M = np.stack(v.to_numpy())
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.argmax(Mn @ cen.T, axis=1).astype("int32"))
-
-        assigned = e.withColumn("cluster", assign("v"))
+        assigned = e.withColumn("cluster", _assign_udf(centroids)("v"))
         # new centroids: per-cluster per-dim mean (posexplode + two-level agg)
         sums = (assigned.select("cluster", F.posexplode("v").alias("pos", "x"))
                 .groupBy("cluster", "pos").agg(F.sum("x").alias("s"), F.count("*").alias("n"))
                 .collect())
         new = centroids.copy()
-        by_cluster: dict[int, dict[int, float]] = {}
         for r in sums:
-            by_cluster.setdefault(r.cluster, {})[r.pos] = r.s / r.n
-        for c, dims in by_cluster.items():
-            for p, val in dims.items():
-                new[c, p] = val
-        norms = np.maximum(np.linalg.norm(new, axis=1, keepdims=True), 1e-12)
-        centroids = new / norms
+            new[r.cluster, r.pos] = r.s / r.n
+        centroids = _unit_rows(new)
 
-    cen_final = centroids
+    return e.withColumn("cluster", _assign_udf(centroids)("v")), centroids
 
-    from pyspark.sql.pandas.functions import pandas_udf as _pudf
 
-    @_pudf("int")
-    def assign_final(v):  # type: ignore[misc]
+def _ivf_queries(queries: DataFrame, cen, nprobe: int, q_id_col: str,
+                 q_vec_col: str) -> DataFrame:
+    """(q_id, qv, cluster, qn) per query and each of the ``nprobe`` clusters
+    whose centroids are nearest it; empty when there are no centroids."""
+    nprobe = min(nprobe, len(cen))
+    if not nprobe:
+        queries = queries.limit(0)
+
+    @pandas_udf("array<int>")
+    def probes(qv):  # type: ignore[misc]
         import pandas as pd
-        M = np.stack(v.to_numpy())
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(Mn @ cen_final.T, axis=1).astype("int32"))
+        M = np.stack(qv.to_numpy())
+        order = np.argsort(-(_unit_rows(M) @ cen.T), axis=1)[:, :nprobe]
+        return pd.Series([row.astype("int32").tolist() for row in order])
 
-    return e.withColumn("cluster", assign_final("v")), centroids
+    return (queries.select(F.col(q_id_col).alias("q_id"),
+                           F.col(q_vec_col).cast("array<double>").alias("qv"))
+            .withColumn("cluster", F.explode(probes("qv")))
+            .withColumn("qn", _unit(F.col("qv"))))
+
+
+def _ivf_topk(lists: DataFrame, q: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Exact cosine + top-k of the probed queries ``q`` (:func:`_ivf_queries`)
+    over the inverted lists ``lists`` (id, v, cluster)."""
+    # cos computed before the (id, q_id) dedup so the exchange carries
+    # scalars, not vectors (r6; cos is deterministic per pair)
+    cand = _scored(lists.withColumn("vn", _unit(F.col("v")))
+                   .join(broadcast(q), "cluster"), id_col)
+    return _topk(cand.dropDuplicates([id_col, "q_id"]), k, id_col)
 
 
 def cosine_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -314,47 +334,38 @@ def cosine_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 5,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
     """IVF approximate top-k: probe the ``nprobe`` nearest coarse clusters,
-    exact cosine + window top-k over just those inverted lists. At 10^12
+    exact cosine + window top-k over just those inverted lists — the
+    :func:`ivf_probe_index` probe over an index built in memory. At 10^12
     scale the index side is partitioned by ``cluster`` so a probe reads only
     its lists (partition pruning on the cluster column).
 
     ``n_clusters=None`` derives the list count from the table size
     (:func:`auto_n_clusters`, ~√n) so per-probe work stays ~nprobe·√n as the
     table grows instead of nprobe·n/constant."""
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
     if n_clusters is None:
         n_clusters = auto_n_clusters(emb.count())
-    nprobe = min(nprobe, n_clusters)
     assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters,
                                     vec_col=vec_col, id_col=id_col)
-    cen = centroids
+    q = _ivf_queries(queries, centroids, nprobe, q_id_col, q_vec_col)
+    return _ivf_topk(assigned, q, k, id_col)
 
-    @pandas_udf("array<int>")
-    def probes(qv):  # type: ignore[misc]
-        import pandas as pd
-        M = np.stack(qv.to_numpy())
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(Mn @ cen.T), axis=1)[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
 
-    q = (queries.select(F.col(q_id_col).alias("q_id"),
-                        F.col(q_vec_col).cast("array<double>").alias("qv"))
-         .withColumn("cluster", F.explode(probes("qv")))
-         .withColumn("qn", _unit(F.col("qv"))))
-    e = assigned.withColumn("vn", _unit(F.col("v")))
-    # cos computed before the (id, q_id) dedup so the exchange carries
-    # scalars, not vectors (r6; cos is deterministic per pair)
-    cand = (e.join(broadcast(q), "cluster")
-            .where(F.col(id_col) != F.col("q_id"))
-            .select(id_col, "q_id",
-                    F.round(_dot(F.col("vn"), F.col("qn")), 6).alias("cos")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
-    return (cand.dropDuplicates([id_col, "q_id"])
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", F.col(id_col), "cos", "rank"))
+def _read_centroids(path: str):
+    with open(os.path.join(path, "_centroids.json")) as f:
+        return np.array(json.load(f)["centroids"], dtype=np.float64)
+
+
+def _write_lists(assigned: DataFrame, path: str, batch_id: int,
+                 overwrite: str) -> None:
+    """Write the assignment table (id, v, cluster) as the ``_batch_id``
+    partition ``batch_id``, each inverted list its own ``cluster``
+    partition directory. A base build overwrites ``"static"``-ally (whole
+    index); an append ``"dynamic"``-ally (its own partitions only)."""
+    (assigned.withColumn("_batch_id", F.lit(int(batch_id)))
+     .repartition("cluster")
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", overwrite)
+     .partitionBy("cluster", "_batch_id").parquet(path))
 
 
 def ivf_write_index(emb: DataFrame, path: str, n_clusters: int | None = None,
@@ -364,24 +375,20 @@ def ivf_write_index(emb: DataFrame, path: str, n_clusters: int | None = None,
     ``partitionBy(cluster)`` (each inverted list is its own partition
     directory, so a probe's scan prunes to exactly its lists via partition
     pruning — no row even considered outside the probed clusters) plus the
-    tiny centroid matrix as JSON next to it. Returns the centroids array."""
-    import json
-    import os
-
+    tiny centroid matrix as JSON next to it. Returns the centroids array.
+    Raises ``ValueError`` on an empty table (an index needs a centroid)."""
     if n_clusters is None:
         n_clusters = auto_n_clusters(emb.count())
     assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters,
                                     vec_col=vec_col, id_col=id_col)
+    if not len(centroids):
+        raise ValueError(f"cannot build an IVF index at {path} from 0 vectors")
     # _batch_id partitioning (base build = batch 0) makes APPENDS
     # replay-idempotent: a retried ivf_append_index batch dynamic-overwrites
     # its own (cluster, _batch_id) partitions instead of duplicating rows.
     # cluster stays the leading partition column, so probe-side pruning
     # (PartitionFilters on cluster — plan-audited) is unaffected.
-    import pyspark.sql.functions as _F
-    (assigned.withColumn("_batch_id", _F.lit(0))
-     .repartition("cluster")
-     .write.mode("overwrite").partitionBy("cluster", "_batch_id")
-     .parquet(path))
+    _write_lists(assigned, path, 0, "static")
     with open(os.path.join(path, "_centroids.json"), "w") as f:
         json.dump({"n_clusters": n_clusters, "iters": iters,
                    "centroids": centroids.tolist()}, f)
@@ -404,31 +411,10 @@ def ivf_append_index(emb_new: DataFrame, path: str, batch_id: int,
     never touches existing partitions, so probes remain consistent
     mid-append (parquet readers never see partial files thanks to the
     per-partition commit)."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        meta = json.load(f)
-    cen = np.array(meta["centroids"], dtype=np.float64)
-
-    @pandas_udf("int")
-    def assign(v):  # type: ignore[misc]
-        import pandas as pd
-        M = np.stack(v.to_numpy())
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(Mn @ cen.T, axis=1).astype("int32"))
-
-    (emb_new.select(F.col(id_col),
-                    F.col(vec_col).cast("array<double>").alias("v"))
-     .withColumn("cluster", assign("v"))
-     .withColumn("_batch_id", F.lit(int(batch_id)))
-     .repartition("cluster")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("cluster", "_batch_id").parquet(path))
+    assign = _assign_udf(_read_centroids(path))
+    e = emb_new.select(F.col(id_col),
+                       F.col(vec_col).cast("array<double>").alias("v"))
+    _write_lists(e.withColumn("cluster", assign("v")), path, batch_id, "dynamic")
 
 
 def ivf_probe_index(spark, path: str, queries: DataFrame, k: int = 5,
@@ -438,42 +424,11 @@ def ivf_probe_index(spark, path: str, queries: DataFrame, k: int = 5,
     tiny), push an ``isin(probed clusters)`` predicate into the partitioned
     scan (PartitionFilters — verified in tools/plan_audit.py), exact cosine
     + window top-k on just those lists."""
-    import json
-    import os
-
-    import numpy as np
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        meta = json.load(f)
-    cen = np.array(meta["centroids"], dtype=np.float64)
-    nprobe = min(nprobe, len(cen))
-
-    @pandas_udf("array<int>")
-    def probes(qv):  # type: ignore[misc]
-        import pandas as pd
-        M = np.stack(qv.to_numpy())
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(Mn @ cen.T), axis=1)[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    q = (queries.select(F.col(q_id_col).alias("q_id"),
-                        F.col(q_vec_col).cast("array<double>").alias("qv"))
-         .withColumn("cluster", F.explode(probes("qv"))))
-    q = q.withColumn("qn", _unit(F.col("qv")))
+    q = _ivf_queries(queries, _read_centroids(path), nprobe, q_id_col, q_vec_col)
     probed = [int(r.cluster) for r in q.select("cluster").distinct().collect()]
-    index = (spark.read.parquet(path)
-             .where(F.col("cluster").isin(probed))  # partition pruning
-             .withColumn("vn", _unit(F.col("v"))))
-    cand = (index.join(broadcast(q), "cluster")
-            .where(F.col(id_col) != F.col("q_id"))
-            .select(id_col, "q_id",
-                    F.round(_dot(F.col("vn"), F.col("qn")), 6).alias("cos")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
-    return (cand.dropDuplicates([id_col, "q_id"])
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", F.col(id_col), "cos", "rank"))
+    lists = (spark.read.parquet(path)
+             .where(F.col("cluster").isin(probed)))  # partition pruning
+    return _ivf_topk(lists, q, k, id_col)
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.98, dim: int = 64,
@@ -496,27 +451,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.98, dim: int =
       self-join — the shared ``cap_by_key`` aggregate + key-list join, like
       the text dedup tiers.
     """
-    if num_planes is None:
-        n = emb.count()  # parquet footer count — metadata-cheap
-        num_planes = auto_num_planes(n, target_bucket=target_bucket)
-    # one hoisted cast vector feeds the signs + norm + unit copy; spread
-    # first — the narrow embeddings scan arrives as ~3 splits at sf1 and
-    # the num_planes·dim per-row sign folds would otherwise run on 3 of 32
-    # cores (r6 finding, CLAUDE spread invariant)
-    from ..functions.parallelism import spread
-    e = _unit_select(spread(emb), F.col(vec_col), dim, out="vn", keep=[id_col],
-                     extra_from_v=lambda v: _sign_cols_from(v, dim, num_planes))
-    half = num_planes // 2
-
-    def bucket(lo, hi):
-        acc = F.lit(0)
-        for i in range(lo, hi):
-            acc = acc * 2 + F.col(f"b{i}")
-        return acc
-
-    # persisted: the bucket table feeds both sides of each banded self-join
-    eb = persist_tracked(e.select(id_col, "vn", bucket(0, half).alias("k1"),
-                                  bucket(half, num_planes).alias("k2")))
+    eb, _ = _lsh_table(emb, dim, num_planes, target_bucket, vec_col, id_col)
     # cos is computed IN each tier's join projection and the ≥threshold
     # filter applied BEFORE the cross-tier dedup: the dedup exchange then
     # carries only surviving (a, b, cos) scalar rows instead of every

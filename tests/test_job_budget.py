@@ -3,7 +3,9 @@
 ``knn_points`` and ``knn_corpus`` are bound by per-job latency rather than
 data: at small scale every Spark job is scheduling plus a driver round trip,
 so an extra action in the ring loop shows up as a job count long before it
-is visible through wall-time noise. Each query runs at sf0.01 under its own
+is visible through wall-time noise. The ANN queries share one core (rank
+tail, LSH key builder, IVF probe); their budgets keep it from adding an
+action to any of them. Each query runs at sf0.01 under its own
 job group, and its job count must stay within the committed budget below.
 The same holds for a fresh run of each staged pipeline and for one image
 ingest batch that records lineage: a stage's bookkeeping (row counts,
@@ -28,7 +30,8 @@ import __spark_entry__ as entrymod
 from quadtree_block_compression_spark.functions.cache import release_caches
 
 # jobs per query at sf0.01, as measured when the budget was set
-JOB_BUDGET = {"knn_points": 22, "knn_corpus": 30}
+JOB_BUDGET = {"knn_points": 22, "knn_corpus": 30, "ann_topk": 5,
+              "ann_lsh_topk": 17, "ann_ivf_topk": 16, "embedding_near_dup": 24}
 # jobs per fresh pipeline run / ingest batch at test scale, as measured
 PIPELINE_JOB_BUDGET = {"quadtree_pipeline": 15, "corpus_pipeline": 22,
                        "ingest_batch": 4, "tiling_pass": 2}

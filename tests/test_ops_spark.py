@@ -334,6 +334,30 @@ def test_ivf_auto_clusters_recall_two_sizes(spark):
         assert recall >= 0.6, (n, recall)
 
 
+def test_ann_tiers_on_empty_embeddings(spark, tmp_path):
+    """An empty embeddings table is an input every tier admits: the top-k
+    tiers return 0 rows of (q_id, vec_id, cos, rank), near-dup returns 0
+    pairs, and an IVF index over 0 vectors is refused with a ValueError
+    (it would have no centroid to probe)."""
+    from quadtree_block_compression_spark.operators.ann import (
+        cosine_topk_bruteforce, cosine_topk_ivf, cosine_topk_lsh,
+        embedding_near_dup_pairs, ivf_write_index)
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    q = spark.createDataFrame([(0, [1.0] * 8)], "q_id long, q_vec array<float>")
+    for got in (cosine_topk_bruteforce(emb, q, k=3),
+                cosine_topk_lsh(emb, q, k=3, dim=8, num_planes=None),
+                cosine_topk_ivf(emb, q, k=3, n_clusters=None)):
+        assert got.columns == ["q_id", "vec_id", "cos", "rank"]
+        assert got.collect() == []
+    pairs = embedding_near_dup_pairs(emb, dim=8)
+    assert pairs.columns == ["vec_a", "vec_b", "cos"]
+    assert pairs.collect() == []
+    path = str(tmp_path / "ivf_index")
+    with pytest.raises(ValueError, match="0 vectors"):
+        ivf_write_index(emb, path)
+    assert not os.path.exists(os.path.join(path, "_centroids.json"))
+
+
 # ----------------------------------------------------------------- archives -
 
 
