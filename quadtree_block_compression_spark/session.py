@@ -10,6 +10,11 @@ with real Spark knobs. Defaults are tuned for the scale story:
 * shuffle partitions sized to cores locally; on a real cluster this is
   overridden by ``spark.sql.adaptive.coalescePartitions`` + a larger initial
   count.
+* Python workers talk to the JVM over Unix domain sockets, not loopback TCP:
+  the TCP socket carries no ``TCP_NODELAY``, so Linux's delayed ACK stalls
+  each task ~40 ms while the worker waits for its Arrow stream. The socket
+  file lives under ``java.io.tmpdir``, which must stay short (the AF_UNIX
+  path limit is 108 bytes).
 """
 
 from __future__ import annotations
@@ -72,6 +77,8 @@ def build_session(app: str = "quadtree-engine", cores: int | None = None,
          # _pydaemon). The package root on the workers' path lets the daemon
          # module import from any working directory.
          .config("spark.python.daemon.module", "quadtree_block_compression_spark._pydaemon")
+         # worker transport: see the module docstring
+         .config("spark.python.unix.domain.socket.enabled", "true")
          .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
     for k, v in (extra or {}).items():
         b = b.config(k, v)

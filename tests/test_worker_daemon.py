@@ -1,7 +1,10 @@
-"""The engine's Python worker daemon (``_pydaemon``): workers import pyspark
-from its installed directory, with no zip importer left for the per-task
-``importlib.invalidate_caches()`` to re-read; the path rewrite leaves the
-path alone whenever the directory copy is missing or differs."""
+"""The engine's Python worker transport and daemon (``_pydaemon``): workers
+talk to the JVM over a Unix domain socket (loopback TCP stalls each task on
+the delayed ACK); they fork from a daemon whose preloaded modules sit in a
+frozen heap, so the per-task ``gc.collect()`` never walks them; and they
+import pyspark from its installed directory, with no zip importer left for
+the per-task ``importlib.invalidate_caches()`` to re-read. The path rewrite
+leaves the path alone whenever the directory copy is missing or differs."""
 
 import sys
 import zipfile
@@ -30,6 +33,23 @@ def test_workers_import_pyspark_from_a_directory(spark):
         assert zips == []
         assert from_file  # not a member path inside an archive
         assert version == pyspark.__version__
+
+
+def test_workers_run_on_unix_sockets_from_a_frozen_heap(spark):
+    def report(_):
+        import gc
+        import os
+        yield (os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED"), gc.get_freeze_count())
+
+    reports = spark.sparkContext.parallelize(range(4), 4).mapPartitions(report).collect()
+    assert len(reports) == 4
+    for unix_domain, frozen in reports:
+        assert unix_domain == "True"
+        assert frozen > 0
+
+
+def test_session_enables_the_unix_socket_transport(spark):
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
 
 
 @pytest.fixture
