@@ -63,50 +63,37 @@ def encode_png(img: np.ndarray) -> bytes:
 
 
 def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
-    """Undo PNG scanline filters 0-4. raw: (h, 1+stride) uint8.
-
-    Works on runs of rows that share a filter byte. None rows are copied;
-    Sub rows are a per-channel uint8 cumsum along the row (stride ``bpp``);
-    a run of Up rows is one uint8 cumsum down the rows from the row above.
-    Only Average and Paeth rows keep the left-to-right scalar scan."""
-    filters, out = raw[:, 0], raw[:, 1:].copy()
-    if not filters.any():  # filter 0 throughout: every PNG the engine writes
-        return out
-    if (filters > 4).any():
-        raise ValueError(f"bad PNG filter {filters[filters > 4][0]}")
-    starts = np.flatnonzero(np.diff(filters.astype(np.int16), prepend=-1))
-    for y, z in zip(starts.tolist(), [*starts[1:].tolist(), h]):
-        f = int(filters[y])
-        if f == 1:  # Sub
-            out[y:z] = np.cumsum(out[y:z].reshape(z - y, -1, bpp), axis=1,
-                                 dtype=np.uint8).reshape(z - y, stride)
+    """Undo PNG scanline filters 0-4. raw: (h, 1+stride) uint8."""
+    if not raw[:, 0].any():  # filter 0 throughout: every PNG the engine writes
+        return raw[:, 1:].copy()
+    out = np.zeros((h, stride), dtype=np.uint8)
+    for y in range(h):
+        f = int(raw[y, 0])
+        line = raw[y, 1:].astype(np.int32)
+        prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, np.int32)
+        if f == 0:
+            out[y] = line
         elif f == 2:  # Up
-            out[y:z] = np.cumsum(out[y:z], axis=0, dtype=np.uint8)
-            if y:
-                out[y:z] += out[y - 1]
-        elif f:  # Average / Paeth need a left-to-right scan
-            for r in range(y, z):
-                out[r] = _scan_row(out[r], out[r - 1] if r else None, f, bpp)
+            out[y] = (line + prev) & 0xFF
+        else:  # Sub / Average / Paeth need a left-to-right scan
+            cur = np.zeros(stride, np.int32)
+            for x in range(stride):
+                a = cur[x - bpp] if x >= bpp else 0
+                b = prev[x]
+                c = prev[x - bpp] if x >= bpp else 0
+                if f == 1:
+                    cur[x] = (line[x] + a) & 0xFF
+                elif f == 3:
+                    cur[x] = (line[x] + (a + b) // 2) & 0xFF
+                elif f == 4:
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                    cur[x] = (line[x] + pred) & 0xFF
+                else:
+                    raise ValueError(f"bad PNG filter {f}")
+            out[y] = cur
     return out
-
-
-def _scan_row(line: np.ndarray, prev: np.ndarray | None, f: int, bpp: int) -> np.ndarray:
-    """One Average (3) or Paeth (4) row; ``prev`` is None on the first row."""
-    line = line.astype(np.int32)
-    prev = np.zeros_like(line) if prev is None else prev.astype(np.int32)
-    cur = np.zeros_like(line)
-    for x in range(len(line)):
-        a = cur[x - bpp] if x >= bpp else 0
-        b = prev[x]
-        c = prev[x - bpp] if x >= bpp else 0
-        if f == 3:
-            cur[x] = (line[x] + (a + b) // 2) & 0xFF
-        else:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            cur[x] = (line[x] + pred) & 0xFF
-    return cur
 
 
 def decode_png(data: bytes) -> np.ndarray:

@@ -118,25 +118,21 @@ def scan_errors(images: DataFrame) -> DataFrame:
     """Quarantine scan: (image_id, error) for every row whose payload fails
     to decode — the audit-side companion of ``assign_tiles(on_error='skip')``
     (write it next to the blocks table so dropped inputs stay accounted
-    for). One ``mapInArrow`` pass over (image_id, bytes) only, one output
-    record batch per input batch."""
+    for). One Arrow pass over (image_id, bytes) only."""
 
     def probe(batches):
-        import pyarrow as pa
+        import pandas as pd
         from ..kernels.codecs import decode_image
-        for batch in batches:
-            rows, errors = [], []
-            for i, data in enumerate(batch.column("bytes").to_pylist()):
+        for pdf in batches:
+            out = []
+            for image_id, data in zip(pdf["image_id"], pdf["bytes"]):
                 try:
-                    decode_image(data)
+                    decode_image(bytes(data))
                 except Exception as e:
-                    rows.append(i)
-                    errors.append(f"{type(e).__name__}: {e}"[:500])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("image_id").take(pa.array(rows, pa.int64())),
-                 pa.array(errors, pa.string())], names=["image_id", "error"])
+                    out.append((image_id, f"{type(e).__name__}: {e}"[:500]))
+            yield pd.DataFrame(out, columns=["image_id", "error"])
 
-    return images.selectExpr("CAST(image_id AS STRING) AS image_id", "bytes").mapInArrow(
+    return images.select(F.col("image_id").cast("string"), "bytes").mapInPandas(
         probe, "image_id string, error string")
 
 

@@ -12,18 +12,31 @@ with real Spark knobs. Defaults are tuned for the scale story:
   count.
 * Python workers talk to the JVM over Unix domain sockets, not loopback TCP:
   the TCP socket carries no ``TCP_NODELAY``, so Linux's delayed ACK stalls
-  each task ~40 ms while the worker waits for its Arrow stream. The socket
-  file lives under ``java.io.tmpdir``, which must stay short (the AF_UNIX
-  path limit is 108 bytes).
+  each task ~40 ms while the worker waits for its Arrow stream. Spark names
+  each socket file ``.<uuid4>.sock`` and AF_UNIX paths end at 108 bytes, so
+  the session puts them in the temp directory, or ``/tmp`` when that is too
+  deep (Spark's own default, ``java.io.tmpdir``, may be any length), and
+  stays on TCP if neither fits.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# "/.<uuid4>.sock" is 43 bytes; sun_path holds 108 with the closing NUL
+_SOCKET_NAME_LEN, _SUN_PATH_LEN = 43, 108
+
+
+def _socket_dir() -> str | None:
+    """A writable directory short enough for Spark's socket files, or None."""
+    for d in (tempfile.gettempdir(), "/tmp"):
+        if len(os.fsencode(d)) + _SOCKET_NAME_LEN < _SUN_PATH_LEN and os.access(d, os.W_OK):
+            return d
+    return None
 
 
 def build_session(app: str = "quadtree-engine", cores: int | None = None,
@@ -77,9 +90,11 @@ def build_session(app: str = "quadtree-engine", cores: int | None = None,
          # _pydaemon). The package root on the workers' path lets the daemon
          # module import from any working directory.
          .config("spark.python.daemon.module", "quadtree_block_compression_spark._pydaemon")
-         # worker transport: see the module docstring
-         .config("spark.python.unix.domain.socket.enabled", "true")
          .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
+    socket_dir = _socket_dir()
+    if socket_dir:  # worker transport: see the module docstring
+        b = (b.config("spark.python.unix.domain.socket.enabled", "true")
+             .config("spark.python.unix.domain.socket.dir", socket_dir))
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -4,9 +4,14 @@ the delayed ACK); they fork from a daemon whose preloaded modules sit in a
 frozen heap, so the per-task ``gc.collect()`` never walks them; and they
 import pyspark from its installed directory, with no zip importer left for
 the per-task ``importlib.invalidate_caches()`` to re-read. The path rewrite
-leaves the path alone whenever the directory copy is missing or differs."""
+leaves the path alone whenever the directory copy is missing or differs.
+A ``java.io.tmpdir`` too deep for a socket path leaves Python stages
+working."""
 
+import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 
 import pytest
@@ -50,6 +55,41 @@ def test_workers_run_on_unix_sockets_from_a_frozen_heap(spark):
 
 def test_session_enables_the_unix_socket_transport(spark):
     assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+
+_LONG_TMPDIR_SESSION = textwrap.dedent("""
+    import sys
+    from quadtree_block_compression_spark.session import build_session
+    spark = build_session("long-tmpdir", cores=2, shuffle_partitions=2, extra={
+        "spark.driver.extraJavaOptions": "-Djava.io.tmpdir=" + sys.argv[1],
+        "spark.driver.memory": "1g", "spark.ui.showConsoleProgress": "false"})
+
+    def report(batches):
+        import os
+        import pyarrow as pa
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")]})
+
+    print("reports", [r.uds for r in spark.range(0, 4, 1, 2).mapInArrow(
+        report, "uds string").collect()])
+    spark.stop()
+""")
+
+
+def test_python_stage_runs_under_a_deep_tmpdir(tmp_path):
+    """Spark names each socket ``.<uuid4>.sock`` (43 bytes with its slash)
+    and AF_UNIX paths end at 108 bytes, so a socket under this 100-byte-plus
+    ``java.io.tmpdir`` (and ``TMPDIR``) could never bind."""
+    deep = tmp_path / ("d" * 100)
+    deep.mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(deep),
+           "PYTHONPATH": os.pathsep.join([root, os.environ.get("PYTHONPATH", "")])}
+    run = subprocess.run([sys.executable, "-c", _LONG_TMPDIR_SESSION, str(deep)],
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-4000:]
+    assert "reports ['True', 'True']" in run.stdout
 
 
 @pytest.fixture
