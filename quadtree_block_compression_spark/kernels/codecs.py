@@ -21,6 +21,7 @@ Format dispatch sniffs magic bytes, mirroring the reference's
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -145,11 +146,15 @@ _QC = np.array([
     [99, 99, 99, 99, 99, 99, 99, 99]], dtype=np.float64)
 
 
+@functools.lru_cache(maxsize=128)
 def _quant_tables(quality: int) -> tuple[np.ndarray, np.ndarray]:
+    """The (luma, chroma) tables for ``quality``, computed once per quality
+    and shared read-only by every encode and decode."""
     q = min(max(int(quality), 1), 100)
     scale = 5000 / q if q < 50 else 200 - 2 * q
     qy = np.clip(np.floor((_QY * scale + 50) / 100), 1, 255)
     qc = np.clip(np.floor((_QC * scale + 50) / 100), 1, 255)
+    qy.flags.writeable = qc.flags.writeable = False
     return qy, qc
 
 

@@ -27,13 +27,21 @@ Distributed form of the reference's encode pipeline
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (BinaryType, BooleanType, DoubleType, IntegerType,
+                               StringType, StructField, StructType)
 
 from ..config import EngineConfig, DEFAULT_CONFIG
 
 BLOCKS_SCHEMA = ("image_id string, tile_id string, level int, "
                  "x0 int, y0 int, x1 int, y1 int, "
                  "is_leaf boolean, oob boolean, similarity double, block_px binary")
-_BLOCK_COLUMNS = [f.split()[0] for f in BLOCKS_SCHEMA.split(", ")]
+_DDL_TYPES = {"string": StringType(), "int": IntegerType(), "boolean": BooleanType(),
+              "double": DoubleType(), "binary": BinaryType()}
+# BLOCKS_SCHEMA built in Python: mapInArrow would parse the DDL string on
+# the JVM on every call
+_BLOCKS_STRUCT = StructType([StructField(name, _DDL_TYPES[kind]) for name, kind in
+                             (f.split() for f in BLOCKS_SCHEMA.split(", "))])
+_BLOCK_COLUMNS = _BLOCKS_STRUCT.names
 
 
 def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
@@ -108,7 +116,7 @@ def assign_tiles(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                 pa.array(cols["similarity"], from_pandas=True),
                 block_px], names=_BLOCK_COLUMNS)
 
-    return src.mapInArrow(tile_batches, BLOCKS_SCHEMA).selectExpr(
+    return src.mapInArrow(tile_batches, _BLOCKS_STRUCT).selectExpr(
         "*", "xxhash64(block_px) AS block_hash",
         "CASE WHEN tile_id = '' THEN 0 "
         "ELSE CAST(conv(tile_id, 4, 10) AS BIGINT) END AS morton")

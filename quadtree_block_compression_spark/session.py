@@ -17,6 +17,19 @@ with real Spark knobs. Defaults are tuned for the scale story:
   the session puts them in the temp directory, or ``/tmp`` when that is too
   deep (Spark's own default, ``java.io.tmpdir``, may be any length), and
   stays on TCP if neither fits.
+* DataFrame-debugging origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). PySpark 4
+  defaults it on: every ``Column`` method and ``functions.*`` call then
+  walks the Python stack and makes ~8 extra py4j round trips
+  (``getActiveSession``, a read of ``spark.sql.stackTracesInDataFrameContext``,
+  ``PySparkCurrentOrigin.set``/``clear``), about half of all the commands
+  that build a raster pass or a kNN batch. What is lost: ANSI runtime errors
+  carry no Python call site in their "DataFrame query context".
+  ``build_session(extra={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"})`` turns it back on. PySpark reads the flag once per process, on
+  the first decorated call (``pyspark.errors.utils._enable_debugging_cache``),
+  from the session active then, or as off when none is: a later session
+  with another value does not change it.
 """
 
 from __future__ import annotations
@@ -84,6 +97,8 @@ def build_session(app: str = "quadtree-engine", cores: int | None = None,
          .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
                  str(64 * 1024 * 1024))
          .config("spark.ui.enabled", "false")
+         # no per-call Python call-site capture (module docstring)
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
          # Python workers import pyspark from its installed directory, not
          # Spark's zip and jar archives: each task's invalidate_caches()
          # re-reads every cached zip importer (~215 ms CPU per task; see

@@ -18,10 +18,17 @@ budget instead: the py4j round trips the driver makes while *building* each
 DataFrame, before anything runs. Each feature is SQL text parsed once per
 projection; a per-feature Column tree costs one round trip per node
 (``annotate`` made ~1,900, ``assign_tiles`` ~139), which a later edit could
-re-grow without changing any output.
+re-grow without changing any output. One ``knn_ring`` call carries a
+py4j budget over its whole run: its ring loop builds Column trees every
+round. The engine session turns PySpark's DataFrame-debugging origin capture
+off, which cost ~8 round trips per Column or ``functions.*`` call; a test
+pins that default.
 """
 
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from py4j import java_gateway, protocol
@@ -117,7 +124,10 @@ def test_pipeline_job_count_within_budget(spark, tiny_images, sf_dir, tmp_path, 
 
 # py4j round trips to build each projection, as measured plus headroom
 BUILD_CALL_BUDGET = {"annotate": 30, "quality_features": 20, "quality_score": 16,
-                     "lang_id": 14, "fingerprint": 14, "assign_tiles": 60}
+                     "lang_id": 14, "fingerprint": 14, "assign_tiles": 48}
+# py4j commands for one knn_ring call (12 queries) on the tiny fixtures,
+# collect included: 1,585 measured (3,885 with origin capture on)
+KNN_RING_CALL_BUDGET = 1800
 TEXT_PROJECTIONS = sorted(set(BUILD_CALL_BUDGET) - {"assign_tiles"})
 
 
@@ -156,12 +166,83 @@ def test_text_projection_build_calls_within_budget(spark, sf_dir, monkeypatch, n
 
 
 def test_assign_tiles_build_calls_within_budget(tiny_images, monkeypatch):
-    from quadtree_block_compression_spark.operators.tiling import assign_tiles
+    from pyspark.sql.types import DataType, StructType
+    from quadtree_block_compression_spark.operators.tiling import (
+        BLOCKS_SCHEMA, assign_tiles)
     df, calls = _build_calls(monkeypatch, lambda: assign_tiles(tiny_images))
     assert df.columns[-2:] == ["block_hash", "morton"]
     assert calls <= BUILD_CALL_BUDGET["assign_tiles"], (
         f"building assign_tiles sent {calls} py4j commands, "
         f"budget {BUILD_CALL_BUDGET['assign_tiles']}")
+    # the Python-built StructType is the DDL string's schema
+    assert StructType(df.schema.fields[:-2]) == DataType.fromDDL(BLOCKS_SCHEMA)
+
+
+def test_knn_ring_calls_within_budget(spark, tiny_images, monkeypatch):
+    from quadtree_block_compression_spark.fixtures.geometries import generate_knn_queries
+    from quadtree_block_compression_spark.operators.knn import knn_ring
+    from quadtree_block_compression_spark.operators.spatial_join import block_centroids
+    from quadtree_block_compression_spark.operators.tiling import assign_tiles
+    points = block_centroids(assign_tiles(tiny_images), res=6)
+    queries = spark.createDataFrame(generate_knn_queries(n=12, seed=7))
+    try:
+        rows, calls = _build_calls(monkeypatch, lambda: knn_ring(
+            points, queries, res=6, max_ring=40).collect())
+    finally:
+        release_caches()
+    assert rows
+    assert calls <= KNN_RING_CALL_BUDGET, (
+        f"one knn_ring call sent {calls} py4j commands, "
+        f"budget {KNN_RING_CALL_BUDGET}")
+
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+# builds a sum over a Column expression (four decorated Column and
+# functions calls) and prints the flag and the PySparkCurrentOrigin
+# commands sent meanwhile
+_ORIGIN_PROBE = textwrap.dedent("""
+    import sys
+    from py4j import java_gateway
+    from pyspark.sql import functions as F
+    from quadtree_block_compression_spark.session import build_session
+    key, extra = sys.argv[1], {"spark.driver.memory": "1g"}
+    if len(sys.argv) > 2:
+        extra[key] = sys.argv[2]
+    spark = build_session("origin-probe", cores=1, shuffle_partitions=1, extra=extra)
+    sent = []
+    send = java_gateway.GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    java_gateway.GatewayClient.send_command = counting
+    F.sum((F.col("x1") - F.col("x0")).cast("long"))
+    java_gateway.GatewayClient.send_command = send
+    print("probe", spark.conf.get(key),
+          sum("PySparkCurrentOrigin" in c for c in sent))
+    spark.stop()
+""")
+
+
+@pytest.mark.parametrize("override", [None, "true"])
+def test_origin_capture_off_by_default(tmp_path, override):
+    """``build_session()`` turns DataFrame-debugging origin capture off and
+    ``extra=`` turns it back on. Each case runs in a fresh process: PySpark
+    reads the flag on its first decorated call and caches it per process."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ,
+           "PYTHONPATH": os.pathsep.join([root, os.environ.get("PYTHONPATH", "")])}
+    args = [_DEBUGGING] + ([override] if override else [])
+    run = subprocess.run([sys.executable, "-c", _ORIGIN_PROBE, *args], env=env,
+                         cwd=tmp_path, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-4000:]
+    flag, origin_calls = next(line.split()[1:] for line in run.stdout.splitlines()
+                              if line.startswith("probe "))
+    if override:
+        assert flag == override and int(origin_calls) > 0
+    else:
+        assert flag == "false" and int(origin_calls) == 0
 
 
 def test_text_projections_independent_of_escaped_string_literals(spark):

@@ -288,6 +288,15 @@ def test_lossy_roundtrip_quality():
     assert psnr(img, out) >= 40.0
 
 
+def test_quant_tables_computed_once_and_read_only():
+    from quadtree_block_compression_spark.kernels.codecs import _quant_tables
+    qy, qc = _quant_tables(75)
+    assert _quant_tables(75)[0] is qy and _quant_tables(75)[1] is qc
+    for table in (qy, qc):
+        with pytest.raises(ValueError):
+            table[0, 0] = 1.0
+
+
 def test_decode_dispatch_magic_bytes():
     img = RNG.integers(0, 256, (8, 8, 3), dtype=np.int64).astype(np.uint8)
     for fmt in ("png", "raw", "jpeg"):
