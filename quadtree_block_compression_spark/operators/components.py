@@ -12,32 +12,21 @@ Generalizes the reference's dedup *group* notion (symlink groups keyed by a
 canonical block, ``pkg/quadtreeImage/quadtreeElement.go:176-221``) from
 pointer identity to any pair relation.
 
-Algorithms (two, same signature, ``algorithm=`` selects):
+Two tiers, chosen by edge-set size:
 
-- ``propagation`` — iterative min-label propagation (each node adopts the
-  minimum label in its closed neighborhood): converges in ``diameter``
-  rounds, each round ONE shuffle join + ONE aggregation over the edge
-  list. Near-dup components are small and shallow by construction
-  (boilerplate clusters are stars around the earliest copy), so 2–3
-  rounds is typical; the loop stops at the first fixpoint and lineage is
-  bounded by a local checkpoint per round. The right default for dedup
-  shapes.
-- ``alternating`` — the large-star/small-star algorithm of Kiveris et al.,
-  "Connected Components in MapReduce and Beyond" (SoCC'14): alternately
-  rewire every node's strictly-larger neighbors (large-star) then its
-  smaller neighbors and itself (small-star) to the minimum of its closed
-  neighborhood, until the edge set is a fixpoint of component-min stars.
-  Converges in O(log² n) rounds REGARDLESS of diameter — the scale path
-  for adversarial long-chain graphs (crawl rings, version chains) where
-  propagation's O(diameter) shuffle count would be unbounded.
-- ``auto`` (default) — size-adaptive: an edge set within
-  ``driver_edge_cap`` (gated by one bounded ``limit(cap+1).collect()``
-  over the already-materialized edge frame, whose rows double as the
-  fetched edge list) is solved driver-side with union-find — at that size the iterative tiers' ~2 scheduled
-  jobs per round are pure latency floor. Larger sets run propagation for
-  up to ``max_iters`` rounds, then fall back to ``alternating`` from
-  scratch instead of aborting: cheap on the common shallow graphs, still
-  guaranteed to finish on pathological ones.
+- **driver** — an edge set within ``driver_edge_cap`` (gated by one bounded
+  ``limit(cap+1).collect()`` over the already-materialized edge frame,
+  whose rows double as the fetched edge list) is solved driver-side with
+  union-find: at that size a distributed loop's scheduled jobs per round
+  are pure latency floor.
+- **large-star/small-star** (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC'14) — larger sets alternately rewire every
+  node's strictly-larger neighbors (large-star) then its smaller neighbors
+  and itself (small-star) to the minimum of its closed neighborhood, until
+  the edge set is a fixpoint of component-min stars. O(log² n) rounds
+  whatever the component diameter, so adversarial long chains (crawl
+  rings, version chains) stay bounded. ``driver_edge_cap=0`` forces this
+  tier.
 
 Deterministic (min over ids), so the whole computation is replicated in the
 DuckDB oracle as a recursive CTE (min reachable id per node).
@@ -45,44 +34,35 @@ DuckDB oracle as a recursive CTE (min reachable id per node).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 
 def connected_components(nodes: DataFrame, pairs: DataFrame,
                          id_col: str = "doc_id",
                          a_col: str = "doc_a", b_col: str = "doc_b",
-                         max_iters: int = 25,
-                         algorithm: str = "auto",
                          driver_edge_cap: int = 200_000) -> DataFrame:
     """Component id (= min member id) per node.
 
     ``nodes``: one row per entity (singletons become their own component).
     ``pairs``: undirected edges, any extra columns ignored.
-    ``algorithm``: ``"auto"`` (small edge sets solved driver-side, then
-    propagation, then alternating fallback past ``max_iters``),
-    ``"propagation"`` (raises past ``max_iters``), or ``"alternating"``
-    (large-star/small-star from the start).
-    ``driver_edge_cap``: ``auto`` only — an edge set at most this large
-    (counted AFTER the node-set restriction, from the already-checkpointed
-    frame, so the gate costs one cheap job) is solved with one collect +
-    union-find instead of the iterative loop. Near-dup edge sets are tiny
+    ``driver_edge_cap``: an edge set at most this large (counted AFTER the
+    node-set restriction, from the already-checkpointed frame, so the gate
+    costs one cheap job) is solved with union-find over the gate's own
+    rows instead of the distributed loop. Near-dup edge sets are tiny
     relative to their corpus (LSH pairs over 5k docs ≈ hundreds of edges),
-    and the iterative algorithms pay ~2 scheduled jobs per round — a
-    latency floor that dwarfs the work at that size. The cap bounds the
-    collect at a few MB; 0 disables the tier. At 100 TB the post-LSH edge
-    set exceeds any sane cap and flows to the distributed tiers unchanged.
+    and every distributed round pays its scheduled jobs — a latency floor
+    that dwarfs the work at that size. The cap bounds the collect at a few
+    MB; 0 disables the tier. At 100 TB the post-LSH edge set exceeds any
+    sane cap and flows to large-star/small-star unchanged.
     Returns (``id_col``, component_id, component_size, is_canonical).
     """
-    if algorithm not in ("auto", "propagation", "alternating"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     node_ids = nodes.select(F.col(id_col).alias("x")).distinct()
     # symmetric closed edge list: x→y for every pair, both directions.
     # Edges are RESTRICTED to the node set (semi-joins on both endpoints):
     # an edge through an id absent from ``nodes`` (e.g. a doc filtered out
     # upstream of the component step) must not act as a bridge — without
-    # the restriction the label join silently drops such edges here while
-    # a reachability-based oracle would follow them, and the "component"
-    # could even be labeled by an id that no longer exists.
+    # the restriction it would merge two components, and the merged
+    # "component" could even be labeled by an id that no longer exists.
     # pairs is referenced by BOTH union branches below; without a persist
     # the upstream pair-generating plan (e.g. the MinHash-LSH band join)
     # executes twice inside the one checkpoint job. Tracked → released at
@@ -92,8 +72,8 @@ def connected_components(nodes: DataFrame, pairs: DataFrame,
                                           F.col(b_col).alias("b")))
     a = pairs2.select(F.col("a").alias("x"), F.col("b").alias("y"))
     b = pairs2.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    # no distinct on the edge list (r6): every tier is label-min/union-find
-    # arithmetic, for which duplicate edges are harmless — the distinct was
+    # no distinct on the edge list (r6): union-find ignores duplicate edges
+    # and large-star/small-star dedups its own oriented set — the distinct was
     # one more exchange + aggregate, and under AQE one more sequential
     # stage-materialization job inside the eager checkpoint of a usually
     # tiny frame (the components queries are job-latency-bound: ~25
@@ -107,24 +87,12 @@ def connected_components(nodes: DataFrame, pairs: DataFrame,
     # a manual unpersist here would leave a stale registry entry behind
 
     labels = None
-    if algorithm == "auto" and driver_edge_cap > 0:
-        # ONE job gates AND fetches (r6): collect limit(cap+1) rows — at
-        # most cap+1 ever cross to the driver (same bound the old
-        # limit+count gate enforced), and when the set fits, the rows are
-        # already here, saving the second edges.collect() job of the
-        # latency-bound small-graph path.
+    if driver_edge_cap > 0:
+        # ONE job gates AND fetches (r6): at most cap+1 rows ever cross to
+        # the driver, and when the set fits they are the edge list
         probe = edges.limit(driver_edge_cap + 1).collect()
         if len(probe) <= driver_edge_cap:
-            labels = _driver_labels(node_ids, edges, rows=probe)
-    if labels is None and algorithm in ("auto", "propagation"):
-        labels = _propagate_labels(node_ids, edges, max_iters)
-        if labels is None and algorithm == "propagation":
-            # silently-wrong labels would poison the dedup election
-            # downstream; auto (the default) falls back instead of raising
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iters} "
-                "rounds (component diameter exceeds the propagation "
-                "budget); use algorithm='auto' or 'alternating'")
+            labels = _driver_labels(node_ids, edges, probe)
     if labels is None:
         labels = _alternating_labels(node_ids, edges)
 
@@ -138,15 +106,14 @@ def connected_components(nodes: DataFrame, pairs: DataFrame,
 
 
 def _driver_labels(node_ids: DataFrame, edges: DataFrame,
-                   rows=None) -> DataFrame:
-    """Small-graph tier: union-find over a collected edge list. The caller
-    gates the collect at ``driver_edge_cap`` rows (a few MB) — this is the
-    contractually-bounded kind of driver work (like the kNN pending set),
-    not a driver loop over table-scale data. One collect + one
-    createDataFrame replaces ~2 jobs × diameter rounds of scheduling
-    latency, which dominates the iterative tiers on small graphs."""
-    if rows is None:
-        rows = edges.collect()  # ≤ driver_edge_cap rows by the caller's gate
+                   rows: list) -> DataFrame:
+    """Small-graph tier: union-find over ``rows``, the collected edge list
+    (``edges`` supplies only the id type). The caller gates the collect at
+    ``driver_edge_cap`` rows (a few MB) — this is the contractually-bounded
+    kind of driver work (like the kNN pending set), not a driver loop over
+    table-scale data. One collect + one createDataFrame replaces the
+    distributed loop's jobs per round of scheduling latency, which dominate
+    on small graphs."""
     parent: dict = {}
 
     def find(v):
@@ -181,50 +148,6 @@ def _driver_labels(node_ids: DataFrame, edges: DataFrame,
             .select("x", F.coalesce("label", "x").alias("label")))
 
 
-def _propagate_labels(node_ids: DataFrame, edges: DataFrame,
-                      max_iters: int) -> DataFrame | None:
-    """Min-label propagation over symmetric ``edges`` (x, y): each node
-    adopts the min label of its closed neighborhood per round. Returns the
-    converged (x, label) frame, or None if ``max_iters`` rounds did not
-    reach the fixpoint (caller decides: raise or fall back).
-
-    The loop runs over EDGE-TOUCHING nodes only — a node with no edge is
-    its own component and can never change label, so it joins the result
-    once at the end instead of riding through every round's join +
-    checkpoint. At corpus scale this is the difference between rounds ×
-    |near-dup subgraph| and rounds × |corpus| (most documents are not
-    near-duplicates of anything; r5)."""
-    touched = edges.select("x").distinct()
-    labels = (touched
-              .withColumn("label", F.col("x"))
-              .localCheckpoint(eager=True))
-    converged = False
-    for _ in range(max_iters):
-        # min label among neighbors; closed neighborhood via the outer join
-        nbr_min = (edges.join(labels.withColumnRenamed("x", "y"), "y")
-                   .groupBy("x").agg(F.min("label").alias("nbr_label")))
-        # the old label rides the same projection into the checkpoint, so
-        # convergence detection is a cheap scan of checkpointed rows — NOT
-        # a third shuffle join per round (labels ⋈ new) as it was pre-r5
-        stepped = (labels.join(nbr_min, "x", "left")
-                   .select("x", F.col("label").alias("_old"),
-                           F.least(F.col("label"),
-                                   F.coalesce("nbr_label", "label"))
-                           .alias("label"))
-                   .localCheckpoint(eager=True))  # bound plan growth per round
-        changed = (stepped.where(F.col("label") != F.col("_old"))
-                   .limit(1).count())
-        labels = stepped.select("x", "label")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        return None
-    # singletons (no edges) re-enter as their own component
-    return (node_ids.join(labels, "x", "left")
-            .select("x", F.coalesce("label", "x").alias("label")))
-
-
 def _alternating_labels(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., SoCC'14) — the
     O(log² n)-round variant whose shuffle count is independent of component
@@ -243,23 +166,14 @@ def _alternating_labels(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
     edge points at its component minimum. Each half-round is one
     aggregation + one equi-join on the node key; plan lineage is bounded
     with a local checkpoint per round, and the fixpoint test is an
-    order-insensitive checksum (count + xor of row hashes) of the edge
-    set — one tiny extra action per round, no full edge-set comparison
-    join."""
+    order-insensitive checksum (count + xor of row hashes) of the edge set,
+    observed on that checkpoint's own job — no action of its own, no full
+    edge-set comparison join."""
     # orient larger → smaller; self-loops carry no connectivity
-    cur = (edges.where(F.col("x") != F.col("y"))
-           .select(F.greatest("x", "y").alias("u"),
-                   F.least("x", "y").alias("v"))
-           .distinct()
-           .localCheckpoint(eager=True))
-
-    def checksum(e: DataFrame):
-        row = (e.agg(F.count(F.lit(1)).alias("n"),
-                     F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0))
-                     .alias("x")).collect()[0])
-        return (row["n"], row["x"])
-
-    sig = checksum(cur)
+    cur, sig = _checkpoint_with_checksum(
+        edges.where(F.col("x") != F.col("y"))
+        .select(F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v"))
+        .distinct())
     for _ in range(200):  # safety rail only: O(log² n) ≪ 200 for any n
         prev = cur
         # large-star over the symmetrized set
@@ -276,20 +190,19 @@ def _alternating_labels(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
         # large-star only ever emits larger → closed-neighborhood min)
         mins = (cur.groupBy("u").agg(F.min("v").alias("mv"))
                 .select("u", F.least("u", "mv").alias("m")))
-        cur = (cur.join(mins, "u")
-               .select(F.col("v").alias("u"), F.col("m").alias("v"))
-               .unionByName(mins.select(F.col("u"), F.col("m").alias("v")))
-               .where(F.col("u") != F.col("v"))
-               .distinct()
-               .localCheckpoint(eager=True))
-        new_sig = checksum(cur)
+        cur, new_sig = _checkpoint_with_checksum(
+            cur.join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(mins.select(F.col("u"), F.col("m").alias("v")))
+            .where(F.col("u") != F.col("v"))
+            .distinct())
         if new_sig == sig:
             # checksum-collision guard: a colliding (count, xor-of-hashes)
             # between DISTINCT edge sets would terminate early and silently
             # mislabel a dedup-election input. Both frames are distinct sets
             # with equal counts (count is part of the checksum), so one
-            # exceptAll emptiness check proves exact set equality. Runs at
-            # most once per call (only when the checksum already matched).
+            # exceptAll emptiness check proves exact set equality. Runs only
+            # when the checksum already matched, so once per call in practice.
             if cur.exceptAll(prev).isEmpty():
                 break
         sig = new_sig
@@ -303,6 +216,20 @@ def _alternating_labels(node_ids: DataFrame, edges: DataFrame) -> DataFrame:
     stars = cur.groupBy("u").agg(F.min("v").alias("root"))
     return (node_ids.join(stars.withColumnRenamed("u", "x"), "x", "left")
             .select("x", F.coalesce("root", "x").alias("label")))
+
+
+def _checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eager local checkpoint of the (u, v) edge set ``e`` and its
+    order-insensitive checksum (row count, xor of row hashes), observed on
+    the checkpoint's own job. An ``Observation`` fills once, on the first
+    action over its frame, so every checkpoint takes a new one."""
+    obs = Observation()
+    cp = (e.observe(obs, F.count(F.lit(1)).alias("n"),
+                    F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0))
+                    .alias("x"))
+          .localCheckpoint(eager=True))
+    m = obs.get
+    return cp, (m["n"], m["x"])
 
 
 def components_recursive_sql(nodes_sql: str, pairs_sql: str,

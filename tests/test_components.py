@@ -1,19 +1,47 @@
-"""Connected components over dedup pair edges (operators/components.py)."""
+"""Connected components over dedup pair edges (operators/components.py).
 
-import pandas as pd
+Two tiers: driver-side union-find for edge sets within ``driver_edge_cap``,
+large-star/small-star otherwise; ``driver_edge_cap=0`` forces the latter.
+"""
+
+import numpy as np
+import pytest
 
 from quadtree_block_compression_spark.operators.components import (
     connected_components)
 
 
-def _run(spark, ids, edges):
-    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
-    pairs = spark.createDataFrame(
-        pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
-    out = connected_components(nodes, pairs).toPandas()
-    return {int(r.doc_id): (int(r.component_id), int(r.component_size),
-                            bool(r.is_canonical))
-            for r in out.itertuples()}
+def _run(spark, ids, edges, id_type="long", **kw):
+    """{id: (component_id, component_size, is_canonical)} for ``ids`` of
+    SQL type ``id_type`` and the undirected ``edges`` between them."""
+    nodes = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_type}")
+    pairs = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
+    out = connected_components(nodes, pairs, **kw).collect()
+    return {r.doc_id: (r.component_id, r.component_size, r.is_canonical)
+            for r in out}
+
+
+def _union_find(ids, edges):
+    """Pure-python ground truth; edges through ids outside ``ids`` are
+    ignored, as the operator restricts edges to the node set."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a in parent and b in parent:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    comp = {i: find(i) for i in ids}
+    sizes = {}
+    for c in comp.values():
+        sizes[c] = sizes.get(c, 0) + 1
+    return {i: (comp[i], sizes[comp[i]], i == comp[i]) for i in ids}
 
 
 def test_chain_star_singleton(spark):
@@ -39,7 +67,7 @@ def test_cycle_and_bridge(spark):
 
 
 def test_long_chain_converges(spark):
-    # a 12-node chain needs multiple propagation rounds (diameter > 1)
+    # a 12-node chain: the min id must reach the far end (diameter > 1)
     ids = list(range(100, 112))
     edges = [(i, i + 1) for i in ids[:-1]]
     got = _run(spark, ids, edges)
@@ -48,7 +76,7 @@ def test_long_chain_converges(spark):
 
 def test_edges_over_unknown_nodes_ignored_for_singletons(spark):
     # nodes list drives the output rows; every node appears exactly once
-    got = _run(spark, [1, 2], [(1, 2)])
+    got = _run(spark, [1, 2], [(1, 2)], driver_edge_cap=0)
     assert set(got) == {1, 2}
     assert got[1] == (1, 2, True) and got[2] == (1, 2, False)
 
@@ -64,7 +92,7 @@ def test_unknown_endpoint_never_bridges(spark):
         components_recursive_sql)
 
     # node 1 was dropped upstream; (1,2) and (1,3) would bridge 2 and 3
-    got = _run(spark, [2, 3], [(1, 2), (1, 3)])
+    got = _run(spark, [2, 3], [(1, 2), (1, 3)], driver_edge_cap=0)
     assert got[2] == (2, 1, True)
     assert got[3] == (3, 1, True)
     # the oracle agrees (no component labeled by the nonexistent id 1)
@@ -76,66 +104,25 @@ def test_unknown_endpoint_never_bridges(spark):
     assert rows == {2: (2, 1, True), 3: (3, 1, True)}
 
 
-def test_convergence_guard(spark):
-    # explicit algorithm="propagation" must still raise past the budget —
-    # the default ("auto") falls back to large-star/small-star instead
-    import pytest
-    ids = list(range(40))
-    edges = [(i, i + 1) for i in ids[:-1]]
-    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
-    pairs = spark.createDataFrame(pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, pairs, max_iters=3,
-                             algorithm="propagation").collect()
-
-
-def _run_alg(spark, ids, edges, **kw):
-    nodes = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
-    pairs = spark.createDataFrame(
-        pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
-    out = connected_components(nodes, pairs, **kw).toPandas()
-    return {int(r.doc_id): (int(r.component_id), int(r.component_size),
-                            bool(r.is_canonical))
-            for r in out.itertuples()}
-
-
-def test_alternating_matches_propagation_small_graphs(spark):
-    ids = [1, 2, 3, 10, 11, 12, 13, 20, 21, 5, 6, 7, 8]
-    edges = [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13),
-             (5, 6), (6, 7), (7, 5), (7, 8)]
-    prop = _run_alg(spark, ids, edges, algorithm="propagation")
-    alt = _run_alg(spark, ids, edges, algorithm="alternating")
-    assert alt == prop
-
-
 def test_alternating_long_path_beyond_propagation_budget(spark):
-    """VERDICT r3 #3: a 10k-node path graph (diameter 9,999 ≫ the
-    propagation budget of 25) must finish and label correctly under the
-    large-star/small-star variant — its round count is O(log² n),
+    """VERDICT r3 #3: a 10k-node path graph (diameter 9,999, far past any
+    per-hop label propagation's round budget) must finish and label
+    correctly under large-star/small-star — its round count is O(log² n),
     independent of diameter. Ten chains of 1,000 → ground truth is
     component_id = 1000·(i // 1000)."""
     n, chain = 10_000, 1_000
     ids = list(range(n))
     edges = [(i, i + 1) for i in ids[:-1] if (i + 1) % chain != 0]
-    got = _run_alg(spark, ids, edges, algorithm="alternating")
+    got = _run(spark, ids, edges, driver_edge_cap=0)
     assert len(got) == n
     assert all(got[i] == ((i // chain) * chain, chain,
                           i % chain == 0) for i in ids)
 
 
-def test_auto_falls_back_instead_of_raising(spark):
-    # diameter 199 > max_iters=3: propagation alone would abort; the
-    # default auto path must silently switch to alternating and be right
-    ids = list(range(200))
-    edges = [(i, i + 1) for i in ids[:-1]]
-    got = _run_alg(spark, ids, edges, max_iters=3)
-    assert all(got[i] == (0, 200, i == 0) for i in ids)
-
-
 def test_alternating_vs_recursive_cte_oracle(spark):
     """Independent-semantics check: large-star/small-star vs the DuckDB
-    recursive CTE on a chain whose diameter (599) far exceeds the
-    propagation budget, plus a star and singletons."""
+    recursive CTE on a chain of diameter 599, plus a star and
+    singletons."""
     import duckdb
 
     from quadtree_block_compression_spark.operators.components import (
@@ -144,7 +131,7 @@ def test_alternating_vs_recursive_cte_oracle(spark):
     ids = list(range(600)) + [1000, 1001, 1002, 2000]
     edges = ([(i, i + 1) for i in range(599)]
              + [(1000, 1001), (1000, 1002)])
-    got = _run_alg(spark, ids, edges, algorithm="alternating")
+    got = _run(spark, ids, edges, driver_edge_cap=0)
     vals_n = ", ".join(f"({i})" for i in ids)
     vals_p = ", ".join(f"({a}, {b})" for a, b in edges)
     sql = components_recursive_sql(
@@ -157,30 +144,10 @@ def test_alternating_vs_recursive_cte_oracle(spark):
 
 def test_random_graphs_both_algorithms_vs_union_find(spark):
     """Property check: on seeded random graphs (mixed chains, stars,
-    cycles, cliques, singletons), BOTH algorithms must equal a pure-python
-    union-find ground truth — and therefore each other."""
-    import numpy as np
-
-    def union_find_components(ids, edges):
-        parent = {i: i for i in ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            if a in parent and b in parent:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-        comp = {i: find(i) for i in ids}
-        sizes = {}
-        for c in comp.values():
-            sizes[c] = sizes.get(c, 0) + 1
-        return {i: (comp[i], sizes[comp[i]], i == comp[i]) for i in ids}
-
+    cycles, cliques, singletons), BOTH tiers — driver union-find under the
+    default cap, large-star/small-star with ``driver_edge_cap=0`` — must
+    equal a pure-python union-find ground truth, and therefore each
+    other."""
     rng = np.random.default_rng(42)
     for trial in range(4):
         n = int(rng.integers(30, 120))
@@ -190,40 +157,63 @@ def test_random_graphs_both_algorithms_vs_union_find(spark):
                  for _ in range(m)]
         # plus edges referencing ids OUTSIDE the node set (must not bridge)
         edges += [(ids[0], 99_999), (99_999, ids[-1])]
-        want = union_find_components(ids, edges)
-        for alg in ("propagation", "alternating"):
-            got = _run_alg(spark, ids, edges, algorithm=alg, max_iters=200)
-            assert got == want, (trial, alg)
-        # auto's driver-side union-find tier (these graphs are all under
-        # the default cap) must agree with the same ground truth
-        got = _run_alg(spark, ids, edges, algorithm="auto")
-        assert got == want, (trial, "auto/driver")
+        want = _union_find(ids, edges)
+        for cap in (200_000, 0):
+            got = _run(spark, ids, edges, driver_edge_cap=cap)
+            assert got == want, (trial, cap)
 
 
 def test_auto_tier_selection(spark, monkeypatch):
-    """auto picks the driver tier under the cap, the distributed path when
-    the cap is disabled or exceeded — and all tiers agree."""
+    """The driver tier runs under the cap, large-star/small-star when the
+    cap is disabled or exceeded — and both agree."""
     from quadtree_block_compression_spark.operators import components as C
 
     calls = []
-    orig_driver, orig_prop = C._driver_labels, C._propagate_labels
+    orig_driver, orig_alt = C._driver_labels, C._alternating_labels
     monkeypatch.setattr(C, "_driver_labels",
                         lambda *a, **k: calls.append("driver") or orig_driver(*a, **k))
-    monkeypatch.setattr(C, "_propagate_labels",
-                        lambda *a, **k: calls.append("prop") or orig_prop(*a, **k))
+    monkeypatch.setattr(C, "_alternating_labels",
+                        lambda *a, **k: calls.append("alt") or orig_alt(*a, **k))
     ids = [1, 2, 3, 4, 9]
     edges = [(1, 2), (2, 3)]
-    small = _run_alg(spark, ids, edges)  # default cap: driver tier
+    small = _run(spark, ids, edges)  # default cap: driver tier
     assert calls == ["driver"]
     calls.clear()
-    forced = _run_alg(spark, ids, edges, driver_edge_cap=0)
-    assert calls == ["prop"]
+    forced = _run(spark, ids, edges, driver_edge_cap=0)
+    assert calls == ["alt"]
     calls.clear()
     # symmetric closure doubles the 2 edges → 4 rows > cap of 3
-    exceeded = _run_alg(spark, ids, edges, driver_edge_cap=3)
-    assert calls == ["prop"]
+    exceeded = _run(spark, ids, edges, driver_edge_cap=3)
+    assert calls == ["alt"]
     assert small == forced == exceeded
     # edge set that restricts to EMPTY (both endpoints unknown) through
     # the driver tier: everything is a singleton
-    lone = _run_alg(spark, [5, 6], [(7, 8)])
+    lone = _run(spark, [5, 6], [(7, 8)])
     assert lone == {5: (5, 1, True), 6: (6, 1, True)}
+
+
+@pytest.mark.parametrize("edges", [[], [(1, 1), (3, 3), (3, 3)]],
+                         ids=["no-pairs", "self-loops-only"])
+def test_alternating_without_connecting_edges(spark, edges):
+    """An empty pairs frame, and one whose only edges are self-loops,
+    leave large-star/small-star an empty edge set from the first
+    checkpoint on: every node is its own singleton (the checksum observed
+    on that empty checkpoint still fills)."""
+    got = _run(spark, [1, 2, 3], edges, driver_edge_cap=0)
+    assert got == {i: (i, 1, True) for i in (1, 2, 3)}
+
+
+@pytest.mark.parametrize("id_type", ["int", "smallint", "string"])
+def test_id_types_through_both_tiers(spark, id_type):
+    """Each tier labels a component with its minimum id in the id column's
+    own type and order: for strings that is the lexicographic minimum
+    ("10" < "2")."""
+    raw = [2, 10, 3, 7, 30, 4, 99]
+    ids = [str(i) for i in raw] if id_type == "string" else raw
+    i = dict(zip(raw, ids))
+    edges = [(i[2], i[10]), (i[10], i[3]), (i[7], i[30]), (i[30], i[4])]
+    want = _union_find(ids, edges)
+    assert want[i[3]][0] == (i[10] if id_type == "string" else i[2])
+    for cap in (200_000, 0):
+        got = _run(spark, ids, edges, id_type=id_type, driver_edge_cap=cap)
+        assert got == want, (id_type, cap)

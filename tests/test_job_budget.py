@@ -5,8 +5,13 @@ data: at small scale every Spark job is scheduling plus a driver round trip,
 so an extra action in the ring loop shows up as a job count long before it
 is visible through wall-time noise. The ANN queries share one core (rank
 tail, LSH key builder, IVF probe); their budgets keep it from adding an
-action to any of them. Each query runs at sf0.01 under its own
-job group, and its job count must stay within the committed budget below.
+action to any of them. The connected-components queries are latency-bound
+the same way: ``dedup_components`` and ``corpus_clean_components`` pin the
+driver union-find tier, and ``dedup_components_logn`` pins
+large-star/small-star, whose fixpoint checksum is observed on each round's
+checkpoint rather than collected by an action of its own. Each query runs
+at sf0.01 under its own job group, and its job count must stay within the
+committed budget below.
 The same holds for a fresh run of each staged pipeline and for one image
 ingest batch that records lineage: a stage's bookkeeping (row counts,
 lineage) must not add passes over its output. The bare tiling pass is pinned
@@ -38,7 +43,9 @@ from quadtree_block_compression_spark.functions.cache import release_caches
 
 # jobs per query at sf0.01, as measured when the budget was set
 JOB_BUDGET = {"knn_points": 22, "knn_corpus": 30, "ann_topk": 5,
-              "ann_lsh_topk": 17, "ann_ivf_topk": 16, "embedding_near_dup": 24}
+              "ann_lsh_topk": 17, "ann_ivf_topk": 16, "embedding_near_dup": 24,
+              "dedup_components": 25, "dedup_components_logn": 43,
+              "corpus_clean_components": 32}
 # jobs per fresh pipeline run / ingest batch at test scale, as measured
 PIPELINE_JOB_BUDGET = {"quadtree_pipeline": 15, "corpus_pipeline": 22,
                        "ingest_batch": 4, "tiling_pass": 2}
