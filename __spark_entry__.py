@@ -94,8 +94,7 @@ def _nation_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         vx = np.array([ax, bx, cx]); vy = np.array([ay, by, cy])
         rows.append({"geom_id": f"tri_{n:05d}", "kind": "convex",
                      "vx": vx.tolist(), "vy": vy.tolist(),
-                     "cell_keys": polygon_cover(vx, vy, _RES).tolist(),
-                     "is_hot": False})
+                     "cell_keys": polygon_cover(vx, vy, _RES).tolist()})
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
@@ -130,8 +129,7 @@ def _nation_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
         vx = np.array([x0, x1, x1, x0]); vy = np.array([y0, y0, y1, y1])
         rows.append({"geom_id": f"poly_{n:05d}", "kind": "rect",
                      "vx": vx.tolist(), "vy": vy.tolist(),
-                     "cell_keys": polygon_cover(vx, vy, _RES).tolist(),
-                     "is_hot": False})
+                     "cell_keys": polygon_cover(vx, vy, _RES).tolist()})
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
@@ -175,8 +173,7 @@ def _strip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
         vx = np.array([x0, x1, x1, x0]); vy = np.array([y0, y0, y1, y1])
         rows.append({"geom_id": f"strip_{n:05d}", "kind": "rect",
                      "vx": vx.tolist(), "vy": vy.tolist(),
-                     "cell_keys": polygon_cover(vx, vy, _RES).tolist(),
-                     "is_hot": False})
+                     "cell_keys": polygon_cover(vx, vy, _RES).tolist()})
     return spark.createDataFrame(pd.DataFrame(rows))
 
 

@@ -18,10 +18,14 @@ with Z-order cells):
    deterministically by (distance, image_id, tile_id).
 
 The ring loop is driver-side control flow only, and there is one code path
-for every query-set size: the pending set is an anti-joined DataFrame whose
-lineage a local checkpoint severs each round, so nothing query-sized ever
-visits the driver. No join carries a hint — the planner picks it from size
-(a checkpoint keeps its origin's statistics): a small query side broadcasts
+for every query-set size. Each round is ONE Spark action: an eager local
+checkpoint of the still-pending queries' ranked, flagged candidates. The
+round's answers, the candidates carried into the next round and the next
+pending set (an anti-join) are filters of it, and the count of queries it
+finished is an ``Observation`` on its own job, so the driver tracks how many
+queries are pending without a probe and nothing query-sized ever visits the
+driver. No join carries a hint — the planner picks it from size (a
+checkpoint keeps its origin's statistics): a small query side broadcasts
 into the ring join, a corpus-sized one shuffles. The big blocks side is
 scanned from one persisted projection.
 """
@@ -30,7 +34,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from ..config import EngineConfig, DEFAULT_CONFIG
 from ..functions import cells
@@ -55,8 +59,6 @@ def _ring_cells(queries: DataFrame, ring: int, prev_ring: int,
                     cells.from_grid("_ix", "_iy", res).alias("join_cell")))
 
 
-
-
 def knn_ring(points: DataFrame, queries: DataFrame,
              cfg: EngineConfig = DEFAULT_CONFIG, res: int | None = None,
              max_ring: int = 8, initial_ring: int | None = None) -> DataFrame:
@@ -68,11 +70,14 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     rank ≤ k.
 
     One distributed path serves 25 interactive queries and "kNN for every
-    corpus item" alike: the query side is cell-keyed and equi-joined, the
-    pending set is maintained by anti-join and severed by a local
-    checkpoint per round, and the join strategy is the planner's choice
-    from size (broadcast below ``autoBroadcastJoinThreshold``, shuffled
-    above). Nothing query-sized is collected to the driver.
+    corpus item" alike: the query side is cell-keyed and equi-joined, and
+    the join strategy is the planner's choice from size (broadcast below
+    ``autoBroadcastJoinThreshold``, shuffled above). Each round runs one
+    Spark action, an eager local checkpoint of the pending queries' ranked
+    and flagged candidates; the round's answers, the candidates carried
+    into the next round and the next pending set are filters of it, and
+    the number of queries it finished is observed on its own job. Nothing
+    query-sized is collected to the driver.
     """
     from ..kernels.geometry import WORLD
     res = res if res is not None else cfg.spatial.cell_resolution
@@ -83,11 +88,13 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     # than pinned in the block manager for the session lifetime.
     from ..functions.cache import persist_tracked
     pts = persist_tracked(points.select("image_id", "tile_id", "wx", "wy", "cell"))
-    q = queries.select("query_id", "x", "y", "k").localCheckpoint(eager=True)
-
-    pending = q
-    gathered: DataFrame | None = None
-    results: list[DataFrame] = []  # per-round top-k of queries finished there
+    # the query count seeds the driver-side pending count, and max(k) sizes
+    # the first ring; both are observed on the checkpoint's own job
+    seen = Observation()
+    q = (queries.select("query_id", "x", "y", "k")
+         .observe(seen, F.count(F.lit(1)).alias("n"), F.max("k").alias("k_max"))
+         .localCheckpoint(eager=True))
+    n_pending = seen.get["n"]
     # density-aware initial radius: expect k candidates within a disk of
     # radius √(k̄/(π·density)) cells, so most queries finish in ONE round —
     # each extra round is a full Spark job, the dominant cost at small k
@@ -95,31 +102,26 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # count the PERSISTED projection: this first action populates the
         # cache every ring join then reads, instead of an extra uncached
         # pass over the upstream
-        n_points = pts.count()
-        density = max(n_points / float((1 << res) ** 2), 1e-9)
-        k_max = q.agg(F.max("k")).collect()[0][0] or 1
+        density = max(pts.count() / float((1 << res) ** 2), 1e-9)
+        k_max = seen.get["k_max"] or 1
         initial_ring = int(min(max((k_max / (3.14159 * density)) ** 0.5 + 1, 1),
                                max(max_ring, 1)))
     # then 4× radius per round: log-many iterations instead of one per shell
     radii = [initial_ring]
     while radii[-1] < max_ring:
         radii.append(min(max(radii[-1] * 4, 1), max_ring))
-    prev = -1
+    wq = Window.partitionBy("query_id").orderBy("distance", "image_id", "tile_id")
+    wp = Window.partitionBy("query_id")
+    done, rn = F.col("_done") == 1, F.col("_rn")
+    pending, carried, prev = q, None, -1
+    results: list[DataFrame] = []  # per-round top-k of queries finished there
     # an empty query set drains in the first round, so no up-front check
-    drained = False
     for ring in radii:
         cand = (pts.join(_ring_cells(pending, ring, prev, res),
                          pts["cell"] == F.col("join_cell"))
                 .select("query_id", "image_id", "tile_id", "k",
                         F.sqrt(F.pow(F.col("wx") - F.col("x"), 2)
-                               + F.pow(F.col("wy") - F.col("y"), 2)).alias("distance"))
-                # checkpoint the DELTA only: checkpointing the growing union
-                # re-materialized every prior round's candidate rows once
-                # per round (O(rounds · |gathered|) writes); a union of
-                # per-round checkpoints keeps lineage one node deep per leg
-                # at O(|gathered|) total writes (r6)
-                .localCheckpoint(eager=True))
-        gathered = cand if gathered is None else gathered.unionByName(cand)
+                               + F.pow(F.col("wy") - F.col("y"), 2)).alias("distance")))
         # kth-best distance per query so far; done ⇔ dk < ring·c STRICTLY:
         # an unseen point beyond shell `ring` is ≥ ring·c away, so with
         # dk < ring·c nothing unseen can beat OR TIE the current top-k. The
@@ -129,54 +131,46 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # with a smaller id would deterministically displace rank k under
         # the (distance, id) tie-break. Strict costs at most one extra
         # ring for the measure-zero exact-equality queries.
-        # The window ranks only rows of still-PENDING queries (semi-join):
-        # a finished query can never un-finish, so re-ranking its rows
-        # every later round was pure waste — round 2+ touches the small
-        # unsatisfied tail instead of every query's candidates (r6).
-        wq = Window.partitionBy("query_id").orderBy("distance", "image_id", "tile_id")
-        wp = Window.partitionBy("query_id")
-        g_pend = gathered.join(pending.select("query_id"), "query_id", "left_semi")
+        # Only still-pending queries' rows are ranked: `carried` holds their
+        # earlier candidates, and a finished query can never un-finish.
         # ONE ranking serves done-detection AND the finished queries' final
-        # answer (r6): a finished query's candidate set can never grow
-        # (later rings explode only still-pending queries), so its rn ≤ k
-        # rows AT FINISH TIME are exactly what the old post-loop election
-        # re-ranked from the whole gathered set. The _done flag rides a
-        # partition-only window over the already-ranked rows — same
-        # partitioning, no extra exchange or sort. Candidate (query, point)
-        # pairs are unique by construction (shells are disjoint setdiff1d
-        # disk differences; a point lives in one cell), so no dedup —
-        # pytest-pinned via many-rounds equality with brute force.
-        flagged = (g_pend.withColumn("_rn", F.row_number().over(wq))
+        # answer: a finished query's candidate set can never grow (later
+        # rings explode only still-pending queries), so its rn ≤ k rows at
+        # finish time are its top-k. The _done flag rides a partition-only
+        # window over the already-ranked rows — same partitioning, no extra
+        # exchange or sort. Candidate (query, point) pairs are unique by
+        # construction (shells are disjoint disk differences; a point lives
+        # in one cell), so no dedup — pytest-pinned via many-rounds equality
+        # with brute force.
+        finished = Observation()
+        flagged = ((cand if carried is None else carried.unionByName(cand))
+                   .withColumn("_rn", F.row_number().over(wq))
                    .withColumn("_done", F.max(
-                       F.when((F.col("_rn") == F.col("k"))
+                       F.when((rn == F.col("k"))
                               & (F.col("distance")
                                  < F.lit(float(ring) * cell_width)),
-                              F.lit(1)).otherwise(F.lit(0))).over(wp)))
-        res_r = (flagged
-                 .filter((F.col("_done") == 1) & (F.col("_rn") <= F.col("k")))
-                 .select("query_id", "image_id", "tile_id", "distance",
-                         F.col("_rn").alias("rank"))
-                 .localCheckpoint(eager=True))
-        results.append(res_r)
-        done = res_r.select("query_id").distinct()
-        # checkpointed so the pending set's lineage (and hence every later
-        # ring's plan) stays one node deep
-        pending = (pending.join(done, "query_id", "left_anti")
+                              F.lit(1)).otherwise(F.lit(0))).over(wp))
+                   .observe(finished, F.count(F.when(done & (rn == 1), 1)).alias("n"))
                    .localCheckpoint(eager=True))
-        drained = pending.isEmpty()
-        if drained:
-            break
+        results.append(flagged.filter(done & (rn <= F.col("k")))
+                       .select("query_id", "image_id", "tile_id", "distance",
+                               rn.alias("rank")))
+        # a pending query without candidates yet has no row here, but stays
+        # in `pending` below, so it is never lost
+        carried = flagged.filter(~done).drop("_rn", "_done")
+        pending = pending.join(flagged.filter(done & (rn == 1)).select("query_id"),
+                               "query_id", "left_anti")
+        n_pending -= finished.get["n"]
+        if n_pending == 0:
+            return reduce(DataFrame.unionByName, results)
         prev = ring
-
-    ringed = reduce(DataFrame.unionByName, results)
-    if drained:
-        return ringed
     # queries still pending after max_ring (deep in empty regions) fall back
     # to brute force — the tail is tiny by construction (max_ring covers a
     # (2·max_ring+1)²-cell disk, so only queries in near-empty regions
     # remain), so the cross join touches |pending| × |points|, not
     # |queries| × |points|.
-    return ringed.unionByName(knn_bruteforce(points, pending))
+    return reduce(DataFrame.unionByName, results).unionByName(
+        knn_bruteforce(points, pending))
 
 
 def knn_bruteforce(points: DataFrame, queries: DataFrame) -> DataFrame:

@@ -76,7 +76,7 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
 def polygons_by_cell(geoms: DataFrame) -> DataFrame:
     """Explode polygons to their DISTINCT covering cells: with one cell per
     point, each (point, polygon) pair meets at most once — no dedup needed."""
-    return geoms.select("geom_id", "vx", "vy", "is_hot",
+    return geoms.select("geom_id", "vx", "vy",
                         F.explode(F.array_distinct("cell_keys")).alias("cell"))
 
 

@@ -25,7 +25,7 @@ def run_quadtree_pipeline(spark: SparkSession, images: DataFrame,
     """Run (or resume) the full pipeline; returns stage-name → DataFrame."""
     from ..operators.tiling import assign_tiles
     from ..operators.dedup_blocks import dedup_exact
-    from ..operators.spatial_join import block_centroids, spatial_join_salted
+    from ..operators.spatial_join import block_centroids, spatial_join_broadcast
 
     fp = json.dumps({"cfg": asdict(cfg), "input": input_fingerprint}, sort_keys=True)
     pipe = StagedPipeline(spark, root)
@@ -38,7 +38,7 @@ def run_quadtree_pipeline(spark: SparkSession, images: DataFrame,
         fingerprint=fp)
     joined = pipe.run_stage(
         "s4_spatial_join",
-        lambda: spatial_join_salted(centroids, geoms, cfg=cfg),
+        lambda: spatial_join_broadcast(centroids, geoms),
         fingerprint=fp)
     return {"blocks": blocks, "deduped": deduped, "centroids": centroids,
             "spatial": joined, "pipeline": pipe}

@@ -131,24 +131,20 @@ def _read_manifest(path: str, version: int) -> dict:
 
 
 def _manifest_refs(manifest: dict) -> list[str]:
-    """The snapshot's manifest-FILE paths (new layout), or [] for a legacy
-    inline-file-list manifest."""
-    return list(manifest.get("manifests", []))
+    """The snapshot's manifest-FILE paths."""
+    return list(manifest["manifests"])
 
 
 def _manifest_data_files(manifest: dict) -> list[str]:
     """Resolve a snapshot manifest to its data-file list.
 
-    New layout (r6): ``v<n>.json`` carries a manifest LIST — per-commit
-    delta manifest files under ``<path>/manifests/`` each holding only that
-    commit's data files — so an append commit writes O(delta) bytes and
-    read-side planning opens O(manifests) small JSONs instead of every
-    commit rewriting (and every read parsing) the FULL file list
-    (Iceberg's manifest-list/manifest shape; VERDICT r5 #2). Legacy
-    manifests with an inline ``files`` list stay readable."""
+    ``v<n>.json`` carries a manifest LIST — per-commit delta manifest files
+    under ``<path>/manifests/`` each holding only that commit's data files —
+    so an append commit writes O(delta) bytes and read-side planning opens
+    O(manifests) small JSONs instead of every commit rewriting (and every
+    read parsing) the FULL file list (Iceberg's manifest-list/manifest
+    shape; VERDICT r5 #2)."""
     import json
-    if "files" in manifest:
-        return list(manifest["files"])
     files: list[str] = []
     for m in manifest["manifests"]:
         with open(m) as fh:
@@ -220,20 +216,14 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     data_dir = os.path.join(path, "data", f"s{n}-{uuid.uuid4().hex[:8]}")
     df.write.mode("errorifexists").parquet(data_dir)
     new_files = sorted(_glob.glob(os.path.join(data_dir, "*.parquet")))
-    # manifest-list layout (r6): this commit writes ONE delta manifest
-    # holding only its own files; the snapshot's v<n>.json carries the
-    # manifest list (previous manifests + the new one for append, just the
-    # new one for overwrite). Commit cost is O(delta + #manifests) instead
-    # of O(total files); a pre-r6 table's inline-list snapshot is folded
-    # into a migration manifest once on its first append.
+    # manifest-list layout: this commit writes ONE delta manifest holding
+    # only its own files; the snapshot's v<n>.json carries the manifest
+    # list (previous manifests + the new one for append, just the new one
+    # for overwrite). Commit cost is O(delta + #manifests) instead of
+    # O(total files).
     manifests = [_write_delta_manifest(path, n, new_files)]
     if mode == "append" and versions:
-        prev = _read_manifest(path, versions[-1])
-        prev_manifests = _manifest_refs(prev)
-        if not prev_manifests and prev.get("files"):
-            prev_manifests = [_write_delta_manifest(
-                path, versions[-1], list(prev["files"]))]
-        manifests = prev_manifests + manifests
+        manifests = _manifest_refs(_read_manifest(path, versions[-1])) + manifests
     manifest = {"snapshot": n, "manifests": manifests,
                 "schema": json.loads(df.schema.json()),
                 "properties": dict(properties or {})}
@@ -360,23 +350,16 @@ def rollback_versioned(path: str, to_version: int,
     snapshots stay readable for audit), the table's latest just points at
     the good state again. Pure manifest copy: no data movement, no Spark
     job."""
-    import json
-    import os
     versions = _manifest_versions(path)
     if to_version not in versions:
         raise ValueError(f"snapshot {to_version} not in {versions}")
     old = _read_manifest(path, to_version)
     n = versions[-1] + 1
-    manifest = {"snapshot": n,
+    # carry the old snapshot's manifest list forward verbatim
+    manifest = {"snapshot": n, "manifests": old["manifests"],
                 "schema": old["schema"],
                 "properties": {**dict(properties or {}),
                                "rollback_of": to_version}}
-    # carry the old snapshot's file set forward verbatim — manifest list
-    # (new layout) or inline list (legacy), whichever it has
-    if "manifests" in old:
-        manifest["manifests"] = old["manifests"]
-    else:
-        manifest["files"] = old["files"]
     if "sort_order" in old:
         manifest["sort_order"] = old["sort_order"]
     return _publish_manifest(path, n, manifest)
@@ -549,8 +532,6 @@ def versioned_diff(spark: SparkSession, path: str, from_version: int,
     rewrote history — file-list subtraction would be a lie), mirroring
     Iceberg's refusal to incremental-scan across a replace snapshot.
     Schema is pinned from the ``to`` manifest."""
-    import json
-    import os
     from pyspark.sql.types import StructType
     versions = _manifest_versions(path)
     if not versions:
@@ -565,33 +546,20 @@ def versioned_diff(spark: SparkSession, path: str, from_version: int,
         raise ValueError(f"from_version {from_version} is after "
                          f"to_version {to_version}")
     to_manifest = _read_manifest(path, to_version)
-    from_manifest = (_read_manifest(path, from_version)
-                     if from_version != 0 else {"files": []})
     to_refs = _manifest_refs(to_manifest)
-    from_refs = _manifest_refs(from_manifest)
-    if to_refs and (from_version == 0 or from_refs):
-        # manifest-level diff (r6): an append keeps the previous snapshot's
-        # delta manifests verbatim and adds its own, so the new rows are
-        # exactly the manifests in `to` but not `from` — O(delta) manifest
-        # reads, the full file lists are never materialized.
-        from_set = set(from_refs)
-        if not from_set <= set(to_refs):
-            raise ValueError(
-                f"snapshot {to_version} is not an append of {from_version} "
-                "(an overwrite rewrote the file list in between) — read the "
-                "full snapshot instead of an incremental diff")
-        new_files = _manifest_data_files(
-            {"manifests": [m for m in to_refs if m not in from_set]})
-    else:
-        # legacy / mixed layouts: file-level subtraction
-        old_files = _manifest_data_files(from_manifest)
-        to_files = _manifest_data_files(to_manifest)
-        new_files = [f for f in to_files if f not in set(old_files)]
-        if not set(old_files) <= set(to_files):
-            raise ValueError(
-                f"snapshot {to_version} is not an append of {from_version} "
-                "(an overwrite rewrote the file list in between) — read the "
-                "full snapshot instead of an incremental diff")
+    from_set = (set(_manifest_refs(_read_manifest(path, from_version)))
+                if from_version != 0 else set())
+    # manifest-level diff: an append keeps the previous snapshot's delta
+    # manifests verbatim and adds its own, so the new rows are exactly the
+    # manifests in `to` but not `from` — O(delta) manifest reads, the full
+    # file lists are never materialized.
+    if not from_set <= set(to_refs):
+        raise ValueError(
+            f"snapshot {to_version} is not an append of {from_version} "
+            "(an overwrite rewrote the file list in between) — read the "
+            "full snapshot instead of an incremental diff")
+    new_files = _manifest_data_files(
+        {"manifests": [m for m in to_refs if m not in from_set]})
     schema = StructType.fromJson(to_manifest["schema"])
     if not new_files:
         return spark.createDataFrame([], schema)

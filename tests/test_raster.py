@@ -90,9 +90,9 @@ def test_zonal_stats_matches_join(spark, geoms):
     sy = np.array([10.25, 10.25, 10.75, 10.75])
     sliver = pd.DataFrame([{"geom_id": "zz_empty", "kind": "rect",
                             "vx": sx.tolist(), "vy": sy.tolist(),
-                            "cell_keys": polygon_cover(sx, sy, RES).tolist(),
-                            "is_hot": False}])
-    geoms = geoms.unionByName(spark.createDataFrame(sliver))
+                            "cell_keys": polygon_cover(sx, sy, RES).tolist()}])
+    geoms = geoms.unionByName(spark.createDataFrame(sliver),
+                              allowMissingColumns=True)
     rng = np.random.default_rng(7)
     n = 4000
     pts = spark.createDataFrame(pd.DataFrame({

@@ -176,7 +176,7 @@ def test_joins_emit_each_pair_once_without_dedup(spark):
         vy = np.array([y0, y0, y0 + h, y0 + h])
         cover = polygon_cover(vx, vy, res).tolist()
         rows.append({"geom_id": f"g{i}", "vx": vx.tolist(), "vy": vy.tolist(),
-                     "cell_keys": cover + cover[::-1], "is_hot": False})
+                     "cell_keys": cover + cover[::-1]})
     geoms = spark.createDataFrame(pd.DataFrame(rows))
     expect = set()
     for g in rows:
@@ -244,7 +244,8 @@ def _assert_knn_equals_bruteforce(points, queries, **kw):
 
 def test_knn_matches_bruteforce_on_corpus_queries(points, spark):
     """|queries| ~ |points| with the query side kept distributed — pending
-    set maintained by anti-join + checkpoint, never collected. Property:
+    set maintained by anti-join against each round's checkpoint, never
+    collected. Property:
     the full corpus-as-queries result is exactly the brute-force result,
     with per-query k varying."""
     _assert_knn_equals_bruteforce(points, _corpus_queries(points), max_ring=40)
@@ -252,7 +253,7 @@ def test_knn_matches_bruteforce_on_corpus_queries(points, spark):
 
 def test_knn_corpus_queries_shuffled_joins(points, spark):
     """The same corpus-as-queries run with broadcasting disabled: every
-    round join and the pending semi/anti-joins take the shuffled plan that
+    round join and the pending anti-join take the shuffled plan that
     query sets above ``autoBroadcastJoinThreshold`` get, and the result
     still equals brute force exactly."""
     key = "spark.sql.autoBroadcastJoinThreshold"

@@ -92,11 +92,11 @@ def test_concurrent_commit_loses_cleanly(spark, tmp_path):
     # the winner publishes v2 in the interleave window (between the
     # loser's version read and its publish)
     assert T._publish_manifest(path, 2, {
-        "snapshot": 2, "files": [], "schema": schema,
+        "snapshot": 2, "manifests": [], "schema": schema,
         "properties": {"winner": "other"}}) == 2
     with pytest.raises(RuntimeError, match="concurrent commit"):
         T._publish_manifest(path, 2, {
-            "snapshot": 2, "files": ["/nonexistent/loser.parquet"],
+            "snapshot": 2, "manifests": ["/nonexistent/loser.json"],
             "schema": schema, "properties": {"winner": "loser"}})
     # winner's manifest untouched — no silent lost update
     assert T.snapshot_properties(path, 2) == {"winner": "other"}

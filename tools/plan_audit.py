@@ -87,6 +87,10 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     from quadtree_block_compression_spark.operators.tile_range import tile_range_scan
     import __spark_entry__ as entry
 
+    # start from an empty cache: a frame another caller left cached (say,
+    # assign_tiles over the same 16 images) would replace the plans audited
+    # below with in-memory scans
+    spark.catalog.clearCache()
     # PushedFilters lines must not be truncated for the substring asserts
     prev_len = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
@@ -410,17 +414,22 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     knn_pts = block_centroids(assign_tiles(images), res=6) \
         .select("image_id", "tile_id", "wx", "wy", "cell")
     knn_q = spark.createDataFrame(
-        [("q0", 100.0, 100.0, 3), ("q1", 900.0, 300.0, 2)],
+        [("q0", 100.0, 100.0, 3), ("q1", 900.0, 300.0, 2),
+         ("q2", 500.0, 700.0, 1)],
         "query_id string, x double, y double, k int").localCheckpoint(eager=True)
-    ring_q = knn_mod._ring_cells(knn_q, 2, -1, 6)
+    knn_done = spark.createDataFrame(
+        [("q2",)], "query_id string").localCheckpoint(eager=True)
+    ring_q = knn_mod._ring_cells(
+        knn_q.join(knn_done, "query_id", "left_anti"), 2, -1, 6)
     p = fmt_plan(knn_pts.join(ring_q, knn_pts["cell"] == F.col("join_cell")))
     check("knn_ring round — small query side",
-          "The pending query set is a local checkpoint, which keeps its "
-          "origin's size statistics, so with a small query side the "
-          "unhinted round join is planned as a broadcast hash join of the "
-          "exploded shell cells against the cell-keyed points side; the "
-          "big side is never hash-repartitioned and no round degenerates "
-          "to a cartesian.",
+          "The pending query set is the checkpointed query set anti-joined "
+          "with the ids that earlier rounds' checkpoints finished, which "
+          "keeps the query side's size statistics, so with a small query "
+          "side the unhinted round join is planned as a broadcast hash "
+          "join of the exploded shell cells against the cell-keyed points "
+          "side; the big side is never hash-repartitioned and no round "
+          "degenerates to a cartesian.",
           p, {
               "BroadcastHashJoin present": "BroadcastHashJoin" in p,
               "big side never shuffle-partitioned":
@@ -439,8 +448,9 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           "The same unhinted join, planned with broadcasting disabled as a "
           "stand-in for a corpus-sized query side, is a shuffled cell "
           "equi-join — still never a cartesian. The pending set stays "
-          "distributed at every size (no driver materialization exists "
-          "in knn_ring).",
+          "distributed at every size: the only figures knn_ring brings to "
+          "the driver are the query and finished-query counts observed on "
+          "its checkpoints.",
           p, {
               "cell equi-join present": ("SortMergeJoin" in p
                                          or "ShuffledHashJoin" in p),
