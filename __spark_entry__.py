@@ -947,7 +947,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the ~0.8s the 3-split scan costs at bench scale (at 100 TB the
         # scan has thousands of splits and the point is moot)
         q = docs.select("doc_id",
-                        F.round(_quality_score_expr("text"), 6).alias("quality"))
+                        F.round(_quality_score_expr(), 6).alias("quality"))
         out = sampling.weighted_hash_sample(q, "quality", base_rate=0.5,
                                             salt="wq", max_weight=2.0)
         return out.select("doc_id", "quality")
@@ -962,14 +962,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from quadtree_block_compression_spark.operators.text_analysis import (
             token_count)
         (docs,) = _tables(spark, sf, "documents")
-        tok = token_count("text")
+        tok = token_count()
         strat = docs.select(
             "doc_id",
             F.when(tok < 40, "short").when(tok < 70, "medium")
             .otherwise("long").alias("stratum"))
         out = sampling.mixture_sample(
             strat, targets={"short": 1, "medium": 2, "long": 1},
-            strata_col="stratum", key_col="doc_id", salt="mx")
+            strata_col="stratum", salt="mx")
         return out.select("doc_id", "stratum",
                           F.col("pick_rank").cast("long").alias("pick_rank"))
 
@@ -1760,7 +1760,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from quadtree_block_compression_spark.operators.tile_range import tile_range_scan
         from quadtree_block_compression_spark.functions.cache import persist_tracked
         images = _fixture_images(spark, 16)
-        # persisted: side=None runs a side-discovery action before the scan —
+        # persisted: tile_range_scan runs a side-discovery action first —
         # uncached, the assign_tiles pixel UDF would execute twice
         blocks = persist_tracked(tiling.assign_tiles(images))
         # window over the upper-left 32×32 px at level 2; canvas sides are

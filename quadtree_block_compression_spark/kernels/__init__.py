@@ -19,8 +19,6 @@ from .similarity import compare_pixels_weighted  # noqa: F401
 from .tiles import (  # noqa: F401
     padded_side,
     pad_image,
-    child_bounds,
     tile_children,
     morton_key,
-    tile_path_to_archive_path,
 )

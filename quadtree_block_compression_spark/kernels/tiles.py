@@ -11,8 +11,8 @@ Reimplements (from observed behavior, not ported code):
   ``i&1`` → right half, ``i&2`` → lower half —
   ``pkg/quadtreeImage/quadtreeElement.go:88-118``;
 * base-4 tile path ids (``""`` = root, child appends its digit —
-  ``quadtreeElement.go:121``) and the archive path form ``"0/3/1"``
-  (``quadtreeElement.go:241``);
+  ``quadtreeElement.go:121``; the archive path form ``"0/3/1"``,
+  ``quadtreeElement.go:241``, lives in ``sources/archive``);
 * Morton/Z-order key derived from the path digits (each base-4 digit IS the
   interleaved (y,x) bit pair), used for range partitioning of the blocks
   table at scale.
@@ -51,15 +51,6 @@ def pad_image(img: np.ndarray) -> np.ndarray:
     return out
 
 
-def child_bounds(x0: int, y0: int, x1: int, y1: int, i: int) -> tuple[int, int, int, int]:
-    """Bounds of child ``i`` (0..3) of node ``[x0,x1)×[y0,y1)``, integer halving."""
-    mx = x0 + (x1 - x0) // 2
-    my = y0 + (y1 - y0) // 2
-    cx0, cx1 = (x0, mx) if (i & 1) == 0 else (mx, x1)
-    cy0, cy1 = (y0, my) if (i & 2) == 0 else (my, y1)
-    return cx0, cy0, cx1, cy1
-
-
 def tile_children(bounds: np.ndarray) -> np.ndarray:
     """Vectorized 4-way split: ``(n, 4) [x0,y0,x1,y1] -> (n, 4, 4)``.
 
@@ -85,12 +76,3 @@ def morton_key(tile_id: str) -> int:
     version is computed JVM-side.
     """
     return int(tile_id, 4) if tile_id else 0
-
-
-def tile_path_to_archive_path(tile_id: str) -> str:
-    """``"031" -> "0/3/1"`` — the reference's archive member path form."""
-    return "/".join(tile_id)
-
-
-def archive_path_to_tile_path(path: str) -> str:
-    return path.replace("/", "")

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the embeddings table (vec_id, embedding
+array<float>), probed by a queries table (q_id, q_vec).
 
 Four tiers sharing one rank tail, LSH key builder, assign UDF and probe:
 
@@ -92,26 +93,27 @@ def _unit(col):
                       lambda x, nv: x / nv)
 
 
-def _scored(pairs: DataFrame, id_col: str) -> DataFrame:
-    """(id, q_id, cos) of joined (id, vn, q_id, qn) rows, self-matches
-    dropped, cos rounded to 6 dp for cross-engine float stability."""
-    return (pairs.where(F.col(id_col) != F.col("q_id"))
-            .select(id_col, "q_id",
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(vec_id, q_id, cos) of joined (vec_id, vn, q_id, qn) rows,
+    self-matches dropped, cos rounded to 6 dp for cross-engine float
+    stability."""
+    return (pairs.where(F.col("vec_id") != F.col("q_id"))
+            .select("vec_id", "q_id",
                     F.round(_dot(F.col("vn"), F.col("qn")), 6).alias("cos")))
 
 
-def _topk(cand: DataFrame, k: int, id_col: str) -> DataFrame:
+def _topk(cand: DataFrame, k: int) -> DataFrame:
     """The rank tail every tier shares: per query, candidates ordered by
-    (cos desc, id) and the first ``k`` kept as (q_id, id, cos, rank)."""
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col(id_col))
+    (cos desc, vec_id) and the first ``k`` kept as (q_id, vec_id, cos,
+    rank)."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("q_id", F.col(id_col), "cos", "rank"))
+            .select("q_id", F.col("vec_id"), "cos", "rank"))
 
 
-def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
-                           vec_col: str = "embedding", id_col: str = "vec_id",
-                           q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
+def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame,
+                           k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
     Returns (q_id, vec_id, cos, rank), rank 1..k, cos rounded to 6 dp for
@@ -121,11 +123,11 @@ def cosine_topk_bruteforce(emb: DataFrame, queries: DataFrame, k: int = 5,
     # each pair costs one fold. spread: the embeddings table is a narrow
     # single-digit-MB scan (3 splits at sf1) and the quadratic verify would
     # otherwise run on 3 of 32 cores (r6 finding, CLAUDE spread invariant)
-    e = spread(emb).select(F.col(id_col),
-                           _unit(F.col(vec_col).cast("array<double>")).alias("vn"))
-    q = queries.select(F.col(q_id_col).alias("q_id"),
-                       _unit(F.col(q_vec_col).cast("array<double>")).alias("qn"))
-    return _topk(_scored(e.crossJoin(broadcast(q)), id_col), k, id_col)
+    e = spread(emb).select(F.col("vec_id"),
+                           _unit(F.col("embedding").cast("array<double>")).alias("vn"))
+    q = queries.select(F.col("q_id"),
+                       _unit(F.col("q_vec").cast("array<double>")).alias("qn"))
+    return _topk(_scored(e.crossJoin(broadcast(q))), k)
 
 
 def hyperplane_signs(num_planes: int, dim: int) -> list[list[float]]:
@@ -175,9 +177,8 @@ def _lsh_keys(df: DataFrame, vec_expr, dim: int, num_planes: int,
 
 
 def _lsh_table(emb: DataFrame, dim: int, num_planes: int | None,
-               target_bucket: int, vec_col: str,
-               id_col: str) -> tuple[DataFrame, int]:
-    """The persisted data-side bucket table (id, vn, k1, k2) and the plane
+               target_bucket: int) -> tuple[DataFrame, int]:
+    """The persisted data-side bucket table (vec_id, vn, k1, k2) and the plane
     count it was keyed with. ``num_planes=None`` derives the count from the
     table size (:func:`auto_num_planes`; the count is a parquet footer read
     — metadata-cheap). Spread first — the narrow embeddings scan arrives as
@@ -186,15 +187,13 @@ def _lsh_table(emb: DataFrame, dim: int, num_planes: int | None,
     Persisted: every tier's join (both sides of a self-join) re-reads it."""
     if num_planes is None:
         num_planes = auto_num_planes(emb.count(), target_bucket=target_bucket)
-    keyed = _lsh_keys(spread(emb), F.col(vec_col), dim, num_planes,
-                      keep=[id_col], out="vn")
+    keyed = _lsh_keys(spread(emb), F.col("embedding"), dim, num_planes,
+                      keep=["vec_id"], out="vn")
     return persist_tracked(keyed), num_planes
 
 
 def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
-                    num_planes: int | None = 8, vec_col: str = "embedding",
-                    id_col: str = "vec_id", q_id_col: str = "q_id",
-                    q_vec_col: str = "q_vec", max_bucket: int | None = None,
+                    num_planes: int | None = 8, max_bucket: int | None = None,
                     multiprobe: bool = True,
                     target_bucket: int = 32) -> DataFrame:
     """Approximate top-k: hyperplane-LSH bucket join, exact re-rank.
@@ -212,11 +211,9 @@ def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 6
     starts dropping ordinary buckets once n outgrows cap·2^(planes/2),
     gutting recall.
     """
-    eb, num_planes = _lsh_table(emb, dim, num_planes, target_bucket,
-                                vec_col, id_col)
-    qb = _lsh_keys(queries.select(F.col(q_id_col).alias("q_id"),
-                                  F.col(q_vec_col).alias("qv")),
-                   F.col("qv"), dim, num_planes, keep=["q_id"], out="qn")
+    eb, num_planes = _lsh_table(emb, dim, num_planes, target_bucket)
+    qb = _lsh_keys(queries, F.col("q_vec"), dim, num_planes, keep=["q_id"],
+                   out="qn")
 
     # cos is computed IN each tier's join projection so the cross-tier
     # dedup exchanges (id, q_id, cos) scalars, never the two dim-wide
@@ -227,16 +224,16 @@ def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 5, dim: int = 6
     half = num_planes // 2
     cand = None
     for key, bits in (("k1", half), ("k2", num_planes - half)):
-        side = eb.select(id_col, "vn", F.col(key).alias("kk"))
+        side = eb.select("vec_id", "vn", F.col(key).alias("kk"))
         if max_bucket is not None:
             side = _cap_by_key(side, ["kk"], max_bucket)
         flips = range(bits) if multiprobe else ()
         probes = F.array(F.col(key), *[F.col(key).bitwiseXOR(F.lit(1 << i))
                                        for i in flips])
         qk = qb.select("q_id", "qn", F.explode(probes).alias("kk"))
-        c = _scored(side.join(broadcast(qk), "kk"), id_col)
+        c = _scored(side.join(broadcast(qk), "kk"))
         cand = c if cand is None else cand.unionByName(c)
-    return _topk(cand.dropDuplicates([id_col, "q_id"]), k, id_col)
+    return _topk(cand.dropDuplicates(["vec_id", "q_id"]), k)
 
 
 def _unit_rows(M):
@@ -256,18 +253,17 @@ def _assign_udf(cen):
     return assign
 
 
-def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
-              vec_col: str = "embedding", id_col: str = "vec_id"):
+def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5):
     """Deterministic IVF coarse quantizer: Lloyd's k-means with fixed seeds.
 
     Centroid math happens driver-side (k×dim is tiny); the expensive
     assignment step is one Arrow UDF pass over the table per iteration.
-    Returns ``(assignments_df(id, v, cluster), centroids ndarray (k, dim))``;
+    Returns ``(assignments_df(vec_id, v, cluster), centroids (k, dim))``;
     an empty table has no centroids (shape ``(0, 0)``).
     """
     # deterministic init: the k lowest-id vectors
-    seed_rows = (emb.orderBy(id_col).limit(k)
-                 .select(vec_col).collect())
+    seed_rows = (emb.orderBy("vec_id").limit(k)
+                 .select("embedding").collect())
     centroids = (_unit_rows(np.array([list(r[0]) for r in seed_rows],
                                      dtype=np.float64))
                  if seed_rows else np.zeros((0, 0)))
@@ -280,8 +276,8 @@ def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
     # persist_tracked: every iteration (and the final assign) re-reads this
     # projection — uncached, each pass would repeat the scan + repartition.
     e = persist_tracked(
-        spread(emb).select(F.col(id_col),
-                           F.col(vec_col).cast("array<double>").alias("v")))
+        spread(emb).select(F.col("vec_id"),
+                           F.col("embedding").cast("array<double>").alias("v")))
 
     for _ in range(iters):
         assigned = e.withColumn("cluster", _assign_udf(centroids)("v"))
@@ -297,8 +293,7 @@ def ivf_build(emb: DataFrame, k: int = 16, iters: int = 5,
     return e.withColumn("cluster", _assign_udf(centroids)("v")), centroids
 
 
-def _ivf_queries(queries: DataFrame, cen, nprobe: int, q_id_col: str,
-                 q_vec_col: str) -> DataFrame:
+def _ivf_queries(queries: DataFrame, cen, nprobe: int) -> DataFrame:
     """(q_id, qv, cluster, qn) per query and each of the ``nprobe`` clusters
     whose centroids are nearest it; empty when there are no centroids."""
     nprobe = min(nprobe, len(cen))
@@ -312,27 +307,25 @@ def _ivf_queries(queries: DataFrame, cen, nprobe: int, q_id_col: str,
         order = np.argsort(-(_unit_rows(M) @ cen.T), axis=1)[:, :nprobe]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
-    return (queries.select(F.col(q_id_col).alias("q_id"),
-                           F.col(q_vec_col).cast("array<double>").alias("qv"))
+    return (queries.select(F.col("q_id"),
+                           F.col("q_vec").cast("array<double>").alias("qv"))
             .withColumn("cluster", F.explode(probes("qv")))
             .withColumn("qn", _unit(F.col("qv"))))
 
 
-def _ivf_topk(lists: DataFrame, q: DataFrame, k: int, id_col: str) -> DataFrame:
+def _ivf_topk(lists: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """Exact cosine + top-k of the probed queries ``q`` (:func:`_ivf_queries`)
-    over the inverted lists ``lists`` (id, v, cluster)."""
+    over the inverted lists ``lists`` (vec_id, v, cluster)."""
     # cos computed before the (id, q_id) dedup so the exchange carries
     # scalars, not vectors (r6; cos is deterministic per pair)
     cand = _scored(lists.withColumn("vn", _unit(F.col("v")))
-                   .join(broadcast(q), "cluster"), id_col)
-    return _topk(cand.dropDuplicates([id_col, "q_id"]), k, id_col)
+                   .join(broadcast(q), "cluster"))
+    return _topk(cand.dropDuplicates(["vec_id", "q_id"]), k)
 
 
 def cosine_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 5,
                     n_clusters: int | None = None, nprobe: int = 4,
-                    iters: int = 3,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
+                    iters: int = 3) -> DataFrame:
     """IVF approximate top-k: probe the ``nprobe`` nearest coarse clusters,
     exact cosine + window top-k over just those inverted lists — the
     :func:`ivf_probe_index` probe over an index built in memory. At 10^12
@@ -344,10 +337,8 @@ def cosine_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 5,
     table grows instead of nprobe·n/constant."""
     if n_clusters is None:
         n_clusters = auto_n_clusters(emb.count())
-    assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters,
-                                    vec_col=vec_col, id_col=id_col)
-    q = _ivf_queries(queries, centroids, nprobe, q_id_col, q_vec_col)
-    return _ivf_topk(assigned, q, k, id_col)
+    assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters)
+    return _ivf_topk(assigned, _ivf_queries(queries, centroids, nprobe), k)
 
 
 def _read_centroids(path: str):
@@ -357,7 +348,7 @@ def _read_centroids(path: str):
 
 def _write_lists(assigned: DataFrame, path: str, batch_id: int,
                  overwrite: str) -> None:
-    """Write the assignment table (id, v, cluster) as the ``_batch_id``
+    """Write the assignment table (vec_id, v, cluster) as the ``_batch_id``
     partition ``batch_id``, each inverted list its own ``cluster``
     partition directory. A base build overwrites ``"static"``-ally (whole
     index); an append ``"dynamic"``-ally (its own partitions only)."""
@@ -369,8 +360,7 @@ def _write_lists(assigned: DataFrame, path: str, batch_id: int,
 
 
 def ivf_write_index(emb: DataFrame, path: str, n_clusters: int | None = None,
-                    iters: int = 3, vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> "object":
+                    iters: int = 3) -> "object":
     """Materialize the IVF index at rest: the assignment table written
     ``partitionBy(cluster)`` (each inverted list is its own partition
     directory, so a probe's scan prunes to exactly its lists via partition
@@ -379,8 +369,7 @@ def ivf_write_index(emb: DataFrame, path: str, n_clusters: int | None = None,
     Raises ``ValueError`` on an empty table (an index needs a centroid)."""
     if n_clusters is None:
         n_clusters = auto_n_clusters(emb.count())
-    assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters,
-                                    vec_col=vec_col, id_col=id_col)
+    assigned, centroids = ivf_build(emb, k=n_clusters, iters=iters)
     if not len(centroids):
         raise ValueError(f"cannot build an IVF index at {path} from 0 vectors")
     # _batch_id partitioning (base build = batch 0) makes APPENDS
@@ -395,9 +384,7 @@ def ivf_write_index(emb: DataFrame, path: str, n_clusters: int | None = None,
     return centroids
 
 
-def ivf_append_index(emb_new: DataFrame, path: str, batch_id: int,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> None:
+def ivf_append_index(emb_new: DataFrame, path: str, batch_id: int) -> None:
     """Append a batch to a materialized IVF index WITHOUT rebuilding — the
     growing-corpus path (mirror of ``dedup_text.dedup_index_append``): new
     vectors are assigned to the FROZEN coarse centroids (``_centroids.json``)
@@ -412,29 +399,26 @@ def ivf_append_index(emb_new: DataFrame, path: str, batch_id: int,
     mid-append (parquet readers never see partial files thanks to the
     per-partition commit)."""
     assign = _assign_udf(_read_centroids(path))
-    e = emb_new.select(F.col(id_col),
-                       F.col(vec_col).cast("array<double>").alias("v"))
+    e = emb_new.select(F.col("vec_id"),
+                       F.col("embedding").cast("array<double>").alias("v"))
     _write_lists(e.withColumn("cluster", assign("v")), path, batch_id, "dynamic")
 
 
 def ivf_probe_index(spark, path: str, queries: DataFrame, k: int = 5,
-                    nprobe: int = 4, q_id_col: str = "q_id",
-                    q_vec_col: str = "q_vec", id_col: str = "vec_id") -> DataFrame:
+                    nprobe: int = 4) -> DataFrame:
     """Query a materialized IVF index: rank centroids driver-side (k×dim is
     tiny), push an ``isin(probed clusters)`` predicate into the partitioned
     scan (PartitionFilters — verified in tools/plan_audit.py), exact cosine
     + window top-k on just those lists."""
-    q = _ivf_queries(queries, _read_centroids(path), nprobe, q_id_col, q_vec_col)
+    q = _ivf_queries(queries, _read_centroids(path), nprobe)
     probed = [int(r.cluster) for r in q.select("cluster").distinct().collect()]
     lists = (spark.read.parquet(path)
              .where(F.col("cluster").isin(probed)))  # partition pruning
-    return _ivf_topk(lists, q, k, id_col)
+    return _ivf_topk(lists, q, k)
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.98, dim: int = 64,
                              num_planes: int | None = None,
-                             vec_col: str = "embedding",
-                             id_col: str = "vec_id",
                              max_bucket: int | None = None,
                              target_bucket: int = 32) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold (LSH-pruned,
@@ -451,7 +435,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.98, dim: int =
       self-join — the shared ``cap_by_key`` aggregate + key-list join, like
       the text dedup tiers.
     """
-    eb, _ = _lsh_table(emb, dim, num_planes, target_bucket, vec_col, id_col)
+    eb, _ = _lsh_table(emb, dim, num_planes, target_bucket)
     # cos is computed IN each tier's join projection and the ≥threshold
     # filter applied BEFORE the cross-tier dedup: the dedup exchange then
     # carries only surviving (a, b, cos) scalar rows instead of every
@@ -461,11 +445,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.98, dim: int =
     # immaterial to the result)
     pairs = None
     for key in ("k1", "k2"):
-        keyed = eb.select(id_col, "vn", F.col(key).alias("kk"))
+        keyed = eb.select("vec_id", "vn", F.col(key).alias("kk"))
         if max_bucket is not None:
             keyed = _cap_by_key(keyed, ["kk"], max_bucket)
-        a = keyed.select(F.col(id_col).alias("a"), F.col("vn").alias("va"), "kk")
-        b = keyed.select(F.col(id_col).alias("b"), F.col("vn").alias("vb"), "kk")
+        a = keyed.select(F.col("vec_id").alias("a"), F.col("vn").alias("va"), "kk")
+        b = keyed.select(F.col("vec_id").alias("b"), F.col("vn").alias("vb"), "kk")
         p = (a.join(b, "kk").where(F.col("a") < F.col("b"))
              .select("a", "b",
                      F.round(_dot(F.col("va"), F.col("vb")), 6).alias("cos"))

@@ -22,11 +22,10 @@ from pyspark.sql.functions import broadcast
 
 
 def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                        text_col: str = "text", id_col: str = "doc_id",
                         broadcast_benchmark: bool = True) -> DataFrame:
     """Flag every corpus doc sharing ≥1 word ``n``-gram with the benchmark.
 
-    Returns one row per ``docs`` row: (``id_col``, contaminated,
+    Returns one row per ``docs`` row: (doc_id, contaminated,
     n_shared_ngrams, bench_doc) where ``n_shared_ngrams`` counts DISTINCT
     shared shingles, ``bench_doc`` is the smallest matching benchmark id
     (deterministic), sentinel ``-1`` cast to the id column's own type when
@@ -37,18 +36,18 @@ def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     """
     from .dedup_text import word_shingles
 
-    d_sh = word_shingles(docs, n, text_col, id_col)
-    b_sh = (word_shingles(benchmark, n, text_col, id_col)
-            .select(F.col(id_col).alias("bench_doc"), "shingle"))
+    d_sh = word_shingles(docs, n)
+    b_sh = (word_shingles(benchmark, n)
+            .select(F.col("doc_id").alias("bench_doc"), "shingle"))
     if broadcast_benchmark:
         b_sh = broadcast(b_sh)
     hits = (d_sh.join(b_sh, "shingle")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.countDistinct("shingle").alias("n_shared_ngrams"),
                  F.min("bench_doc").alias("bench_doc")))
-    id_type = benchmark.schema[id_col].dataType
-    return (docs.select(id_col).join(hits, id_col, "left")
-            .select(F.col(id_col),
+    id_type = benchmark.schema["doc_id"].dataType
+    return (docs.select("doc_id").join(hits, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.col("n_shared_ngrams").isNotNull().alias("contaminated"),
                     F.coalesce("n_shared_ngrams", F.lit(0)).cast("long")
                     .alias("n_shared_ngrams"),

@@ -21,9 +21,7 @@ _N_SEGS = 4
 _SEG_MASK = (1 << _SEG_BITS) - 1
 
 
-def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 10,
-                         id_col: str = "image_id",
-                         hash_col: str = "phash") -> DataFrame:
+def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 10) -> DataFrame:
     """Pairs of images with pHash Hamming distance ≤ ``max_hamming``.
 
     One self-join on exploded (segment index, segment value) rows — a single
@@ -40,16 +38,16 @@ def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 10,
     """
     segs = F.array(*[
         F.struct(F.lit(s).alias("si"),
-                 (F.shiftright(F.col(hash_col), s * _SEG_BITS)
+                 (F.shiftright(F.col("phash"), s * _SEG_BITS)
                   .bitwiseAND(F.lit(_SEG_MASK))).alias("sv"))
         for s in range(_N_SEGS)])
-    keyed = (images.select(F.col(id_col), F.col(hash_col),
+    keyed = (images.select(F.col("image_id"), F.col("phash"),
                            F.explode(segs).alias("sg"))
-             .select(id_col, hash_col,
+             .select("image_id", "phash",
                      F.col("sg.si").alias("si"), F.col("sg.sv").alias("sv")))
-    a = keyed.select(F.col(id_col).alias("a"), F.col(hash_col).alias("ha"),
+    a = keyed.select(F.col("image_id").alias("a"), F.col("phash").alias("ha"),
                      "si", "sv")
-    b = keyed.select(F.col(id_col).alias("b"), F.col(hash_col).alias("hb"),
+    b = keyed.select(F.col("image_id").alias("b"), F.col("phash").alias("hb"),
                      "si", "sv")
     xor = F.col("ha").bitwiseXOR(F.col("hb"))
     # reference point: all segments below the join segment differ
@@ -66,8 +64,7 @@ def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 10,
                     "hamming"))
 
 
-def caption_dedup(images: DataFrame, id_col: str = "image_id",
-                  caption_col: str = "caption") -> DataFrame:
+def caption_dedup(images: DataFrame) -> DataFrame:
     """Cross-modal dedup on the CAPTION column of the image table
     (input_hint schema): strip a trailing bracketed annotation
     (``... [source#123]`` boilerplate), fingerprint the normalized caption
@@ -79,7 +76,7 @@ def caption_dedup(images: DataFrame, id_col: str = "image_id",
     all-but-one untitled image downstream — and at web scale the untitled
     fingerprint would be one giant hot partition in the election window,
     so the singleton subkey is also the skew guard).
-    Returns (id, caption_norm, caption_fp, group_size, canonical_id,
+    Returns (image_id, caption_norm, caption_fp, group_size, canonical_id,
     is_canonical).
     """
     from pyspark.sql import Window
@@ -87,44 +84,39 @@ def caption_dedup(images: DataFrame, id_col: str = "image_id",
     # NULL caption normalizes to '' (an untitled image), not NULL — a NULL
     # norm would NULL the fingerprint AND the singleton subkey below,
     # collapsing every NULL-caption image into one dedup group
-    norm = F.coalesce(F.trim(F.regexp_replace(F.col(caption_col),
+    norm = F.coalesce(F.trim(F.regexp_replace(F.col("caption"),
                                               r"\s*\[[^\]]*\]$", "")),
                       F.lit(""))
     keyed = images.select(
-        id_col, norm.alias("caption_norm"),
+        "image_id", norm.alias("caption_norm"),
         portable_hash64(norm).alias("caption_fp"))
     w = Window.partitionBy(
         "caption_fp",
         F.when(F.col("caption_norm") == "",
-               F.col(id_col).cast("string")).otherwise(F.lit("")))
+               F.col("image_id").cast("string")).otherwise(F.lit("")))
     return (keyed
             .withColumn("group_size", F.count(F.lit(1)).over(w))
-            .withColumn("canonical_id", F.min(id_col).over(w))
+            .withColumn("canonical_id", F.min("image_id").over(w))
             .withColumn("is_canonical",
-                        F.col(id_col) == F.col("canonical_id")))
+                        F.col("image_id") == F.col("canonical_id")))
 
 
-def phash_dedup_clusters(images: DataFrame, max_hamming: int = 10,
-                         id_col: str = "image_id",
-                         hash_col: str = "phash") -> DataFrame:
+def phash_dedup_clusters(images: DataFrame, max_hamming: int = 10) -> DataFrame:
     """Near-duplicate image CLUSTERS: connected components over the pHash
     pair edges, one canonical image per component (min id) — the image-
     modality twin of ``dedup_blocks`` → ``components`` (block symlink groups,
     ``quadtreeElement.go:176-221``) and ``corpus_clean_components`` (text).
-    Returns (``id_col``, component_id, component_size, is_canonical); images
+    Returns (image_id, component_id, component_size, is_canonical); images
     with no near-dup are singleton components of themselves.
     """
     from .components import connected_components
-    pairs = phash_near_dup_pairs(images, max_hamming=max_hamming,
-                                 id_col=id_col, hash_col=hash_col)
-    return connected_components(images, pairs, id_col=id_col,
+    pairs = phash_near_dup_pairs(images, max_hamming=max_hamming)
+    return connected_components(images, pairs, id_col="image_id",
                                 a_col="image_a", b_col="image_b")
 
 
-def multimodal_dedup_clusters(images: DataFrame, max_hamming: int = 10,
-                              id_col: str = "image_id",
-                              hash_col: str = "phash",
-                              caption_col: str = "caption") -> DataFrame:
+def multimodal_dedup_clusters(images: DataFrame,
+                              max_hamming: int = 10) -> DataFrame:
     """JOINT image dedup over both evidence channels of the input table:
     edges = pHash near-dup pairs (pixels) ∪ same-normalized-caption pairs
     (text), connected components over the union — the LAION-style rule
@@ -137,17 +129,16 @@ def multimodal_dedup_clusters(images: DataFrame, max_hamming: int = 10,
     group size — a 10^6-member boilerplate-caption group contributes 10^6−1
     edges, not 10^12/2. Rows whose normalized caption is EMPTY contribute
     no caption edges (an untitled image is not evidence of duplication).
-    Returns (``id_col``, component_id, component_size, is_canonical).
+    Returns (image_id, component_id, component_size, is_canonical).
     """
     from .components import connected_components
-    ph = (phash_near_dup_pairs(images, max_hamming=max_hamming,
-                               id_col=id_col, hash_col=hash_col)
+    ph = (phash_near_dup_pairs(images, max_hamming=max_hamming)
           .select(F.col("image_a").alias("a"), F.col("image_b").alias("b")))
-    cap = caption_dedup(images, id_col=id_col, caption_col=caption_col)
+    cap = caption_dedup(images)
     cap_edges = (cap.filter(~F.col("is_canonical")
                             & (F.col("caption_norm") != ""))
                  .select(F.col("canonical_id").alias("a"),
-                         F.col(id_col).alias("b")))
+                         F.col("image_id").alias("b")))
     edges = ph.unionByName(cap_edges)
-    return connected_components(images, edges, id_col=id_col,
+    return connected_components(images, edges, id_col="image_id",
                                 a_col="a", b_col="b")

@@ -13,7 +13,8 @@ with no Python in the hot path except where vector math demands Arrow:
 * SimHash            — 64-bit sign-aggregated token hashes, Hamming verify
 * embedding cosine   — see operators.ann (near-dup tier shares its kernel)
 
-Every operator is deterministic and cross-checkable in ANSI-ish SQL (the
+Every operator reads the documents table's ``doc_id`` and ``text`` columns,
+and is deterministic and cross-checkable in ANSI-ish SQL (the
 DuckDB oracles in ``__spark_entry__``), using the portable md5-based hash
 (``functions.portable_hash``).
 """
@@ -32,26 +33,24 @@ from ..functions.bucketing import cap_by_key as _cap_by_key
 # ------------------------------------------------------------------ exact --
 
 
-def dedup_exact_docs(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def dedup_exact_docs(docs: DataFrame) -> DataFrame:
     """Exact dedup: group by content hash, elect min-id canonical.
 
     Returns (doc_id, content_hash, is_canonical, canonical_doc_id, group_size).
     """
-    h = portable_hash64(F.col(text_col)).alias("content_hash")
-    w = Window.partitionBy("content_hash").orderBy(id_col)
-    return (docs.select(F.col(id_col), h)
-            .withColumn("canonical_doc_id", F.first(id_col).over(w))
-            .withColumn("is_canonical", F.col(id_col) == F.col("canonical_doc_id"))
+    h = portable_hash64(F.col("text")).alias("content_hash")
+    w = Window.partitionBy("content_hash").orderBy("doc_id")
+    return (docs.select(F.col("doc_id"), h)
+            .withColumn("canonical_doc_id", F.first("doc_id").over(w))
+            .withColumn("is_canonical", F.col("doc_id") == F.col("canonical_doc_id"))
             .withColumn("group_size", F.count("*").over(Window.partitionBy("content_hash"))))
 
 
 # ---------------------------------------------------------------- shingles --
 
 
-def _shingle_rows(docs: DataFrame, n: int, text_col: str,
-                  id_col: str) -> DataFrame:
-    """(``id_col``, shingle) rows, one per word n-gram window (duplicates
+def _shingle_rows(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle) rows, one per word n-gram window (duplicates
     kept), built with JVM functions only: split → slice windows via
     transform/sequence → concat — no Python."""
     from ..functions.parallelism import spread
@@ -61,8 +60,8 @@ def _shingle_rows(docs: DataFrame, n: int, text_col: str,
     # window index under interpreted HOF evaluation (~tokens× redundant
     # splits per doc — the embed_text r5 finding); a multi-referenced
     # non-cheap expression survives CollapseProject, so the hoist sticks
-    base = docs.select(F.col(id_col),
-                       F.split(F.col(text_col), r"\s+").alias("_toks"))
+    base = docs.select(F.col("doc_id"),
+                       F.split(F.col("text"), r"\s+").alias("_toks"))
     toks = F.col("_toks")
     # positions 0 .. len-n; docs shorter than n tokens yield no shingles
     # (sequence(0, negative) would count DOWN and slice() would throw, so the
@@ -73,19 +72,17 @@ def _shingle_rows(docs: DataFrame, n: int, text_col: str,
         F.size(toks) >= n,
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
     ).otherwise(F.array().cast("array<string>"))
-    return (base.select(F.col(id_col), F.explode(sh).alias("shingle"))
+    return (base.select(F.col("doc_id"), F.explode(sh).alias("shingle"))
             .where(F.length("shingle") > 0))
 
 
-def word_shingles(docs: DataFrame, n: int, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per doc: (``id_col``, shingle)."""
-    return _shingle_rows(docs, n, text_col, id_col).distinct()
+def word_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
+    return _shingle_rows(docs, n).distinct()
 
 
-def word_shingle_hashes(docs: DataFrame, n: int, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Distinct (``id_col``, h) pairs — :func:`word_shingles` projected
+def word_shingle_hashes(docs: DataFrame, n: int) -> DataFrame:
+    """Distinct (doc_id, h) pairs — :func:`word_shingles` projected
     through ``portable_hash64`` BEFORE the distinct (r6, guide §2.3): every
     downstream exchange and join (the dedup tiers' sizes/verify/self-join
     legs) then carries an 8-byte long instead of a ~25-char string.
@@ -106,14 +103,13 @@ def word_shingle_hashes(docs: DataFrame, n: int, text_col: str = "text",
     # this one exchange instead of re-shuffling the table: the signature
     # aggregate alone previously exchanged ~86 MB of barely-reduced partial
     # rows at sf1 (partial min per doc per source partition), twice.
-    return (_shingle_rows(docs, n, text_col, id_col)
-            .select(F.col(id_col), portable_hash64(F.col("shingle")).alias("h"))
-            .repartition(F.col(id_col))
+    return (_shingle_rows(docs, n)
+            .select(F.col("doc_id"), portable_hash64(F.col("shingle")).alias("h"))
+            .repartition(F.col("doc_id"))
             .distinct())
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
-                        text_col: str = "text", id_col: str = "doc_id",
                         max_df: int | None = None) -> DataFrame:
     """All doc pairs with word-n-gram Jaccard ≥ threshold.
 
@@ -132,13 +128,13 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
     # Hashed shingles (r6): the self-join emits Σ df² candidate rows (67M at
     # sf1) — joining/aggregating on an 8-byte long instead of the shingle
     # string shrinks the widest exchange of this operator several-fold.
-    sh = word_shingle_hashes(docs, n, text_col, id_col)
+    sh = word_shingle_hashes(docs, n)
     if max_df is not None:
         sh = _cap_by_key(sh, ["h"], max_df)
     sh = persist_tracked(sh)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = sh.select(F.col(id_col).alias("a"), "h")
-    b = sh.select(F.col(id_col).alias("b"), "h")
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    a = sh.select(F.col("doc_id").alias("a"), "h")
+    b = sh.select(F.col("doc_id").alias("b"), "h")
     joined = a.join(b, "h").where(F.col("a") < F.col("b"))
     # r6 (guide §2.3 "narrower types"): the pair aggregate keys ~Σ df²/2
     # rows — by far this operator's widest exchange and both its partial
@@ -151,9 +147,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
     # branches produce identical rows, pinned by the DuckDB oracle and a
     # pytest that forces the wide-span fallback.
     packable = False
-    if docs.schema[id_col].dataType.simpleString() in (
+    if docs.schema["doc_id"].dataType.simpleString() in (
             "int", "bigint", "smallint", "tinyint"):
-        lo_hi = docs.agg(F.min(id_col), F.max(id_col)).first()
+        lo_hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
         packable = (lo_hi[0] is not None
                     and int(lo_hi[1]) - int(lo_hi[0]) < (1 << 31))
     # Wide explicit repartition on the aggregate key (r6, guide §2.5/§5):
@@ -171,7 +167,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
         # packed in 64 bits whatever the id type: an int or smallint id
         # shifted left by 32 in its own type is left unshifted
         lo = int(lo_hi[0])
-        id_type = docs.schema[id_col].dataType
+        id_type = docs.schema["doc_id"].dataType
         p = (F.shiftleft(F.col("a").cast("long") - F.lit(lo), 32)
              + (F.col("b").cast("long") - F.lit(lo)))
         inter = (joined.select(p.alias("_p"))
@@ -186,8 +182,8 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
                  .repartition(nparts, F.col("a"), F.col("b"))
                  .groupBy("a", "b").agg(F.count("*").alias("inter")))
     out = (inter
-           .join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza")), "a")
-           .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb")), "b")
+           .join(sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza")), "a")
+           .join(sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb")), "b")
            .withColumn("jaccard", F.col("inter")
                        / (F.col("sza") + F.col("szb") - F.col("inter")))
            .where(F.col("jaccard") >= threshold)
@@ -200,23 +196,21 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3, num_perm: int = 8,
-                       text_col: str = "text", id_col: str = "doc_id",
                        shingle_hashes: DataFrame | None = None) -> DataFrame:
     """Per-doc MinHash signature: min over shingle hashes under ``num_perm``
     portable permutations. Entirely JVM-side (md5 + integer mod).
     ``shingle_hashes`` lets a caller that already materialized the hashed
     shingle table share it instead of recomputing."""
     if shingle_hashes is not None:
-        hashed = shingle_hashes.select(id_col, "h")
+        hashed = shingle_hashes.select("doc_id", "h")
     else:
-        hashed = word_shingle_hashes(docs, n, text_col, id_col)
+        hashed = word_shingle_hashes(docs, n)
     aggs = [F.min(minhash_perm(F.col("h"), i)).alias(f"mh{i}") for i in range(num_perm)]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def _band_buckets(sig: DataFrame, num_perm: int, bands: int,
-                  id_col: str) -> DataFrame:
-    """(``id_col``, band, key) rows: each band's ``num_perm // bands``
+def _band_buckets(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(doc_id, band, key) rows: each band's ``num_perm // bands``
     signature values hashed into one bucket key. No distinct: ``sig`` holds
     ONE row per doc and the band array one struct per band index, so
     (doc, band) rows are unique by construction — a distinct here is a
@@ -228,32 +222,31 @@ def _band_buckets(sig: DataFrame, num_perm: int, bands: int,
                      "_", *[F.col(f"mh{bnd * rows_per_band + r}")
                             for r in range(rows_per_band)])).alias("key"))
         for bnd in range(bands)]
-    return (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bk"))
-            .select(id_col, F.col("bk.band").alias("band"),
+    return (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
+            .select("doc_id", F.col("bk.band").alias("band"),
                     F.col("bk.key").alias("key")))
 
 
-def _lsh_tables(docs: DataFrame, n: int, num_perm: int, bands: int,
-                text_col: str, id_col: str) -> tuple[DataFrame, DataFrame]:
-    """ONE shingle pass → (persisted distinct (``id_col``, h) shingle
+def _lsh_tables(docs: DataFrame, n: int, num_perm: int,
+                bands: int) -> tuple[DataFrame, DataFrame]:
+    """ONE shingle pass → (persisted distinct (doc_id, h) shingle
     hashes, band buckets). The persisted table feeds the signatures and
     the verify's hash arrays (the unshared plan recomputed
     split/explode/distinct per consumer — ~20% of the stage wall at
     sf0.1)."""
-    sh = persist_tracked(word_shingle_hashes(docs, n, text_col, id_col))
-    sig = minhash_signatures(docs, n, num_perm, text_col, id_col,
-                             shingle_hashes=sh)
-    return sh, _band_buckets(sig, num_perm, bands, id_col)
+    sh = persist_tracked(word_shingle_hashes(docs, n))
+    sig = minhash_signatures(docs, n, num_perm, shingle_hashes=sh)
+    return sh, _band_buckets(sig, num_perm, bands)
 
 
-def _hash_arrays(sh: DataFrame, id_col: str) -> DataFrame:
-    """(``id_col``, hs): each doc's shingle hashes as one array. Builds
+def _hash_arrays(sh: DataFrame) -> DataFrame:
+    """(doc_id, hs): each doc's shingle hashes as one array. Builds
     WITHOUT an exchange — ``sh`` is id-partitioned (word_shingle_hashes)."""
-    return sh.groupBy(id_col).agg(F.collect_list("h").alias("hs"))
+    return sh.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
 
 
 def _verify(cand: DataFrame, a_arrays: DataFrame, b_arrays: DataFrame,
-            id_col: str, threshold: float) -> DataFrame:
+            threshold: float) -> DataFrame:
     """Candidate pairs (a, b) whose exact shingle Jaccard ≥ ``threshold``,
     with the ``jaccard`` column and every extra ``a_arrays`` column.
 
@@ -265,9 +258,9 @@ def _verify(cand: DataFrame, a_arrays: DataFrame, b_arrays: DataFrame,
     Candidate pairs are LSH-collision-sized (≪ corpus), so carrying two
     arrays per pair through the two joins ships about the bytes the
     exploded chain would, across fewer boundaries."""
-    av = (a_arrays.withColumnRenamed(id_col, "a")
+    av = (a_arrays.withColumnRenamed("doc_id", "a")
           .withColumnRenamed("hs", "_ha"))
-    bv = b_arrays.select(F.col(id_col).alias("b"), F.col("hs").alias("_hb"))
+    bv = b_arrays.select(F.col("doc_id").alias("b"), F.col("hs").alias("_hb"))
     return (cand.join(av, "a").join(bv, "b")
             # hoisted column: the intersect is multi-referenced (numerator
             # + denominator) and survives CollapseProject as ONE evaluation
@@ -279,7 +272,6 @@ def _verify(cand: DataFrame, a_arrays: DataFrame, b_arrays: DataFrame,
 
 def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_perm: int = 8,
                       bands: int = 4, threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id",
                       max_bucket: int | None = None) -> DataFrame:
     """Candidate pairs sharing ≥1 LSH band, verified by exact Jaccard.
 
@@ -293,17 +285,17 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_perm: int = 8,
     Members of a dropped bucket still meet through their other bands — and
     truly identical docs are the *exact* tier's job anyway.
     """
-    sh, bucketed = _lsh_tables(docs, n, num_perm, bands, text_col, id_col)
+    sh, bucketed = _lsh_tables(docs, n, num_perm, bands)
     if max_bucket is not None:
         bucketed = _cap_by_key(bucketed, ["band", "key"], max_bucket)
     # persisted: the bucket table feeds both sides of the self-join
     bucketed = persist_tracked(bucketed)
-    a = bucketed.select(F.col(id_col).alias("a"), "band", "key")
-    b = bucketed.select(F.col(id_col).alias("b"), "band", "key")
+    a = bucketed.select(F.col("doc_id").alias("a"), "band", "key")
+    b = bucketed.select(F.col("doc_id").alias("b"), "band", "key")
     cand = (a.join(b, ["band", "key"]).where(F.col("a") < F.col("b"))
             .select("a", "b").distinct())
-    arrs = _hash_arrays(sh, id_col)
-    return (_verify(cand, arrs, arrs, id_col, threshold)
+    arrs = _hash_arrays(sh)
+    return (_verify(cand, arrs, arrs, threshold)
             .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
                     F.round("jaccard", 6).alias("jaccard")))
 
@@ -311,8 +303,7 @@ def minhash_lsh_pairs(docs: DataFrame, n: int = 3, num_perm: int = 8,
 # ----------------------------------------------------------------- simhash --
 
 
-def simhash64(docs: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: sum token-hash bit columns, take signs.
 
     Bit extraction/aggregation is pure SQL (shiftright/bitwiseAND over the
@@ -320,23 +311,22 @@ def simhash64(docs: DataFrame, text_col: str = "text",
     """
     from ..functions.parallelism import spread
     docs = spread(docs)  # token explode must not serialize behind a 1-split scan
-    toks = (docs.select(id_col, F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"))
+    toks = (docs.select("doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("tok"))
             .where(F.length("tok") > 0))
-    hashed = toks.select(id_col, portable_hash64(F.col("tok")).alias("h"))
+    hashed = toks.select("doc_id", portable_hash64(F.col("tok")).alias("h"))
     # contribution of bit i: +1 if set else -1 → sum sign = bit of simhash
     aggs = [F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s{i}")
             for i in range(60)]
-    sums = hashed.groupBy(id_col).agg(*aggs)
+    sums = hashed.groupBy("doc_id").agg(*aggs)
     sim = None
     for i in range(60):
         bit = F.when(F.col(f"s{i}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
         term = bit * F.lit(1 << i).cast("long")
         sim = term if sim is None else sim + term
-    return sums.select(id_col, sim.alias("simhash"))
+    return sums.select("doc_id", sim.alias("simhash"))
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 12,
-                  text_col: str = "text", id_col: str = "doc_id",
                   max_bucket: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -353,18 +343,18 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 12,
     # rows replaces four shuffles over n rows each plus a 4-way union
     # distinct (measured 2.8× at sf0.1, identical pairs). The simhash
     # aggregation itself is persisted: it feeds both join sides.
-    sig = persist_tracked(simhash64(docs, text_col, id_col))
+    sig = persist_tracked(simhash64(docs))
     segs = F.array(*[F.struct(F.lit(s).alias("si"),
                               (F.shiftright(F.col("simhash"), s * 15)
                                .bitwiseAND(F.lit((1 << 15) - 1))).alias("sv"))
                      for s in range(4)])
-    keyed = (sig.select(id_col, "simhash", F.explode(segs).alias("sg"))
-             .select(id_col, "simhash",
+    keyed = (sig.select("doc_id", "simhash", F.explode(segs).alias("sg"))
+             .select("doc_id", "simhash",
                      F.col("sg.si").alias("si"), F.col("sg.sv").alias("sv")))
     if max_bucket is not None:
         keyed = _cap_by_key(keyed, ["si", "sv"], max_bucket)
-    a = keyed.select(F.col(id_col).alias("a"), F.col("simhash").alias("ha"), "si", "sv")
-    b = keyed.select(F.col(id_col).alias("b"), F.col("simhash").alias("hb"), "si", "sv")
+    a = keyed.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"), "si", "sv")
+    b = keyed.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"), "si", "sv")
     # hamming filter BEFORE the pair-dedup distinct: bit_count is a codegen
     # scalar, so filtering in the join projection shrinks the distinct's
     # shuffle to just the surviving (a, b, hamming) rows
@@ -384,46 +374,45 @@ _INDEX_LAYOUT = 2
 _INDEX_TABLES = ("buckets", "shingles", "hashes")
 
 
-def _index_tables(docs: DataFrame, n: int, num_perm: int, bands: int,
-                  text_col: str, id_col: str) -> dict[str, DataFrame]:
-    """The corpus side of the incremental probe: ``buckets`` (id, band,
-    key — banded MinHash keys), ``shingles`` (id, hs — the verify's
-    per-doc hash arrays) and ``hashes`` (id, h — the exact tier's content
+def _index_tables(docs: DataFrame, n: int, num_perm: int,
+                  bands: int) -> dict[str, DataFrame]:
+    """The corpus side of the incremental probe: ``buckets`` (doc_id, band,
+    key — banded MinHash keys), ``shingles`` (doc_id, hs — the verify's
+    per-doc hash arrays) and ``hashes`` (doc_id, h — the exact tier's content
     hash). In memory for :func:`dedup_incremental`, at rest for the
     indexed form."""
-    sh, buckets = _lsh_tables(docs, n, num_perm, bands, text_col, id_col)
-    return {"buckets": buckets, "shingles": _hash_arrays(sh, id_col),
-            "hashes": docs.select(id_col,
-                                  portable_hash64(F.col(text_col)).alias("h"))}
+    sh, buckets = _lsh_tables(docs, n, num_perm, bands)
+    return {"buckets": buckets, "shingles": _hash_arrays(sh),
+            "hashes": docs.select("doc_id",
+                                  portable_hash64(F.col("text")).alias("h"))}
 
 
 def _probe(cor: dict[str, DataFrame], new_docs: DataFrame, n: int,
-           num_perm: int, bands: int, threshold: float, text_col: str,
-           id_col: str, max_bucket: int | None) -> DataFrame:
+           num_perm: int, bands: int, threshold: float,
+           max_bucket: int | None) -> DataFrame:
     """Classify every doc of ``new_docs`` against the corpus tables ``cor``
     (see :func:`_index_tables`) and the rest of its own batch — the one
     classifier behind both incremental forms. Candidates are ONLY
     corpus×new and new×new; the corpus never self-joins."""
     # exact tier: portable content hash, new vs corpus only
-    h_new = new_docs.select(F.col(id_col).alias("b"),
-                            portable_hash64(F.col(text_col)).alias("h"))
-    exact = (h_new.join(cor["hashes"].select(F.col(id_col).alias("a"), "h"),
+    h_new = new_docs.select(F.col("doc_id").alias("b"),
+                            portable_hash64(F.col("text")).alias("h"))
+    exact = (h_new.join(cor["hashes"].select(F.col("doc_id").alias("a"), "h"),
                         "h")
              .groupBy("b").agg(F.min("a").alias("exact_of")))
 
     # near tier: the batch's own shingle pass (the ONLY text scanned when
     # the corpus side is at rest) + the union bucket table, capped over
     # corpus∪batch occupancy like the self-join tier
-    sh_new, new_buckets = _lsh_tables(new_docs, n, num_perm, bands,
-                                      text_col, id_col)
+    sh_new, new_buckets = _lsh_tables(new_docs, n, num_perm, bands)
     buckets = (cor["buckets"].withColumn("_new", F.lit(False))
                .unionByName(new_buckets.withColumn("_new", F.lit(True))))
     if max_bucket is not None:
         buckets = _cap_by_key(buckets, ["band", "key"], max_bucket)
     buckets = persist_tracked(buckets)
-    new_b = buckets.where("_new").select(F.col(id_col).alias("b"),
+    new_b = buckets.where("_new").select(F.col("doc_id").alias("b"),
                                          "band", "key")
-    cor_b = buckets.where("NOT _new").select(F.col(id_col).alias("a"),
+    cor_b = buckets.where("NOT _new").select(F.col("doc_id").alias("a"),
                                              "band", "key")
     # corpus×new plus within-batch (a < b); NEVER corpus×corpus
     cand = (cor_b.join(new_b, ["band", "key"]).select("a", "b")
@@ -434,20 +423,20 @@ def _probe(cor: dict[str, DataFrame], new_docs: DataFrame, n: int,
             .distinct())
 
     # verify: b is always a batch doc; the a-side arrays carry their side
-    new_arrays = _hash_arrays(sh_new, id_col)
+    new_arrays = _hash_arrays(sh_new)
     a_arrays = (cor["shingles"].withColumn("_new", F.lit(False))
                 .unionByName(new_arrays.withColumn("_new", F.lit(True))))
-    near = (_verify(cand, a_arrays, new_arrays, id_col, threshold)
+    near = (_verify(cand, a_arrays, new_arrays, threshold)
             .groupBy("b")
             .agg(F.min(F.when(~F.col("_new"), F.col("a"))).alias("near_of"),
                  F.min(F.when(F.col("_new"), F.col("a"))).alias("nearnew_of")))
 
     # tier election, in precedence order exact > near > near_new > unique
-    return (new_docs.select(F.col(id_col).alias("b"))
+    return (new_docs.select(F.col("doc_id").alias("b"))
             .join(exact, "b", "left")
             .join(near, "b", "left")
             .select(
-                F.col("b").alias(id_col),
+                F.col("b").alias("doc_id"),
                 F.when(F.col("exact_of").isNotNull(), F.lit("exact"))
                 .when(F.col("near_of").isNotNull(), F.lit("near"))
                 .when(F.col("nearnew_of").isNotNull(), F.lit("near_new"))
@@ -459,7 +448,6 @@ def _probe(cor: dict[str, DataFrame], new_docs: DataFrame, n: int,
 def dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
                       n: int = 3, num_perm: int = 8, bands: int = 4,
                       threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id",
                       max_bucket: int | None = None) -> DataFrame:
     """Batch-vs-corpus dedup — the operation an append-only corpus
     pipeline runs per ingest batch: classify every NEW doc against the
@@ -481,12 +469,11 @@ def dedup_incremental(new_docs: DataFrame, corpus: DataFrame,
     side is the in-memory form of the :func:`dedup_index_write` index, so
     this IS :func:`dedup_incremental_indexed` without the parquet round
     trip; the band-bucket cap applies to the union's buckets, exactly like
-    the self-join tier. Returns (``id_col``, dup_tier, dup_of) for every
+    the self-join tier. Returns (doc_id, dup_tier, dup_of) for every
     new doc.
     """
-    cor = _index_tables(corpus, n, num_perm, bands, text_col, id_col)
-    return _probe(cor, new_docs, n, num_perm, bands, threshold, text_col,
-                  id_col, max_bucket)
+    cor = _index_tables(corpus, n, num_perm, bands)
+    return _probe(cor, new_docs, n, num_perm, bands, threshold, max_bucket)
 
 
 def _check_meta(path: str, n: int, num_perm: int, bands: int) -> None:
@@ -503,15 +490,14 @@ def _check_meta(path: str, n: int, num_perm: int, bands: int) -> None:
 
 
 def _write_index(docs: DataFrame, path: str, batch_id: int, overwrite: str,
-                 n: int, num_perm: int, bands: int, text_col: str,
-                 id_col: str) -> None:
+                 n: int, num_perm: int, bands: int) -> None:
     """Write :func:`_index_tables` of ``docs`` under ``path`` as the
     ``_batch_id`` partition ``batch_id``. Every table is partitioned by
     _batch_id (base build = -1): streaming ingest appends each micro-batch
     as its OWN partition with ``"dynamic"`` overwrite, so a replayed batch
     replaces itself (exactly-once), and the probe can exclude an in-flight
     batch id; a base build overwrites ``"static"``-ally (whole table)."""
-    tables = _index_tables(docs, n, num_perm, bands, text_col, id_col)
+    tables = _index_tables(docs, n, num_perm, bands)
     for name in _INDEX_TABLES:
         (tables[name].withColumn("_batch_id", F.lit(int(batch_id)))
          .write.mode("overwrite")
@@ -520,8 +506,7 @@ def _write_index(docs: DataFrame, path: str, batch_id: int, overwrite: str,
 
 
 def dedup_index_write(corpus: DataFrame, path: str,
-                      n: int = 3, num_perm: int = 8, bands: int = 4,
-                      text_col: str = "text", id_col: str = "doc_id") -> None:
+                      n: int = 3, num_perm: int = 8, bands: int = 4) -> None:
     """Materialize the corpus side of :func:`dedup_incremental` as an
     index at rest — the truly incremental form: the corpus is scanned
     ONCE when the index is (re)built, and each ingest batch reads only
@@ -533,30 +518,26 @@ def dedup_index_write(corpus: DataFrame, path: str,
     the verify side), ``hashes`` (doc_id, h — exact tier), and
     ``meta.json`` pinning (layout, n, num_perm, bands) so a mismatched
     probe fails fast instead of silently bucketing differently."""
-    _write_index(corpus, path, -1, "static", n, num_perm, bands, text_col,
-                 id_col)
+    _write_index(corpus, path, -1, "static", n, num_perm, bands)
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump({"layout": _INDEX_LAYOUT, "n": n, "num_perm": num_perm,
                    "bands": bands}, f)
 
 
 def dedup_index_append(accepted: DataFrame, path: str, batch_id: int,
-                       n: int = 3, num_perm: int = 8, bands: int = 4,
-                       text_col: str = "text", id_col: str = "doc_id") -> None:
+                       n: int = 3, num_perm: int = 8, bands: int = 4) -> None:
     """Grow a :func:`dedup_index_write` index with a micro-batch's ACCEPTED
     (unique) docs — written as the batch's own ``_batch_id`` partition via
     dynamic overwrite, so a Structured-Streaming replay of the same batch
     id replaces rather than duplicates (the exactly-once half the
     checkpoint cannot provide)."""
     _check_meta(path, n, num_perm, bands)
-    _write_index(accepted, path, batch_id, "dynamic", n, num_perm, bands,
-                 text_col, id_col)
+    _write_index(accepted, path, batch_id, "dynamic", n, num_perm, bands)
 
 
 def dedup_incremental_indexed(spark, path: str, new_docs: DataFrame,
                               n: int = 3, num_perm: int = 8, bands: int = 4,
                               threshold: float = 0.5,
-                              text_col: str = "text", id_col: str = "doc_id",
                               max_bucket: int | None = None,
                               exclude_batch_id: int | None = None) -> DataFrame:
     """:func:`dedup_incremental` probing a :func:`dedup_index_write` index
@@ -575,5 +556,4 @@ def dedup_incremental_indexed(spark, path: str, new_docs: DataFrame,
         if exclude_batch_id is not None:
             df = df.where(F.col("_batch_id") != int(exclude_batch_id))
         cor[name] = df.drop("_batch_id")
-    return _probe(cor, new_docs, n, num_perm, bands, threshold, text_col,
-                  id_col, max_bucket)
+    return _probe(cor, new_docs, n, num_perm, bands, threshold, max_bucket)

@@ -23,31 +23,29 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.portable_hash import portable_hash64
 
 
-def hashed_embedding(docs: DataFrame, dim: int = 64,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """(``id_col``, embedding array<double>) — L2-normalized signed
+def hashed_embedding(docs: DataFrame, dim: int = 64) -> DataFrame:
+    """(doc_id, embedding array<double>) — L2-normalized signed
     hashing-trick vector; blank documents embed as the zero vector."""
     from ..functions.parallelism import spread
 
     # explode-heavy: a single-file scan is ONE partition regardless of
     # maxPartitionBytes and would serialize the tokenize+hash stage
     docs = spread(docs)
-    t = F.trim(F.col(text_col))
-    toks = (docs.select(F.col(id_col), F.explode(F.split(t, r"\s+")).alias("tok"))
+    t = F.trim(F.col("text"))
+    toks = (docs.select(F.col("doc_id"), F.explode(F.split(t, r"\s+")).alias("tok"))
             .where(F.length("tok") > 0))
     h = portable_hash64(F.col("tok"))
     sgn = F.when(F.shiftright(h, 6).bitwiseAND(F.lit(1)) == 0,
                  F.lit(1.0)).otherwise(F.lit(-1.0))
-    cells = (toks.select(id_col, F.pmod(h, F.lit(dim)).alias("d"), sgn.alias("s"))
-             .groupBy(id_col, "d").agg(F.sum("s").alias("v")))
+    cells = (toks.select("doc_id", F.pmod(h, F.lit(dim)).alias("d"), sgn.alias("s"))
+             .groupBy("doc_id", "d").agg(F.sum("s").alias("v")))
     # the L2 norm is computed IN the aggregate, once per doc: a lambda-
     # captured norm expression would re-evaluate per array element in the
     # final transform (higher-order functions run interpreted, outside
     # whole-stage codegen — measured O(dim³) per row, ~14s → ~1s at sf0.1).
     # Sparse-vs-dense summation order is immaterial: v are small signed
     # integer counts, so v² sums are float-exact.
-    assembled = (cells.groupBy(id_col)
+    assembled = (cells.groupBy("doc_id")
                  .agg(F.map_from_entries(
                           F.collect_list(F.struct("d", "v"))).alias("m"),
                       F.greatest(F.sqrt(F.sum(F.col("v") * F.col("v"))),
@@ -63,10 +61,10 @@ def hashed_embedding(docs: DataFrame, dim: int = 64,
                       lambda i: F.round(
                           F.coalesce(F.col("m")[i.cast("long")], F.lit(0.0))
                           / F.col("_nrm"), 6))
-    out = assembled.select(F.col(id_col), emb.alias("embedding"))
+    out = assembled.select(F.col("doc_id"), emb.alias("embedding"))
     # blank/whitespace-only docs produced no tokens: re-enter as zero vectors
     zeros = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)),
                         lambda _: F.lit(0.0))
-    return (docs.select(id_col).join(out, id_col, "left")
-            .select(F.col(id_col),
+    return (docs.select("doc_id").join(out, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce("embedding", zeros).alias("embedding")))

@@ -84,26 +84,25 @@ def decode_wav_pcm(data: bytes):
     return x, sr, nch
 
 
-AUDIO_FEATURES_SCHEMA = ("{id} long, codec string, sample_rate int, "
+AUDIO_FEATURES_SCHEMA = ("clip_id long, codec string, sample_rate int, "
                          "n_channels int, n_frames long, duration_s double, "
                          "mean_amp double, peak_amp double, rms double")
 
 
-def audio_features(audio: DataFrame, id_col: str = "clip_id",
-                   bytes_col: str = "bytes") -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """Per-clip audio features over a binary column.
 
     RIFF/WAVE PCM decodes for real (stdlib ``wave``); compressed formats
     raise ``NotImplementedError`` (no codec libs in this container).
-    One Arrow pass; only (id, bytes) cross the boundary."""
-    src = audio.select(id_col, bytes_col)
+    One Arrow pass; only (clip_id, bytes) cross the boundary."""
+    src = audio.select("clip_id", "bytes")
 
     def dec(batches):
         import numpy as np
         import pandas as pd
         for pdf in batches:
             out = []
-            for cid, data in zip(pdf[id_col], pdf[bytes_col]):
+            for cid, data in zip(pdf["clip_id"], pdf["bytes"]):
                 data = bytes(data)
                 if not (data[:4] == b"RIFF" and data[8:12] == b"WAVE"):
                     raise NotImplementedError(
@@ -116,22 +115,20 @@ def audio_features(audio: DataFrame, id_col: str = "clip_id",
                             float(x.mean()) if len(x) else 0.0,
                             float(np.abs(x).max()) if len(x) else 0.0,
                             float(np.sqrt((x * x).mean())) if len(x) else 0.0))
-            yield pd.DataFrame(out, columns=[id_col, "codec", "sample_rate",
+            yield pd.DataFrame(out, columns=["clip_id", "codec", "sample_rate",
                                              "n_channels", "n_frames",
                                              "duration_s", "mean_amp",
                                              "peak_amp", "rms"])
 
-    return src.mapInPandas(dec, AUDIO_FEATURES_SCHEMA.format(id=id_col))
+    return src.mapInPandas(dec, AUDIO_FEATURES_SCHEMA)
 
 
-VIDEO_SAMPLE_SCHEMA = ("{id} long, frame_idx int, w int, h int, "
+VIDEO_SAMPLE_SCHEMA = ("video_id long, frame_idx int, w int, h int, "
                        "mean_r double, mean_g double, mean_b double, "
                        "frame_png binary")
 
 
-def video_frame_sample(video: DataFrame, every_n: int = 10,
-                       id_col: str = "video_id",
-                       bytes_col: str = "bytes") -> DataFrame:
+def video_frame_sample(video: DataFrame, every_n: int = 10) -> DataFrame:
     """Sample every ``every_n``-th frame (1 row in → N frame rows out).
 
     REAL decode path: Motion-JPEG in a RIFF/AVI container (``kernels/avi.py``
@@ -139,7 +136,7 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
     interchange format, feasible without ffmpeg. Other containers raise (no
     inter-frame codecs in this environment). One Arrow pass; each frame row
     carries dims, channel means and a PNG re-encode."""
-    src = video.select(id_col, bytes_col)
+    src = video.select("video_id", "bytes")
 
     def sample(batches):
         import pandas as pd
@@ -148,7 +145,7 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
         from ..kernels.jfif import decode_jfif
         for pdf in batches:
             out = []
-            for vid, data in zip(pdf[id_col], pdf[bytes_col]):
+            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
                 data = bytes(data)
                 if not is_avi(data):
                     raise NotImplementedError(
@@ -162,11 +159,11 @@ def video_frame_sample(video: DataFrame, every_n: int = 10,
                                 float(frame[..., 1].mean()),
                                 float(frame[..., 2].mean()),
                                 encode_png(frame)))
-            yield pd.DataFrame(out, columns=[id_col, "frame_idx", "w", "h",
+            yield pd.DataFrame(out, columns=["video_id", "frame_idx", "w", "h",
                                              "mean_r", "mean_g", "mean_b",
                                              "frame_png"])
 
-    return src.mapInPandas(sample, VIDEO_SAMPLE_SCHEMA.format(id=id_col))
+    return src.mapInPandas(sample, VIDEO_SAMPLE_SCHEMA)
 
 
 def make_mjpeg_avi_clip(video_id: int, h: int = 32, w: int = 48,

@@ -22,12 +22,11 @@ from ..functions.portable_hash import portable_hash64
 from .text_analysis import token_count
 
 
-def pack_sequences(docs: DataFrame, budget: int, n_parts: int = 32,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int,
+                   n_parts: int = 32) -> DataFrame:
     """Assign each document its (shard, pack, offset) under concat-then-split
     packing with ``budget`` tokens per pack and ``n_parts`` independent
-    shards. Returns (``id_col``, n_tokens, part, pack_id, pack_offset) where
+    shards. Returns (doc_id, n_tokens, part, pack_id, pack_offset) where
     ``pack_id = pack_within_shard * n_parts + part`` (globally unique) and
     ``pack_offset`` is the document's first-token position inside its pack.
     Deterministic: shard = portable_hash(id) mod n_parts, shard order = id.
@@ -36,11 +35,11 @@ def pack_sequences(docs: DataFrame, budget: int, n_parts: int = 32,
         raise ValueError(f"budget must be positive, got {budget}")
     if n_parts <= 0:
         raise ValueError(f"n_parts must be positive, got {n_parts}")
-    part = F.pmod(portable_hash64(F.col(id_col).cast("string")),
+    part = F.pmod(portable_hash64(F.col("doc_id").cast("string")),
                   F.lit(n_parts))
-    w = (Window.partitionBy("part").orderBy(id_col)
+    w = (Window.partitionBy("part").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    sized = docs.select(id_col, token_count(text_col).alias("n_tokens"),
+    sized = docs.select("doc_id", token_count().alias("n_tokens"),
                         part.alias("part"))
     started = sized.withColumn(
         "_start", F.sum("n_tokens").over(w) - F.col("n_tokens"))
@@ -49,4 +48,4 @@ def pack_sequences(docs: DataFrame, budget: int, n_parts: int = 32,
                         F.expr(f"_start DIV {int(budget)}") * n_parts
                         + F.col("part"))
             .withColumn("pack_offset", F.pmod("_start", F.lit(int(budget))))
-            .select(id_col, "n_tokens", "part", "pack_id", "pack_offset"))
+            .select("doc_id", "n_tokens", "part", "pack_id", "pack_offset"))

@@ -81,17 +81,16 @@ def rasterize(geoms: DataFrame, res: int) -> DataFrame:
                                     from_grid("ix", "iy", res).alias("cell"))
 
 
-def compact_cells(cells: DataFrame, res: int,
-                  group_col: str = "geom_id") -> DataFrame:
+def compact_cells(cells: DataFrame, res: int) -> DataFrame:
     """Minimal quadtree cover: replace every COMPLETE 4-sibling set by its
     parent, iteratively to resolution 0 — H3's ``compact`` on the Z-order
     grid, and exactly the quadtree-block idea of the reference (a uniform
     region is stored as one coarse block, ``quadtreeImage.go``'s leaf rule
     1, re-expressed as a relational rollup).
 
-    ``cells``: (``group_col``, ix, iy) at uniform resolution ``res``
+    ``cells``: (geom_id, ix, iy) at uniform resolution ``res``
     (e.g. :func:`rasterize` output); compaction is per group. Returns
-    (``group_col``, res, ix, iy, cell) — a mixed-resolution set that tiles
+    (geom_id, res, ix, iy, cell) — a mixed-resolution set that tiles
     exactly the input set (pytested: ``uncompact_cells`` restores it).
 
     Plan: ``res`` rounds of (parent aggregate + left-anti join), each round
@@ -106,11 +105,11 @@ def compact_cells(cells: DataFrame, res: int,
     # checkpoint before the loop: round one consumes ``cur`` twice (parent
     # aggregate + anti-join) and would otherwise execute the caller's
     # upstream plan (e.g. a full rasterize) twice
-    cur = (cells.select(group_col, "ix", "iy").distinct()
+    cur = (cells.select("geom_id", "ix", "iy").distinct()
            .localCheckpoint(eager=True))
     kept = []
     for r in range(res, 0, -1):
-        full = (cur.groupBy(group_col,
+        full = (cur.groupBy("geom_id",
                             F.floor(F.col("ix") / 2).cast("int").alias("pix"),
                             F.floor(F.col("iy") / 2).cast("int").alias("piy"))
                 .agg(F.count(F.lit(1)).alias("_n"))
@@ -120,23 +119,22 @@ def compact_cells(cells: DataFrame, res: int,
                   .withColumn("_jy", F.floor(F.col("iy") / 2).cast("int"))
                   .join(full.withColumnRenamed("pix", "_jx")
                             .withColumnRenamed("piy", "_jy"),
-                        [group_col, "_jx", "_jy"], "left_anti")
+                        ["geom_id", "_jx", "_jy"], "left_anti")
                   .drop("_jx", "_jy"))
         kept.append(keep_r.withColumn("res", F.lit(r)))
         # bound plan depth: each level's plan would otherwise nest the
         # whole chain below it (res levels deep at fine resolutions)
-        cur = (full.select(group_col, F.col("pix").alias("ix"),
+        cur = (full.select("geom_id", F.col("pix").alias("ix"),
                            F.col("piy").alias("iy"))
                .localCheckpoint(eager=True))
     out = cur.withColumn("res", F.lit(0))
     for k in kept:
         out = out.unionByName(k)
-    return out.select(group_col, "res", "ix", "iy",
+    return out.select("geom_id", "res", "ix", "iy",
                       from_grid("ix", "iy", F.col("res")).alias("cell"))
 
 
-def uncompact_cells(compacted: DataFrame, res: int,
-                    group_col: str = "geom_id") -> DataFrame:
+def uncompact_cells(compacted: DataFrame, res: int) -> DataFrame:
     """Inverse of :func:`compact_cells`: expand every cell to its
     descendants at uniform ``res`` (H3 ``uncompact``). Pure JVM — each cell
     at resolution r explodes to its 4^(res-r) children via two
@@ -153,7 +151,7 @@ def uncompact_cells(compacted: DataFrame, res: int,
             .where(F.col("res") <= res)
             .withColumn("_ox", F.explode(F.sequence(F.lit(0), scale - 1)))
             .withColumn("_oy", F.explode(F.sequence(F.lit(0), scale - 1)))
-            .select(group_col,
+            .select("geom_id",
                     (base_x + F.col("_ox")).cast("int").alias("ix"),
                     (base_y + F.col("_oy")).cast("int").alias("iy")))
 

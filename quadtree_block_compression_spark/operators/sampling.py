@@ -20,20 +20,18 @@ from ..functions.portable_hash import portable_hash64
 _MOD = 1_000_000  # hash buckets per unit rate: rates quantize to 1e-6
 
 
-def hash_sample(df: DataFrame, rate: float, key_col: str = "doc_id",
-                salt: str = "s0") -> DataFrame:
-    """Keep rows where ``portable_hash(salt || key) mod 1e6 < rate·1e6``.
+def hash_sample(df: DataFrame, rate: float, salt: str = "s0") -> DataFrame:
+    """Keep rows where ``portable_hash(salt || doc_id) mod 1e6 < rate·1e6``.
 
     ``salt`` decorrelates independent samples of the same table; the
     portable hash makes the selection replicable in the DuckDB oracle."""
     h = portable_hash64(F.concat(F.lit(salt + ":"),
-                                 F.col(key_col).cast("string")))
+                                 F.col("doc_id").cast("string")))
     return df.where(F.pmod(h, F.lit(_MOD)) < int(rate * _MOD))
 
 
 def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
                            strata_col: str = "source",
-                           key_col: str = "doc_id",
                            default_rate: float = 0.0,
                            salt: str = "s0") -> DataFrame:
     """Per-stratum hash sampling (e.g. downsample boilerplate-heavy sources,
@@ -41,7 +39,7 @@ def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
     threshold is a CASE expression, so the filter stays a pushable
     whole-stage-codegen predicate at any table size."""
     h = F.pmod(portable_hash64(F.concat(F.lit(salt + ":"),
-                                        F.col(key_col).cast("string"))),
+                                        F.col("doc_id").cast("string"))),
                F.lit(_MOD))
     thresh = F.lit(int(default_rate * _MOD))
     for value, rate in sorted(rates.items()):
@@ -51,7 +49,7 @@ def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
 
 
 def mixture_sample(df: DataFrame, targets: dict[str, int],
-                   strata_col: str = "stratum", key_col: str = "doc_id",
+                   strata_col: str = "stratum",
                    salt: str = "m0") -> DataFrame:
     """Largest mixture-faithful subsample: keep the maximum total T such
     that every stratum can supply its share, then take
@@ -59,7 +57,7 @@ def mixture_sample(df: DataFrame, targets: dict[str, int],
     ``targets``, ``W = sum``). T = min over target strata of
     ``floor(n_s * W / w_s)`` — all-integer arithmetic, so the DuckDB oracle
     replicates it exactly. Selection within a stratum is the first ``t_s``
-    rows by (portable hash, key): reproducible, rerun- and
+    rows by (portable hash, doc_id): reproducible, rerun- and
     repartition-stable, no RNG.
 
     Strata not named in ``targets`` are dropped; a target stratum absent
@@ -89,8 +87,8 @@ def mixture_sample(df: DataFrame, targets: dict[str, int],
               .withColumn("t_s", F.expr(f"(w_s * t_total) DIV {total_w}"))
               .select(strata_col, "t_s"))
     h = portable_hash64(F.concat(F.lit(salt + ":"),
-                                 F.col(key_col).cast("string")))
-    w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(key_col).asc())
+                                 F.col("doc_id").cast("string")))
+    w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col("doc_id").asc())
     # non-target strata are dead weight — drop them BEFORE the rank
     # window's shuffle, not after via the quota join
     ranked = (df.where(F.col(strata_col).isin(list(targets)))
@@ -100,13 +98,13 @@ def mixture_sample(df: DataFrame, targets: dict[str, int],
             .drop("t_s"))
 
 
-def corpus_stats(docs: DataFrame, value_col: str = "n_chars",
-                 strata_col: str = "source", id_col: str = "doc_id",
+def corpus_stats(docs: DataFrame,
                  quantiles: tuple[float, ...] = (0.5, 0.95)) -> DataFrame:
-    """Per-stratum distribution stats with EXACT discrete quantiles.
+    """Per-source distribution stats of ``n_chars`` with EXACT discrete
+    quantiles.
 
     The quantile is the element at rank ``floor((n-1)·q)+1`` under a total
-    order (value, id) — pure integer math, so Spark and a SQL oracle agree
+    order (value, doc_id) — pure integer math, so Spark and a SQL oracle agree
     bit-for-bit, unlike interpolated/t-digest quantiles whose float or
     sketch semantics differ per engine. The id tie-break never changes the
     VALUE at a given rank, so the rank can be computed over the
@@ -121,12 +119,12 @@ def corpus_stats(docs: DataFrame, value_col: str = "n_chars",
     pathological all-distinct continuous values this degrades gracefully
     to the old per-row sort.
     """
-    w = Window.partitionBy(strata_col).orderBy(value_col)
-    wc = Window.partitionBy(strata_col)
-    hist = (docs.groupBy(strata_col, value_col)
+    w = Window.partitionBy("source").orderBy("n_chars")
+    wc = Window.partitionBy("source")
+    hist = (docs.groupBy("source", "n_chars")
             .agg(F.count(F.lit(1)).alias("_c")))
     cum = hist.select(
-        strata_col, value_col, "_c",
+        "source", "n_chars", "_c",
         F.sum("_c").over(w).alias("_cum"),
         F.sum("_c").over(wc).alias("_n"))
     aggs = [F.sum("_c").cast("long").alias("n_docs"),
@@ -134,17 +132,17 @@ def corpus_stats(docs: DataFrame, value_col: str = "n_chars",
             # integral value columns, and for a double value column the
             # truncation happens once on the TOTAL (like the pre-histogram
             # form), not per distinct value
-            F.sum(F.col(value_col) * F.col("_c")).cast("long").alias("total"),
-            F.min(value_col).alias("min_v"),
-            F.max(value_col).alias("max_v")]
+            F.sum(F.col("n_chars") * F.col("_c")).cast("long").alias("total"),
+            F.min("n_chars").alias("min_v"),
+            F.max("n_chars").alias("max_v")]
     for q in quantiles:
         idx = F.floor((F.col("_n") - 1) * F.lit(q)) + 1
-        aggs.append(F.min(F.when(F.col("_cum") >= idx, F.col(value_col)))
+        aggs.append(F.min(F.when(F.col("_cum") >= idx, F.col("n_chars")))
                     .alias(f"p{int(q * 100)}"))
-    return cum.groupBy(strata_col).agg(*aggs)
+    return cum.groupBy("source").agg(*aggs)
 
 
-def vocab_topk(docs: DataFrame, k: int = 500, text_col: str = "text",
+def vocab_topk(docs: DataFrame, k: int = 500,
                min_count: int = 1) -> DataFrame:
     """Global top-``k`` whitespace tokens by document frequency-weighted
     count. Map-side partial aggregation does the heavy lifting (token
@@ -159,7 +157,7 @@ def vocab_topk(docs: DataFrame, k: int = 500, text_col: str = "text",
     (token, n, rank)."""
     from ..functions.parallelism import spread
     toks = (spread(docs)
-            .select(F.explode(F.split(F.col(text_col), r"\s+")).alias("token"))
+            .select(F.explode(F.split(F.col("text"), r"\s+")).alias("token"))
             .where(F.length("token") > 0))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     topk = (counts.where(F.col("n") >= min_count)
@@ -179,7 +177,7 @@ def vocab_topk(docs: DataFrame, k: int = 500, text_col: str = "text",
 
 
 def weighted_hash_sample(df: DataFrame, weight_col: str, base_rate: float,
-                         key_col: str = "doc_id", salt: str = "w0",
+                         salt: str = "w0",
                          max_weight: float = 2.0) -> DataFrame:
     """Weight-proportional deterministic sampling — the data-mixing
     primitive (keep high-quality docs at a higher rate): row kept with
@@ -195,7 +193,7 @@ def weighted_hash_sample(df: DataFrame, weight_col: str, base_rate: float,
     actually specify.
     """
     h = F.pmod(portable_hash64(F.concat(F.lit(salt + ":"),
-                                        F.col(key_col).cast("string"))),
+                                        F.col("doc_id").cast("string"))),
                F.lit(_MOD))
     thresh = F.least(
         F.floor(F.col(weight_col) * F.lit(float(base_rate)) * _MOD),
@@ -206,7 +204,6 @@ def weighted_hash_sample(df: DataFrame, weight_col: str, base_rate: float,
 def leakage_safe_split(members: DataFrame,
                        fractions: tuple[tuple[str, float], ...] = (
                            ("train", 0.8), ("val", 0.1), ("test", 0.1)),
-                       group_col: str = "component_id",
                        salt: str = "split0") -> DataFrame:
     """Train/val/test assignment by GROUP, not by row.
 
@@ -218,7 +215,7 @@ def leakage_safe_split(members: DataFrame,
     use (``hash(salt:group) mod 1e6`` against cumulative fraction
     thresholds): deterministic across reruns and engines, stable under
     repartitioning, one pure projection — zero joins, zero shuffles beyond
-    what produced ``group_col``.
+    what produced ``component_id``.
 
     ``fractions`` is an ordered (label, fraction) tuple; fractions quantize
     to 1e-6 and must sum to ≤ 1 (a shortfall becomes the last label, which
@@ -232,7 +229,7 @@ def leakage_safe_split(members: DataFrame,
     if sum(fr for _, fr in fracs) > 1.0 + 1e-9:
         raise ValueError("fractions sum to more than 1")
     h = F.pmod(portable_hash64(F.concat(F.lit(salt + ":"),
-                                        F.col(group_col).cast("string"))),
+                                        F.col("component_id").cast("string"))),
                F.lit(_MOD))
     cum = 0
     expr = F.lit(fracs[-1][0])  # shortfall / tail bucket → last label

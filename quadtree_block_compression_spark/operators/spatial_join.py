@@ -165,8 +165,7 @@ def spatial_join_salted(points: DataFrame, geoms: DataFrame,
     return cold_hits.select(out_cols).unionByName(hot_hits.select(out_cols))
 
 
-def overlap_join(rects_a: DataFrame, rects_b: DataFrame, res: int,
-                 out_a: str = "rect_a", out_b: str = "rect_b") -> DataFrame:
+def overlap_join(rects_a: DataFrame, rects_b: DataFrame, res: int) -> DataFrame:
     """Distributed strict-AABB overlap join — the reference's
     ``RectanglesCollide`` predicate (``pkg/utils/comparisonUtils.go:115-120``,
     touching edges do NOT collide) lifted from a per-pair call to a
@@ -186,7 +185,7 @@ def overlap_join(rects_a: DataFrame, rects_b: DataFrame, res: int,
     contain that cell (clamped identically at world edges), so each
     overlapping pair appears exactly once.
 
-    Returns (``out_a``, ``out_b``, inter_area_x4): 4× the intersection
+    Returns (rect_a, rect_b, inter_area_x4): 4× the intersection
     area as an EXACT BIGINT (with integer- or half-integer-valued bounds
     the quarter-unit products are float-exact, so both engines hash
     identically with no rounding).
@@ -230,15 +229,14 @@ def overlap_join(rects_a: DataFrame, rects_b: DataFrame, res: int,
             .where((F.col("ax0") < F.col("bx1")) & (F.col("ax1") > F.col("bx0"))
                    & (F.col("ay0") < F.col("by1")) & (F.col("ay1") > F.col("by0")))
             .where((F.col("ix") == ref_ix) & (F.col("iy") == ref_iy))
-            .select(F.col("a_id").alias(out_a), F.col("b_id").alias(out_b),
+            .select(F.col("a_id").alias("rect_a"), F.col("b_id").alias("rect_b"),
                     (iw * ih * F.lit(4.0)).cast("long").alias("inter_area_x4")))
 
 
-def distance_join(points: DataFrame, radius: float,
-                  id_col: str = "point_id",
-                  x_col: str = "wx", y_col: str = "wy") -> DataFrame:
-    """All point pairs within Euclidean ``radius`` — the classic radius
-    (distance) self-join, grid-bucketed so it never goes quadratic.
+def distance_join(points: DataFrame, radius: float) -> DataFrame:
+    """All pairs of (point_id, wx, wy) points within Euclidean ``radius`` —
+    the classic radius (distance) self-join, grid-bucketed so it never goes
+    quadratic.
 
     Plan: key every point to a grid of cell side ``radius`` (any pair
     within ``radius`` then lies in the same or an adjacent cell); one side
@@ -260,13 +258,13 @@ def distance_join(points: DataFrame, radius: float,
     from ..functions.parallelism import spread
 
     r = float(radius)
-    gx = F.floor(F.col(x_col) / F.lit(r))
-    gy = F.floor(F.col(y_col) / F.lit(r))
+    gx = F.floor(F.col("wx") / F.lit(r))
+    gy = F.floor(F.col("wy") / F.lit(r))
     # explode-heavy: a single-file scan is ONE partition regardless of
     # maxPartitionBytes and would serialize the 9× fan-out stage
     points = spread(points)
-    base = points.select(F.col(id_col).alias("_id"),
-                         F.col(x_col).alias("_x"), F.col(y_col).alias("_y"),
+    base = points.select(F.col("point_id").alias("_id"),
+                         F.col("wx").alias("_x"), F.col("wy").alias("_y"),
                          gx.alias("_gx"), gy.alias("_gy"))
     offs = F.array(*[F.lit(i) for i in (-1, 0, 1)])
     probe = (base

@@ -46,11 +46,6 @@ _PUNCT = r"[.,;:!?\x27\x22]"
 _ESCAPED_LITERALS = "spark.sql.parser.escapedStringLiterals"
 
 
-def _id(col: str) -> str:
-    """Backtick-quoted SQL identifier for column ``col``."""
-    return "`" + col.replace("`", "``") + "`"
-
-
 def _escaped_literals(spark: SparkSession | None = None) -> bool:
     """Whether the SQL parser keeps backslashes in string literals as-is."""
     spark = spark or SparkSession.active()
@@ -83,15 +78,15 @@ def _stop_count_sql(t: str, words_list, escaped: bool) -> str:
     return f"regexp_count(lower({t}), {pattern})"
 
 
-def _feature_sql(text_col: str = "text", escaped: bool = False) -> dict:
-    """Spark SQL text of every scalar text feature of column ``text_col``,
+def _feature_sql(escaped: bool = False) -> dict:
+    """Spark SQL text of every scalar text feature of the ``text`` column,
     keyed by its output column name — the ONE definition that
     :func:`quality_features`, :func:`quality_score`, :func:`lang_id`,
     :func:`fingerprint`, :func:`annotate` and the Column helpers share."""
     def q(s):
         return _sql_str(s, escaped)
 
-    t = _id(text_col)
+    t = "`text`"
     ws = q(r"\s+")
     n_chars = f"length({t})"
     toks = (f"CASE WHEN length(trim({t})) = 0 THEN 0 "
@@ -142,75 +137,71 @@ def _feature_sql(text_col: str = "text", escaped: bool = False) -> dict:
     return f
 
 
-def _feature_expr(name: str, text_col: str = "text"):
+def _feature_expr(name: str):
     """One feature of :func:`_feature_sql` as a Column."""
-    return F.expr(_feature_sql(text_col, _escaped_literals())[name])
+    return F.expr(_feature_sql(_escaped_literals())[name])
 
 
-def _project(docs: DataFrame, keep: str, names, text_col: str) -> DataFrame:
+def _project(docs: DataFrame, keep: str, names) -> DataFrame:
     """``docs`` projected to ``keep`` plus the named features — one
     ``selectExpr``, so the whole projection is parsed once on the JVM."""
-    f = _feature_sql(text_col, _escaped_literals(docs.sparkSession))
+    f = _feature_sql(_escaped_literals(docs.sparkSession))
     return docs.selectExpr(keep, *(f"{f[n]} AS {n}" for n in names))
 
 
-def token_count(text_col: str = "text"):
+def token_count():
     """Whitespace token count (column expression)."""
-    return _feature_expr("n_tokens", text_col)
+    return _feature_expr("n_tokens")
 
 
-def bpe_ish_token_count(text_col: str = "text"):
+def bpe_ish_token_count():
     """Sub-word-ish token count: words + digit runs + punctuation marks, via
     one regexp pass (a cheap stand-in for BPE vocab tokenization)."""
-    return _feature_expr("n_sub_tokens", text_col)
+    return _feature_expr("n_sub_tokens")
 
 
-def _words_expr(text_col: str = "text"):
+def _words_expr():
     """Lowercased whitespace token array (column expression)."""
     ws = _sql_str(r"\s+", _escaped_literals())
-    return F.expr(f"split(lower({_id(text_col)}), {ws})")
+    return F.expr(f"split(lower(`text`), {ws})")
 
 
-def _stop_count_expr(text_col: str, words_list):
+def _stop_count_expr(words_list):
     """Column form of :func:`_stop_count_sql`."""
-    return F.expr(_stop_count_sql(_id(text_col), words_list, _escaped_literals()))
+    return F.expr(_stop_count_sql("`text`", words_list, _escaped_literals()))
 
 
-def _quality_score_expr(text_col: str = "text"):
+def _quality_score_expr():
     """Composite 0..1 quality score (column expression)."""
-    return _feature_expr("quality", text_col)
+    return _feature_expr("quality")
 
 
-def quality_features(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-doc quality features: length, token stats, punctuation ratio,
     stopword ratio, uppercase ratio, digit ratio, mean word length."""
-    return _project(docs, _id(id_col), ("n_chars_calc", "n_tokens", "punct_ratio",
-                                        "stopword_ratio", "digit_ratio",
-                                        "upper_ratio", "mean_word_len"), text_col)
+    return _project(docs, "doc_id", ("n_chars_calc", "n_tokens", "punct_ratio",
+                                     "stopword_ratio", "digit_ratio",
+                                     "upper_ratio", "mean_word_len"))
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Composite 0..1 quality score plus its inputs."""
-    return _project(docs, _id(id_col), ("quality", "n_tokens", "punct_ratio",
-                                        "stopword_ratio"), text_col)
+    return _project(docs, "doc_id", ("quality", "n_tokens", "punct_ratio",
+                                     "stopword_ratio"))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-vote language ID: ``lang_pred`` is the language whose
     stopwords make up the largest share of the whitespace tokens (ties to
     the smallest name, 'und' when none occur), ``lang_score`` that share."""
-    return _project(docs, _id(id_col), ("lang_pred", "lang_score"), text_col)
+    return _project(docs, "doc_id", ("lang_pred", "lang_score"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint — the canonicalization used for fuzzy-exact
     dedup: a portable 60-bit hash of the lowercased, punctuation-stripped,
     whitespace-collapsed text, plus that normalized text's length."""
-    return _project(docs, _id(id_col), ("fingerprint", "norm_len"), text_col)
+    return _project(docs, "doc_id", ("fingerprint", "norm_len"))
 
 
 # PII detector patterns, ordered (redaction applies them in this order).
@@ -224,8 +215,7 @@ PII_PATTERNS = (
 )
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII scrub — the redaction pass a training-data pipeline runs before
     anything leaves the ingest boundary. Detects emails, SSN-shaped ids,
     phone numbers and IPv4 addresses; each is counted (on the input text,
@@ -240,7 +230,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text",
     """
     from ..functions.parallelism import spread
     docs = spread(docs)  # regex-heavy projection: use every core
-    t = F.col(text_col)
+    t = F.col("text")
     counts = [F.regexp_count(t, F.lit(p)).cast("long") for _, p in PII_PATTERNS]
     count_cols = [c.alias(f"n_{k.lower()}")
                   for (k, _), c in zip(PII_PATTERNS, counts)]
@@ -250,12 +240,11 @@ def pii_redact(docs: DataFrame, text_col: str = "text",
     total = counts[0]
     for c in counts[1:]:
         total = total + c
-    return docs.select(F.col(id_col), red.alias("text_redacted"),
+    return docs.select(F.col("doc_id"), red.alias("text_redacted"),
                        *count_cols, (total > 0).alias("has_pii"))
 
 
-def repetition_features(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def repetition_features(docs: DataFrame) -> DataFrame:
     """Intra-document repetition signals — the Gopher-rule quality heuristics
     (top-term dominance, duplicate n-gram mass) used to drop boilerplate and
     degenerate generations from training corpora.
@@ -270,14 +259,14 @@ def repetition_features(docs: DataFrame, text_col: str = "text",
     """
     from ..functions.parallelism import spread
     docs = spread(docs)
-    t = F.trim(F.lower(F.col(text_col)))
+    t = F.trim(F.lower(F.col("text")))
     # the token array is hoisted to a COLUMN before the HOF stage: lambdas
     # capturing the split expression directly would re-run
     # trim+lower+split per lambda invocation (once per distinct token in
     # the count loop) — interpreted HOFs inline captured expressions, the
     # embed_text r5 finding. A multi-referenced non-cheap expression also
     # survives CollapseProject, so the hoist sticks.
-    base = docs.select(F.col(id_col), (F.length(t) == 0).alias("_blank"),
+    base = docs.select(F.col("doc_id"), (F.length(t) == 0).alias("_blank"),
                        F.split(t, r"\s+").alias("_w"))
     w = F.col("_w")
     n = F.size(w)
@@ -289,7 +278,7 @@ def repetition_features(docs: DataFrame, text_col: str = "text",
         F.transform(F.sequence(F.lit(0), n - 2),
                     lambda i: F.concat_ws(" ", F.slice(w, i + 1, 2)))
     ).otherwise(F.array().cast("array<string>"))
-    mid = base.select(id_col, "_blank", n.alias("_n"),
+    mid = base.select("doc_id", "_blank", n.alias("_n"),
                       F.array_max(counts).alias("_topc"),
                       bigrams.alias("_bi"))
     n_bi = F.size("_bi")
@@ -298,7 +287,7 @@ def repetition_features(docs: DataFrame, text_col: str = "text",
                      / F.greatest(n_bi, F.lit(1)), 6)
     blank = F.col("_blank")
     return mid.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(blank, F.lit(0)).otherwise(F.col("_n")).cast("long")
         .alias("n_words"),
         F.when(blank, F.lit(0.0)).otherwise(top_ratio).alias("top_word_ratio"),
@@ -306,8 +295,7 @@ def repetition_features(docs: DataFrame, text_col: str = "text",
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
-                    overlap: int = 8, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    overlap: int = 8) -> DataFrame:
     """Context-window packing: split each document into sliding
     whitespace-token windows of ``chunk_tokens`` with ``overlap`` tokens of
     context carried between neighbors — the chunking step that feeds
@@ -328,11 +316,11 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
     from ..functions.parallelism import spread
     docs = spread(docs)
     stride = chunk_tokens - overlap
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     # hoist the token array to a column: the window lambda slicing the
     # split expression directly would re-run split per chunk index under
     # interpreted HOF evaluation (the embed_text r5 finding)
-    docs = docs.select(F.col(id_col), (F.length(t) == 0).alias("_blank"),
+    docs = docs.select(F.col("doc_id"), (F.length(t) == 0).alias("_blank"),
                        F.split(t, r"\s+").alias("_toks"))
     toks = F.col("_toks")
     n = F.when(F.col("_blank"), F.lit(0)).otherwise(F.size(toks))
@@ -348,12 +336,12 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
             F.concat_ws(" ", F.slice(toks, i * stride + 1, chunk_tokens))
             .alias("chunk_text")))
     return (docs
-            .select(F.col(id_col), n.alias("_n"),
+            .select(F.col("doc_id"), n.alias("_n"),
                     F.explode(F.when(n_chunks > 0, windows)
                               .otherwise(F.array().cast(
                                   "array<struct<chunk_idx:int,"
                                   "chunk_text:string>>"))).alias("c"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("c.chunk_idx").alias("chunk_idx"),
                     F.least(F.lit(chunk_tokens),
                             F.col("_n") - F.col("c.chunk_idx") * stride)
@@ -361,7 +349,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 32,
                     F.col("c.chunk_text").alias("chunk_text")))
 
 
-def annotate(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def annotate(docs: DataFrame) -> DataFrame:
     """Fingerprint + quality + language in ONE whole-stage-codegen
     projection — the corpus-cleaning annotate stage without a single join
     or shuffle (the join-per-annotation form costs three shuffles and three
@@ -374,4 +362,4 @@ def annotate(docs: DataFrame, text_col: str = "text") -> DataFrame:
     docs = spread(docs)  # regex-heavy projection: use every core on tiny scans
     return _project(docs, "*", ("fingerprint", "norm_len", "quality", "n_tokens",
                                 "punct_ratio", "stopword_ratio", "lang_pred",
-                                "lang_score"), text_col)
+                                "lang_score"))

@@ -54,39 +54,34 @@ def _to_ranges(keys: np.ndarray) -> list[tuple[int, int]]:
 
 
 def tile_range_scan(blocks: DataFrame, x0: float, y0: float, x1: float,
-                    y1: float, level: int, side: int | None = None) -> DataFrame:
+                    y1: float, level: int) -> DataFrame:
     """Blocks of ``level`` whose tiles intersect the window, selected by
     Morton-range predicates (row-group prunable) + exact bounds verify.
 
     Morton keys are tile *indices* within each image's padded canvas, so the
-    window→ranges decomposition depends on the canvas side. With
-    ``side=None`` (default) the distinct sides present at ``level`` are
-    discovered first (side = tile_width · 2^level; one tiny distinct over
-    two pruned int columns — metadata-scale even at 10^12 blocks since
-    there are only O(log max_side) distinct sides) and the UNION of all
-    sides' Morton ranges forms the prefilter. The union is a superset of
+    window→ranges decomposition depends on the canvas side. The distinct
+    sides present at ``level`` are discovered first (side = tile_width ·
+    2^level; one tiny distinct over two pruned int columns — metadata-scale
+    even at 10^12 blocks since there are only O(log max_side) distinct
+    sides) and the UNION of all sides' Morton ranges forms the prefilter.
+    The union is a superset of
     every individual side's ranges (no drops — the round-1 single-side bug)
     and stays a pure ``morton BETWEEN`` disjunction, so it pushes down to
     the parquet scan for row-group pruning (a per-side ``(x1-x0)·2^level =
     s`` conjunct would not — expressions aren't pushable); tiles another
     side's range sweeps in are removed by the exact bounds verify.
-    Passing an explicit ``side`` skips the side-discovery job but is only
-    correct for single-side block tables.
 
-    NOTE: with ``side=None`` the side discovery is its own Spark action, so
-    an expensive uncached upstream (e.g. a live ``assign_tiles`` pixel pass)
-    would execute twice — once for discovery, once for the scan. Callers
+    NOTE: the side discovery is its own Spark action, so an expensive
+    uncached upstream (e.g. a live ``assign_tiles`` pixel pass) would
+    execute twice — once for discovery, once for the scan. Callers
     holding such a pipeline should ``persist_tracked`` the blocks frame
     first (the graded ``tile_range_query`` does); a blocks table at rest
     needs nothing — discovery reads two pruned int columns, metadata-scale
     even at 10^12 blocks."""
     lv = blocks.filter(F.col("level") == level)
-    if side is not None:
-        sides = [int(side)]
-    else:
-        side_col = (F.col("x1") - F.col("x0")) * F.lit(1 << level)
-        sides = sorted(int(r.s) for r in
-                       lv.select(side_col.cast("long").alias("s")).distinct().collect())
+    side_col = (F.col("x1") - F.col("x0")) * F.lit(1 << level)
+    sides = sorted(int(r.s) for r in
+                   lv.select(side_col.cast("long").alias("s")).distinct().collect())
     keys = [k for s in sides for k in _tiles_overlapping(x0, y0, x1, y1, level, s)]
     ranges = _to_ranges(np.unique(np.array(keys, dtype=np.int64)))
     pred = None

@@ -61,8 +61,7 @@ def render_tile_overlay(blocks: DataFrame, images: DataFrame,
 
 
 def write_analytics(artifacts: DataFrame, analytics_dir: str,
-                    enabled: bool = True, name_col: str = "image_id",
-                    bytes_col: str = "overlay_png", ext: str = "png",
+                    enabled: bool = True, ext: str = "png",
                     timestamp: int | None = None) -> str | None:
     """Materialize visualization artifacts with the reference's analytics
     directory convention (``cmd/codec/main.go:139-181``): a run writes into
@@ -72,7 +71,7 @@ def write_analytics(artifacts: DataFrame, analytics_dir: str,
     keeps working. Disabled (or empty dir) → no-op returning None, like the
     reference's ``analyticsEnabled`` guard.
 
-    ``artifacts``: (name_col, bytes_col) rows — e.g.
+    ``artifacts``: (image_id, overlay_png) rows — e.g.
     :func:`render_tile_overlay` output. Files land as ``<name>.<ext>``.
     Collection is bounded by the artifact count (debug renders, one row per
     image in the visualized set) — this is a driver-side debug sink by
@@ -91,7 +90,7 @@ def write_analytics(artifacts: DataFrame, analytics_dir: str,
         current = os.path.join(analytics_dir, f"{ts}_{i}")
         i += 1
     os.makedirs(current)
-    for row in artifacts.select(name_col, bytes_col).toLocalIterator():
+    for row in artifacts.select("image_id", "overlay_png").toLocalIterator():
         with open(os.path.join(current, f"{row[0]}.{ext}"), "wb") as f:
             f.write(bytes(row[1]))
     return current

@@ -1,1 +1,1 @@
-from .tables import load_tables, TABLES  # noqa: F401
+"""Table sources: versioned parquet tables, loose image files, archives."""

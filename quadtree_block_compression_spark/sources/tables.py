@@ -11,15 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in names}
-
-
 def load_images_binary_files(spark: SparkSession, glob_path: str) -> DataFrame:
     """Loose image files → the images-table shape (reference S1: the codec's
     file-path input, ``pkg/utils/ioUtils.go:16-24``). Uses Spark's
@@ -59,7 +50,8 @@ def load_images_binary_files(spark: SparkSession, glob_path: str) -> DataFrame:
 # replaces these three functions with `df.writeTo(...)` / `VERSION AS OF`;
 # every caller keeps its shape.
 
-def _manifest_versions(path: str) -> list[int]:
+def table_versions(path: str) -> list[int]:
+    """Published snapshot numbers of a versioned table (ascending)."""
     import os, re
     if not os.path.isdir(path):
         return []
@@ -67,9 +59,17 @@ def _manifest_versions(path: str) -> list[int]:
                   if (m := re.fullmatch(r"v(\d+)\.json", f)))
 
 
-def table_versions(path: str) -> list[int]:
-    """Published snapshot numbers of a versioned table (ascending)."""
-    return _manifest_versions(path)
+def _resolve_version(path: str, version: int | None) -> tuple[int, list[int]]:
+    """``version`` (the latest when None), checked against the published
+    snapshots, and the snapshot list itself."""
+    versions = table_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no published snapshots at {path}")
+    if version is None:
+        version = versions[-1]
+    if version not in versions:
+        raise ValueError(f"snapshot {version} not in {versions}")
+    return version, versions
 
 
 # Pluggable snapshot committer (the object-store seam, VERDICT r5 #3).
@@ -207,7 +207,7 @@ def write_versioned(df: DataFrame, path: str, mode: str = "append",
     if cluster_by:
         df = _cluster_zorder(df, list(cluster_by), cluster_files)
     import uuid
-    versions = _manifest_versions(path)
+    versions = table_versions(path)
     n = (versions[-1] if versions else 0) + 1
     # unique staging dir per write ATTEMPT (Iceberg's layout): a crashed
     # or concurrently-racing writer can never collide with, block, or
@@ -294,17 +294,8 @@ def read_versioned(spark: SparkSession, path: str,
     the manifest — rows and columns committed after the snapshot are
     invisible, matching Iceberg ``VERSION AS OF``. An empty snapshot reads
     as an empty DataFrame with the committed schema."""
-    import json
-    import os
     from pyspark.sql.types import StructType
-    versions = _manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no published snapshots at {path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"snapshot {version} not in {versions}")
-    manifest = _read_manifest(path, version)
+    manifest = _read_manifest(path, _resolve_version(path, version)[0])
     schema = StructType.fromJson(manifest["schema"])
     files = _manifest_data_files(manifest)
     if not files:
@@ -350,7 +341,7 @@ def rollback_versioned(path: str, to_version: int,
     snapshots stay readable for audit), the table's latest just points at
     the good state again. Pure manifest copy: no data movement, no Spark
     job."""
-    versions = _manifest_versions(path)
+    versions = table_versions(path)
     if to_version not in versions:
         raise ValueError(f"snapshot {to_version} not in {versions}")
     old = _read_manifest(path, to_version)
@@ -413,13 +404,12 @@ def remove_orphan_files(path: str, older_than_seconds: float = 86400.0) -> dict:
     — the same reason Iceberg's procedure defaults to 3 days. Returns
     ``{"deleted_dirs": n, "deleted_files": m}``."""
     import glob as _glob
-    import json
     import os
     import shutil
     import time
     refs: set[str] = set()
     man_refs: set[str] = set()
-    for v in _manifest_versions(path):
+    for v in table_versions(path):
         manifest = _read_manifest(path, v)
         refs.update(os.path.realpath(f)
                     for f in _manifest_data_files(manifest))
@@ -468,13 +458,10 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
     leaves only unreferenced files (invisible by construction), never a
     published manifest with missing data. Returns
     ``{"expired_versions": [...], "deleted_files": n}``."""
-    import json
     import os
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (a table keeps a snapshot)")
-    versions = _manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no published snapshots at {path}")
+    _, versions = _resolve_version(path, None)
     expired, kept = versions[:-keep_last], versions[-keep_last:]
     keep_files: set[str] = set()
     keep_manifests: set[str] = set()
@@ -504,17 +491,8 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
 def snapshot_properties(path: str, version: int | None = None) -> dict:
     """The properties dict pinned at commit time (latest snapshot when
     ``version`` is None; {} for snapshots committed without properties)."""
-    import json
-    import os
-    versions = _manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no published snapshots at {path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"snapshot {version} not in {versions}")
-    with open(os.path.join(path, f"v{version}.json")) as fh:
-        return json.load(fh).get("properties", {})
+    manifest = _read_manifest(path, _resolve_version(path, version)[0])
+    return manifest.get("properties", {})
 
 
 def versioned_diff(spark: SparkSession, path: str, from_version: int,
@@ -533,13 +511,7 @@ def versioned_diff(spark: SparkSession, path: str, from_version: int,
     Iceberg's refusal to incremental-scan across a replace snapshot.
     Schema is pinned from the ``to`` manifest."""
     from pyspark.sql.types import StructType
-    versions = _manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no published snapshots at {path}")
-    if to_version is None:
-        to_version = versions[-1]
-    if to_version not in versions:
-        raise ValueError(f"snapshot {to_version} not in {versions}")
+    to_version, versions = _resolve_version(path, to_version)
     if from_version != 0 and from_version not in versions:
         raise ValueError(f"snapshot {from_version} not in {versions}")
     if from_version > to_version:

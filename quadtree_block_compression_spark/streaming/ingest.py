@@ -125,9 +125,7 @@ def make_dedup_batch_processor(index_path: str, out_path: str,
     return process_batch
 
 
-def make_embedding_batch_processor(index_path: str,
-                                   vec_col: str = "embedding",
-                                   id_col: str = "vec_id"):
+def make_embedding_batch_processor(index_path: str):
     """``foreachBatch`` body for streaming embedding ingest into a
     materialized IVF index (:func:`~..operators.ann.ivf_write_index` at
     rest): each micro-batch is assigned against the index's FROZEN coarse
@@ -140,8 +138,7 @@ def make_embedding_batch_processor(index_path: str,
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..functions.cache import release_caches
         try:
-            ivf_append_index(batch_df, index_path, batch_id,
-                             vec_col=vec_col, id_col=id_col)
+            ivf_append_index(batch_df, index_path, batch_id)
         finally:
             # same per-batch boundary as the other processors: nothing
             # persists today, but the release keeps the invariant uniform

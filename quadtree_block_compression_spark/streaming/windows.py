@@ -89,10 +89,9 @@ def streaming_event_counts(spark, source_df: DataFrame | None = None,
             .select(F.col("win.start").alias("win_start"), "event_type", "n_events"))
 
 
-def asof_join(events: DataFrame, left_type: str, right_type: str,
-              key_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
+def asof_join(events: DataFrame, left_type: str, right_type: str) -> DataFrame:
     """Event-time AS-OF join: for every ``left_type`` event, the latest
-    ``right_type`` event by the same key at or before its timestamp.
+    ``right_type`` event by the same ``user_id`` at or before its ``ts``.
 
     Spark-first plan — NO join at all: union both event streams, ONE
     shuffle on the key, and a running ``last(..., ignorenulls=True)``
@@ -113,25 +112,25 @@ def asof_join(events: DataFrame, left_type: str, right_type: str,
 
     both = (events
             .where(F.col("event_type").isin(left_type, right_type))
-            .where(F.col(ts_col).isNotNull())  # no event time → no as-of
-            .select("event_id", key_col, ts_col, "event_type",
+            .where(F.col("ts").isNotNull())  # no event time → no as-of
+            .select("event_id", "user_id", "ts", "event_type",
                     F.when(F.col("event_type") == right_type, 0)
                     .otherwise(1).alias("_kind")))
-    w = (Window.partitionBy(key_col)
-         .orderBy(ts_col, "_kind", "event_id")
+    w = (Window.partitionBy("user_id")
+         .orderBy("ts", "_kind", "event_id")
          .rowsBetween(Window.unboundedPreceding, 0))
     # ONE struct carries (ts, id) atomically — two independent
     # last(ignorenulls) columns could pair an id with a DIFFERENT row's
     # timestamp if either piece were ever null-skipped independently
     right = F.when(F.col("_kind") == 0,
-                   F.struct(F.col(ts_col).alias("ts"),
+                   F.struct(F.col("ts").alias("ts"),
                             F.col("event_id").alias("event_id")))
     carried = both.select(
-        "event_id", key_col, ts_col, "_kind",
+        "event_id", "user_id", "ts", "_kind",
         F.last(right, ignorenulls=True).over(w).alias("_asof"))
     return (carried.where(F.col("_kind") == 1)
             .select(F.col("event_id").alias("left_event_id"),
-                    key_col,
-                    F.col(ts_col).alias("left_ts"),
+                    "user_id",
+                    F.col("ts").alias("left_ts"),
                     F.col("_asof.event_id").alias("asof_event_id"),
                     F.col("_asof.ts").alias("asof_ts")))

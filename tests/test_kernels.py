@@ -8,8 +8,7 @@ from quadtree_block_compression_spark.kernels.resample import scale, scale_batch
 from quadtree_block_compression_spark.kernels.similarity import (
     compare_pixels_weighted, psnr)
 from quadtree_block_compression_spark.kernels.tiles import (
-    padded_side, tree_height, pad_image, child_bounds, tile_children,
-    morton_key, tile_path_to_archive_path, archive_path_to_tile_path)
+    padded_side, tree_height, pad_image, tile_children, morton_key)
 from quadtree_block_compression_spark.kernels.codecs import (
     encode_png, decode_png, encode_raw, decode_raw, encode_lossy, decode_lossy,
     encode_image, decode_image)
@@ -243,17 +242,20 @@ def test_pad_edge_replication():
 
 def test_child_bounds_bit_tricks():
     # i&1 → right half (x), i&2 → lower half (y), integer halving
-    assert child_bounds(0, 0, 16, 16, 0) == (0, 0, 8, 8)
-    assert child_bounds(0, 0, 16, 16, 1) == (8, 0, 16, 8)
-    assert child_bounds(0, 0, 16, 16, 2) == (0, 8, 8, 16)
-    assert child_bounds(0, 0, 16, 16, 3) == (8, 8, 16, 16)
-    got = tile_children(np.array([[0, 0, 16, 16]]))
-    assert got[0].tolist() == [[0, 0, 8, 8], [8, 0, 16, 8], [0, 8, 8, 16], [8, 8, 16, 16]]
+    got = tile_children(np.array([[0, 0, 16, 16]]))[0]
+    assert tuple(got[0]) == (0, 0, 8, 8)
+    assert tuple(got[1]) == (8, 0, 16, 8)
+    assert tuple(got[2]) == (0, 8, 8, 16)
+    assert tuple(got[3]) == (8, 8, 16, 16)
 
 
 def test_tile_path_codec():
-    assert tile_path_to_archive_path("031") == "0/3/1"
-    assert archive_path_to_tile_path("0/3/1") == "031"
+    from quadtree_block_compression_spark.sources.archive import (
+        _path_to_tile, _tile_to_path)
+    assert _tile_to_path("031") == "0/3/1"
+    assert _path_to_tile("0/3/1") == "031"
+    assert _tile_to_path("") == "root"       # the root tile's member name
+    assert _path_to_tile("root") == ""
     assert morton_key("") == 0
     assert morton_key("031") == 0 * 16 + 3 * 4 + 1  # base-4 MSB-first
 

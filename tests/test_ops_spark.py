@@ -827,9 +827,9 @@ def test_stop_count_regex_equals_hof_filter_form(spark):
     df = spark.createDataFrame(pd.DataFrame({"text": cases}))
     for lang in sorted(STOPWORDS):
         arr = F.array(*[F.lit(s) for s in STOPWORDS[lang]])
-        hof = F.size(F.filter(_words_expr("text"),
+        hof = F.size(F.filter(_words_expr(),
                               lambda w: F.array_contains(arr, w)))
-        bad = df.where(_stop_count_expr("text", STOPWORDS[lang]) != hof)
+        bad = df.where(_stop_count_expr(STOPWORDS[lang]) != hof)
         assert bad.count() == 0, (lang, bad.collect())
 
 

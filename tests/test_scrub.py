@@ -155,8 +155,9 @@ def test_hashed_embedding_feeds_ann(spark):
     q = (emb.where("doc_id = 0")
          .select(F.col("doc_id").alias("q_id"),
                  F.col("embedding").alias("q_vec")))
-    top = cosine_topk_bruteforce(emb, q, k=2, id_col="doc_id").collect()
-    assert top[0].doc_id == 1 and top[0].cos > 0.9   # near-dup found first
+    top = cosine_topk_bruteforce(emb.withColumnRenamed("doc_id", "vec_id"),
+                                 q, k=2).collect()
+    assert top[0].vec_id == 1 and top[0].cos > 0.9   # near-dup found first
     assert top[1].cos < 0.5                           # unrelated far behind
 
 

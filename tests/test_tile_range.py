@@ -51,7 +51,7 @@ def test_tile_range_scan_matches_bruteforce(spark, win):
     x0, y0, x1, y1 = win
     for level in (1, 2, 3):
         got = {r.tile_id for r in
-               tile_range_scan(blocks, x0, y0, x1, y1, level, 64).collect()}
+               tile_range_scan(blocks, x0, y0, x1, y1, level).collect()}
         want = {r.tile_id for r in blocks.filter(
             (F.col("level") == level) & (F.col("x0") < x1) & (F.col("x1") > x0)
             & (F.col("y0") < y1) & (F.col("y1") > y0)).collect()}
